@@ -17,6 +17,37 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
+def etl_fields(spark, mock_dir: str) -> dict:
+    """Real-data ETL throughput (ledgers/sec through the full bronze ->
+    silver -> gold warehouse build), when the fixture ledgers exist.
+    The reference imports the same ledgers one-at-a-time through its
+    daemon pipeline; this is the comparable single-node number.  A
+    failed build is recorded as ``etl_error`` instead of the rate."""
+    import glob
+    import tempfile
+
+    ledger_paths = sorted(
+        f for f in glob.glob(os.path.join(mock_dir, "*.json")) if " - " not in f
+    )
+    if not ledger_paths:
+        return {}
+    try:
+        from rippled_historical_database_spark.plans.xrpl_etl import (
+            build_warehouse,
+        )
+
+        wh = tempfile.mkdtemp(prefix="bench_warehouse_")
+        t0 = time.perf_counter()
+        build_warehouse(spark, ledger_paths, wh)
+        dt = time.perf_counter() - t0
+    except Exception as exc:  # noqa: BLE001 -- bench must still emit its line
+        return {"etl_error": f"{type(exc).__name__}: {exc}"}
+    return {
+        "etl_ledgers_per_sec": round(len(ledger_paths) / dt, 2),
+        "etl_wall_sec": round(dt, 2),
+    }
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from rippled_historical_database_spark.plans.registry import all_queries
@@ -73,31 +104,8 @@ def main() -> None:
         "loadavg_after": [round(x, 2) for x in load_after],
     }
 
-    # Real-data ETL throughput (ledgers/sec through the full bronze ->
-    # silver -> gold warehouse build), when the fixture ledgers exist.
-    # The reference imports the same ledgers one-at-a-time through its
-    # daemon pipeline; this is the comparable single-node number.
-    import glob
-    import tempfile
-
     mock_dir = "/root/reference/test/mock/ledgers"
-    ledger_paths = sorted(
-        f for f in glob.glob(os.path.join(mock_dir, "*.json")) if " - " not in f
-    )
-    if ledger_paths:
-        try:
-            from rippled_historical_database_spark.plans.xrpl_etl import (
-                build_warehouse,
-            )
-
-            wh = tempfile.mkdtemp(prefix="bench_warehouse_")
-            t0 = time.perf_counter()
-            build_warehouse(spark, ledger_paths, wh)
-            dt = time.perf_counter() - t0
-            out["etl_ledgers_per_sec"] = round(len(ledger_paths) / dt, 2)
-            out["etl_wall_sec"] = round(dt, 2)
-        except Exception:  # noqa: BLE001 -- bench must still emit its line
-            pass
+    out.update(etl_fields(spark, mock_dir))
 
     print(json.dumps(out))
     spark.stop()

@@ -23,7 +23,6 @@ Kafka + a transactional table, nothing else changes.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -31,28 +30,14 @@ from pyspark.sql import functions as F
 from ..functions.numeric import sql_dsum
 from ..plans.registry import register
 from ..sources.catalog import events_read_schema, normalize_events_ts
-from .memory_sink import run_to_memory
+from .memory_sink import run_to_memory, table_stream
 
 LATE_DATA_WATERMARK = "2 hours"  # exchanges.js:52 late-data window
 
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # The file streaming source lists a directory, non-recursively.  A
-    # Spark-written events.parquet IS a directory of part files --
-    # stream it as-is (symlinking the directory under another dir would
-    # stream ZERO rows, silently); a single-file table (the generated
-    # testdata shape) gets symlinked into a temp dir.
-    src = os.path.join(sf_dir, "events.parquet")
-    schema, shim = events_read_schema(src)
-    if os.path.isdir(src):
-        raw = spark.readStream.schema(schema).parquet(src)
-        return normalize_events_ts(raw, shim)
-    d = tempfile.mkdtemp(prefix="events_stream_")
-    link = os.path.join(d, "events.parquet")
-    if not os.path.exists(link):
-        os.symlink(src, link)
-    raw = spark.readStream.schema(schema).parquet(d)
-    return normalize_events_ts(raw, shim)
+    schema, shim = events_read_schema(os.path.join(sf_dir, "events.parquet"))
+    return normalize_events_ts(table_stream(spark, sf_dir, "events", schema), shim)
 
 
 @register(

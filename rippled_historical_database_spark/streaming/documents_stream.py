@@ -20,7 +20,6 @@ time if the corpus is unbounded.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -34,23 +33,12 @@ from pyspark.sql.types import (
 
 from ..operators.multimodal import SQL_PHASH_NEARDUP
 from ..plans.registry import register
-from .memory_sink import run_to_memory
+from .memory_sink import run_to_memory, table_stream
 
 
 def _documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # The file streaming source lists a directory, non-recursively.  A
-    # Spark-written documents.parquet IS a directory of part files --
-    # stream it as-is; a single-file table (the generated testdata
-    # shape) gets symlinked into a temp dir.
-    src = os.path.join(sf_dir, "documents.parquet")
-    schema = spark.read.parquet(src).schema
-    if os.path.isdir(src):
-        return spark.readStream.schema(schema).parquet(src)
-    d = tempfile.mkdtemp(prefix="documents_stream_")
-    link = os.path.join(d, "documents.parquet")
-    if not os.path.exists(link):
-        os.symlink(src, link)
-    return spark.readStream.schema(schema).parquet(d)
+    schema = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).schema
+    return table_stream(spark, sf_dir, "documents", schema)
 
 
 @register(

@@ -29,19 +29,19 @@ out-of-orderness to the late-data window.
 Scale: state is ~6 doubles per pair -- bounded by the number of live
 trading pairs, not by history -- and the shuffle partitions by pair, so
 a 100 TB replay streams through constant state per key.
+
+Every twin in this module is a :class:`~.memory_sink.Fold` -- its
+state/output schemas plus a ``step(key, rows, state) -> (state, out)``
+holding the per-row recursion -- run by ``memory_sink.stateful_fold``,
+which owns the ordered replay, the ``applyInPandasWithState`` wiring
+and the drain.
 """
 
 from __future__ import annotations
 
-import atexit
+import datetime as dt
 import math
-import os
-import shutil
-import tempfile
-import time
-from collections.abc import Iterator
 from decimal import ROUND_HALF_UP, Decimal
-from typing import Any
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -56,9 +56,24 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+from pyspark.sql.window import Window
 
 from ..operators.candles import (
+    _DB_T_MICRO,
+    ATR_N,
+    BB_K,
+    BB_N,
+    DC_N,
     DD_ROUND,
+    ICHI_K,
+    ICHI_S,
+    ICHI_T,
+    KC_ATR_N,
+    KC_K,
+    KC_N,
+    MACD_FAST,
+    MACD_SIG,
+    MACD_SLOW,
     RSI_N,
     SQL_BOLLINGER,
     SQL_KELTNER,
@@ -66,6 +81,7 @@ from ..operators.candles import (
     SQL_DOLLAR_BARS,
     SQL_DONCHIAN,
     SQL_GAP_INTERPOLATION,
+    SQL_HEIKIN_ASHI,
     SQL_MAX_DRAWDOWN,
     SQL_OBV,
     SQL_RSI_CUTLER,
@@ -73,12 +89,28 @@ from ..operators.candles import (
     SQL_ATR,
     SQL_ICHIMOKU,
     SQL_WILDER_RSI,
+    STOCH_D,
+    STOCH_N,
     _hourly_closes,
+    _hourly_ohlc,
+    _hourly_ohlc4,
+    _with_legs,
+    fround,
     rsi_from_avgs,
 )
-from ..operators.anomaly import SQL_CUSUM, SQL_ROLLING_ZSCORE
+from ..operators.anomaly import (
+    BASELINE_HOURS,
+    CUSUM_H,
+    CUSUM_K,
+    SQL_CUSUM,
+    SQL_ROLLING_ZSCORE,
+    Z_THRESHOLD,
+    _cusum_z,
+    hourly_event_series,
+)
 from ..plans.registry import register
-from .memory_sink import FEW_KEY_STATE_PARTITIONS, run_to_memory
+from ..sources.catalog import load_table
+from .memory_sink import fold, stateful_fold
 
 OUTPUT_SCHEMA = StructType(
     [
@@ -122,16 +154,9 @@ def _r6(x: float) -> float:
     return math.floor(x * 1e6 + 0.5) / 1e6
 
 
-def _update_rsi(
-    key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: Any
-) -> Iterator[pd.DataFrame]:
-    (pair,) = key
-    if state.exists:
-        prev_close, n, sg, sl, ag, al = state.get
-    else:
-        prev_close, n, sg, sl, ag, al = None, 0, 0.0, 0.0, None, None
-
-    rows = pd.concat(list(pdfs), ignore_index=True).sort_values("bucket")
+@fold("pair", "bucket", STATE_SCHEMA, OUTPUT_SCHEMA)
+def _update_rsi(key, rows, state):
+    prev_close, n, sg, sl, ag, al = state or (None, 0, 0.0, 0.0, None, None)
     out_bucket, out_ag, out_al = [], [], []
     for bucket, close in zip(rows["bucket"], rows["close"]):
         close = float(close)
@@ -156,88 +181,9 @@ def _update_rsi(
         out_ag.append(ag)
         out_al.append(al)
 
-    state.update((prev_close, n, sg, sl, ag, al))
-    yield pd.DataFrame(
-        {
-            "pair": [pair] * len(out_bucket),
-            "bucket": out_bucket,
-            "ag": out_ag,
-            "al": out_al,
-        }
-    )
-
-
-def rsi_stream(closes: DataFrame) -> DataFrame:
-    """The stateful plan: streaming (pair, bucket, close) rows ->
-    per-bucket Wilder gain/loss averages.  ``closes`` must be a
-    streaming DataFrame."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    return closes.groupBy("pair").applyInPandasWithState(
-        _update_rsi,
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def _write_ordered_slices(
-    closes: DataFrame, n_slices: int = 4, order_col="bucket"
-) -> str:
-    """Materialize a batch close series as one parquet file per
-    contiguous bucket range, mtime-ordered oldest-first, so the file
-    source replays the series chronologically (RSI is order-sensitive;
-    slicing on bucket boundaries keeps every hour whole).
-
-    ``order_col`` may be a list forming a TOTAL order: when the lead
-    column has ties (the 10x clone corpus repeats every trade ts 10
-    times), an ntile over the lead column alone cuts tie groups
-    ARBITRARILY across slices, and a later-tiebreak row landing in an
-    earlier slice reaches the stateful updater out of order."""
-    from pyspark.sql.window import Window
-
-    stream_dir = tempfile.mkdtemp(prefix="rsi_closes_")
-    # The file source reads these lazily until run_to_memory drains the
-    # query, so the directory must outlive this function; reclaim it at
-    # interpreter exit instead of leaking one tree per streaming run.
-    atexit.register(shutil.rmtree, stream_dir, ignore_errors=True)
-    order_cols = [order_col] if isinstance(order_col, str) else list(order_col)
-    # ONE job writes all slices (r14): the r12 form persisted the sliced
-    # relation and ran one filter+coalesce+write job per slice -- 5 job
-    # round-trips and 4 cache scans per twin, times ~20 twins.  The
-    # ntile window already sorts globally into a single partition, so a
-    # single-task dynamic-partition write emits every slice file in the
-    # same pass; the explicit sortWithinPartitions keeps rows in replay
-    # order and satisfies the writer's required partition ordering, so
-    # no extra sort is inserted.
-    build = os.path.join(stream_dir, "_build")
-    (
-        closes.withColumn(
-            "slice",
-            F.ntile(n_slices).over(Window.orderBy(*order_cols)),
-        )
-        .coalesce(1)
-        .sortWithinPartitions("slice", *order_cols)
-        .write.mode("overwrite")
-        .partitionBy("slice")
-        .parquet(build)
-    )
-    for i in range(1, n_slices + 1):
-        part_dir = os.path.join(build, f"slice={i}")
-        if not os.path.isdir(part_dir):  # < n_slices rows: slice empty
-            continue
-        (part,) = [
-            f for f in os.listdir(part_dir)
-            if f.endswith(".parquet") and f.startswith("part-")
-        ]
-        dst = os.path.join(stream_dir, f"{i:04d}.parquet")
-        os.replace(os.path.join(part_dir, part), dst)
-        # file source orders by modification time; force strict order.
-        t = time.time() + i
-        os.utime(dst, (t, t))
-    shutil.rmtree(build, ignore_errors=True)
-    return stream_dir
+    return (prev_close, n, sg, sl, ag, al), {
+        "bucket": out_bucket, "ag": out_ag, "al": out_al,
+    }
 
 
 @register(
@@ -258,15 +204,9 @@ def _write_ordered_slices(
     tags=("streaming", "stateful", "window"),
 )
 def stream_rsi_wilder(spark: SparkSession, sf_dir: str) -> DataFrame:
-    stream_dir = _write_ordered_slices(_hourly_closes(spark, sf_dir))
-    closes = (
-        spark.readStream.schema(
-            "pair string, bucket timestamp, close double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stream_dir)
+    avgs = stateful_fold(
+        _hourly_closes(spark, sf_dir), "stream_rsi_wilder", _update_rsi
     )
-    avgs = run_to_memory(rsi_stream(closes), "stream_rsi_wilder", "append", state_partitions=FEW_KEY_STATE_PARTITIONS)
     return rsi_from_avgs(avgs)
 
 
@@ -286,14 +226,12 @@ GAP_STATE_SCHEMA = StructType([StructField("last_bucket", TimestampType())])
 _HOUR_S = 3600
 
 
-def _update_gaps(
-    key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: Any
-) -> Iterator[pd.DataFrame]:
-    import datetime as dt
-
-    (pair,) = key
-    last = state.get[0] if state.exists else None
-    rows = pd.concat(list(pdfs), ignore_index=True).sort_values("bucket")
+@fold("pair", "bucket", GAP_STATE_SCHEMA, GAP_OUTPUT_SCHEMA)
+def _update_gaps(key, rows, state):
+    """Streaming candle-continuity monitor: per-pair state is ONE
+    timestamp (the last seen bucket); each arriving bucket either
+    extends the sequence or emits the completed outage run."""
+    last = state[0] if state else None
     starts, ends, counts = [], [], []
     for bucket in rows["bucket"]:
         bucket = bucket.to_pydatetime() if hasattr(bucket, "to_pydatetime") else bucket
@@ -304,30 +242,7 @@ def _update_gaps(
                 ends.append(bucket - dt.timedelta(hours=1))
                 counts.append(missing)
         last = bucket
-    state.update((last,))
-    yield pd.DataFrame(
-        {
-            "pair": [pair] * len(starts),
-            "gap_start": starts,
-            "gap_end": ends,
-            "n_missing": counts,
-        }
-    )
-
-
-def gap_stream(buckets: DataFrame) -> DataFrame:
-    """Streaming candle-continuity monitor: per-pair state is ONE
-    timestamp (the last seen bucket); each arriving bucket either
-    extends the sequence or emits the completed outage run."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    return buckets.groupBy("pair").applyInPandasWithState(
-        _update_gaps,
-        outputStructType=GAP_OUTPUT_SCHEMA,
-        stateStructType=GAP_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return (last,), {"gap_start": starts, "gap_end": ends, "n_missing": counts}
 
 
 @register(
@@ -376,15 +291,9 @@ def gap_stream(buckets: DataFrame) -> DataFrame:
 )
 def stream_candle_gap_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
     buckets = _hourly_closes(spark, sf_dir).select("pair", "bucket").distinct()
-    stream_dir = _write_ordered_slices(buckets.withColumn("close", F.lit(0.0)))
-    src = (
-        spark.readStream.schema("pair string, bucket timestamp, close double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stream_dir)
-        .select("pair", "bucket")
+    return stateful_fold(buckets, "stream_gap_alerts", _update_gaps).orderBy(
+        "pair", "gap_start"
     )
-    return run_to_memory(
-        gap_stream(src), "stream_gap_alerts", "append", state_partitions=FEW_KEY_STATE_PARTITIONS).orderBy("pair", "gap_start")
 
 
 # ----------------------------------------------- streaming ATR (Wilder)
@@ -407,18 +316,9 @@ ATR_STATE_SCHEMA = StructType(
 )
 
 
-def _update_atr(
-    key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: Any
-) -> Iterator[pd.DataFrame]:
-    from ..operators.candles import ATR_N
-
-    (pair,) = key
-    if state.exists:
-        prev_close, n, s, atr = state.get
-    else:
-        prev_close, n, s, atr = None, 0, 0.0, None
-
-    rows = pd.concat(list(pdfs), ignore_index=True).sort_values("bucket")
+@fold("pair", "bucket", ATR_STATE_SCHEMA, ATR_OUTPUT_SCHEMA)
+def _update_atr(key, rows, state):
+    prev_close, n, s, atr = state or (None, 0, 0.0, None)
     out_bucket, out_atr = [], []
     for bucket, high, low, close in zip(
         rows["bucket"], rows["high"], rows["low"], rows["close"]
@@ -445,28 +345,7 @@ def _update_atr(
         out_bucket.append(bucket)
         out_atr.append(atr)
 
-    state.update((prev_close, n, s, atr))
-    yield pd.DataFrame(
-        {
-            "pair": [pair] * len(out_bucket),
-            "bucket": out_bucket,
-            "atr": out_atr,
-        }
-    )
-
-
-def atr_stream(bars: DataFrame) -> DataFrame:
-    """Streaming (pair, bucket, high, low, close) OHLC bars ->
-    per-bucket Wilder ATR.  ``bars`` must be a streaming DataFrame."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    return bars.groupBy("pair").applyInPandasWithState(
-        _update_atr,
-        outputStructType=ATR_OUTPUT_SCHEMA,
-        stateStructType=ATR_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return (prev_close, n, s, atr), {"bucket": out_bucket, "atr": out_atr}
 
 
 @register(
@@ -487,19 +366,9 @@ def atr_stream(bars: DataFrame) -> DataFrame:
     tags=("streaming", "stateful", "window"),
 )
 def stream_atr_wilder(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.candles import _hourly_ohlc
-
-    stream_dir = _write_ordered_slices(_hourly_ohlc(spark, sf_dir))
-    bars = (
-        spark.readStream.schema(
-            "pair string, bucket timestamp, high double, low double, "
-            "close double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stream_dir)
-    )
-    return run_to_memory(
-        atr_stream(bars), "stream_atr_wilder", "append", state_partitions=FEW_KEY_STATE_PARTITIONS).orderBy("pair", "bucket")
+    return stateful_fold(
+        _hourly_ohlc(spark, sf_dir), "stream_atr_wilder", _update_atr
+    ).orderBy("pair", "bucket")
 
 
 # ------------------------------------------ streaming CUSUM monitoring
@@ -521,45 +390,18 @@ CUSUM_STATE_SCHEMA = StructType(
 )
 
 
-def _update_cusum(
-    key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: Any
-) -> Iterator[pd.DataFrame]:
-    from ..operators.anomaly import CUSUM_K
-
-    (event_type,) = key
-    sp, sn = state.get if state.exists else (0.0, 0.0)
-    rows = pd.concat(list(pdfs), ignore_index=True).sort_values("bucket")
+@fold("event_type", "day", CUSUM_STATE_SCHEMA, CUSUM_OUTPUT_SCHEMA)
+def _update_cusum(key, rows, state):
+    sp, sn = state or (0.0, 0.0)
     out_day, out_sp, out_sn = [], [], []
-    for bucket, z in zip(rows["bucket"], rows["z"]):
+    for bucket, z in zip(rows["day"], rows["z"]):
         z = float(z)
         sp = _rhalf(max(0.0, sp + z - CUSUM_K))
         sn = _rhalf(max(0.0, sn - z - CUSUM_K))
         out_day.append(bucket)
         out_sp.append(sp)
         out_sn.append(sn)
-    state.update((sp, sn))
-    yield pd.DataFrame(
-        {
-            "event_type": [event_type] * len(out_day),
-            "day": out_day,
-            "s_pos": out_sp,
-            "s_neg": out_sn,
-        }
-    )
-
-
-def cusum_stream(zs: DataFrame) -> DataFrame:
-    """Streaming (pair=event_type, bucket=day, z) rows -> per-day CUSUM
-    state.  ``zs`` must be a streaming DataFrame."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    return zs.groupBy("pair").applyInPandasWithState(
-        _update_cusum,
-        outputStructType=CUSUM_OUTPUT_SCHEMA,
-        stateStructType=CUSUM_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return (sp, sn), {"day": out_day, "s_pos": out_sp, "s_neg": out_sn}
 
 
 @register(
@@ -579,20 +421,7 @@ def cusum_stream(zs: DataFrame) -> DataFrame:
     tags=("streaming", "stateful", "profiling"),
 )
 def stream_cusum_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.anomaly import CUSUM_H, _cusum_z  # noqa: F811
-
-    z = _cusum_z(spark, sf_dir).select(
-        F.col("event_type").alias("pair"),
-        F.col("day").alias("bucket"),
-        "z",
-    )
-    stream_dir = _write_ordered_slices(z)
-    src = (
-        spark.readStream.schema("pair string, bucket timestamp, z double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stream_dir)
-    )
-    out = run_to_memory(cusum_stream(src), "stream_cusum_alerts", "append", state_partitions=FEW_KEY_STATE_PARTITIONS)
+    out = stateful_fold(_cusum_z(spark, sf_dir), "stream_cusum_alerts", _update_cusum)
     return out.select(
         "event_type",
         "day",
@@ -625,13 +454,9 @@ HA_STATE_SCHEMA = StructType(
 )
 
 
-def _update_heikin_ashi(
-    key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: Any
-) -> Iterator[pd.DataFrame]:
-    (pair,) = key
-    ho, hc = state.get if state.exists else (None, None)
-
-    rows = pd.concat(list(pdfs), ignore_index=True).sort_values("bucket")
+@fold("pair", "bucket", HA_STATE_SCHEMA, HA_OUTPUT_SCHEMA)
+def _update_heikin_ashi(key, rows, state):
+    ho, hc = state or (None, None)
     out: dict[str, list] = {
         "bucket": [], "ha_open": [], "ha_high": [], "ha_low": [],
         "ha_close": [],
@@ -652,25 +477,7 @@ def _update_heikin_ashi(
         out["ha_low"].append(min(lo_, ho, hc_new))
         out["ha_close"].append(hc_new)
 
-    state.update((ho, hc))
-    yield pd.DataFrame({"pair": [pair] * len(out["bucket"]), **out})
-
-
-def heikin_ashi_stream(bars: DataFrame) -> DataFrame:
-    """Streaming (pair, bucket, open, high, low, close) bars ->
-    Heikin-Ashi bars.  ``bars`` must be a streaming DataFrame."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    return bars.groupBy("pair").applyInPandasWithState(
-        _update_heikin_ashi,
-        outputStructType=HA_OUTPUT_SCHEMA,
-        stateStructType=HA_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-from ..operators.candles import SQL_HEIKIN_ASHI  # noqa: E402
+    return (ho, hc), out
 
 
 @register(
@@ -691,19 +498,9 @@ from ..operators.candles import SQL_HEIKIN_ASHI  # noqa: E402
     tags=("streaming", "stateful", "aggregation"),
 )
 def stream_heikin_ashi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.candles import _hourly_ohlc4
-
-    stream_dir = _write_ordered_slices(_hourly_ohlc4(spark, sf_dir))
-    bars = (
-        spark.readStream.schema(
-            "pair string, bucket timestamp, open double, high double, "
-            "low double, close double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stream_dir)
-    )
-    return run_to_memory(
-        heikin_ashi_stream(bars), "stream_heikin_ashi", "append", state_partitions=FEW_KEY_STATE_PARTITIONS).orderBy("pair", "bucket")
+    return stateful_fold(
+        _hourly_ohlc4(spark, sf_dir), "stream_heikin_ashi", _update_heikin_ashi
+    ).orderBy("pair", "bucket")
 
 
 # --------------------------------------------- streaming Ichimoku cloud
@@ -735,20 +532,17 @@ ICHI_STATE_SCHEMA = StructType(
 )
 
 
-def _update_ichimoku(
-    key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: Any
-) -> Iterator[pd.DataFrame]:
-    from ..operators.candles import ICHI_K, ICHI_S, ICHI_T
-
-    (pair,) = key
-    if state.exists:
-        n, highs, lows, pend_a, pend_b = state.get
+@fold("pair", "bucket", ICHI_STATE_SCHEMA, ICHI_OUTPUT_SCHEMA)
+def _update_ichimoku(key, rows, state):
+    """Per-bar Ichimoku lines (chikou excluded: it is a backward
+    displacement of a FUTURE close, applied after the drain)."""
+    if state:
+        n, highs, lows, pend_a, pend_b = state
         highs, lows = list(highs), list(lows)
         pend_a, pend_b = list(pend_a), list(pend_b)
     else:
         n, highs, lows, pend_a, pend_b = 0, [], [], [], []
 
-    rows = pd.concat(list(pdfs), ignore_index=True).sort_values("bucket")
     out: dict[str, list] = {
         "bucket": [], "tenkan": [], "kijun": [],
         "senkou_a": [], "senkou_b": [], "close": [],
@@ -786,24 +580,7 @@ def _update_ichimoku(
             out["senkou_b"].append(_rhalf(sen_b_raw))
             out["close"].append(float(close))
 
-    state.update((n, highs, lows, pend_a, pend_b))
-    yield pd.DataFrame({"pair": [pair] * len(out["bucket"]), **out})
-
-
-def ichimoku_stream(bars: DataFrame) -> DataFrame:
-    """Streaming (pair, bucket, high, low, close) OHLC bars -> per-bar
-    Ichimoku lines (chikou excluded: it is a backward displacement of a
-    FUTURE close, applied after the drain).  ``bars`` must be a
-    streaming DataFrame."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    return bars.groupBy("pair").applyInPandasWithState(
-        _update_ichimoku,
-        outputStructType=ICHI_OUTPUT_SCHEMA,
-        stateStructType=ICHI_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return (n, highs, lows, pend_a, pend_b), out
 
 
 @register(
@@ -830,21 +607,9 @@ def ichimoku_stream(bars: DataFrame) -> DataFrame:
     tags=("streaming", "stateful", "window"),
 )
 def stream_ichimoku(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window
-
-    from ..operators.candles import ICHI_K, _hourly_ohlc
-
-    stream_dir = _write_ordered_slices(_hourly_ohlc(spark, sf_dir))
-    bars = (
-        spark.readStream.schema(
-            "pair string, bucket timestamp, high double, low double, "
-            "close double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stream_dir)
+    drained = stateful_fold(
+        _hourly_ohlc(spark, sf_dir), "stream_ichimoku", _update_ichimoku
     )
-    drained = run_to_memory(
-        ichimoku_stream(bars), "stream_ichimoku", "append", state_partitions=FEW_KEY_STATE_PARTITIONS)
     w = Window.partitionBy("pair").orderBy("bucket")
     return (
         drained.withColumn("chikou", F.lead("close", ICHI_K).over(w))
@@ -884,17 +649,9 @@ def _dquant(x: float) -> Decimal:
     return Decimal(repr(x)).quantize(_QUANT, rounding=ROUND_HALF_UP)
 
 
-def _update_bollinger(
-    key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: Any
-) -> Iterator[pd.DataFrame]:
-    import math
-
-    from ..operators.candles import BB_K, BB_N
-
-    (pair,) = key
-    ring: list[float] = list(state.get[0]) if state.exists else []
-
-    rows = pd.concat(list(pdfs), ignore_index=True).sort_values("bucket")
+@fold("pair", "bucket", BB_STATE_SCHEMA, BB_OUTPUT_SCHEMA)
+def _update_bollinger(key, rows, state):
+    ring: list[float] = list(state[0]) if state else []
     out: dict[str, list] = {
         "bucket": [], "close": [], "mid": [],
         "upper": [], "lower": [], "breakout": [],
@@ -921,22 +678,7 @@ def _update_bollinger(
         out["lower"].append(lower)
         out["breakout"].append(c > upper or c < lower)
 
-    state.update((ring,))
-    yield pd.DataFrame({"pair": [pair] * len(out["bucket"]), **out})
-
-
-def bollinger_stream(closes: DataFrame) -> DataFrame:
-    """Streaming (pair, bucket, c) rounded-close rows -> full-window
-    Bollinger band rows.  ``closes`` must be a streaming DataFrame."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    return closes.groupBy("pair").applyInPandasWithState(
-        _update_bollinger,
-        outputStructType=BB_OUTPUT_SCHEMA,
-        stateStructType=BB_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return (ring,), out
 
 
 @register(
@@ -958,22 +700,15 @@ def bollinger_stream(closes: DataFrame) -> DataFrame:
     tags=("streaming", "stateful", "window"),
 )
 def stream_bollinger_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.candles import _hourly_closes, fround
-
     # fround, matching window_bollinger_bands' base column and the
     # shared SQL_BOLLINGER oracle text exactly (the F.round it replaced
     # was invisible on 2-dp closes but a latent half-grid divergence).
     base = _hourly_closes(spark, sf_dir).select(
         "pair", "bucket", fround("close").alias("c")
     )
-    stream_dir = _write_ordered_slices(base)
-    closes = (
-        spark.readStream.schema("pair string, bucket timestamp, c double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stream_dir)
-    )
-    return run_to_memory(
-        bollinger_stream(closes), "stream_bollinger_bands", "append", state_partitions=FEW_KEY_STATE_PARTITIONS).orderBy("pair", "bucket")
+    return stateful_fold(
+        base, "stream_bollinger_bands", _update_bollinger
+    ).orderBy("pair", "bucket")
 
 
 # ------------------------------------------ streaming stochastic (K, D)
@@ -999,19 +734,14 @@ STOCH_STATE_SCHEMA = StructType(
 )
 
 
-def _update_stochastic(
-    key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: Any
-) -> Iterator[pd.DataFrame]:
-    from ..operators.candles import STOCH_D, STOCH_N
-
-    (pair,) = key
-    if state.exists:
-        rn, highs, lows, kq = state.get
+@fold("pair", "bucket", STOCH_STATE_SCHEMA, STOCH_OUTPUT_SCHEMA)
+def _update_stochastic(key, rows, state):
+    if state:
+        rn, highs, lows, kq = state
         highs, lows, kq = list(highs), list(lows), list(kq)
     else:
         rn, highs, lows, kq = 0, [], [], []
 
-    rows = pd.concat(list(pdfs), ignore_index=True).sort_values("bucket")
     out: dict[str, list] = {"bucket": [], "pct_k": [], "pct_d": []}
     for bucket, high, low, close in zip(
         rows["bucket"], rows["high"], rows["low"], rows["close"]
@@ -1043,22 +773,7 @@ def _update_stochastic(
         out["pct_k"].append(k)
         out["pct_d"].append(pct_d)
 
-    state.update((rn, highs, lows, kq))
-    yield pd.DataFrame({"pair": [pair] * len(out["bucket"]), **out})
-
-
-def stochastic_stream(bars: DataFrame) -> DataFrame:
-    """Streaming (pair, bucket, high, low, close) OHLC bars ->
-    stochastic %K/%D rows.  ``bars`` must be a streaming DataFrame."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    return bars.groupBy("pair").applyInPandasWithState(
-        _update_stochastic,
-        outputStructType=STOCH_OUTPUT_SCHEMA,
-        stateStructType=STOCH_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return (rn, highs, lows, kq), out
 
 
 @register(
@@ -1078,19 +793,10 @@ def stochastic_stream(bars: DataFrame) -> DataFrame:
     tags=("streaming", "stateful", "window"),
 )
 def stream_stochastic_oscillator(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.candles import _hourly_ohlc
-
-    stream_dir = _write_ordered_slices(_hourly_ohlc(spark, sf_dir))
-    bars = (
-        spark.readStream.schema(
-            "pair string, bucket timestamp, high double, low double, "
-            "close double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stream_dir)
-    )
-    return run_to_memory(
-        stochastic_stream(bars), "stream_stochastic_oscillator", "append", state_partitions=FEW_KEY_STATE_PARTITIONS).orderBy("pair", "bucket")
+    return stateful_fold(
+        _hourly_ohlc(spark, sf_dir), "stream_stochastic_oscillator",
+        _update_stochastic,
+    ).orderBy("pair", "bucket")
 
 
 # --------------------------------------- streaming Keltner channels
@@ -1119,19 +825,12 @@ KC_STATE_SCHEMA = StructType(
 )
 
 
-def _update_keltner(
-    key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: Any
-) -> Iterator[pd.DataFrame]:
-    from ..operators.candles import KC_ATR_N, KC_K, KC_N
-
-    (pair,) = key
-    if state.exists:
-        i, s_tp, s_tr, ema, atr, prev_close = state.get
-    else:
-        i, s_tp, s_tr, ema, atr, prev_close = 0, 0.0, 0.0, None, None, None
-
+@fold("pair", "bucket", KC_STATE_SCHEMA, KC_OUTPUT_SCHEMA)
+def _update_keltner(key, rows, state):
+    i, s_tp, s_tr, ema, atr, prev_close = (
+        state or (0, 0.0, 0.0, None, None, None)
+    )
     al = 2.0 / (KC_N + 1)  # plain-alpha EMA; ATR uses Wilder's form
-    rows = pd.concat(list(pdfs), ignore_index=True).sort_values("bucket")
     out: dict[str, list] = {"bucket": [], "mid": [], "upper": [], "lower": []}
     for bucket, high, low, close in zip(
         rows["bucket"], rows["high"], rows["low"], rows["close"]
@@ -1167,22 +866,7 @@ def _update_keltner(
         out["upper"].append(_rhalf(ema + float(KC_K) * atr))
         out["lower"].append(_rhalf(ema - float(KC_K) * atr))
 
-    state.update((i, s_tp, s_tr, ema, atr, prev_close))
-    yield pd.DataFrame({"pair": [pair] * len(out["bucket"]), **out})
-
-
-def keltner_stream(bars: DataFrame) -> DataFrame:
-    """Streaming (pair, bucket, high, low, close) OHLC bars -> Keltner
-    channel rows.  ``bars`` must be a streaming DataFrame."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    return bars.groupBy("pair").applyInPandasWithState(
-        _update_keltner,
-        outputStructType=KC_OUTPUT_SCHEMA,
-        stateStructType=KC_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return (i, s_tp, s_tr, ema, atr, prev_close), out
 
 
 @register(
@@ -1204,19 +888,9 @@ def keltner_stream(bars: DataFrame) -> DataFrame:
     tags=("streaming", "stateful", "window"),
 )
 def stream_keltner_channels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.candles import _hourly_ohlc
-
-    stream_dir = _write_ordered_slices(_hourly_ohlc(spark, sf_dir))
-    bars = (
-        spark.readStream.schema(
-            "pair string, bucket timestamp, high double, low double, "
-            "close double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stream_dir)
-    )
-    return run_to_memory(
-        keltner_stream(bars), "stream_keltner_channels", "append", state_partitions=FEW_KEY_STATE_PARTITIONS).orderBy("pair", "bucket")
+    return stateful_fold(
+        _hourly_ohlc(spark, sf_dir), "stream_keltner_channels", _update_keltner
+    ).orderBy("pair", "bucket")
 
 
 # ------------------------------------------------------ streaming MACD
@@ -1246,23 +920,14 @@ MACD_STATE_SCHEMA = StructType(
 )
 
 
-def _update_macd(
-    key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: Any
-) -> Iterator[pd.DataFrame]:
-    from ..operators.candles import MACD_FAST, MACD_SIG, MACD_SLOW
-
-    (pair,) = key
-    if state.exists:
-        i, s_fast, s_slow, e_fast, e_slow, j, s_sig, e_sig = state.get
-    else:
-        i, s_fast, s_slow, e_fast, e_slow, j, s_sig, e_sig = (
-            0, 0.0, 0.0, None, None, 0, 0.0, None,
-        )
-
+@fold("pair", "bucket", MACD_STATE_SCHEMA, MACD_OUTPUT_SCHEMA)
+def _update_macd(key, rows, state):
+    i, s_fast, s_slow, e_fast, e_slow, j, s_sig, e_sig = state or (
+        0, 0.0, 0.0, None, None, 0, 0.0, None,
+    )
     al_f = 2.0 / (MACD_FAST + 1)
     al_s = 2.0 / (MACD_SLOW + 1)
     al_g = 2.0 / (MACD_SIG + 1)
-    rows = pd.concat(list(pdfs), ignore_index=True).sort_values("bucket")
     out: dict[str, list] = {
         "bucket": [], "macd": [], "signal": [], "histogram": [],
     }
@@ -1297,22 +962,7 @@ def _update_macd(
         out["signal"].append(e_sig)
         out["histogram"].append(_r6(macd - e_sig))
 
-    state.update((i, s_fast, s_slow, e_fast, e_slow, j, s_sig, e_sig))
-    yield pd.DataFrame({"pair": [pair] * len(out["bucket"]), **out})
-
-
-def macd_stream(closes: DataFrame) -> DataFrame:
-    """Streaming (pair, bucket, close) rows -> MACD/signal/histogram
-    rows.  ``closes`` must be a streaming DataFrame."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    return closes.groupBy("pair").applyInPandasWithState(
-        _update_macd,
-        outputStructType=MACD_OUTPUT_SCHEMA,
-        stateStructType=MACD_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return (i, s_fast, s_slow, e_fast, e_slow, j, s_sig, e_sig), out
 
 
 @register(
@@ -1332,16 +982,9 @@ def macd_stream(closes: DataFrame) -> DataFrame:
     tags=("streaming", "stateful", "window"),
 )
 def stream_macd(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.candles import _hourly_closes
-
-    stream_dir = _write_ordered_slices(_hourly_closes(spark, sf_dir))
-    closes = (
-        spark.readStream.schema("pair string, bucket timestamp, close double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stream_dir)
-    )
-    return run_to_memory(
-        macd_stream(closes), "stream_macd", "append", state_partitions=FEW_KEY_STATE_PARTITIONS).orderBy("pair", "bucket")
+    return stateful_fold(
+        _hourly_closes(spark, sf_dir), "stream_macd", _update_macd
+    ).orderBy("pair", "bucket")
 
 
 # --------------------------------------------- streaming OBV (exact)
@@ -1362,13 +1005,9 @@ OBV_STATE_SCHEMA = StructType(
 )
 
 
-def _update_obv(
-    key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: Any
-) -> Iterator[pd.DataFrame]:
-    (pair,) = key
-    prev_close, obv = state.get if state.exists else (None, 0)
-
-    rows = pd.concat(list(pdfs), ignore_index=True).sort_values("bucket")
+@fold("pair", "bucket", OBV_STATE_SCHEMA, OBV_OUTPUT_SCHEMA)
+def _update_obv(key, rows, state):
+    prev_close, obv = state or (None, 0)
     out: dict[str, list] = {"bucket": [], "obv": []}
     for bucket, close, volume in zip(
         rows["bucket"], rows["close"], rows["volume"]
@@ -1385,22 +1024,7 @@ def _update_obv(
         out["bucket"].append(bucket)
         out["obv"].append(obv)
 
-    state.update((prev_close, obv))
-    yield pd.DataFrame({"pair": [pair] * len(out["bucket"]), **out})
-
-
-def obv_stream(bars: DataFrame) -> DataFrame:
-    """Streaming (pair, bucket, close, volume) rows -> running OBV.
-    ``bars`` must be a streaming DataFrame."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    return bars.groupBy("pair").applyInPandasWithState(
-        _update_obv,
-        outputStructType=OBV_OUTPUT_SCHEMA,
-        stateStructType=OBV_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return (prev_close, obv), out
 
 
 @register(
@@ -1417,25 +1041,15 @@ def obv_stream(bars: DataFrame) -> DataFrame:
     tags=("streaming", "stateful", "window"),
 )
 def stream_obv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.candles import _hourly_closes
-    from ..sources.catalog import load_table
-
     e = load_table(spark, sf_dir, "events")
     hourly = e.groupBy(
         F.col("event_type").alias("pair"),
         F.date_trunc("hour", "ts").alias("bucket"),
     ).agg(F.count("*").cast("bigint").alias("volume"))
     bars = _hourly_closes(spark, sf_dir).join(hourly, ["pair", "bucket"])
-    stream_dir = _write_ordered_slices(bars)
-    feed = (
-        spark.readStream.schema(
-            "pair string, bucket timestamp, close double, volume long"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stream_dir)
+    return stateful_fold(bars, "stream_obv", _update_obv).orderBy(
+        "pair", "bucket"
     )
-    return run_to_memory(
-        obv_stream(feed), "stream_obv", "append", state_partitions=FEW_KEY_STATE_PARTITIONS).orderBy("pair", "bucket")
 
 
 # ------------------------------------------ streaming Cutler's RSI
@@ -1458,19 +1072,14 @@ CRSI_STATE_SCHEMA = StructType(
 )
 
 
-def _update_rsi_cutler(
-    key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: Any
-) -> Iterator[pd.DataFrame]:
-    from ..operators.candles import RSI_N
-
-    (pair,) = key
-    if state.exists:
-        prev_close, gains, losses = state.get
+@fold("pair", "bucket", CRSI_STATE_SCHEMA, CRSI_OUTPUT_SCHEMA)
+def _update_rsi_cutler(key, rows, state):
+    if state:
+        prev_close, gains, losses = state
         gains, losses = list(gains), list(losses)
     else:
         prev_close, gains, losses = None, [], []
 
-    rows = pd.concat(list(pdfs), ignore_index=True).sort_values("bucket")
     out: dict[str, list] = {"bucket": [], "rsi": []}
     for bucket, close in zip(rows["bucket"], rows["close"]):
         close = float(close)
@@ -1493,22 +1102,7 @@ def _update_rsi_cutler(
         out["bucket"].append(bucket)
         out["rsi"].append(rsi)
 
-    state.update((prev_close, gains, losses))
-    yield pd.DataFrame({"pair": [pair] * len(out["bucket"]), **out})
-
-
-def rsi_cutler_stream(closes: DataFrame) -> DataFrame:
-    """Streaming (pair, bucket, close) rows -> Cutler-RSI rows.
-    ``closes`` must be a streaming DataFrame."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    return closes.groupBy("pair").applyInPandasWithState(
-        _update_rsi_cutler,
-        outputStructType=CRSI_OUTPUT_SCHEMA,
-        stateStructType=CRSI_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return (prev_close, gains, losses), out
 
 
 @register(
@@ -1527,16 +1121,9 @@ def rsi_cutler_stream(closes: DataFrame) -> DataFrame:
     tags=("streaming", "stateful", "window"),
 )
 def stream_rsi_cutler(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.candles import _hourly_closes
-
-    stream_dir = _write_ordered_slices(_hourly_closes(spark, sf_dir))
-    closes = (
-        spark.readStream.schema("pair string, bucket timestamp, close double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stream_dir)
-    )
-    return run_to_memory(
-        rsi_cutler_stream(closes), "stream_rsi_cutler", "append", state_partitions=FEW_KEY_STATE_PARTITIONS).orderBy("pair", "bucket")
+    return stateful_fold(
+        _hourly_closes(spark, sf_dir), "stream_rsi_cutler", _update_rsi_cutler
+    ).orderBy("pair", "bucket")
 
 
 # ------------------------------- streaming max drawdown (update mode)
@@ -1558,13 +1145,9 @@ MDD_STATE_SCHEMA = StructType(
 )
 
 
-def _update_max_drawdown(
-    key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: Any
-) -> Iterator[pd.DataFrame]:
-    (pair,) = key
-    n, peak, min_dd = state.get if state.exists else (0, None, None)
-
-    rows = pd.concat(list(pdfs), ignore_index=True).sort_values("bucket")
+@fold("pair", "bucket", MDD_STATE_SCHEMA, MDD_OUTPUT_SCHEMA, "update")
+def _update_max_drawdown(key, rows, state):
+    n, peak, min_dd = state or (0, None, None)
     for close in rows["close"]:
         close = float(close)
         peak = close if peak is None else max(peak, close)
@@ -1572,26 +1155,9 @@ def _update_max_drawdown(
         min_dd = dd if min_dd is None else min(min_dd, dd)
         n += 1
 
-    state.update((n, peak, min_dd))
     # ONE aggregate row per (pair, micro-batch): the current running
     # answer -- update-mode semantics, not per-bar emission.
-    yield pd.DataFrame(
-        {"pair": [pair], "n_hours": [n], "max_drawdown": [_r6(min_dd)]}
-    )
-
-
-def max_drawdown_stream(closes: DataFrame) -> DataFrame:
-    """Streaming (pair, bucket, close) rows -> one running
-    (n_hours, max_drawdown) aggregate row per pair per micro-batch."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    return closes.groupBy("pair").applyInPandasWithState(
-        _update_max_drawdown,
-        outputStructType=MDD_OUTPUT_SCHEMA,
-        stateStructType=MDD_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return (n, peak, min_dd), {"n_hours": [n], "max_drawdown": [_r6(min_dd)]}
 
 
 @register(
@@ -1614,16 +1180,9 @@ def max_drawdown_stream(closes: DataFrame) -> DataFrame:
     tags=("streaming", "stateful", "window"),
 )
 def stream_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.candles import _hourly_closes
-
-    stream_dir = _write_ordered_slices(_hourly_closes(spark, sf_dir))
-    closes = (
-        spark.readStream.schema("pair string, bucket timestamp, close double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stream_dir)
+    drained = stateful_fold(
+        _hourly_closes(spark, sf_dir), "stream_max_drawdown", _update_max_drawdown
     )
-    drained = run_to_memory(
-        max_drawdown_stream(closes), "stream_max_drawdown", "update", state_partitions=FEW_KEY_STATE_PARTITIONS)
     # each pair's last revision == the final aggregate
     return (
         drained.groupBy("pair")
@@ -1660,16 +1219,10 @@ DC_STATE_SCHEMA = StructType(
 )
 
 
-def _update_donchian(
-    key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: Any
-) -> Iterator[pd.DataFrame]:
-    from ..operators.candles import DC_N
-
-    (pair,) = key
-    highs: list[float] = list(state.get[0]) if state.exists else []
-    lows: list[float] = list(state.get[1]) if state.exists else []
-
-    rows = pd.concat(list(pdfs), ignore_index=True).sort_values("bucket")
+@fold("pair", "bucket", DC_STATE_SCHEMA, DC_OUTPUT_SCHEMA)
+def _update_donchian(key, rows, state):
+    highs: list[float] = list(state[0]) if state else []
+    lows: list[float] = list(state[1]) if state else []
     out: dict[str, list] = {
         "bucket": [], "close": [], "upper": [], "lower": [],
         "mid": [], "breakout_up": [], "breakout_down": [],
@@ -1697,22 +1250,7 @@ def _update_donchian(
             highs.pop(0)
             lows.pop(0)
 
-    state.update((highs, lows))
-    yield pd.DataFrame({"pair": [pair] * len(out["bucket"]), **out})
-
-
-def donchian_stream(bars: DataFrame) -> DataFrame:
-    """Streaming (pair, bucket, high, low, close) OHLC bars -> Donchian
-    channel rows.  ``bars`` must be a streaming DataFrame."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    return bars.groupBy("pair").applyInPandasWithState(
-        _update_donchian,
-        outputStructType=DC_OUTPUT_SCHEMA,
-        stateStructType=DC_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return (highs, lows), out
 
 
 @register(
@@ -1731,19 +1269,9 @@ def donchian_stream(bars: DataFrame) -> DataFrame:
     tags=("streaming", "stateful", "window"),
 )
 def stream_donchian_channels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.candles import _hourly_ohlc
-
-    stream_dir = _write_ordered_slices(_hourly_ohlc(spark, sf_dir))
-    bars = (
-        spark.readStream.schema(
-            "pair string, bucket timestamp, high double, low double, "
-            "close double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stream_dir)
-    )
-    return run_to_memory(
-        donchian_stream(bars), "stream_donchian_channels", "append", state_partitions=FEW_KEY_STATE_PARTITIONS).orderBy("pair", "bucket")
+    return stateful_fold(
+        _hourly_ohlc(spark, sf_dir), "stream_donchian_channels", _update_donchian
+    ).orderBy("pair", "bucket")
 
 
 # ----------------------------------- streaming rolling z-score alerts
@@ -1769,18 +1297,10 @@ ZS_STATE_SCHEMA = StructType(
 )
 
 
-def _update_rolling_zscore(
-    key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: Any
-) -> Iterator[pd.DataFrame]:
-    import math
-
-    from ..operators.anomaly import BASELINE_HOURS, Z_THRESHOLD
-
-    (event_type,) = key
-    idxs: list[int] = list(state.get[0]) if state.exists else []
-    counts: list[int] = list(state.get[1]) if state.exists else []
-
-    rows = pd.concat(list(pdfs), ignore_index=True).sort_values("hour_idx")
+@fold("event_type", "hour_idx", ZS_STATE_SCHEMA, ZS_OUTPUT_SCHEMA)
+def _update_rolling_zscore(key, rows, state):
+    idxs: list[int] = list(state[0]) if state else []
+    counts: list[int] = list(state[1]) if state else []
     out: dict[str, list] = {
         "bucket_start": [], "n": [], "baseline_hours": [],
         "z": [], "is_anomaly": [],
@@ -1818,24 +1338,7 @@ def _update_rolling_zscore(
         idxs.append(hour_idx)
         counts.append(n)
 
-    state.update((idxs, counts))
-    yield pd.DataFrame(
-        {"event_type": [event_type] * len(out["n"]), **out}
-    )
-
-
-def rolling_zscore_stream(series: DataFrame) -> DataFrame:
-    """Streaming (event_type, bucket_start, hour_idx, n) series rows ->
-    rolling z-score rows.  ``series`` must be a streaming DataFrame."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    return series.groupBy("event_type").applyInPandasWithState(
-        _update_rolling_zscore,
-        outputStructType=ZS_OUTPUT_SCHEMA,
-        stateStructType=ZS_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return (idxs, counts), out
 
 
 @register(
@@ -1858,21 +1361,10 @@ def rolling_zscore_stream(series: DataFrame) -> DataFrame:
     tags=("streaming", "stateful", "anomaly"),
 )
 def stream_rolling_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.anomaly import hourly_event_series
-
-    stream_dir = _write_ordered_slices(
-        hourly_event_series(spark, sf_dir), order_col="bucket_start"
-    )
-    series = (
-        spark.readStream.schema(
-            "event_type string, bucket_start timestamp, hour_idx bigint, "
-            "n bigint"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stream_dir)
-    )
-    return run_to_memory(
-        rolling_zscore_stream(series), "stream_rolling_zscore", "append", state_partitions=FEW_KEY_STATE_PARTITIONS).orderBy("event_type", "bucket_start")
+    return stateful_fold(
+        hourly_event_series(spark, sf_dir), "stream_rolling_zscore",
+        _update_rolling_zscore,
+    ).orderBy("event_type", "bucket_start")
 
 
 # ---------------------------------- streaming gap interpolation
@@ -1897,17 +1389,9 @@ GI_STATE_SCHEMA = StructType(
 )
 
 
-def _update_gap_interpolation(
-    key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: Any
-) -> Iterator[pd.DataFrame]:
-    from ..operators.candles import DD_ROUND
-
-    (pair,) = key
-    prev_bucket, prev_close = (
-        state.get if state.exists else (None, None)
-    )
-
-    rows = pd.concat(list(pdfs), ignore_index=True).sort_values("bucket")
+@fold("pair", "bucket", GI_STATE_SCHEMA, GI_OUTPUT_SCHEMA)
+def _update_gap_interpolation(key, rows, state):
+    prev_bucket, prev_close = state or (None, None)
     out: dict[str, list] = {"bucket": [], "close": [], "is_interpolated": []}
     for bucket, close in zip(rows["bucket"], rows["close"]):
         close = float(close)
@@ -1927,22 +1411,7 @@ def _update_gap_interpolation(
         out["is_interpolated"].append(False)
         prev_bucket, prev_close = bucket, close
 
-    state.update((prev_bucket, prev_close))
-    yield pd.DataFrame({"pair": [pair] * len(out["bucket"]), **out})
-
-
-def gap_interpolation_stream(bars: DataFrame) -> DataFrame:
-    """Streaming (pair, bucket, close) REAL bars -> the complete
-    repaired series.  ``bars`` must be a streaming DataFrame."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    return bars.groupBy("pair").applyInPandasWithState(
-        _update_gap_interpolation,
-        outputStructType=GI_OUTPUT_SCHEMA,
-        stateStructType=GI_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return (prev_bucket, prev_close), out
 
 
 @register(
@@ -1964,14 +1433,10 @@ def gap_interpolation_stream(bars: DataFrame) -> DataFrame:
     tags=("streaming", "stateful", "window"),
 )
 def stream_gap_interpolation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    stream_dir = _write_ordered_slices(_hourly_closes(spark, sf_dir))
-    bars = (
-        spark.readStream.schema("pair string, bucket timestamp, close double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stream_dir)
-    )
-    return run_to_memory(
-        gap_interpolation_stream(bars), "stream_gap_interpolation", "append", state_partitions=FEW_KEY_STATE_PARTITIONS).orderBy("pair", "bucket")
+    return stateful_fold(
+        _hourly_closes(spark, sf_dir), "stream_gap_interpolation",
+        _update_gap_interpolation,
+    ).orderBy("pair", "bucket")
 
 
 # ------------------------------------ streaming dollar bars (update)
@@ -2021,36 +1486,26 @@ def _d6(x: float) -> Decimal:
     return Decimal(repr(x)).quantize(_QUANT6, rounding=ROUND_HALF_UP)
 
 
-def _update_dollar_bars(
-    key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: Any
-) -> Iterator[pd.DataFrame]:
-    from ..operators.candles import _DB_T_MICRO
-
-    (pair,) = key
-    if state.exists:
+@fold("pair", ["ts", "event_id"], DB_STATE_SCHEMA, DB_OUTPUT_SCHEMA, "update")
+def _update_dollar_bars(key, rows, state):
+    if state:
         (cum_prev, bar_id, start_ts, end_ts, op, hi, lo, cl,
-         base_sum, dollar_sum, n) = state.get
+         base_sum, dollar_sum, n) = state
         base_sum, dollar_sum = Decimal(base_sum), Decimal(dollar_sum)
     else:
         cum_prev, bar_id, n = 0, None, 0
         start_ts = end_ts = op = hi = lo = cl = None
         base_sum = dollar_sum = Decimal(0)
 
-    out: list[dict] = []
+    out: dict[str, list] = {f.name: [] for f in DB_OUTPUT_SCHEMA.fields[1:]}
 
-    def _bar_row() -> dict:
-        return {
-            "pair": pair, "bar_id": bar_id,
-            "start_ts": start_ts, "end_ts": end_ts,
-            "open": op, "high": hi, "low": lo, "close": cl,
-            "base_volume": float(base_sum),
-            "dollar_volume": float(dollar_sum),
-            "n_trades": n,
-        }
+    def _emit_bar() -> None:
+        for col, v in zip(out.values(), (
+            bar_id, start_ts, end_ts, op, hi, lo, cl,
+            float(base_sum), float(dollar_sum), n,
+        )):
+            col.append(v)
 
-    rows = pd.concat(list(pdfs), ignore_index=True).sort_values(
-        ["ts", "event_id"]
-    )
     for ts, value, counter_value in zip(
         rows["ts"], rows["value"], rows["counter_value"]
     ):
@@ -2058,7 +1513,7 @@ def _update_dollar_bars(
         notional_micro = int(_d6(counter_value) * 1_000_000)
         this_bar = cum_prev // _DB_T_MICRO
         if bar_id is not None and this_bar != bar_id:
-            out.append(_bar_row())  # the bar just CLOSED: final revision
+            _emit_bar()  # the bar just CLOSED: final revision
             bar_id, n = None, 0
             base_sum = dollar_sum = Decimal(0)
         if bar_id is None:
@@ -2070,28 +1525,12 @@ def _update_dollar_bars(
         dollar_sum += _d6(counter_value)
         n += 1
     if bar_id is not None:
-        out.append(_bar_row())  # the open bar's running revision
+        _emit_bar()  # the open bar's running revision
 
-    state.update((
+    return (
         cum_prev, bar_id, start_ts, end_ts, op, hi, lo, cl,
         str(base_sum), str(dollar_sum), n,
-    ))
-    yield pd.DataFrame(out, columns=[f.name for f in DB_OUTPUT_SCHEMA])
-
-
-def dollar_bars_stream(trades: DataFrame) -> DataFrame:
-    """Streaming (pair, ts, event_id, value, counter_value) trades ->
-    dollar-bar revisions (update mode: closed bars final, the open bar
-    revised per micro-batch)."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    return trades.groupBy("pair").applyInPandasWithState(
-        _update_dollar_bars,
-        outputStructType=DB_OUTPUT_SCHEMA,
-        stateStructType=DB_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    ), out
 
 
 @register(
@@ -2114,28 +1553,14 @@ def dollar_bars_stream(trades: DataFrame) -> DataFrame:
     tags=("streaming", "stateful", "aggregation"),
 )
 def stream_dollar_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.candles import _with_legs
-    from ..sources.catalog import load_table
-
-    e = load_table(spark, sf_dir, "events")
-    trades = _with_legs(e).select(
+    trades = _with_legs(load_table(spark, sf_dir, "events")).select(
         F.col("event_type").alias("pair"),
         "ts",
         "event_id",
         "value",
         "counter_value",
     )
-    stream_dir = _write_ordered_slices(trades, order_col=["ts", "event_id"])
-    src = (
-        spark.readStream.schema(
-            "pair string, ts timestamp, event_id bigint, value double, "
-            "counter_value double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stream_dir)
-    )
-    drained = run_to_memory(
-        dollar_bars_stream(src), "stream_dollar_bars", "update", state_partitions=FEW_KEY_STATE_PARTITIONS)
+    drained = stateful_fold(trades, "stream_dollar_bars", _update_dollar_bars)
     return (
         drained.groupBy("pair", "bar_id")
         .agg(

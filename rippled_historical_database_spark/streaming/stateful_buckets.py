@@ -30,7 +30,7 @@ upstream feed).
 
 from __future__ import annotations
 
-import os
+import shutil
 import tempfile
 from collections.abc import Iterator
 from decimal import Decimal
@@ -121,10 +121,10 @@ def _out_row(kind: str, cols: dict[str, Any]) -> pd.DataFrame:
     return out
 
 
-def _update_bucket(
-    key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: Any
-) -> Iterator[pd.DataFrame]:
-    account, day = key
+def _fold_events(pdfs: Iterator[pd.DataFrame], state: Any) -> tuple:
+    """Fold one key's new events onto its stored bucket -- replay dedup
+    by event id, exact Decimal total -- store the bucket and return
+    ``(n, total, high)``."""
     if state.exists:
         n, total_s, high, seen_list = state.get
         total = Decimal(total_s)
@@ -150,6 +150,14 @@ def _update_bucket(
                 high = value
 
     state.update((n, str(total), high, sorted(seen)))
+    return n, total, high
+
+
+def _update_bucket(
+    key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: Any
+) -> Iterator[pd.DataFrame]:
+    account, day = key
+    n, total, high = _fold_events(pdfs, state)
     yield _out_row(
         "bucket",
         {
@@ -162,19 +170,23 @@ def _update_bucket(
     )
 
 
+def _purchases(events: DataFrame) -> DataFrame:
+    """The buckets' input: purchase events keyed by (account, day)."""
+    return events.filter(F.col("event_type") == "purchase").select(
+        "event_id",
+        "value",
+        F.col("user_id").alias("account"),
+        F.date_trunc("day", "ts").alias("day"),
+    )
+
+
 def account_daily_buckets(events: DataFrame) -> DataFrame:
     """The stateful plan: streaming events -> per-(account, day) bucket
     updates.  ``events`` must be a streaming DataFrame."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     return (
-        events.filter(F.col("event_type") == "purchase")
-        .select(
-            "event_id",
-            "value",
-            F.col("user_id").alias("account"),
-            F.date_trunc("day", "ts").alias("day"),
-        )
+        _purchases(events)
         .groupBy("account", "day")
         .applyInPandasWithState(
             _update_bucket,
@@ -226,28 +238,7 @@ def _make_purge_updater(timeout_ms: int):
             )
             return
 
-        if state.exists:
-            n, total_s, high, seen_list = state.get
-            total = Decimal(total_s)
-            seen = set(seen_list)
-        else:
-            n, total, high, seen = 0, Decimal(0), float("-inf"), set()
-
-        for pdf in pdfs:
-            for eid, value in zip(
-                pdf["event_id"].to_numpy(), pdf["value"].to_numpy()
-            ):
-                eid = int(eid)
-                if eid in seen:
-                    continue
-                seen.add(eid)
-                n += 1
-                value = float(value)
-                total += Decimal(repr(value)).quantize(QUANT)
-                if value > high:
-                    high = value
-
-        state.update((n, str(total), high, sorted(seen)))
+        n, total, high = _fold_events(pdfs, state)
         state.setTimeoutDuration(timeout_ms)  # re-arm the eviction timer
         yield _out_row(
             "purge",
@@ -274,13 +265,7 @@ def account_daily_buckets_with_purge(
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     return (
-        events.filter(F.col("event_type") == "purchase")
-        .select(
-            "event_id",
-            "value",
-            F.col("user_id").alias("account"),
-            F.date_trunc("day", "ts").alias("day"),
-        )
+        _purchases(events)
         .groupBy("account", "day")
         .applyInPandasWithState(
             _make_purge_updater(timeout_ms),
@@ -382,4 +367,8 @@ def stream_stateful_account_buckets(spark: SparkSession, sf_dir: str) -> DataFra
     # note).  This twin is KEY-HEAVY (accounts x days), so its cost is
     # per-key Python work; it keeps the session's 32 state partitions
     # (narrowing to 8 starved the cores: 86.5 s).
-    return run_buckets_stream(spark, d, name)
+    try:
+        return run_buckets_stream(spark, d, name)
+    finally:
+        # the drained result is a driver-resident snapshot
+        shutil.rmtree(d, ignore_errors=True)
