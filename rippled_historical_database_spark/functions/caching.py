@@ -21,15 +21,31 @@ bounded instead of growing without limit.
 A semantic-hash collision merely skips one persist (the query
 recomputes that relation; results unchanged).  Eviction uses the
 stored handle, so dropping a DataFrame reference never leaks an entry.
+
+``memoize_local`` is the serving-side counterpart: a rollup that a
+request path re-reads (the ``plans.api`` routes over registry queries)
+is computed once per input-data version and kept as a driver-local
+relation (``local_df``, an Arrow-backed ``LocalTableScan``), so a repeat
+request scans it on the driver with no plan build and no Spark job --
+the reference's REST layer likewise only range-scans tables its
+aggregation daemons keep up to date.  The memo is per ``SparkSession``
+and held weakly (another session never sees a session's relations, and
+they go when it does), LRU-bounded at ``MEMO_MAX_ROWS`` rows per
+session, and a result over that cap is served lazily instead, as before.
 """
 
 from __future__ import annotations
 
 import os
 import threading
-from collections import OrderedDict
+import weakref
+from collections import Counter, OrderedDict
+from dataclasses import dataclass
+from typing import Callable, Hashable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
+
+from .localrel import local_df
 
 _BUDGET = int(os.environ.get("SPARK_GRAFT_PERSIST_BUDGET", "16"))
 _LOCK = threading.Lock()
@@ -99,3 +115,88 @@ def reset_scope() -> None:
             df.unpersist(blocking=False)
         except Exception:
             pass
+
+
+# Rows memoized per session, over all entries.  Holds every rollup the
+# routes read at sf0.1 (largest: agg_fee_per_ledger, ~147k rows; all
+# of them ~215k), a few tens of MB of JVM-side rows.
+MEMO_MAX_ROWS = 250_000
+
+
+@dataclass
+class _Memo:
+    version: Hashable
+    # The JVM Dataset only: a Python DataFrame would reference the session
+    # and keep its weak key alive.  None: over the cap, served lazily.
+    jdf: object | None
+    rows: int
+
+
+_MEMOS: "weakref.WeakKeyDictionary[SparkSession, OrderedDict]" = (
+    weakref.WeakKeyDictionary()
+)
+_MEMO_STATS: Counter = Counter()
+
+
+def memoize_local(
+    spark: SparkSession,
+    key: Hashable,
+    version: Hashable,
+    build: Callable[[], DataFrame],
+) -> DataFrame:
+    """``build()``'s result as a driver-local relation, computed once per
+    (``spark``, ``key``, ``version``).
+
+    A hit returns the stored relation.  An entry under the same key with
+    another ``version`` is stale (the inputs changed) and is dropped; the
+    miss then builds, collects and stores the result, evicting the least
+    recently used entries past ``MEMO_MAX_ROWS``.  A result over the cap
+    is returned as ``build()``'s lazy DataFrame, and later calls at that
+    version skip the collect.  Two concurrent misses may both compute;
+    the last one stored wins.
+    """
+    with _LOCK:
+        memo = _MEMOS.setdefault(spark, OrderedDict())
+        entry = memo.get(key)
+        if entry is not None and entry.version != version:
+            del memo[key]
+            entry = None
+        if entry is not None:
+            memo.move_to_end(key)
+            if entry.jdf is not None:
+                _MEMO_STATS["hits"] += 1
+                return DataFrame(entry.jdf, spark)
+            _MEMO_STATS["oversize"] += 1
+    df = build()
+    if entry is not None:  # known to be over the cap at this version
+        return df
+    rows = df.collect()
+    if len(rows) > MEMO_MAX_ROWS:
+        local, n = None, 0
+    else:
+        local, n = local_df(spark, rows, df.schema), len(rows)
+    with _LOCK:
+        memo = _MEMOS.setdefault(spark, OrderedDict())
+        memo[key] = _Memo(version, None if local is None else local._jdf, n)
+        memo.move_to_end(key)
+        total = sum(e.rows for e in memo.values())
+        while total > MEMO_MAX_ROWS:
+            _, old = memo.popitem(last=False)
+            total -= old.rows
+        _MEMO_STATS["misses"] += 1
+        if local is None:
+            _MEMO_STATS["oversize"] += 1
+    return df if local is None else local
+
+
+def memo_stats() -> dict[str, int]:
+    """Memo hits, misses, over-cap (lazy) serves and the rows held now,
+    over all live sessions (test/probe hook)."""
+    with _LOCK:
+        held = sum(e.rows for memo in _MEMOS.values() for e in memo.values())
+        return {
+            "hits": _MEMO_STATS["hits"],
+            "misses": _MEMO_STATS["misses"],
+            "oversize": _MEMO_STATS["oversize"],
+            "rows": held,
+        }

@@ -15,22 +15,44 @@ Routing the same rows through a pandas DataFrame flips
 ``createDataFrame`` onto its Arrow path (``arrow.pyspark.enabled`` is on
 in session.py): the rows are serialized ONCE on the driver into Arrow
 batches and the scan deserializes them IN THE JVM -- zero Python workers
-at evaluation time.  Same values, same schema, same ``Scan ExistingRDD``
-plan node; the measured 8-row probe drops to ~0.08 s.
+at evaluation time.  Same values, same schema; under
+``arrow.localRelationThreshold`` the relation plans as a
+``LocalTableScan`` that an action reads on the driver without a job, and
+the measured 8-row probe drops to ~0.08 s.
 
 ``local_df`` is the drop-in replacement.  It forces ``dtype=object`` on
 the intermediate pandas frame so no pandas type inference runs -- the
 explicit Spark schema alone drives the Arrow conversion, exactly as the
-pickle path's row verification does -- and falls back to the original
-``createDataFrame`` call on any conversion failure (or when pandas is
-unavailable), so behavior can only differ in evaluation cost.
+pickle path's row verification does.  An empty ``rows`` becomes an empty
+Arrow table of the schema (``LocalTableScan <empty>``, exact schema and
+nullability) instead of an empty pickled-row RDD, whose every evaluation
+still schedules ``defaultParallelism`` Python-backed tasks (250-430 ms
+on 4 cores).
+
+Three cases still take the original ``createDataFrame(rows, schema)``
+call, so behavior can only differ in evaluation cost: a schema that does
+not parse to a struct, a row whose length differs from the schema's
+(e.g. dict rows), and an Arrow conversion error (or pandas missing).
+Each is counted by reason (``fallback_count``) so a path that silently
+turned back into a Python-worker scan shows up.  The Arrow conversion is
+called directly (``SparkSession._create_from_pandas_with_arrow``):
+the public ``createDataFrame(pandas_df)`` catches the same error itself
+and falls back to the pickled path with only a ``UserWarning``
+(``arrow.pyspark.fallback.enabled``), which no counter could see.
 """
 
 from __future__ import annotations
 
+import threading
+from collections import Counter
 from typing import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+FALLBACK_REASONS = ("schema", "row_length", "arrow")
+_LOCK = threading.Lock()
+_FALLBACKS: Counter = Counter()
 
 
 def local_df(spark: SparkSession, rows: Iterable, schema) -> DataFrame:
@@ -41,15 +63,19 @@ def local_df(spark: SparkSession, rows: Iterable, schema) -> DataFrame:
     ``createDataFrame``; rows may be tuples, lists or ``Row`` objects.
     """
     rows = list(rows)
-    if not rows:
-        # Empty relations have nothing to evaluate; keep the plain path.
-        return spark.createDataFrame(rows, schema)
+    struct = _struct_type(schema)
+    if struct is None:
+        return _fallback("schema", spark, rows, schema)
+    if any(len(r) != len(struct) for r in rows):
+        return _fallback("row_length", spark, rows, schema)
     try:
+        if not rows:
+            from pyspark.sql.pandas.types import to_arrow_schema
+
+            return spark.createDataFrame(to_arrow_schema(struct).empty_table(), struct)
         import pandas as pd
 
-        names = _field_names(schema)
-        if names is None or any(len(r) != len(names) for r in rows):
-            return spark.createDataFrame(rows, schema)
+        names = struct.fieldNames()
         # Object-dtype columns built directly from the row values: no
         # pandas type inference runs (None stays None, never NaN); the
         # explicit Spark schema alone drives the Arrow conversion.
@@ -61,16 +87,29 @@ def local_df(spark: SparkSession, rows: Iterable, schema) -> DataFrame:
             },
             columns=names,
         )
-        return spark.createDataFrame(pdf, schema)
+        return spark._create_from_pandas_with_arrow(
+            pdf, struct, spark._jconf.sessionLocalTimeZone()
+        )
     except Exception:
-        return spark.createDataFrame(rows, schema)
+        return _fallback("arrow", spark, rows, schema)
 
 
-def _field_names(schema) -> list[str] | None:
-    from pyspark.sql.types import StructType
+def fallback_count(reason: str | None = None) -> int:
+    """Pickled-path fallbacks taken so far, for one reason of
+    ``FALLBACK_REASONS`` or all of them (test/probe hook)."""
+    with _LOCK:
+        return _FALLBACKS[reason] if reason else sum(_FALLBACKS.values())
 
+
+def _fallback(reason: str, spark: SparkSession, rows: list, schema) -> DataFrame:
+    with _LOCK:
+        _FALLBACKS[reason] += 1
+    return spark.createDataFrame(rows, schema)
+
+
+def _struct_type(schema) -> StructType | None:
     if isinstance(schema, StructType):
-        return schema.fieldNames()
+        return schema
     if isinstance(schema, str):
         # Accept every string form createDataFrame accepts ("a int,
         # b string", "a: int, b: string", "struct<...>").
@@ -83,5 +122,5 @@ def _field_names(schema) -> list[str] | None:
                 parsed = StructType.fromDDL(schema)
             except Exception:
                 return None
-        return parsed.fieldNames() if isinstance(parsed, StructType) else None
+        return parsed if isinstance(parsed, StructType) else None
     return None

@@ -13,23 +13,42 @@ Mirrors the reference's route layer contracts:
   * descending order via reversed scan (``index.js:531-550``).
 
 Synthetic mapping: events is the exchange stream (pair = event_type).
-Each function returns (DataFrame, next_marker); the DataFrame is lazy --
-formatting/CSV stays with the caller (sources.sinks.flatten_for_csv).
+Each function returns (DataFrame, next_marker); formatting/CSV stays with
+the caller (sources.sinks.flatten_for_csv).
+
+Rollup routes do not recompute on read.  The reference serves fee,
+metric and topology rollups from tables its aggregation daemons keep
+current (``lib/aggregation/fees.js``, ``scripts/feeStats.js``); here
+every route that reads a registry query (``_q``) or the nested metric
+rollup goes through a memo (``functions.caching.memoize_local``).  The
+memo key is (query name, ``realpath(sf_dir)``, data version), where the
+data version (``sources.catalog.data_version``) is the (name, size,
+mtime_ns) of every input file, so rewriting a table rebuilds the result
+on the next request.  A hit is an Arrow-backed ``LocalTableScan`` that
+the request's filter and collect read on the driver: no plan build, no
+Spark job.  The memo is per SparkSession and holds at most
+``caching.MEMO_MAX_ROWS`` rows per session (LRU); a larger result is
+served lazily, as a plain registry DataFrame.  Request-specific plans
+(candles for one base and window, account lookups, pages) stay lazy:
+memoizing them would be a response cache, not a rollup table.
 """
 
 from __future__ import annotations
 
 import base64
+import functools
 import json
+import os
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.caching import memoize_local
 from ..functions.localrel import local_df
 from ..functions.numeric import dsum
 from ..functions.timeutils import anchored_bucket
-from ..sources.catalog import load_table
+from ..sources.catalog import data_version, load_table
 
 # The reference's 12 public candle intervals (data.js:16-29).
 INTERVALS: dict[str, tuple[str, int]] = {
@@ -322,10 +341,25 @@ METRICS = {"exchange_volume", "payment_volume", "issued_value"}
 STATS_FAMILIES = {"type", "result", "metric"}
 
 
-def _q(name: str):
+@functools.cache
+def _registry() -> dict:
     from .registry import all_queries
 
-    return all_queries()[name].spark
+    return all_queries()
+
+
+def _q(name: str):
+    """Registry query ``name`` as ``(spark, sf_dir) -> DataFrame``,
+    memoized per input-data version (see the module docstring)."""
+    query = _registry()[name]
+    return lambda spark, sf_dir: _rollup(
+        spark, sf_dir, name, lambda: query.spark(spark, sf_dir)
+    )
+
+
+def _rollup(spark: SparkSession, sf_dir: str, name: str, build) -> DataFrame:
+    key = (name, os.path.realpath(sf_dir))
+    return memoize_local(spark, key, data_version(sf_dir), build)
 
 
 def _counterparty():
@@ -683,7 +717,11 @@ def get_metric(
     # driver-registered relation.
     from ..operators.reports import metric_components_nested
 
-    return Page(metric_components_nested(spark, sf_dir), None)
+    df = _rollup(
+        spark, sf_dir, "metric_components_nested",
+        lambda: metric_components_nested(spark, sf_dir),
+    )
+    return Page(df, None)
 
 
 def get_network_fees(

@@ -195,6 +195,28 @@ def _ts_is_nanos_cached(target: str, mtime_ns: int) -> bool:
     return False
 
 
+def data_version(sf_dir: str) -> tuple:
+    """A version stamp of the tables under ``sf_dir``: (name, size,
+    mtime_ns) of every entry and of the files one level down (the part
+    files of a table directory), sorted.  Rewriting any input table
+    changes it, so a result memoized under it (``plans.api``) is rebuilt
+    after the rewrite -- the same (file, mtime) keying as the footer
+    sniff above."""
+    stamp = []
+    with os.scandir(sf_dir) as entries:
+        for entry in entries:
+            st = entry.stat()
+            stamp.append((entry.name, st.st_size, st.st_mtime_ns))
+            if entry.is_dir():
+                with os.scandir(entry.path) as parts:
+                    for part in parts:
+                        pst = part.stat()
+                        stamp.append(
+                            (f"{entry.name}/{part.name}", pst.st_size, pst.st_mtime_ns)
+                        )
+    return tuple(sorted(stamp))
+
+
 def events_read_schema(
     path: str, columns: tuple[str, ...] | None = None
 ) -> tuple[T.StructType, bool]:

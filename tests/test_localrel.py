@@ -19,6 +19,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from rippled_historical_database_spark.functions import localrel
 from rippled_historical_database_spark.functions.localrel import local_df
 
 
@@ -78,3 +79,68 @@ def test_empty_rows_fall_back(spark):
     df = local_df(spark, [], "idx int, s string")
     assert df.count() == 0
     assert [f.name for f in df.schema.fields] == ["idx", "s"]
+
+
+def test_empty_rows_plan_an_empty_local_table_scan(spark):
+    """An empty relation is an empty Arrow table of the schema: it plans
+    ``LocalTableScan <empty>`` with the exact schema, nullability and
+    nested types included, not a Scan ExistingRDD over Python-backed
+    partitions that every evaluation schedules."""
+    from pyspark.sql.types import MapType, StringType
+
+    sch = StructType(
+        [
+            StructField("idx", IntegerType(), False),
+            StructField(
+                "parts",
+                ArrayType(StructType([StructField("x", DoubleType(), True)])),
+                True,
+            ),
+            StructField("m", MapType(StringType(), LongType()), True),
+        ]
+    )
+    before = localrel.fallback_count()
+    df = local_df(spark, [], sch)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan <empty>" in plan, plan
+    assert df.schema == sch
+    assert df.collect() == []
+    ddl = local_df(spark, [], "idx int, s string")
+    assert "LocalTableScan <empty>" in ddl._jdf.queryExecution().executedPlan().toString()
+    assert localrel.fallback_count() == before
+
+
+def _fallback_case(spark, reason, rows, schema):
+    before = {r: localrel.fallback_count(r) for r in localrel.FALLBACK_REASONS}
+    out = local_df(spark, rows, schema).collect()
+    assert out == spark.createDataFrame(rows, schema).collect()
+    after = {r: localrel.fallback_count(r) for r in localrel.FALLBACK_REASONS}
+    assert after == {r: before[r] + (r == reason) for r in before}
+    return out
+
+
+def test_schema_fallback_is_counted(spark):
+    """A schema that is not a struct (an atomic DDL type) has no field
+    names to build columns from: the pickled path runs, and is counted."""
+    out = _fallback_case(spark, "schema", [1, 2, 3], "int")
+    assert [r.value for r in out] == [1, 2, 3]
+
+
+def test_row_length_fallback_is_counted(spark):
+    """Rows whose length differs from the schema's (dict rows carrying
+    an extra key) take the pickled path, which matches by field name."""
+    rows = [{"a": 1, "b": "x", "extra": 0}, {"a": 2, "b": None, "extra": 1}]
+    out = _fallback_case(spark, "row_length", rows, "a int, b string")
+    assert [(r.a, r.b) for r in out] == [(1, "x"), (2, None)]
+
+
+def test_arrow_error_fallback_is_counted(spark, monkeypatch):
+    """An Arrow conversion error is caught by local_df itself (not by
+    createDataFrame's silent internal fallback) and counted."""
+
+    def fail(*args, **kwargs):
+        raise ValueError("forced Arrow conversion error")
+
+    monkeypatch.setattr(type(spark), "_create_from_pandas_with_arrow", fail)
+    out = _fallback_case(spark, "arrow", [(1, 0.5), (2, None)], "a int, b double")
+    assert [tuple(r) for r in out] == [(1, 0.5), (2, None)]
