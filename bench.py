@@ -51,7 +51,7 @@ def etl_fields(spark, mock_dir: str) -> dict:
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from rippled_historical_database_spark.plans.registry import all_queries
-    from rippled_historical_database_spark.session import get_spark
+    from rippled_historical_database_spark.session import codegen_stats, get_spark
 
     spark = get_spark("bench")
     registry = all_queries()
@@ -63,13 +63,17 @@ def main() -> None:
     next(iter(bench_queries.values())).spark(spark, sf_dir).count()
 
     # Steady-state timing: three runs per query, report the fastest
-    # (first run pays one-off codegen/broadcast warmup that a resident
-    # service -- like the reference's long-running API process -- never
-    # re-pays).  Per-pass suite totals and host load are recorded in
-    # the artifact so a noisy run self-adjudicates (round-7 verdict
-    # item #3: three of four rounds needed a host-noise adjudication
-    # that lived in SCALE.md prose instead of the artifact).
+    # (the first run pays one-off codegen/broadcast warmup).  A resident
+    # service pays codegen once per class only while its working set
+    # fits Spark's compiled-class cache (session.CODEGEN_CACHE_ENTRIES).
+    # Back-to-back repeats of one query fit even Spark's default cache
+    # and would hide an undersized one, so `codegen` counts the compiles
+    # of the whole timed section.  Per-pass suite totals and host load
+    # are recorded in the artifact so a noisy run self-adjudicates
+    # (round-7 verdict item #3: three of four rounds needed a host-noise
+    # adjudication that lived in SCALE.md prose instead of the artifact).
     load_before = os.getloadavg()
+    compiles_before, _ = codegen_stats(spark)
     timings: dict[str, float] = {}
     n_runs = 3  # best-of-3 damps co-tenant load noise
     run_totals = [0.0] * n_runs
@@ -85,6 +89,7 @@ def main() -> None:
             assert n >= 0
         timings[name] = round(best, 4)
     load_after = os.getloadavg()
+    compiles_after, compile_ms_mean = codegen_stats(spark)
 
     total = round(sum(timings.values()), 4)
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
@@ -102,6 +107,12 @@ def main() -> None:
         "run_totals_band": [round(t, 4) for t in sorted(run_totals)],
         "loadavg_before": [round(x, 2) for x in load_before],
         "loadavg_after": [round(x, 2) for x in load_after],
+        # Janino compiles over the timed section (generated-class cache
+        # misses) and the JVM's recent mean compile time.
+        "codegen": {
+            "compiles": compiles_after - compiles_before,
+            "compile_ms_mean": round(compile_ms_mean, 2),
+        },
     }
 
     mock_dir = "/root/reference/test/mock/ledgers"

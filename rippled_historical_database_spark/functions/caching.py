@@ -12,11 +12,11 @@ entry per distinct persisted plan forever (VERDICT r14 item 6).
 helper is tracked in an insertion-ordered registry keyed by the plan's
 semantic hash; re-persisting the same plan refreshes its slot instead
 of duplicating; and when the registry exceeds its budget the OLDEST
-entries are unpersisted (non-blocking).  The budget (default 16,
-``SPARK_GRAFT_PERSIST_BUDGET``) is far above any single query's persist
-count (max observed: 4), so within-query and repeat-run reuse are
-untouched -- only a multi-query session's total cache footprint is now
-bounded instead of growing without limit.
+entries are unpersisted (non-blocking).  The budget (16 entries) is
+far above any single query's persist count (max observed: 4), so
+within-query and repeat-run reuse are untouched -- only a multi-query
+session's total cache footprint is now bounded instead of growing
+without limit.
 
 A semantic-hash collision merely skips one persist (the query
 recomputes that relation; results unchanged).  Eviction uses the
@@ -36,7 +36,6 @@ session, and a result over that cap is served lazily instead, as before.
 
 from __future__ import annotations
 
-import os
 import threading
 import weakref
 from collections import Counter, OrderedDict
@@ -47,7 +46,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .localrel import local_df
 
-_BUDGET = int(os.environ.get("SPARK_GRAFT_PERSIST_BUDGET", "16"))
+_BUDGET = 16
 _LOCK = threading.Lock()
 _TRACKED: "OrderedDict[int, DataFrame]" = OrderedDict()
 

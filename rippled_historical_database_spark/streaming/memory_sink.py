@@ -100,14 +100,14 @@ def table_stream(
     The file streaming source lists a directory, non-recursively.  A
     Spark-written table IS a directory of part files -- stream it as-is
     (symlinking the directory under another dir would stream ZERO rows,
-    silently); a single-file table (the generated testdata shape) gets
-    symlinked into a temp dir."""
+    silently); a single-file table (the generated testdata shape) is
+    streamed from ``sf_dir`` itself, filtered to its file name, so
+    nothing is left on disk after the stream."""
     src = os.path.join(sf_dir, f"{table}.parquet")
-    if not os.path.isdir(src):
-        d = tempfile.mkdtemp(prefix=f"{table}_stream_")
-        os.symlink(src, os.path.join(d, f"{table}.parquet"))
-        src = d
-    return spark.readStream.schema(schema).parquet(src)
+    reader = spark.readStream.schema(schema)
+    if os.path.isdir(src):
+        return reader.parquet(src)
+    return reader.option("pathGlobFilter", f"{table}.parquet").parquet(sf_dir)
 
 
 class Fold:

@@ -8,7 +8,8 @@ Laws pinned here:
     value per field of the fold's declared state schema;
   * a twin run leaves no replay files behind (the harness and the
     key-heavy account-bucket twin delete their temp trees after the
-    drain);
+    drain, and a twin streaming a single-file table through
+    ``table_stream`` makes none);
   * bench.py records a failed ETL build instead of dropping it.
 """
 
@@ -131,13 +132,18 @@ def test_fold_is_split_invariant(spark, sf_dir, monkeypatch, name):
 
 
 def test_stream_runs_leave_no_temp_files(spark, sf_dir, tmp_path, monkeypatch):
+    from rippled_historical_database_spark.streaming.candles_stream import (
+        stream_candles_hourly,
+    )
     from rippled_historical_database_spark.streaming.stateful_buckets import (
         stream_stateful_account_buckets,
     )
 
+    assert not os.path.isdir(os.path.join(sf_dir, "events.parquet"))
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     assert rsi_stream.stream_macd(spark, sf_dir).count() > 0
     assert stream_stateful_account_buckets(spark, sf_dir).count() > 0
+    assert stream_candles_hourly(spark, sf_dir).count() > 0
     assert os.listdir(tmp_path) == []
 
 
