@@ -111,16 +111,11 @@ def _struct_type(schema) -> StructType | None:
     if isinstance(schema, StructType):
         return schema
     if isinstance(schema, str):
-        # Accept every string form createDataFrame accepts ("a int,
-        # b string", "a: int, b: string", "struct<...>").
+        # fromDDL accepts every string form createDataFrame accepts ("a
+        # int, b string", "a: int, b: string", "struct<...>").
         try:
-            from pyspark.sql.types import _parse_datatype_string
-
-            parsed = _parse_datatype_string(schema)
+            parsed = StructType.fromDDL(schema)
         except Exception:
-            try:
-                parsed = StructType.fromDDL(schema)
-            except Exception:
-                return None
+            return None
         return parsed if isinstance(parsed, StructType) else None
     return None

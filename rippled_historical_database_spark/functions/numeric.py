@@ -45,10 +45,6 @@ def sql_dsum(expr: str, scale: int = DEFAULT_SCALE) -> str:
     return f"CAST(SUM(CAST({expr} AS DECIMAL(38,{scale}))) AS DOUBLE)"
 
 
-def sql_davg(expr: str, scale: int = DEFAULT_SCALE) -> str:
-    return f"{sql_dsum(expr, scale)} / COUNT({expr})"
-
-
 def fround(col: Column | str, scale: int = DEFAULT_SCALE) -> Column:
     """Engine-portable fixed-point round: floor(x·10^s + 0.5) / 10^s.
 

@@ -19,11 +19,11 @@ from pyspark.sql import functions as F
 from ..functions.caching import scoped_persist, truncate_lineage
 from ..functions.numeric import dsum, fround, sql_dsum, sql_fround
 from ..plans.registry import register
-from ..sources.catalog import load_table
+from ..sources.catalog import SQL_COUNTERPARTY, counterparty, load_table
 
-SQL_EDGES = """
+SQL_EDGES = f"""
     SELECT user_id AS src,
-           (user_id + event_id % 7 + 1) % 15 AS dst,
+           {SQL_COUNTERPARTY} AS dst,
            value, ts
     FROM events WHERE event_type = 'purchase'
 """
@@ -33,7 +33,7 @@ def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
     return e.select(
         F.col("user_id").alias("src"),
-        ((F.col("user_id") + F.col("event_id") % 7 + 1) % 15).alias("dst"),
+        counterparty().alias("dst"),
         "value",
         "ts",
     )

@@ -22,7 +22,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.registry import register
-from ..sources.catalog import load_table
+from ..sources.catalog import SQL_COUNTERPARTY, counterparty, load_table
 
 # Synthetic node/tx type derivation (shared Spark + SQL).
 SQL_NODE_TYPE = """
@@ -120,10 +120,10 @@ def parse_offers_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "parse_escrows",
-    oracle="""
+    oracle=f"""
     SELECT event_id, ts AS executed_time,
            user_id AS account,
-           (user_id + event_id % 7 + 1) % 15 AS destination,
+           {SQL_COUNTERPARTY} AS destination,
            CASE CAST(props->>'k' AS BIGINT) % 3
              WHEN 0 THEN 'EscrowCreate' WHEN 1 THEN 'EscrowFinish'
              ELSE 'EscrowCancel' END AS tx_type,
@@ -152,7 +152,7 @@ def parse_escrows(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_id",
             F.col("ts").alias("executed_time"),
             F.col("user_id").alias("account"),
-            ((F.col("user_id") + F.col("event_id") % 7 + 1) % 15).alias("destination"),
+            counterparty().alias("destination"),
             tx.alias("tx_type"),
             F.col("value").alias("amount"),
             (F.col("ts") + days * F.expr("INTERVAL 1 DAY")).alias("cancel_after"),
@@ -163,7 +163,7 @@ def parse_escrows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "parse_payment_channels",
-    oracle="""
+    oracle=f"""
     WITH pc AS (
         SELECT event_id, ts, user_id, value,
                CASE CAST(props->>'k' AS BIGINT) % 3
@@ -171,7 +171,7 @@ def parse_escrows(spark: SparkSession, sf_dir: str) -> DataFrame:
                  WHEN 1 THEN 'PaymentChannelFund'
                  ELSE 'PaymentChannelClaim' END AS tx_type,
                md5(CAST(user_id AS VARCHAR) || ':' ||
-                   CAST((user_id + event_id % 7 + 1) % 15 AS VARCHAR)) AS channel
+                   CAST({SQL_COUNTERPARTY} AS VARCHAR)) AS channel
         FROM events WHERE event_type = 'signup'
     )
     SELECT channel, tx_type, COUNT(*) AS n_events,
@@ -196,7 +196,7 @@ def parse_payment_channels(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(k % 3 == 1, "PaymentChannelFund")
         .otherwise("PaymentChannelClaim")
     )
-    dest = (F.col("user_id") + F.col("event_id") % 7 + 1) % 15
+    dest = counterparty()
     channel = F.md5(
         F.concat(
             F.col("user_id").cast("string"), F.lit(":"), dest.cast("string")

@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from ..functions.localrel import local_df
 from ..plans.registry import register
-from ..sources.catalog import load_table
+from ..sources.catalog import SQL_COUNTERPARTY, counterparty, load_table
 
 # delivered_amount display rule cutoff (data.js:2086-2107 uses ledger
 # 4594094; scaled to the synthetic id space). Encoded as data, not a
@@ -275,10 +275,10 @@ def parse_time_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "parse_balance_mirror",
-    oracle="""
+    oracle=f"""
     WITH pay AS (
         SELECT event_id, ts, user_id,
-               (user_id + event_id % 7 + 1) % 15 AS counterparty,
+               {SQL_COUNTERPARTY} AS counterparty,
                value, value * 0.001 AS fee
         FROM events WHERE event_type = 'purchase'
     )
@@ -305,7 +305,7 @@ def parse_balance_mirror(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
     pay = e.select(
         "event_id", "ts", "user_id",
-        ((F.col("user_id") + F.col("event_id") % 7 + 1) % 15).alias("counterparty"),
+        counterparty().alias("counterparty"),
         "value",
         (F.col("value") * 0.001).alias("fee"),
     )
@@ -338,9 +338,9 @@ def parse_balance_mirror(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "parse_affected_accounts",
-    oracle="""
+    oracle=f"""
     WITH pay AS (
-        SELECT event_id, user_id, (user_id + event_id % 7 + 1) % 15 AS counterparty
+        SELECT event_id, user_id, {SQL_COUNTERPARTY} AS counterparty
         FROM events WHERE event_type = 'purchase'
     ),
     touched AS (
@@ -361,7 +361,7 @@ def parse_affected_accounts(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
     pay = e.select(
         "event_id", "user_id",
-        ((F.col("user_id") + F.col("event_id") % 7 + 1) % 15).alias("counterparty"),
+        counterparty().alias("counterparty"),
     )
     touched = pay.select("event_id", F.col("user_id").alias("account")).unionByName(
         pay.select("event_id", F.col("counterparty").alias("account"))
@@ -371,10 +371,10 @@ def parse_affected_accounts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "parse_accounts_created",
-    oracle="""
+    oracle=f"""
     SELECT event_id, ts,
            user_id AS account,
-           (user_id + event_id % 7 + 1) % 15 AS parent,
+           {SQL_COUNTERPARTY} AS parent,
            value AS balance
     FROM events WHERE event_type = 'signup'
     ORDER BY event_id
@@ -390,7 +390,7 @@ def parse_accounts_created(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.select(
             "event_id", "ts",
             F.col("user_id").alias("account"),
-            ((F.col("user_id") + F.col("event_id") % 7 + 1) % 15).alias("parent"),
+            counterparty().alias("parent"),
             F.col("value").alias("balance"),
         )
         .orderBy("event_id")

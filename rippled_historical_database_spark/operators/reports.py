@@ -21,15 +21,7 @@ from pyspark.sql import functions as F
 
 from ..functions.numeric import dsum, sql_dsum
 from ..plans.registry import register
-from ..sources.catalog import load_table
-
-# Deterministic counterparty derivation (events have no second party):
-# pure integer arithmetic, identical in any engine.
-SQL_COUNTERPARTY = "(user_id + event_id % 7 + 1) % 15"
-
-
-def _counterparty() -> F.Column:
-    return (F.col("user_id") + F.col("event_id") % 7 + 1) % 15
+from ..sources.catalog import SQL_COUNTERPARTY, counterparty, load_table
 
 
 def account_daily_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -57,7 +49,7 @@ def account_daily_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce(F.max(F.when(sent, F.col("value"))), F.lit(0.0)).alias("high_value_sent"),
             F.coalesce(F.max(F.when(recv, F.col("value"))), F.lit(0.0)).alias("high_value_received"),
             F.sort_array(
-                F.collect_set(F.when(sent, _counterparty().cast("bigint")))
+                F.collect_set(F.when(sent, counterparty().cast("bigint")))
             ).alias("sending_counterparties"),
         )
         .orderBy("date", "account")

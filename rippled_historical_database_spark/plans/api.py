@@ -48,7 +48,7 @@ from ..functions.caching import memoize_local
 from ..functions.localrel import local_df
 from ..functions.numeric import dsum
 from ..functions.timeutils import anchored_bucket
-from ..sources.catalog import data_version, load_table
+from ..sources.catalog import counterparty, data_version, load_table
 
 # The reference's 12 public candle intervals (data.js:16-29).
 INTERVALS: dict[str, tuple[str, int]] = {
@@ -331,7 +331,7 @@ def get_account_balances(
 # already exist in the registry are reused via `_q` (deferred import to
 # keep the module import-cycle free).  Synthetic mapping is the engine-wide
 # one: events = tx/exchange stream (pair = event_type, account = user_id,
-# counterparty = (user_id + event_id % 7 + 1) % 15, the graph/parser
+# counterparty = sources.catalog.counterparty(), the graph/parser
 # derivation), orders = ledgers, lineitem = per-ledger transactions.
 # ---------------------------------------------------------------------------
 
@@ -360,12 +360,6 @@ def _q(name: str):
 def _rollup(spark: SparkSession, sf_dir: str, name: str, build) -> DataFrame:
     key = (name, os.path.realpath(sf_dir))
     return memoize_local(spark, key, data_version(sf_dir), build)
-
-
-def _counterparty():
-    return ((F.col("user_id") + F.col("event_id") % 7 + 1) % 15).alias(
-        "counterparty"
-    )
 
 
 def _time_range(df: DataFrame, start: str | None, end: str | None) -> DataFrame:
@@ -437,7 +431,7 @@ def get_payments(
         return Page(df, None)
     rows = e.select(
         "event_id", "ts", F.col("user_id").alias("source"),
-        _counterparty().alias("destination"), F.col("value").alias("amount"),
+        counterparty().alias("destination"), F.col("value").alias("amount"),
     )
     return Page(_ordered(rows, descending, limit_n), None)
 
@@ -464,7 +458,7 @@ def get_account_payments(
         .select(
             "event_id", "ts", "value",
             F.col("user_id").alias("source"),
-            _counterparty().alias("destination"),
+            counterparty().alias("destination"),
         )
     )
     if direction == "sent":
@@ -528,7 +522,7 @@ def get_account_balance_changes(
         .filter(F.col("event_type") == "purchase")
         .select(
             "event_id", "ts", "value",
-            F.col("user_id").alias("source"), _counterparty(),
+            F.col("user_id").alias("source"), counterparty().alias("counterparty"),
         )
     )
     debits = e.filter(F.col("source") == account).select(
@@ -938,7 +932,7 @@ def get_account_payment_channels(
         .filter(
             (F.col("event_type") == "signup") & (F.col("user_id") == account)
         )
-        .select("event_id", "ts", "value", _counterparty())
+        .select("event_id", "ts", "value", counterparty().alias("counterparty"))
     )
     channel = F.md5(
         F.concat(

@@ -50,12 +50,8 @@ def get_spark(app_name: str = "rippled-historical-database-spark") -> SparkSessi
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        # UI off for the harness (port + thread overhead per session);
-        # SPARK_GRAFT_UI=true turns it on for the skew probes, whose
-        # per-stage max/median task times come from the UI's REST API
-        # (the only task-duration source PySpark exposes without a
-        # py4j-callback listener).
-        .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
+        # UI off: a port and its threads per session, and nothing reads it.
+        .config("spark.ui.enabled", "false")
         # Spark has no TIMESTAMP(NANOS) parquet type; read nanos columns
         # (events.ts, when the testdata generation emits nanos) as long and
         # convert in the catalog loader -- which checks the parquet footer

@@ -25,7 +25,8 @@ import glob
 import os
 import warnings
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 # Explicit schema per table (matches the driver-generated parquet;
@@ -128,6 +129,16 @@ TABLES: dict[str, T.StructType] = {
         ]
     ),
 }
+
+# An event's synthetic counterparty (events have no second party): pure
+# integer arithmetic, identical in any engine.  SQL_COUNTERPARTY is the
+# oracle-SQL text, counterparty() the same expression as a Column.
+SQL_COUNTERPARTY = "(user_id + event_id % 7 + 1) % 15"
+
+
+def counterparty() -> Column:
+    return (F.col("user_id") + F.col("event_id") % 7 + 1) % 15
+
 
 DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 

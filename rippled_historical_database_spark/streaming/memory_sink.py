@@ -59,10 +59,13 @@ def run_to_memory(
     uniquely-named memory sink, snapshot the result, free the sink, and
     return the snapshot as a local (batch) DataFrame.
 
-    ``state_partitions`` (optional) scopes
-    ``spark.sql.shuffle.partitions`` for the stream's lifetime (a
-    streaming query pins its state partitioning at start); None leaves
-    the session setting.
+    ``state_partitions`` (optional) is the stream's state partition
+    count; None keeps the session's.  It is on the session's
+    ``spark.sql.shuffle.partitions`` only during ``start()``, which
+    clones the session conf into the query, so a query planned on
+    another thread during the drain keeps the session's count.  The
+    stream runs on the caller's session, not a child one, so that
+    session's ``StreamingQueryListener``s see it.
     """
     spark = df.sparkSession
     name = f"{base_name}_{uuid.uuid4().hex[:12]}"
@@ -76,12 +79,12 @@ def run_to_memory(
             .queryName(name)
             .start()
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
     snap = spark.table(name)
     rows, schema = snap.collect(), snap.schema
     spark.catalog.dropTempView(name)

@@ -192,23 +192,3 @@ def test_exact_probe_adversarial_values(spark, tmp_path):
     assert got["const"].skew_sq_e6 is None
     assert got["const"].exkurt_e6 is None
     assert got["edge"].m2_e6 > 0 and got["twopoint"].skew_sq_e6 is not None
-
-
-# ------------------------------- probe-tool graceful degradation
-
-
-def test_stage_task_extremes_degrade_without_ui(spark):
-    """The skew probes' REST task-metrics helpers must degrade to {}
-    (evidence absent, never an exception) when the session runs with
-    the harness default spark.ui.enabled=false -- and importing the
-    tools must not mutate the process env (the UI opt-in lives in
-    main(), not at module import)."""
-    import os
-
-    from tools.skew_probe import _completed_stage_ids, stage_task_extremes
-
-    assert os.environ.get("SPARK_GRAFT_UI") in (None, "false")
-    before = _completed_stage_ids(spark)
-    assert before == set()
-    spark.range(10).count()
-    assert stage_task_extremes(spark, before) == {}

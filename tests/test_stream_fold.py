@@ -10,6 +10,8 @@ Laws pinned here:
     key-heavy account-bucket twin delete their temp trees after the
     drain, and a twin streaming a single-file table through
     ``table_stream`` makes none);
+  * a twin's state partition count is on the session's conf only
+    around ``start()``, not during the drain;
   * bench.py records a failed ETL build instead of dropping it.
 """
 
@@ -145,6 +147,30 @@ def test_stream_runs_leave_no_temp_files(spark, sf_dir, tmp_path, monkeypatch):
     assert stream_stateful_account_buckets(spark, sf_dir).count() > 0
     assert stream_candles_hourly(spark, sf_dir).count() > 0
     assert os.listdir(tmp_path) == []
+
+
+def test_state_partitions_are_scoped_to_start(spark, sf_dir, monkeypatch):
+    """``run_to_memory`` sets ``spark.sql.shuffle.partitions`` for the
+    stream's start only: while the stream drains, a query planned on
+    the same session (from another thread) sees the session's own
+    value, and the drained rows do not change."""
+    from pyspark.sql.streaming import StreamingQuery
+
+    session = spark.newSession()
+    session.conf.set("spark.sql.shuffle.partitions", "3")
+    expected = sorted(rsi_stream.stream_rsi_wilder(session, sf_dir).collect(), key=repr)
+
+    seen = []
+    drain = StreamingQuery.processAllAvailable
+
+    def recording_drain(self, *args, **kwargs):
+        seen.append(session.conf.get("spark.sql.shuffle.partitions"))
+        return drain(self, *args, **kwargs)
+
+    monkeypatch.setattr(StreamingQuery, "processAllAvailable", recording_drain)
+    got = sorted(rsi_stream.stream_rsi_wilder(session, sf_dir).collect(), key=repr)
+    assert seen == ["3"]
+    assert got == expected
 
 
 def test_bench_records_etl_failure(tmp_path, monkeypatch):
