@@ -32,20 +32,21 @@ def bucket_trunc(col: Column | str, unit: str) -> Column:
     return F.date_trunc(unit, c)
 
 
-def anchored_bucket(col: Column | str, n_days: int, anchor: str = ANCHOR) -> Column:
+def anchored_bucket(col: Column | str, n_days: int) -> Column:
     """Epoch-anchored N-day bucket start (reference utils.js:99-115).
 
-    bucket_start = anchor + floor(datediff(ts, anchor) / N) * N days
+    bucket_start = ANCHOR + floor(datediff(ts, ANCHOR) / N) * N days
     """
     c = F.col(col) if isinstance(col, str) else col
-    days = F.floor(F.datediff(c, F.lit(anchor).cast("date")) / n_days) * n_days
-    return F.to_timestamp(F.date_add(F.lit(anchor).cast("date"), days.cast("int")))
+    anchor = F.lit(ANCHOR).cast("date")
+    days = F.floor(F.datediff(c, anchor) / n_days) * n_days
+    return F.to_timestamp(F.date_add(anchor, days.cast("int")))
 
 
-def sql_anchored_bucket(expr: str, n_days: int, anchor: str = ANCHOR) -> str:
+def sql_anchored_bucket(expr: str, n_days: int) -> str:
     """DuckDB rendering of :func:`anchored_bucket`."""
     return (
-        f"CAST(DATE '{anchor}' + INTERVAL (CAST(FLOOR(DATEDIFF('day', DATE '{anchor}', "
+        f"CAST(DATE '{ANCHOR}' + INTERVAL (CAST(FLOOR(DATEDIFF('day', DATE '{ANCHOR}', "
         f"{expr}) / {n_days}) AS INT) * {n_days}) DAY AS TIMESTAMP)"
     )
 

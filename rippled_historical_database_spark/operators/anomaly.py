@@ -102,7 +102,6 @@ def hourly_event_series(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cost is hours x types regardless of event volume; baseline "
         "state is three exact integer sums, z is a fixed IEEE op "
         "sequence rounded once.",
-    tags=("window", "anomaly"),
 )
 def window_rolling_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     series = hourly_event_series(spark, sf_dir)
@@ -187,7 +186,6 @@ def window_rolling_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n < 3 samples or zero variance are excluded in both engines.  "
         "At 100 TB the grouped hourly relation is calendar-bounded "
         "(types x hours) -- the corpus is touched once.",
-    tags=("anomaly", "profiling"),
 )
 def profile_seasonal_baseline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
@@ -333,7 +331,6 @@ def _cusum_z(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"at 1e-{_DD} so fold == recursive-CTE oracle bit-exact.  "
         "Scale: one corpus shuffle (the daily groupBy); the fold and "
         "moments run on the day-sized relation.",
-    tags=("profiling", "window", "aggregation"),
 )
 def profile_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     z = _cusum_z(spark, sf_dir)

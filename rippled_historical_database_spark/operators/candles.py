@@ -128,7 +128,6 @@ def _sql_candle_select(unit_expr: str) -> str:
     doc="1-unit candle build: aggregation/exchanges.js:515-582 as a single "
         "groupBy(pair, date_trunc) with min_by/max_by open/close.",
     bench=True,
-    tags=("aggregation", "flagship"),
 )
 def agg_candles_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     return hourly_candles(load_table(spark, sf_dir, "events"), final=True)
@@ -143,7 +142,6 @@ def agg_candles_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
         "volumes), while the oracle aggregates the raw rows -- verifying the "
         "re-reduce associativity invariant (FIXTURES.md section 5.2).",
     bench=True,
-    tags=("aggregation", "rollup"),
 )
 def agg_candles_daily_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     hourly = hourly_candles(load_table(spark, sf_dir, "events"), final=False)
@@ -172,7 +170,6 @@ def agg_candles_daily_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Epoch-anchored 3-day buckets (utils.js:99-115): days since "
         "2013-01-01 modulo 3 as plain column arithmetic -- no custom "
         "Catalyst expression needed (SURVEY.md section 4).",
-    tags=("aggregation", "time"),
 )
 def agg_candles_3day_anchored(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
@@ -206,7 +203,6 @@ def agg_candles_3day_anchored(spark: SparkSession, sf_dir: str) -> DataFrame:
         "query range (data.js:1590-1655). The reference caps this at 10000 "
         "scanned rows ('too many rows', data.js:1716-1722); distributed "
         "aggregation removes the cap.",
-    tags=("aggregation",),
 )
 def agg_candles_reduce_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
@@ -267,7 +263,6 @@ def agg_candles_reduce_range(spark: SparkSession, sf_dir: str) -> DataFrame:
         "an explicit `interval` column, matching the reference's "
         "agg_exchanges rowkey (interval|pair|time).",
     bench=True,
-    tags=("aggregation", "rollup", "grouping-sets"),
 )
 def agg_candles_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _with_legs(load_table(spark, sf_dir, "events"))
@@ -405,7 +400,6 @@ SQL_MAX_DRAWDOWN = f"""
         "per-bucket arg-max close and never again; at scale the series "
         "windows read gold_1m rollups directly.  Per-row division is "
         "one IEEE op rounded at 1e-9; the min/count fold is exact.",
-    tags=("window", "aggregation"),
 )
 def window_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
@@ -463,7 +457,6 @@ def window_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
         "sums on the candle-sized series.  sqrt(GREATEST(.., 0)) "
         "guards the tiny negative from rounding when a pair's returns "
         "are constant.",
-    tags=("aggregation", "window"),
 )
 def agg_log_return_volatility(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
@@ -542,7 +535,6 @@ SQL_BOLLINGER = f"""
         "every charting library's convention.  Same candle-sized "
         "series cost shape as the drawdown/volatility pair; the "
         "breakout flag is the alert feed a market monitor tails.",
-    tags=("window", "aggregation"),
 )
 def window_bollinger_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
@@ -631,7 +623,6 @@ SQL_RSI_CUTLER = f"""
         "the all-gain window (loss sum 0) pins RSI at 100 exactly as "
         "the indicator defines.  Emits only full windows; same "
         "candle-sized series cost shape as the rest of the family.",
-    tags=("window", "aggregation"),
 )
 def window_rsi_cutler(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
@@ -839,7 +830,6 @@ SQL_WILDER_RSI = (
         "(stream_rsi_wilder) carries (prev_close, seed sums, avgs) as "
         "per-pair applyInPandasWithState state -- the reference's "
         "running-average shape, lib/aggregation/stats.js:327-331.",
-    tags=("window", "aggregation"),
 )
 def window_rsi_wilder(spark: SparkSession, sf_dir: str) -> DataFrame:
     return rsi_from_avgs(wilder_avgs_from_closes(_hourly_closes(spark, sf_dir)))
@@ -993,7 +983,6 @@ SQL_MACD = (
         "== the DuckDB triple recursion bit-exact.  Reference analog: "
         "the running-average accumulators of lib/aggregation/"
         "stats.js:327-331 generalized to exponential weights.",
-    tags=("window", "aggregation"),
 )
 def window_macd(spark: SparkSession, sf_dir: str) -> DataFrame:
     closes = _hourly_closes(spark, sf_dir)
@@ -1084,7 +1073,6 @@ def window_macd(spark: SparkSession, sf_dir: str) -> DataFrame:
         "join to the trade stream's volume), the anti-join keys on "
         "(pair, bucket) against the already-bucketed candle relation, "
         "and the output is proportional to the OUTAGES, not the data.",
-    tags=("aggregation", "window"),
 )
 def agg_candle_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
@@ -1168,7 +1156,6 @@ SQL_OBV = f"""
         "needed anywhere.  One (pair, bucket) aggregation for volumes, "
         "the arg-max close join, one partitioned cumulative window; "
         "candle-sized cost like the rest of the family.",
-    tags=("window", "aggregation"),
 )
 def window_obv(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
@@ -1302,7 +1289,6 @@ SQL_ATR = (
         "oscillator's note).  Oracle: linear recursive CTE with materialized "
         "inputs.  Reference analog: the running-average accumulators "
         "of lib/aggregation/stats.js:327-331.",
-    tags=("window", "aggregation"),
 )
 def window_atr_wilder(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
@@ -1396,7 +1382,6 @@ SQL_STOCHASTIC = f"""
         "quotient must be a <=9-dp sum, and the repeating-third case "
         "sits >=3e-11 from any tie -- far beyond double error.  "
         "Flat-channel bars (hi == lo) pin %K to 50 in both engines.",
-    tags=("window", "aggregation"),
 )
 def window_stochastic_oscillator(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
@@ -1523,7 +1508,6 @@ SQL_KELTNER = (
         "note).  Oracle: ONE recursive CTE carrying all four "
         "accumulators (both seeds, both EMAs) with materialized "
         "inputs.",
-    tags=("window", "aggregation"),
 )
 def window_keltner_channels(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
@@ -1627,7 +1611,6 @@ SQL_DONCHIAN = (
         "candle-sized window cost shape as ATR/stochastic: one OHLC "
         "pass over the trade stream, then per-pair ROWS frames over "
         "pairs x hours.",
-    tags=("window", "aggregation"),
 )
 def window_donchian_channels(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
@@ -1736,7 +1719,6 @@ SQL_DOLLAR_BARS = f"""
         "chunked form bit-identical to the oracle's single window.  "
         "The bar relation is total-notional / T rows -- bounded by "
         "VALUE traded, not rows.",
-    tags=("aggregation", "window"),
 )
 def agg_dollar_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
@@ -1891,7 +1873,6 @@ SQL_GAP_INTERPOLATION = f"""
         "and the interpolation a fixed IEEE sequence rounded once at "
         f"{DD_ROUND} dp.  Scale: the spine is pairs x hours (candle-"
         "sized), the explode is bounded per pair, no global sort.",
-    tags=("window", "aggregation"),
 )
 def window_gap_interpolation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
@@ -1995,7 +1976,6 @@ def window_gap_interpolation(spark: SparkSession, sf_dir: str) -> DataFrame:
         "bounded, NOT the trade stream), each bucket matches at most "
         "pairs^2 rows, and the output is C(pairs, 2) rows.  Constant-"
         "return pairs yield NULL via NULLIF in both engines.",
-    tags=("aggregation", "join"),
 )
 def agg_return_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
@@ -2106,7 +2086,6 @@ ACF_MAX_LAG = 5
         "closed-form DECIMAL moments, so the whole family costs one "
         "candle-sized shuffle.  Pearson form (per-lag means over the "
         "overlap window), NULL via NULLIF for constant stretches.",
-    tags=("profiling", "window"),
 )
 def profile_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
@@ -2206,7 +2185,6 @@ def profile_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
         "first-rounding policy) and averaged through the DECIMAL "
         "accumulator so the mean is partition-order exact.  One "
         "corpus shuffle (the day window), then day-sized relations.",
-    tags=("aggregation",),
 )
 def agg_amihud_illiquidity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
@@ -2369,7 +2347,6 @@ SQL_HEIKIN_ASHI = f"""
         "open/high/low/close window pass.  Reference analog: the "
         "candle reduce of lib/aggregation/exchanges.js:515-582 (this "
         "is the same bar relation, transformed).",
-    tags=("aggregation", "window"),
 )
 def agg_candles_heikin_ashi(spark: SparkSession, sf_dir: str) -> DataFrame:
     ohlc = _hourly_ohlc4(spark, sf_dir)
@@ -2456,7 +2433,6 @@ SQL_ICHIMOKU = f"""
         "identical doubles, rounded once at emission.  Rows emit only "
         "from the first fully-formed span-B + displacement window "
         f"(rn >= {ICHI_S + ICHI_K}).",
-    tags=("window",),
 )
 def window_ichimoku(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window

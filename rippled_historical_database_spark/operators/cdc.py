@@ -77,7 +77,6 @@ OP_CASE = (
         "replaces the daemon's per-row read-modify-write.  The "
         "changelog's latest-per-key window and the merge join share "
         "the key, so the changelog shuffles once (plan-asserted).",
-    tags=("cdc", "joins"),
 )
 def cdc_merge_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     ch = changelog(spark, sf_dir)
@@ -184,7 +183,6 @@ def _snapshots_sql() -> tuple[str, str]:
         "100 TB snapshots shuffles each side once on the key, exactly "
         "like the forward merge.  round-trip law: applying the emitted "
         "changeset to snapshot A reproduces snapshot B exactly.",
-    tags=("cdc",),
 )
 def cdc_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")

@@ -89,7 +89,6 @@ TFIDF_TOP = 3
         "free to pick a shuffle join (it broadcasts at small scale on "
         "its own); the top-k window partitions by doc_id -- "
         "per-document local sorts, never a global one.",
-    tags=("text", "relevance"),
 )
 def text_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -289,7 +288,6 @@ def kmeans_state(
         "argmin compares fround(d2, 9) with a cluster-id tie-break on "
         "both engines.  An emptied cluster drops out of the centroid "
         "table (documented; identical on both engines).",
-    tags=("embeddings", "clustering", "iterative"),
 )
 def cluster_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     assigned, _ = kmeans_state(spark, sf_dir)
@@ -349,7 +347,6 @@ WS_U_FLOOR = 1.0 / 4294967296.0
         "At 100 TB: a bounded-K global top-k plans as per-partition "
         "TakeOrdered + single merge of K-row partials -- no global "
         "sort, no shuffle of the corpus.",
-    tags=("sampling", "curation"),
 )
 def sample_weighted_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -413,7 +410,6 @@ from .graph import SQL_EDGES  # noqa: E402
         "the GENUINE m^1.5 wedge bound, which plain id-orientation "
         "lacks on hub-skewed graphs (see graph.degree_oriented).  The "
         "oracle keeps id orientation: output is orientation-invariant.",
-    tags=("graph",),
 )
 def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .graph import _edges, oriented_triangles
@@ -506,7 +502,6 @@ def _kmv_u() -> Column:
         "(collect_set + sort + slice, map-side partial-aggregable), "
         "groups union by merging sorted lists -- constant-size state, "
         "any number of partial sketches.",
-    tags=("sketches", "cardinality"),
 )
 def sketch_kmv_intersection(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
@@ -602,7 +597,6 @@ LM_ROUND = 9  # one libm-absorbing round on each per-bigram logprob
         "bounds the model, scoring joins broadcast -- implemented "
         "below); this exact-vocabulary form leaves the join unforced "
         "so the optimizer picks (it broadcasts at small scale).",
-    tags=("text", "corpus-ml"),
 )
 def text_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -723,7 +717,6 @@ _SQL_CAPPED_LM_CTES = f"""toks AS (
         "operator's doc promised this variant; now both exist behind "
         "oracles.  Same Laplace smoothing, LN-round and decimal-sum "
         "determinism contract as the uncapped form.",
-    tags=("text", "corpus-ml"),
 )
 def text_bigram_logprob_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -844,7 +837,6 @@ PPL_BUCKETS = 3
         "never a global one (and per-language ranking can shard "
         "further by binning rounded ppl exactly as the curriculum "
         "sharder does).",
-    tags=("text", "corpus-ml", "pipeline"),
 )
 def text_lm_perplexity_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -899,7 +891,6 @@ def text_lm_perplexity_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         "count, then the tiny vocab BROADCASTS into the per-source "
         "membership agg -- the token stream shuffles once (source "
         "keys), never on the word.",
-    tags=("text", "corpus-ml"),
 )
 def text_oov_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -1003,7 +994,6 @@ NB_ROUND = 9
         "multiplies the token stream by n_classes (a small constant); "
         "the per-doc argmax reduces keyed by doc.  No floats cross "
         "engines unrounded, no iteration, no UDFs.",
-    tags=("text", "classifier", "ml"),
 )
 def text_nb_lang_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -1167,7 +1157,6 @@ def _bpe_oracle() -> str:
         "pattern as k-means centroids.  Rounds are data-dependent "
         "sequential by nature (merge r+1's counts depend on merge r), "
         "matching every production BPE trainer.",
-    tags=("text", "tokenizer", "iterative"),
 )
 def text_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -1276,7 +1265,6 @@ def _bpe_train(d: DataFrame) -> tuple[list, DataFrame]:
         "agg + the vocab-sized merge rounds (training), one "
         "vocab-keyed join (application); AQE broadcasts the vocab "
         "side when small.",
-    tags=("text", "tokenizer"),
 )
 def text_bpe_encode_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -1363,7 +1351,6 @@ KN_D = 0.75
         "on a model key.  Interpolation keeps every probability "
         "strictly positive, so the LN is total; same LN-round and "
         "decimal-sum determinism contract as the other LM scorers.",
-    tags=("text", "corpus-ml"),
 )
 def text_kneser_ney_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -1491,7 +1478,6 @@ ZIPF_MAX_RANK = 1000
         "closed-form fit over <= K points through the DECIMAL "
         "order-independent accumulator -- the fit itself is O(K) "
         "driver-free arithmetic.",
-    tags=("text", "profiling"),
 )
 def text_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -1610,7 +1596,6 @@ HEAPS_ROUND = 9
         "single-task cumulative window; the OLS fold is the same "
         "closed-form 5-sum as the Zipf fit.  Checkpoint order is "
         "doc_id -- deterministic in both engines.",
-    tags=("text", "profiling"),
 )
 def text_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -1762,7 +1747,6 @@ _SQL_BM25_IDF = sql_fround(
         "formulation), corpus stats broadcast, and the global top-k "
         "plans as TakeOrderedAndProject -- per-partition heaps + one "
         "k-row merge, never a global sort.",
-    tags=("text", "relevance"),
 )
 def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")

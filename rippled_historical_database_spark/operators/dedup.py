@@ -109,7 +109,6 @@ def doc_shingles(d: DataFrame) -> DataFrame:
     doc="Exact dedup: normalized-content hash, keeper = min doc_id per "
         "hash group, others flagged duplicate. One shuffle on the hash; "
         "at scale the hash doubles as the dedup partition key.",
-    tags=("dedup",),
 )
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
@@ -159,7 +158,6 @@ JACCARD_THRESHOLD = 0.2
         "The shingle join shuffles on the shingle -- hot shingles are the "
         "skew risk at scale (AQE skew-join handles; stopword-shingle "
         "filtering is the preventive fix).",
-    tags=("dedup",),
 )
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -275,7 +273,6 @@ SQL_PAIR_STATS = f"""{SQL_DS},
         "(shingle_pair_stats); no extra shuffle beyond it.  At scale "
         "the candidate generation is identical to the Jaccard path, so "
         "both measures come from one pair-stats pass.",
-    tags=("dedup",),
 )
 def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -343,7 +340,6 @@ def _sql_minhash() -> str:
         "columns only, so any external canonicalizer can sort it; the "
         "packed array<bigint> signature stays an internal helper "
         "(minhash_signatures_packed) for the LSH operators.",
-    tags=("dedup", "minhash"),
 )
 def dedup_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -426,7 +422,6 @@ _SQL_LSH_VERIFIED = (
         "candidates -- then estimate Jaccard as the fraction of agreeing "
         "hashes. The band join is the scale path: shuffle on band "
         "signature, never an all-pairs comparison.",
-    tags=("dedup", "minhash", "lsh"),
 )
 def dedup_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -533,7 +528,6 @@ def _lsh_candidates(sig: DataFrame) -> DataFrame:
         "False-positive candidates (band collision, Jaccard below "
         "threshold) are dropped by the exact filter -- the verify stage "
         "exists precisely to kill them.",
-    tags=("dedup", "minhash", "lsh"),
 )
 def dedup_lsh_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -635,7 +629,6 @@ def _simhash_df(d: DataFrame) -> DataFrame:
         "bitwise majority vote -> fingerprint. Pure array lambdas, no "
         "shuffle; near-dup = small Hamming distance (see "
         "dedup_simhash_pairs).",
-    tags=("dedup", "simhash"),
 )
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -680,7 +673,6 @@ _BAND_MOD = 1 << BAND_BITS
         "sizes proportional to the true near-dup cluster size instead "
         "of the corpus size (the round-6 widening from 16-bit "
         "fingerprints, whose 64-key band space went quadratic at 10x).",
-    tags=("dedup", "simhash", "lsh"),
 )
 def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -820,7 +812,6 @@ def _winnow_over(h: Column) -> Column:
         "all-pairs); containment = shared / min sketch size.  Sketching "
         "is a zero-shuffle projection; the join shuffles on the "
         "fingerprint, ~1/w the size of the full shingle join.",
-    tags=("dedup", "winnowing"),
 )
 def dedup_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -1046,7 +1037,6 @@ def connected_components_labels(pairs: DataFrame) -> tuple[DataFrame, int]:
         "by the input size (never a full per-round label copy), and only "
         "the current round's relation persisted.  The oracle walks the "
         "same graph with a recursive CTE -- min reachable label per node.",
-    tags=("dedup", "graph", "iterative"),
 )
 def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r14: persist the pair relation -- it seeds the oriented edge set
@@ -1107,7 +1097,6 @@ DELTA_MOD, DELTA_REM = 10, 0
         "re-hashed, or re-shuffled.  (Here both sides rebuild from "
         "parquet because the registry query must be self-contained; "
         "the index side stands in for the persisted artifact.)",
-    tags=("dedup", "minhash", "lsh", "incremental"),
 )
 def dedup_incremental_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -1205,7 +1194,6 @@ def dedup_incremental_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "the matrix is at most |sources|^2 rows.  Unordered source "
         "pairs canonicalize by LEAST/GREATEST so each cell counts "
         "once.",
-    tags=("dedup", "lsh", "profiling"),
 )
 def dedup_cross_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = dedup_minhash_lsh_pairs(spark, sf_dir)
@@ -1305,7 +1293,6 @@ _SQL_SPANS_MERGED = f"""
         "joins back (optimizer-chosen -- tiny for mostly-unique "
         "corpora); the island merge is one doc-keyed window.  Never "
         "all-pairs, never a suffix array held in one node's memory.",
-    tags=("dedup", "spans", "text"),
 )
 def dedup_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     merged = _duplicate_spans_merged(spark, sf_dir)
@@ -1434,7 +1421,6 @@ def _duplicate_spans_merged(spark: SparkSession, sf_dir: str) -> DataFrame:
         "covered-position explode is bounded by total duplicated "
         "tokens; the anti-join and ordered rebuild key on doc_id -- no "
         "new corpus-wide shuffle key.",
-    tags=("dedup", "spans", "text"),
 )
 def dedup_span_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -1521,7 +1507,6 @@ def dedup_span_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
         "relation every set-similarity query already builds.  At "
         "100 TB the shingle stream partitions by shingle hash and "
         "novelty stays a two-shuffle pipeline; no pairwise anything.",
-    tags=("dedup", "text"),
 )
 def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
@@ -1595,7 +1580,6 @@ def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
         "banding, never all-pairs): one shared-shingle equi-join "
         "restricted to candidates, two broadcast-sized doc-size "
         "lookups.  All set sizes are exact BIGINTs.",
-    tags=("dedup", "minhash"),
 )
 def dedup_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -1734,7 +1718,6 @@ from .text_analysis import SQL_TOKENS as _SQL_TOKS  # noqa: E402
         "vocabulary^K-bounded and the agg is map-side combinable.  "
         "Docs shorter than 2K words are excluded (their prefix and "
         "suffix overlap textually).",
-    tags=("dedup",),
 )
 def dedup_boundary_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -1838,7 +1821,6 @@ SN_THRESHOLD = 0.5  # token-set Jaccard keep threshold
         "neighborhood catches shared-prefix near-dups at a fixed "
         "candidate budget even when banding parameters would miss "
         "them.",
-    tags=("dedup",),
 )
 def dedup_sorted_neighborhood_pairs(
     spark: SparkSession, sf_dir: str
@@ -2009,7 +1991,6 @@ def _sn_pass_pairs(spark: SparkSession, keyed: DataFrame) -> DataFrame:
         "dedup, so arrays never ride through the distinct.  Both "
         "passes share the data-derived global numbering "
         "(functions/ordering.py) -- no one-task sort.",
-    tags=("dedup",),
 )
 def dedup_sn_multikey_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")

@@ -80,7 +80,6 @@ FUNNEL_STAGES = ("signup", "view", "purchase")
         "this form against the textbook definition).  The windows and "
         "the final per-user collapse share one user-keyed shuffle "
         "(plan-asserted); the funnel row aggregates users, not events.",
-    tags=("funnel", "behavioral"),
 )
 def funnel_signup_view_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events").select("user_id", "ts", "event_type")
@@ -177,7 +176,6 @@ def funnel_signup_view_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
         "key; the matrix itself is (weeks x offsets) rows -- tiny at "
         "any corpus size.  retention is one division of exact integer "
         "counts.",
-    tags=("retention", "behavioral"),
 )
 def retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")

@@ -128,7 +128,6 @@ _PAIR = (
         "(lib/ledgerParser/exchanges.js semantics; the corpus "
         "test/exchanges.test.js:25 asserts 5 USD.rMwj.../XRP exchanges "
         "on).  Decimal-accumulated volumes, engine-exact.",
-    tags=("golden", "xrpl", "real-data"),
 )
 def golden_exchange_pair_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ex = _silver(spark, "silver_exchanges")
@@ -191,7 +190,6 @@ def golden_exchange_pair_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "warehouse; is_conserved must be TRUE for all 54 fixture "
         "ledgers, including the EscrowCreate and PaymentChannelClaim "
         "ones.",
-    tags=("golden", "xrpl", "real-data"),
 )
 def golden_xrp_conservation(spark: SparkSession, sf_dir: str) -> DataFrame:
     bc = _silver(spark, "silver_balance_changes")
@@ -264,7 +262,6 @@ def golden_xrp_conservation(spark: SparkSession, sf_dir: str) -> DataFrame:
         "decimal fee totals over silver_transactions -- the network "
         "stats breakdown (lib/aggregation/stats.js type/result "
         "counters) sourced from real ledgers.",
-    tags=("golden", "xrpl", "real-data"),
 )
 def golden_tx_type_results(spark: SparkSession, sf_dir: str) -> DataFrame:
     tx = _silver(spark, "silver_transactions")
@@ -306,7 +303,6 @@ def golden_tx_type_results(spark: SparkSession, sf_dir: str) -> DataFrame:
         "balanceChanges.js:276-340 escrow/paychan classification, "
         "test/setup.importLedgers.js corpus).  Integer-drops decimal "
         "sums keep both engines bit-exact.",
-    tags=("golden", "xrpl", "real-data"),
 )
 def golden_escrow_paychan_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     bc = _silver(spark, "silver_balance_changes")
@@ -366,7 +362,6 @@ def golden_escrow_paychan_lifecycle(spark: SparkSession, sf_dir: str) -> DataFra
         "delivering exactly 300 XRP (test.transactions.js:26) -- all "
         "re-asserted in tests/test_xrpl_golden.py; this query gives the "
         "family a per-round driver row.",
-    tags=("golden", "xrpl", "real-data"),
 )
 def golden_payment_currency_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = _silver(spark, "silver_payments")
@@ -419,7 +414,6 @@ ASOF_LEDGER = 11119610
         "oracle is the O(history) full replay over the raw silver "
         "stream, so every driver row re-proves snapshot+tail == "
         "replay.",
-    tags=("golden", "xrpl", "real-data"),
 )
 def golden_balance_snapshot_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..plans.xrpl_etl import asof_balances_via_snapshot
@@ -470,7 +464,6 @@ def golden_balance_snapshot_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
         "events, NULL-safe via max-key join-back (arg_max would drop "
         "rows whose winning payload column is NULL, e.g. XRP issuers), "
         "so every driver row re-proves snapshot+tail == replay.",
-    tags=("golden", "xrpl", "real-data"),
 )
 def golden_open_offers_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..plans.xrpl_etl import asof_open_offers_via_snapshot
@@ -507,7 +500,6 @@ def golden_open_offers_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
         "replay pin the same table field-by-field in "
         "tests/test_account_escrows_pins.py -- this query gives the "
         "family a per-round driver row.",
-    tags=("golden", "xrpl", "real-data"),
 )
 def golden_escrow_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _silver(spark, "silver_escrows")
@@ -553,7 +545,6 @@ def golden_escrow_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
         "(8.806247 -> 9.029756) the lifecycle golden cites, and the "
         "mocha counts + a pure-Python paychan.js replay pin the table "
         "field-by-field in tests/test_account_paychan_pins.py.",
-    tags=("golden", "xrpl", "real-data"),
 )
 def golden_paychan_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = _silver(spark, "silver_payment_channels")
@@ -613,7 +604,6 @@ def golden_paychan_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
         ".py).  One two-perspective union + one aggregation -- the "
         "reference's per-payment mutable-bucket daemon collapses into "
         "a groupBy whose partial aggregates merge associatively.",
-    tags=("golden", "xrpl", "real-data"),
 )
 def golden_account_reports_counts(
     spark: SparkSession, sf_dir: str
@@ -685,7 +675,6 @@ def golden_account_reports_counts(
         "semantics reconstructed from test.account.stats.js:20-40's "
         "seeded columns).  One scan of silver_transactions, three "
         "map-side-combinable aggregations.",
-    tags=("golden", "xrpl", "real-data"),
 )
 def golden_account_stats_daily(
     spark: SparkSession, sf_dir: str
@@ -738,7 +727,6 @@ def golden_account_stats_daily(
         "serving route passes account_value through opaquely and the "
         "mocha pins seed the reference's own mock values).  One keyed "
         "aggregation over silver_balance_changes.",
-    tags=("golden", "xrpl", "real-data"),
 )
 def golden_account_value_daily(
     spark: SparkSession, sf_dir: str

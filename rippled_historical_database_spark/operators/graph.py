@@ -134,7 +134,6 @@ def oriented_triangles(und: DataFrame) -> tuple[DataFrame, DataFrame]:
         "node_state, inbound/outbound counts): in/out degree, distinct "
         "neighbors, and value totals per node from the edges DataFrame -- "
         "two aggregations + full outer combine.",
-    tags=("graph",),
 )
 def graph_node_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = _edges(spark, sf_dir)
@@ -176,7 +175,6 @@ def graph_node_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Reciprocal link detection (the topology link graph's undirected "
         "view, topology.js:623-627): self-join of the distinct edge set "
         "on the reversed pair -- an equi-join on both endpoints.",
-    tags=("graph",),
 )
 def graph_reciprocal_links(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = _edges(spark, sf_dir).select("src", "dst").distinct()
@@ -201,7 +199,6 @@ def graph_reciprocal_links(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Two-hop neighborhood size per node: one self-join hop (the "
         "relational core of crawl-graph traversal; iterate for k hops). "
         "At scale both sides partition on the join endpoint.",
-    tags=("graph",),
 )
 def graph_two_hop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = _edges(spark, sf_dir).select("src", "dst").distinct()
@@ -290,7 +287,6 @@ def _sql_pagerank_ctes() -> str:
         "rank_pos itself comes from the two-pass range-partitioned "
         "numbering (functions/ordering.py), never a one-task global "
         "sort over the node set.",
-    tags=("graph", "iterative"),
 )
 def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r14: persist the iteration-invariant base relations -- the
@@ -440,7 +436,6 @@ def _sql_hits_ctes() -> str:
         "partitioning; score relations are node-count sized; the "
         "normalizer is a broadcast scalar -- per iteration two keyed "
         "shuffles, never a global sort.",
-    tags=("graph", "iterative"),
 )
 def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r14 optimization (guide section 5 "caching"): edges and nodes are
@@ -598,7 +593,6 @@ LP_HUB_CAP = 64
         "no second neighborhood pass; existing edges drop via an "
         "anti-join against the FULL adjacency so a capped edge can "
         "never be 'predicted'.",
-    tags=("graph",),
 )
 def graph_jaccard_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     ed = _edges(spark, sf_dir).select("src", "dst").distinct().filter(
@@ -690,7 +684,6 @@ def graph_jaccard_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame
         "domain makes it strongly disassortative (hubs attach to "
         "leaves) -- the skew shape §3 of SCALE.md warns about, "
         "measured in one number.",
-    tags=("graph",),
 )
 def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = _edges(spark, sf_dir).filter(F.col("src") != F.col("dst"))
@@ -776,7 +769,6 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
         "oracle keeps id orientation: output is orientation-invariant. "
         "All counts exact BIGINTs; one closed-form division at the "
         "end.",
-    tags=("graph",),
 )
 def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     und = (

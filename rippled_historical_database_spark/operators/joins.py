@@ -39,7 +39,6 @@ from ..sources.catalog import load_table
         "grows -- no forced hint, since the filtered side still scales "
         "linearly with the corpus.",
     bench=True,
-    tags=("join",),
 )
 def join_index_to_payload(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
@@ -62,7 +61,6 @@ def join_index_to_payload(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="ledger -> its transactions expansion (tx-hash array multi-get, "
         "data.js:1886-1924) as a 1:N equi-join sorted by the in-container "
         "index (tx_index analog l_linenumber).",
-    tags=("join",),
 )
 def join_container_expand(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").filter(
@@ -87,7 +85,6 @@ def join_container_expand(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="topology nodes x node_state detail join (topology.js:99-161) as "
         "chained broadcast joins over small dimensions.",
-    tags=("join",),
 )
 def join_multi_hop(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = load_table(spark, sf_dir, "supplier")
@@ -116,7 +113,6 @@ def join_multi_hop(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="Implicit semi-join (index scan limits the payload hash list, "
         "SURVEY.md 2.3) made explicit: left_semi, no payload duplication.",
-    tags=("join",),
 )
 def join_left_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = load_table(spark, sf_dir, "part")
@@ -138,7 +134,6 @@ def join_left_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="Dedup/absence check (payment dedup by tx_hash, "
         "aggregation/accountPayments.js:155-163) as a left_anti join.",
-    tags=("join",),
 )
 def join_left_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer")
@@ -174,7 +169,6 @@ def join_left_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
         "(data.js:331-451: per-day key enumeration -> zero Bucket) as a "
         "generated date spine LEFT JOIN with coalesced defaults; the spine "
         "is broadcast.",
-    tags=("join", "reports"),
 )
 def join_date_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
@@ -227,7 +221,6 @@ def join_date_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Volume metric rows joined to a VWAP rate series on the aligned "
         "bucket to re-denominate totals (data.js:800-941): equi-join on "
         "date_trunc; the rate series is tiny -> broadcast.",
-    tags=("join", "metrics"),
 )
 def join_rate_redenomination(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
@@ -266,7 +259,6 @@ def join_rate_redenomination(spark: SparkSession, sf_dir: str) -> DataFrame:
         "to a live rippled node, accountBalances.js:93-127; SURVEY.md 7.6 "
         "recommends reconstruction): as-of value per key = max_by over rows "
         "at or before the cutoff -- one aggregation, no per-key scan.",
-    tags=("join", "asof"),
 )
 def join_asof_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
@@ -297,7 +289,6 @@ def join_asof_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Balance reconstruction by windowed cumulative sum over balance "
         "changes (SURVEY.md 7.6b: final_balance as-of checkpoints): "
         "decimal-exact running sum per account.",
-    tags=("window", "asof"),
 )
 def join_running_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events").filter(F.col("user_id") < 5)
@@ -353,7 +344,6 @@ RANGE_BIN_SEC = 900      # time-axis bin width for the bin-and-refine join
         "key, candidate count ~ points x windows-per-bin, never "
         "|intervals| x |points|; plan-guarded against nested-loop "
         "degeneration.",
-    tags=("join", "range"),
 )
 def join_range_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
@@ -445,7 +435,6 @@ ASOF_TOL_SECONDS = 3 * 86400  # staleness tolerance for the as-of match
         "this shape answers every probe in one pass.  Ties: a quote at "
         "the probe's exact timestamp counts (src orders quotes first), "
         "matching merge_asof allow_exact_matches.",
-    tags=("join", "asof"),
 )
 def join_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
@@ -557,7 +546,6 @@ def join_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
         "the probe's exact timestamp sorts before the probe (src=0), "
         "so it is captured by the backward fill with lag 0 and wins "
         "every comparison -- allow_exact_matches semantics.",
-    tags=("join", "asof"),
 )
 def join_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
@@ -682,7 +670,6 @@ _SQL_BANDS = "bands(band_id, lo, hi) AS (VALUES " + ", ".join(
         "is map-side, the coverage relation is bands x covered "
         "buckets (~115 rows) broadcast everywhere, and the band agg "
         "is 10 cells of map-side-combinable state.",
-    tags=("join",),
 )
 def join_point_in_band(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")

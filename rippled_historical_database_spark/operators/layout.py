@@ -61,6 +61,9 @@ M = 2 ** Z_BITS
 # matching the exact form.
 LAYOUT_EXACT_MAX_ROWS = 2_000_000
 
+# approxQuantile relative error of the scale forms' boundary artifact.
+QUANTILE_REL_ERR = 0.001
+
 
 def _morton_terms(cu: str, cv: str, spark_side: bool) -> str:
     """Render sum-of-disjoint-bits Morton interleave; same structure in
@@ -106,7 +109,6 @@ def _morton_terms(cu: str, cv: str, spark_side: bool) -> str:
         "LAYOUT_EXACT_MAX_ROWS; above it the registered query serves "
         "zorder_scale_key -- the train-once broadcast approx-quantile "
         "boundary artifact, a zero-shuffle key projection.",
-    tags=("layout",),
 )
 def layout_zorder_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Size-dispatched serving, same contract as profile_quantile_drift:
@@ -134,26 +136,21 @@ def layout_zorder_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("zkey", "event_id")
 
 
-def _quantile_codes(
-    df: DataFrame,
-    t_col: str,
-    v_col: str,
-    id_col: str,
-    rel_err: float,
-) -> DataFrame:
+def _quantile_codes(df: DataFrame) -> DataFrame:
     """Train-once equal-frequency grid codes: one approxQuantile pass
     per dimension yields M-1 boundaries (a driver-side constant of
     2*(M-1) doubles); assignment is code = #(boundaries <= x) as an
     array-lambda over the broadcast literal array -- a zero-shuffle
     projection shared by both curve keys' scale forms."""
     num = df.select(
-        id_col,
-        F.col(t_col).cast("double").alias("_t"),
-        F.col(v_col).cast("double").alias("_v"),
+        "event_id",
+        F.col("ts").cast("double").alias("_t"),
+        F.col("value").cast("double").alias("_v"),
     )
     probs = [i / M for i in range(1, M)]
     b_t, b_v = (
-        num.stat.approxQuantile(c, probs, rel_err) for c in ("_t", "_v")
+        num.stat.approxQuantile(c, probs, QUANTILE_REL_ERR)
+        for c in ("_t", "_v")
     )
 
     def code(col: str, bounds: list[float]) -> F.Column:
@@ -161,19 +158,13 @@ def _quantile_codes(
         return F.size(F.filter(arr, lambda b: b <= F.col(col)))
 
     return num.select(
-        id_col,
+        "event_id",
         code("_t", b_t).alias("code_t"),
         code("_v", b_v).alias("code_v"),
     )
 
 
-def zorder_scale_key(
-    df: DataFrame,
-    t_col: str = "ts",
-    v_col: str = "value",
-    id_col: str = "event_id",
-    rel_err: float = 0.001,
-) -> DataFrame:
+def zorder_scale_key(df: DataFrame) -> DataFrame:
     """The 100 TB form the module doc describes, implemented: the exact
     ntile's global sort is replaced by a TRAIN-ONCE boundary artifact --
     one approxQuantile pass yields M-1 boundaries per dimension (a
@@ -190,9 +181,8 @@ def zorder_scale_key(
     within one bucket of the exact ranks, balanced occupancy; the
     dispatch itself is pinned in tests/test_round10_ops.py).
     """
-    coded = _quantile_codes(df, t_col, v_col, id_col, rel_err)
-    return coded.selectExpr(
-        id_col,
+    return _quantile_codes(df).selectExpr(
+        "event_id",
         "code_t",
         "code_v",
         f"CAST({_morton_terms('code_t', 'code_v', spark_side=True)} AS BIGINT)"
@@ -277,7 +267,6 @@ def _sql_hilbert_ctes() -> str:
         "hilbert_scale_key's boundary artifact, like "
         "layout_zorder_key), and the write path "
         "is the same repartitionByRange(hkey) + sortWithinPartitions.",
-    tags=("layout",),
 )
 def layout_hilbert_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Size-dispatched like layout_zorder_key: exact NTILE below
@@ -295,37 +284,31 @@ def layout_hilbert_key(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.ntile(M).over(w_t) - 1).alias("code_t"),
         (F.ntile(M).over(w_v) - 1).alias("code_v"),
     )
-    return _hilbert_fold(coded, "event_id").orderBy("hkey", "event_id")
+    return _hilbert_fold(coded).orderBy("hkey", "event_id")
 
 
-def _hilbert_fold(coded: DataFrame, id_col: str) -> DataFrame:
-    """(id, code_t, code_v) -> + hkey via the unrolled quadrant folds;
-    pure projections, shared by the exact and scale forms."""
+def _hilbert_fold(coded: DataFrame) -> DataFrame:
+    """(event_id, code_t, code_v) -> + hkey via the unrolled quadrant
+    folds; pure projections, shared by the exact and scale forms."""
     df = coded.selectExpr(
-        id_col, "code_t", "code_v", "0 AS d",
+        "event_id", "code_t", "code_v", "0 AS d",
         "code_t AS hx", "code_v AS hy",
     )
     for s in (2 ** b for b in reversed(range(Z_BITS))):
         rx, ry, d_inc, nhx, nhy = _hilbert_level(s)
         df = df.selectExpr(
-            id_col, "code_t", "code_v", "d", "hx", "hy",
+            "event_id", "code_t", "code_v", "d", "hx", "hy",
             f"{rx} AS rx", f"{ry} AS ry",
         ).selectExpr(
-            id_col, "code_t", "code_v",
+            "event_id", "code_t", "code_v",
             f"{d_inc} AS d", f"{nhx} AS hx", f"{nhy} AS hy",
         )
     return df.selectExpr(
-        id_col, "code_t", "code_v", "CAST(d AS BIGINT) AS hkey"
+        "event_id", "code_t", "code_v", "CAST(d AS BIGINT) AS hkey"
     )
 
 
-def hilbert_scale_key(
-    df: DataFrame,
-    t_col: str = "ts",
-    v_col: str = "value",
-    id_col: str = "event_id",
-    rel_err: float = 0.001,
-) -> DataFrame:
+def hilbert_scale_key(df: DataFrame) -> DataFrame:
     """Scale form of layout_hilbert_key, same contract as
     zorder_scale_key: the exact ntile's global sort is replaced by the
     train-once approx-quantile boundary artifact (2*(M-1) broadcast
@@ -334,6 +317,4 @@ def hilbert_scale_key(
     bit-reproducible across engines); layout_hilbert_key dispatches
     here above LAYOUT_EXACT_MAX_ROWS, and the plan/quality laws live
     in tests/test_zorder_scale.py + tests/test_round10_ops.py."""
-    return _hilbert_fold(
-        _quantile_codes(df, t_col, v_col, id_col, rel_err), id_col
-    )
+    return _hilbert_fold(_quantile_codes(df))

@@ -85,7 +85,6 @@ def _tx_type() -> Column:
         "create / partial_fill / cancel / replace / fill / unfunded_cancel "
         "/ unfunded_partial_fill) as a when-cascade over (tx type, node "
         "type, remaining amount) -- branch order preserved exactly.",
-    tags=("parser", "offers"),
 )
 def parse_offers_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events").filter(
@@ -136,7 +135,6 @@ def parse_offers_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Escrow events (ledgerParser/escrow.js:23-73): Create/Finish/"
         "Cancel rows with the epoch-adjusted cancel_after deadline -- "
         "filter + projection + interval arithmetic.",
-    tags=("parser", "silver"),
 )
 def parse_escrows(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events").filter(F.col("event_type") == "error")
@@ -184,7 +182,6 @@ def parse_escrows(spark: SparkSession, sf_dir: str) -> DataFrame:
         "id derived from the (source, destination) pair, Create/Fund/Claim "
         "typed rows, rolled per channel -- the paychan table and its "
         "per-channel query path in one plan.",
-    tags=("parser", "silver"),
 )
 def parse_payment_channels(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.numeric import dsum

@@ -122,7 +122,6 @@ def _fake_decode_meta(payload: bytes) -> tuple[int, int, int]:
         "are the md5-derived deterministic fixture (the real kernel, "
         "decode_image, is the pure-Python imaging module). Pure "
         "projection -- no shuffle.",
-    tags=("multimodal",),
 )
 def multimodal_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -159,7 +158,6 @@ def multimodal_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
         "live in functions/imaging.py). The "
         "batch shape, schema contract, and per-partition iteration are "
         "the production plumbing.",
-    tags=("multimodal", "pandas-udf"),
 )
 def multimodal_feature_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
@@ -202,7 +200,6 @@ def multimodal_feature_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         "explode (frame count derived from payload size; a real kernel "
         "reads container headers), one output row per sampled frame -- "
         "the explode shape that feeds per-frame featurization.",
-    tags=("multimodal",),
 )
 def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -279,7 +276,6 @@ def resize_image(payload: bytes, w: int, h: int) -> bytes:
         "is what a 100 TB preprocessing pass runs FIRST to size the "
         "Arrow batches and skip no-op payloads before any pixel "
         "work.  Pure projection -- zero shuffle.",
-    tags=("multimodal",),
 )
 def multimodal_resize_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -401,7 +397,6 @@ def audio_frame_plan(d: DataFrame) -> DataFrame:
         "sample decode: pure projection + bounded explode, zero "
         "shuffle, and the frame grid prunes clips shorter than one "
         "window.",
-    tags=("multimodal",),
 )
 def multimodal_audio_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -491,7 +486,6 @@ SQL_PHASH_NEARDUP = """
         "density, not corpus^2.  Threshold 26/60 keeps the synthetic "
         "corpus's collision tail so the demo emits rows; a real "
         "pipeline sets ~6-10.",
-    tags=("multimodal", "dedup"),
 )
 def multimodal_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -627,7 +621,6 @@ def _sql_vad_energy(doc: str, frame: str) -> str:
         "per-clip frame explode, windows PARTITIONED per doc (never a "
         "global sort), one keyed shuffle on doc_id -- segment output "
         "is strictly smaller than the frame grid.",
-    tags=("multimodal",),
 )
 def multimodal_vad_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window

@@ -48,7 +48,6 @@ PARTIAL_PAYMENT_CUTOFF_ID = 500
         "balanceChanges.js:23-93, a 9-branch type inference) as a when-"
         "chain over JSON-extracted metadata; props JSON parsed natively "
         "(get_json_object), no stringify round-trip.",
-    tags=("parser",),
 )
 def parse_props_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
@@ -95,7 +94,6 @@ def parse_props_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Memo hex/base64 detection + UTF-8 decode (ledgerParser/memos.js:"
         "5-116): regex encoding detection with the same branch order as the "
         "reference (hex wins over base64), native unhex/unbase64 -- no UDF.",
-    tags=("parser", "decode"),
 )
 def parse_memo_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -142,7 +140,6 @@ def parse_memo_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         "(DeliveredAmount || Amount if not partial || Amount if ledger > "
         "4594094 || 'unavailable'; data.js:2066-2107) as a when-chain with "
         "the cutoff encoded as a named constant.",
-    tags=("parser",),
 )
 def parse_delivered_amount(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
@@ -186,7 +183,6 @@ def parse_delivered_amount(spark: SparkSession, sf_dir: str) -> DataFrame:
         "exchanges.js:180-199 parser side; data.js:1480-1524 query side): "
         "pair stored in lexicographic order, inverted pairs get rate -> "
         "1/rate. Property: query(A/B) == invert(query(B/A)).",
-    tags=("parser", "pairs"),
 )
 def parse_pair_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events").filter(
@@ -227,7 +223,6 @@ def parse_pair_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
         "16 hex chars -> mantissa * 10^(offset-100), XRP shift): hex "
         "mantissa via conv()/hex-cast arithmetic, scale via a literal "
         "lookup -- column expressions, not a UDF (SURVEY.md 2.10).",
-    tags=("parser", "decode"),
 )
 def parse_quality_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -258,7 +253,6 @@ def parse_quality_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="smoment time format/unformat (lib/smoment.js:14-64, utils.js:9-33): "
         "the YYYYMMDDHHmmss rowkey time format as date_format/to_timestamp "
         "round trip -- the rowkey encoding survives only at the API edge.",
-    tags=("parser", "time"),
 )
 def parse_time_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events").filter(F.col("event_id") < 100)
@@ -299,7 +293,6 @@ def parse_time_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "type='fee' row with node_index=-1; RippleState nodes emit two "
         "mirrored negated rows): union of three projections over one scan. "
         "Invariant: sum(amount_change) per tx = -fee (FIXTURES.md 5.4).",
-    tags=("parser", "silver"),
 )
 def parse_balance_mirror(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
@@ -355,7 +348,6 @@ def parse_balance_mirror(spark: SparkSession, sf_dir: str) -> DataFrame:
         "account touched by a tx = union of account fields across derived "
         "events + distinct; replaces the double-written account-keyed "
         "table copies (data.js:2921-2924).",
-    tags=("parser", "silver"),
 )
 def parse_affected_accounts(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
@@ -382,7 +374,6 @@ def parse_affected_accounts(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="accountsCreated (ledgerParser/accountsCreated.js:3-26): Created "
         "AccountRoot nodes -> {account, parent, balance} -- filter + "
         "projection over the parsed stream.",
-    tags=("parser", "silver"),
 )
 def parse_accounts_created(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events").filter(F.col("event_type") == "signup")
@@ -506,7 +497,6 @@ def decode_tx_batches(batches):
         "Fixture blobs are frozen from the reference's own mock ledgers; "
         "the oracle pins the expected display values, and "
         "tests/test_tx_binary.py roundtrips all 933 fixture transactions.",
-    tags=("parser", "binary", "pandas-udf"),
 )
 def parse_tx_binary_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     # local_df (not a raw createDataFrame): the pickle-RDD form of this

@@ -61,7 +61,6 @@ KEEP_LANGS = ("en", "es")
         "lang) corpus accounting. One scan, two keyed shuffles, and "
         "only metadata ever crosses an exchange (text stays in the "
         "scan stage).",
-    tags=("pipeline", "dedup", "text"),
 )
 def pipeline_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -174,7 +173,6 @@ def _register_near_dup_rerank():
             "equi-join only; the embedding join touches candidate rows, "
             "not the corpus; both sketch stages share the single "
             "documents scan.",
-        tags=("pipeline", "dedup", "similarity"),
     )
     def pipeline_near_dup_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         from .dedup import (
@@ -298,7 +296,6 @@ def _register_near_dup_curation():
             "near-dups, so at 100 TB the anti-join broadcasts the dupe "
             "list while the corpus scan stays shuffle-free.  Oracle "
             "walks the same component graph with a recursive CTE.",
-        tags=("pipeline", "dedup", "graph"),
     )
     def pipeline_near_dup_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
         from .dedup import dedup_connected_components
@@ -381,7 +378,6 @@ CONTAM_THRESHOLD = 0.05  # fraction of a doc's shingles seen in the benchmark
         "count(hit) the overlap, so the expensive shingle generation "
         "runs exactly twice (benchmark + train lineages, 14.5 s -> "
         "1.1 s at sf0.1 vs the three-lineage form).",
-    tags=("pipeline", "dedup", "text"),
 )
 def pipeline_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.functions import broadcast
@@ -468,7 +464,6 @@ def _leakage_oracle() -> str:
         "hash split projection); the split assignment is a zero-cost "
         "map-side CASE on both pair members, so the audit adds NO "
         "shuffle beyond the pair generation it reuses.",
-    tags=("pipeline", "sampling", "dedup"),
 )
 def pipeline_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .dedup import JACCARD_THRESHOLD, shingle_pair_stats
@@ -572,7 +567,6 @@ BOILER_PCT = 5  # segment is boilerplate when nd * 100 >= PCT * n_docs
         "stream never shuffles for the removal step.  The percentage "
         "gate is all-integer (nd*100 >= pct*n) -- no float threshold "
         "to diverge between engines.",
-    tags=("pipeline", "text", "dedup"),
 )
 def pipeline_boilerplate_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -659,7 +653,6 @@ SOURCE_GATE_PCT = 76  # source passes iff n_keep * 100 >= PCT * n_docs
         "keyed exchange on source produces the gate table, which is "
         "tiny (distinct sources) and broadcasts back when filtering "
         "the corpus.",
-    tags=("pipeline", "profiling", "text"),
 )
 def pipeline_source_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .text_analysis import gopher_keep_column, gopher_metric_columns
@@ -755,7 +748,6 @@ def _register_quality_keeper():
             "swaps its anti-join list for non-keepers by quality with "
             "zero added corpus passes.  Oracle: same component walk as "
             "the CC oracle plus the same deterministic argmax.",
-        tags=("pipeline", "dedup", "graph"),
     )
     def pipeline_quality_keeper(spark: SparkSession, sf_dir: str) -> DataFrame:
         from pyspark.sql.window import Window

@@ -57,7 +57,6 @@ from ..sources.catalog import load_table
         "second scan), map-side combinable throughout; COUNT(DISTINCT) "
         "is exact here and swaps for the mergeable HLL register sketch "
         "on unbounded columns.",
-    tags=("profiling",),
 )
 def profile_column_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
@@ -143,7 +142,6 @@ CONSTRAINTS = {
         "fail-fast gate before a batch is admitted downstream.  Every "
         "counter is map-side combinable; adding a rule adds a column, "
         "not a scan.",
-    tags=("profiling", "validation"),
 )
 def validate_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
@@ -200,7 +198,6 @@ def validate_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
         "expression is a fixed scalar IEEE op sequence, rounded once).  "
         "All six sums are map-side combinable; adding column pairs adds "
         "columns, not passes.",
-    tags=("profiling",),
 )
 def profile_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
@@ -275,7 +272,6 @@ PSI_SPLIT = "TIMESTAMP '2024-01-16 00:00:00'"  # reference vs current half
         "totals relation; LN rounds once at 9 dp (libm absorption), "
         "each term is then a fixed IEEE sequence rounded once.  Total "
         "PSI is the trivial sum of the emitted terms.",
-    tags=("profiling", "drift"),
 )
 def profile_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
@@ -361,7 +357,6 @@ QI_SQL = ("event_type", "CAST(DATE_TRUNC('day', ts) AS TIMESTAMP)",
         "construction (each row < k members).  Generalize-and-retry "
         "(coarser bands) is re-running the same plan with wider "
         "bucket constants.",
-    tags=("profiling", "privacy"),
 )
 def privacy_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
@@ -464,7 +459,6 @@ KS_ALPHA_C = 1.358  # c(alpha) for alpha = 0.05 (two-sample KS)
         "bounded-cardinality relations -- one keyed count over the "
         "corpus, then window work on a tiny grid; sources x values "
         "stays broadcastable.",
-    tags=("profiling", "drift"),
 )
 def profile_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
@@ -566,7 +560,6 @@ L_DIVERSE = 3
         "scale shape as the k-anonymity gate: one grouped "
         "count-distinct with map-side partials, violating-group report "
         "bounded by the QI-group count, zero joins.",
-    tags=("profiling", "privacy"),
 )
 def privacy_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
@@ -627,7 +620,6 @@ MI_ROUND = 9
         "re-evaluated the corpus aggregation once per marginal branch: "
         "4 full scans).  Per-cell logs are single IEEE ops rounded at "
         "1e-9, identical in both engines.",
-    tags=("profiling",),
 )
 def profile_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
@@ -733,7 +725,6 @@ T_CLOSE = 0.2
         "profile_mutual_information.  Per-term arithmetic is rounded "
         "at 1e-9 and accumulated through the DECIMAL sum, so the "
         "distance is engine-exact.",
-    tags=("profiling", "privacy"),
 )
 def privacy_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
@@ -868,7 +859,6 @@ def _sql_first_digit() -> str:
         "sums over the grouped relation (no second corpus scan).  The "
         "exact integer counts make everything but the final closed "
         "form deterministic.",
-    tags=("profiling",),
 )
 def profile_benford_deviation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
@@ -989,7 +979,6 @@ def profile_benford_deviation(spark: SparkSession, sf_dir: str) -> DataFrame:
         "joint groupBy), marginals are window sums over the bounded "
         "grid in the same lineage, and per-cell terms accumulate "
         "through DECIMAL(38,9) so the sum is partition-order exact.",
-    tags=("profiling",),
 )
 def profile_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
@@ -1080,7 +1069,6 @@ def profile_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
         "answer.  At 64-bit limits: |term| < 2n * max_len, safe to "
         "~1e13 docs x 1e5 chars; beyond that the sum lifts to "
         "DECIMAL(38,0) unchanged.",
-    tags=("profiling",),
 )
 def profile_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
@@ -1174,7 +1162,6 @@ MAD_K = 5  # outlier cut: |x - median| > MAD_K * MAD
         "extreme per-key cardinality the rank window becomes a "
         "per-key sort -- swap in approx_percentile at a documented "
         "accuracy budget; the exact form is the oracle either way.",
-    tags=("profiling",),
 )
 def profile_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
@@ -1273,7 +1260,6 @@ _SQL_CALIB_P = sql_fround(
         "both engines.  One scan, one 10-key aggregation: the "
         "reliability table for any model/corpus size is 10 rows of "
         "state, map-side combinable.",
-    tags=("profile",),
 )
 def profile_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
@@ -1382,7 +1368,6 @@ def _drift_halves(spark: SparkSession, sf_dir: str) -> DataFrame:
         "gate oracle-matches it); above that the query serves the "
         "mergeable histogram form (profile_quantile_drift_sketch), so "
         "no global rank ever touches a 100 TB table.",
-    tags=("profile", "drift"),
 )
 def profile_quantile_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Size-dispatched serving: the exact-rank form below DRIFT_EXACT_MAX_ROWS
@@ -1480,7 +1465,6 @@ def quantile_drift_exact_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         "no rounding ties: every output is an exact multiple of the "
         "bin width).  This is the form profile_quantile_drift itself "
         f"serves above {DRIFT_EXACT_MAX_ROWS} rows.",
-    tags=("profile", "drift", "sketch"),
 )
 def profile_quantile_drift_sketch(
     spark: SparkSession, sf_dir: str
@@ -1603,7 +1587,6 @@ def _sql_dp_noise_values() -> str:
         "noise table is a ~2k-row broadcast; the release is one keyed "
         "aggregation plus a map-side join -- DP post-processing "
         "(clamp, round) is free.",
-    tags=("privacy",),
 )
 def privacy_dp_noised_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")

@@ -81,7 +81,6 @@ def _legs(e: DataFrame) -> DataFrame:
         "last-50-trades VWAP over a 14-day lookback, strict mode gated on "
         ">=10 trades. 'Last 50' = row_number desc <= 50 then aggregate; "
         "full outer combine with coalesce fallback.",
-    tags=("rates", "aggregation"),
 )
 def rate_dual_vwap(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.numeric import dsum
@@ -148,7 +147,6 @@ def rate_dual_vwap(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="/normalize (api/routes/normalize.js:126-142): convert raw amounts "
         "through the exchange-rate operator -- rate series is tiny, so the "
         "join broadcasts; per-row conversion stays in codegen.",
-    tags=("rates",),
 )
 def rate_normalize_amounts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.numeric import dsum

@@ -69,7 +69,6 @@ def _sql_period_cells(days: int, suffix: str) -> str:
         "aggregation computes every period in a single scan with map-side "
         "partials -- one shuffle of 5 markets x 8 cells regardless of "
         "input size.",
-    tags=("reader", "aggregation", "rolling"),
 )
 def read_live_rolling_metric(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
@@ -110,7 +109,6 @@ def read_live_rolling_metric(spark: SparkSession, sf_dir: str) -> DataFrame:
         "shape: max_by over a packed (ts, event_id) sort key -- a hash "
         "aggregation with no per-group sort -- then one freshness "
         "predicate against the broadcast anchor.",
-    tags=("reader", "latest"),
 )
 def read_latest_fresh_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
@@ -150,7 +148,6 @@ def read_latest_fresh_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         "the daily gold rollup filtered by a boundary predicate "
         "(date == date_trunc('week', date)) -- at 100 TB the predicate "
         "prunes to ~1/7 of the date partitions before any shuffle.",
-    tags=("reader", "sampling"),
 )
 def read_snapshot_week_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")

@@ -88,7 +88,6 @@ def account_daily_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
         "shape joins the BIGINT counterparty array to a CSV string "
         "(scalar cells only -- the driver's pandas canonicalizer cannot "
         "sort lists); account_daily_nested keeps the typed array form.",
-    tags=("reports", "aggregation"),
 )
 def report_account_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     nested = account_daily_nested(spark, sf_dir)
@@ -144,7 +143,6 @@ def payments_list_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
         "verifies sort_array's in-array ordering against the oracle's "
         "ROW_NUMBER-by-event_id, while payments_list_nested keeps the "
         "typed array form for API use.",
-    tags=("reports", "nested"),
 )
 def report_payments_list(spark: SparkSession, sf_dir: str) -> DataFrame:
     nested = payments_list_nested(spark, sf_dir)
@@ -224,7 +222,6 @@ def metric_components_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
         "count, pos, market, market_amount, market_count) rows -- pos "
         "verifies the in-array market ordering; metric_components_nested "
         "keeps the typed array form.",
-    tags=("reports", "metrics", "nested"),
 )
 def report_metric_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     nested = metric_components_nested(spark, sf_dir)
@@ -262,7 +259,6 @@ def report_metric_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="CSV export flatten (utils.js:142-168 flattenJSON; every endpoint "
         "supports format=csv): nested struct -> dot-path leaf columns as a "
         "plain select; df.write.csv is the sink.",
-    tags=("reports", "csv"),
 )
 def report_csv_flatten(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 100000)

@@ -53,7 +53,6 @@ def hourly_payment_rollup(e: DataFrame, final: bool = True) -> DataFrame:
     """,
     doc="Payments rollup per (currency, hour): count, sum(delivered), avg "
         "(aggregation/payments.js:361-384).",
-    tags=("aggregation", "rollup"),
 )
 def agg_payments_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     return hourly_payment_rollup(load_table(spark, sf_dir, "events"), final=True)
@@ -70,7 +69,6 @@ def agg_payments_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="Day rollup re-reduced from hour rows (aggregation/payments.js:214-325) "
         "-- the oracle aggregates raw rows, checking re-reduce associativity.",
-    tags=("aggregation", "rollup"),
 )
 def agg_payments_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     hourly = hourly_payment_rollup(load_table(spark, sf_dir, "events"), final=False)
@@ -108,7 +106,6 @@ def agg_payments_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         "counts by tx type (family='type') plus metric-family counters, in "
         "the long (interval, date, family, metric, value) layout of "
         "agg_stats (FIXTURES.md 3.3). One scan, unioned projections.",
-    tags=("aggregation", "stats"),
 )
 def agg_stats_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
@@ -153,7 +150,6 @@ def agg_stats_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Weekly stats re-reduced from daily rows (aggregation/stats.js:75-141; "
         "ISO-week alignment utils.js:70-98). Spark re-aggregates the daily "
         "long-format table; oracle aggregates raw.",
-    tags=("aggregation", "stats"),
 )
 def agg_stats_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = agg_stats_daily.__wrapped__(spark, sf_dir) if hasattr(agg_stats_daily, "__wrapped__") else agg_stats_daily(spark, sf_dir)
@@ -186,7 +182,6 @@ def agg_stats_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
         "day (aggregation/stats.js:327-331 keeps a running average; the "
         "batch form is (max-min)/(n-1) over distinct closes -- minute "
         "buckets stand in for ledger closes).",
-    tags=("aggregation", "stats"),
 )
 def agg_ledger_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
@@ -219,7 +214,6 @@ def agg_ledger_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
         "fee and tx_count per container; fee analog = price*discount, "
         "computed per-row in double then decimal-summed.",
     bench=True,
-    tags=("aggregation", "fees"),
 )
 def agg_fee_per_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
     l = load_table(spark, sf_dir, "lineitem")
@@ -249,7 +243,6 @@ def agg_fee_per_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="Network fee rollup: ledger summaries merged into day rows with "
         "recomputed avg and global min/max (aggregation/fees.js:116-258).",
-    tags=("aggregation", "fees"),
 )
 def agg_fee_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     l = load_table(spark, sf_dir, "lineitem")
@@ -279,7 +272,6 @@ def agg_fee_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Accounts-created count over a range (data.js:2403-2495 hybridizes "
         "raw edge-day scans with weekly rollups; one distributed count "
         "replaces the hybrid): first-seen day per account, counted per day.",
-    tags=("aggregation", "stats"),
 )
 def agg_accounts_created(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
@@ -309,7 +301,6 @@ def agg_accounts_created(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="Issuer capitalization: daily change + cumulative balance series "
         "(data.js:949-1046) = windowed decimal cumsum over the daily rollup.",
-    tags=("aggregation", "window"),
 )
 def agg_issuer_capitalization(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
@@ -345,7 +336,6 @@ def agg_issuer_capitalization(spark: SparkSession, sf_dir: str) -> DataFrame:
         "open_ledger_fee, scripts/feeStats.js:28-80, read data.js:2176-2292): "
         "exact interpolated percentiles per day -- Spark percentile() and "
         "DuckDB quantile_cont agree bit-for-bit on linear interpolation.",
-    tags=("aggregation", "fees", "quantiles"),
 )
 def agg_fee_stats_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     l = load_table(spark, sf_dir, "lineitem")
@@ -371,7 +361,6 @@ def agg_fee_stats_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         "per key. Decimal accumulation makes the two-stage plan bit-equal "
         "to the single-stage oracle -- salting is a pure physical rewrite "
         "for the 100 TB hot-key case (the XRP leg of every pair).",
-    tags=("aggregation", "skew"),
 )
 def agg_salted_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.skew import salted_rollup
@@ -407,7 +396,6 @@ def agg_salted_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "window starts.  Cost: the Expand doubles rows BEFORE the "
         "map-side partial agg, so shuffle bytes stay "
         "windows-per-slide x the tumbling aggregate, never raw events.",
-    tags=("aggregation", "window", "streaming-capable"),
 )
 def agg_sliding_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")

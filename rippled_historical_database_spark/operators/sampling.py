@@ -87,7 +87,6 @@ def sql_split_case(key: str = "doc_id") -> str:
         "across runs, cluster sizes, and repartitions (unlike "
         "df.sample's partition-dependent RNG).  Pure projection, zero "
         "shuffle; new salt = fresh independent split.",
-    tags=("sampling",),
 )
 def sample_hash_splits(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -126,7 +125,6 @@ def _sql_rate_case() -> str:
         "uniform, reported as per-stratum total/kept counts.  The "
         "filter is a map-side projection; the only shuffle is the "
         "4-key lang aggregation (partial aggs make it negligible).",
-    tags=("sampling",),
 )
 def sample_stratified_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -185,7 +183,6 @@ PACK_SHARDS = 16    # independent packing streams (the parallelism unit)
         "unit: each shard's cumsum is an independent window, so packing "
         "100 TB never needs a global sort -- shuffle is one exchange on "
         "the shard key; more shards = more parallelism, same semantics.",
-    tags=("sampling", "packing"),
 )
 def sample_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
@@ -267,7 +264,6 @@ MIX_BUDGET = 100_000  # documents drawn per training epoch
         "real exchange is the domain count, which map-side combines.  "
         "Probabilities round to 6dp on both engines so libm pow ulp "
         "differences cannot flip the hash.",
-    tags=("sampling",),
 )
 def sample_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
@@ -323,7 +319,6 @@ ORDER_SHARDS = 8
         "consume shards round-robin to reproduce the exact global order "
         "-- the 100 TB shape of 'shuffle the corpus', where an "
         "ORDER BY rand() global sort would be the naive scale-killer.",
-    tags=("sampling",),
 )
 def sample_shard_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
@@ -391,7 +386,6 @@ CHUNK_STRIDE = 48   # stride between chunk starts (64-48 = 16-token overlap)
         "pipelines into the scan; output size is input tokens x "
         f"{CHUNK_TOKENS / CHUNK_STRIDE:.2f} regardless of cluster "
         "shape.",
-    tags=("sampling", "packing"),
 )
 def sample_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -485,7 +479,6 @@ def _tok_bucket(tok: Column) -> Column:
         f"tables are {DSIR_BUCKETS} rows -- computed in one pass over "
         "the token stream (map-side partial aggs) and broadcast back; "
         "the scoring pass is then shuffle-free per document.",
-    tags=("sampling", "curation"),
 )
 def sample_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -564,7 +557,6 @@ QUOTA_K = 20  # docs kept per stratum
         "per-stratum ranking is window row_number, and at scale the "
         "k-smallest-per-group cut avoids any global sort (same shape as "
         "window_topk_per_group).",
-    tags=("sampling",),
 )
 def sample_stratified_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -626,7 +618,6 @@ def _cluster_split_oracle() -> str:
         "the (tiny) component labels to the per-doc split projection; "
         "tests assert ZERO leakage pairs remain over the same pair "
         "graph.",
-    tags=("sampling", "dedup"),
 )
 def sample_split_by_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .dedup import CC_JACCARD_MIN, connected_components_labels, dedup_minhash_lsh_pairs
@@ -744,7 +735,6 @@ _SQL_MIXC = f"""
         "only floats are the final rounded draw counts.  Scale: runs "
         "entirely on the per-source relation (tens of rows at any "
         "corpus size) after one keyed counting exchange.",
-    tags=("sampling", "mixture"),
 )
 def sample_epoch_capped_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .text_analysis import gopher_keep_column, gopher_metric_columns
@@ -894,7 +884,6 @@ CURRICULUM_SHARDS = 4
         "histogram of an integer length metric is a few thousand rows "
         "regardless of corpus size -- the same bounded-artifact "
         "pattern as the Z-order quantile boundaries.",
-    tags=("sampling", "curriculum"),
 )
 def sample_curriculum_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -978,7 +967,6 @@ TOKEN_BUDGET = 5000  # per language; production scales the constant
         "rank+cumsum are one window pass per stratum, and the kept set "
         "is prefix-closed by construction (law-tested): adding corpus "
         "can only displace the tail, exactly like the doc-count quota.",
-    tags=("sampling",),
 )
 def sample_token_budget_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
@@ -1079,7 +1067,6 @@ def _sql_len_bucket(n: str) -> str:
         "max and batch min sit in the same power-of-two band.  One "
         "keyed shuffle on (bucket, batch) + a bucket-count broadcast "
         "join; integer accounting, one IEEE divide per batch row.",
-    tags=("sampling",),
 )
 def sample_length_bucketed_batches(
     spark: SparkSession, sf_dir: str
@@ -1182,7 +1169,6 @@ STRAT_VAL_PCT = 90  # cumulative
         "in the same lineage; per-stratum sort is bounded by stratum "
         "size and shards further by hash prefix if a stratum is the "
         "whole corpus (the curriculum sharder's pattern).",
-    tags=("sampling", "curation"),
 )
 def sample_stratified_exact_split(
     spark: SparkSession, sf_dir: str

@@ -89,7 +89,6 @@ SQL_SESSION_ISLANDS = f"""flagged AS (
         "reuse HashPartitioning(user_id).  tests/test_invariants.py "
         "asserts Spark's native session_window() operator (the streaming-"
         "capable form) produces identical sessions.",
-    tags=("window", "sessions"),
 )
 def window_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sessionize(load_table(spark, sf_dir, "events"))
@@ -218,7 +217,6 @@ SQL_SCD2_INTERVALS = f"""obs AS (
         "as-of join against scd2 output replaces every point-in-time "
         "re-scan.  Same one-exchange shape as window_sessionize: every "
         "window/groupBy keys on user_id.",
-    tags=("window", "sessions", "scd2"),
 )
 def scd2_user_tier(spark: SparkSession, sf_dir: str) -> DataFrame:
     obs = (
@@ -298,7 +296,6 @@ def scd2_user_tier(spark: SparkSession, sf_dir: str) -> DataFrame:
         "out (inner join, documented).  Oracle composes the SHARED "
         "session-islands and SCD2-interval CTE constants, so all three "
         "oracles use one definition of each relation.",
-    tags=("join", "sessions", "scd2"),
 )
 def join_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")

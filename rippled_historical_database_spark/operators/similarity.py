@@ -130,7 +130,6 @@ def _unit_normalized(df: DataFrame, *keep: str) -> DataFrame:
         "deterministic fold dot product, row_number top-k per query. The "
         "exact baseline every ANN variant is measured against.",
     bench=True,
-    tags=("similarity", "ann"),
 )
 def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
@@ -196,7 +195,6 @@ NEAR_DUP_SCOPE = 300  # bound the all-pairs baseline
         "brute-force baseline on a bounded scope; the LSH bucket join "
         "(ann_lsh_buckets) is the scale path that replaces the all-pairs "
         "comparison.".format(tau=NEAR_DUP_TAU),
-    tags=("similarity", "dedup"),
 )
 def ann_cosine_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").filter(
@@ -294,7 +292,6 @@ def _sql_lsh_bucket() -> str:
         "(+ neighboring-bucket probes), turning O(n^2) similarity into a "
         "shuffle on the signature -- the same relational shape as an IVF "
         "index with learned centroids.",
-    tags=("similarity", "ann", "lsh"),
 )
 def ann_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
@@ -333,7 +330,6 @@ def ann_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ann_cosine_topk): exact cosine only within the query's bucket -- "
         "candidate set ~n/256 of the corpus per probe; recall tunes with "
         "bands/probes, cost stays an equi-join.",
-    tags=("similarity", "ann", "lsh"),
 )
 def ann_lsh_bucketed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
@@ -387,7 +383,6 @@ def ann_lsh_bucketed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Embedding column statistics per label: count + mean L2 norm "
         "(decimal-exact accumulation) -- the sanity profile computed "
         "before any similarity pipeline.",
-    tags=("similarity",),
 )
 def embedding_label_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
@@ -436,7 +431,6 @@ def embedding_label_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cosines differ by less than the ~1e-14 BLAS-vs-sequential-fold "
         "accumulation error would otherwise order differently across "
         "engines at the top-k boundary.",
-    tags=("similarity", "ann", "pandas-udf"),
 )
 def ann_cosine_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
@@ -545,7 +539,6 @@ _SQL_CENTROIDS = ", ".join(str(i) for i in IVF_CENTROID_IDS)
         "shuffle) written out partitioned BY cell_id; a query then "
         "touches nprobe/n_cells of the data -- partition pruning on the "
         "cell column does for vectors what date pruning does for time.",
-    tags=("similarity", "ann", "ivf"),
 )
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
@@ -729,7 +722,6 @@ def _quant_codes() -> Column:
         "(integer formatting is engine-exact) so the driver's pandas "
         "canonicalizer can sort it; embedding_quantize_codes keeps the "
         "typed ARRAY<INT> form for the serving path.",
-    tags=("similarity",),
 )
 def embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     return embedding_quantize_codes(spark, sf_dir).withColumn(
@@ -791,7 +783,6 @@ def embedding_quantize_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
         "scan reads 4x fewer bytes at the same plan shape as the exact "
         "baseline, and the approximation itself is deterministic, so the "
         "oracle checks it exactly.  Staged columns keep every fold O(dim).",
-    tags=("similarity", "ann"),
 )
 def ann_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
@@ -899,7 +890,6 @@ def ann_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "with one left join on (query, neighbor); at 100 TB the ground "
         "truth runs on a sampled query set and this exact query shape "
         "scores the index.",
-    tags=("similarity", "ann", "evaluation"),
 )
 def ann_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     gt = ann_cosine_topk(spark, sf_dir).select("query_id", "neighbor_id")
@@ -981,7 +971,6 @@ SEMANTIC_TAU = 0.35  # within-cell cosine above which vectors are near-dups
         "tiny centroid set, exactly the IVF index build.  Deterministic "
         "throughout (fold dot products, min-id tie-breaks), so the "
         "approximate method itself is oracle-checked exactly.",
-    tags=("dedup", "similarity"),
 )
 def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
@@ -1110,7 +1099,6 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         "the stats agg is one shuffle of 64 groups; the projection "
         "pass is shuffle-free (broadcast join) and pipelines into the "
         "scan.",
-    tags=("embeddings", "similarity"),
 )
 def embedding_whiten(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
@@ -1300,7 +1288,6 @@ _SQL_PQ_RANKED = _SQL_PQ_CHAIN + f""",
         "query scoring joins the broadcast LUT and reduces per "
         "(query, vector) with map-side partials -- the corpus floats "
         "are read ONCE at index build and never again.",
-    tags=("similarity", "ann", "quantization"),
 )
 def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
@@ -1460,7 +1447,6 @@ PQ_REFINE_C = 25  # ADC shortlist size handed to the exact reranker
         "equi-join against the embedding table, NOT a corpus scan; "
         "exact cosine uses the same deterministic fold as the "
         "brute-force baseline, so the rerank is engine-exact.",
-    tags=("similarity", "ann", "quantization"),
 )
 def ann_pq_refined_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
@@ -1581,7 +1567,6 @@ _SQL_IVFPQ_RANKED = _SQL_PQ_CHAIN + f""",
         "(bytes per vector) and joins only broadcast relations: probes "
         "and LUTs.  Smaller read than IVF alone (codes, not floats); "
         "fewer candidates than PQ alone (cells, not corpus).",
-    tags=("similarity", "ann", "ivf", "quantization"),
 )
 def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
@@ -1713,7 +1698,6 @@ def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ann_lsh_recall: one left join on (query, neighbor) between "
         "two registered plans; at 100 TB ground truth runs on a "
         "sampled query set and this exact shape scores the index.",
-    tags=("similarity", "ann", "evaluation"),
 )
 def ann_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     gt = ann_cosine_topk(spark, sf_dir).select("query_id", "neighbor_id")
@@ -1820,7 +1804,6 @@ def _sql_mrl_found(d: int) -> str:
         "recall harnesses and the output is queries x prefix rows.  "
         "NOTE the dim column in the oracle join keys on the found "
         "side so a prefix that misses a query still reports 0/k.",
-    tags=("similarity", "ann", "evaluation"),
 )
 def ann_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
@@ -1982,7 +1965,6 @@ def _sql_kcenter_ctes() -> str:
         "the k-means layout), each round is one shuffle-free "
         "projection + a k-row global argmax; the corpus is never "
         "pairwise-joined.",
-    tags=("sampling", "similarity", "iterative"),
 )
 def sample_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")

@@ -72,7 +72,6 @@ def _rho(w: Column) -> Column:
         "(the rho ladder renders identically in both engines); the "
         "cardinality estimate from the registers is post-processing, "
         "asserted within HLL error bounds by tests/test_invariants.py.",
-    tags=("sketch",),
 )
 def sketch_hll_registers(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
@@ -186,7 +185,6 @@ def _bloom_bit(key: Column, i: int) -> Column:
         "oracle, and n_false_pos / n_rows is the measured FP rate "
         "(~ (set_bits/m)^k).  The exact-membership column exists only "
         "to measure the filter -- production use drops it.",
-    tags=("sketch", "join"),
 )
 def sketch_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
@@ -309,7 +307,6 @@ def _cms_col(key: Column, d: int) -> Column:
         "key's 3 cells, never an underestimate (asserted in "
         "tests/test_invariants.py); grid state is <= 768 rows at any "
         "input size.",
-    tags=("sketch",),
 )
 def sketch_count_min(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
@@ -373,7 +370,6 @@ Q_MAX_BINS = 4096      # hard cap documents the bounded-state guarantee
         "frequency, histogram quantiles.  Any quantile is a "
         "driver-side cumulative walk (quantile_estimate), with error "
         "bounded by one bin width.",
-    tags=("sketch",),
 )
 def sketch_quantile_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
@@ -497,7 +493,6 @@ def _mg_token_summaries(tok: DataFrame) -> DataFrame:
         "candidate-filtered counts.  Threshold arithmetic is "
         "all-integer (ceil via (n+59) div 60), so the cut is "
         "bit-exact in both engines.",
-    tags=("sketch", "text"),
 )
 def sketch_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -561,7 +556,6 @@ SQL_HLL_GROUPED = f"""
         "(days, executors, tables), and any union of groups merges by "
         "max again -- a distinct count for every rollup level from one "
         "pass, no rescan.  State is 64 x groups rows at any input size.",
-    tags=("sketch",),
 )
 def sketch_hll_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
@@ -648,7 +642,6 @@ _SQL_HLL_SLIDING = f"""
         "ladder from sketch_hll_registers, so the whole window table "
         "is verified bit-exact; the per-day estimate remains a 64-row "
         "post-processing fold.",
-    tags=("sketch", "window"),
 )
 def sketch_hll_sliding_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
@@ -789,7 +782,6 @@ def _sql_hll_est(prefix: str) -> str:
         "small-range branch) is the same SQL text in both engines.  "
         "Accuracy vs the KMV intersection sketch is the documented "
         "tradeoff; tests assert both against the exact overlap.",
-    tags=("sketch",),
 )
 def sketch_hll_intersection(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events").filter(
@@ -1134,7 +1126,6 @@ def _mom_sums(spark: SparkSession, sf_dir: str) -> DataFrame:
         "central_moments_exact.  One map-side-combinable aggregation; "
         "the limb split is scalar per-group algebra Catalyst folds "
         "into one projection; group count = event types.",
-    tags=("sketch", "profiling"),
 )
 def sketch_central_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = _mom_int_sums(spark, sf_dir)
@@ -1156,7 +1147,6 @@ def sketch_central_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doubles, nothing else in the hash -- a red here alone pins "
         "the divergence on the float pipeline, and the exact-integer "
         "twin (sketch_central_moments_exact) is the drop-in fix.",
-    tags=("sketch", "profiling"),
 )
 def sketch_central_moments_derived(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums = _mom_sums(spark, sf_dir)
@@ -1345,7 +1335,6 @@ def _mom_exact_oracle() -> str:
         "replaces it.  Same single map-side-combinable aggregation; "
         "the step chain is scalar per-group algebra Catalyst folds "
         "into one projection.",
-    tags=("sketch", "profiling"),
 )
 def sketch_central_moments_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = _mom_int_sums(spark, sf_dir)

@@ -72,7 +72,6 @@ def _sql_hits(words: list[str]) -> str:
     doc="Token counting: whitespace tokens + a BPE-ish pre-tokenizer "
         "(letter runs / digit runs / single punctuation) via regex -- the "
         "unit-economics column of every training-data pipeline.",
-    tags=("text",),
 )
 def text_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -106,7 +105,6 @@ def text_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Quality scoring: length, punctuation ratio, stopword ratio, mean "
         "token length -- the standard heuristic pre-filters applied before "
         "expensive dedup/training stages.",
-    tags=("text",),
 )
 def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -155,7 +153,6 @@ def _sql_lang_case() -> str:
         "argmax tie-break (en > es > de > fr), 'und' when no markers -- "
         "the n-gram-heuristic family used for corpus routing; compared "
         "against the documents.lang ground-truth label.",
-    tags=("text",),
 )
 def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -227,7 +224,6 @@ def _bigrams() -> Column:
         "distinct-x-filter shape and an explode+groupBy+join shuffle "
         "for bounded-length documents (for multi-MB docs swap in the "
         "exploded variant).",
-    tags=("text",),
 )
 def text_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -310,7 +306,6 @@ SQL_ROLLING_HASH = f"""
         "fold via F.aggregate: zero shuffle, stays in the scan stage; "
         "hash_shard is the partitioning key a sharded dedup join "
         "would use.",
-    tags=("text", "dedup"),
 )
 def text_rolling_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -350,7 +345,6 @@ def text_rolling_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
         "distinct token set -> md5) + a 32-bit bucket for partitioned "
         "dedup joins -- the canonical-form hash that catches "
         "reordered/duplicated boilerplate.",
-    tags=("text", "dedup"),
 )
 def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -399,7 +393,6 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
         "sub-ulp libm ln() differences between engines.  At 100 TB the "
         "unigram table is vocabulary-sized -- broadcast it; the doc "
         "scan stays shuffle-free after the token join.",
-    tags=("text", "quality"),
 )
 def text_unigram_surprise(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -460,7 +453,6 @@ _SQL_AUG = (
         "engines).  Pure projection -- zero shuffle, pipelines into the "
         "scan stage; at 100 TB this is the map-only pass fused with "
         "whatever else reads the corpus.",
-    tags=("text",),
 )
 def text_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -629,7 +621,6 @@ def gopher_keep_column() -> Column:
         "stage like the rest of text_analysis; each ratio is one IEEE "
         "division of exact integer counts, so the boolean cuts are "
         "bit-identical in both engines.",
-    tags=("text", "pipeline"),
 )
 def text_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -686,7 +677,6 @@ _ENT_ROUND = 9
         "partials -- alphabet-bounded fanin per doc -- then a "
         "doc_id-partitioned window; everything stays keyed by doc_id, "
         "so the whole plan is ONE hash exchange and no global sort.",
-    tags=("text", "quality"),
 )
 def text_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -805,7 +795,6 @@ _SQL_JS = f"""
         "is bounded by sources x (K+1) rows with marginals as window "
         "sums in one lineage.  Per-term logs rounded at 1e-9 + the "
         "DECIMAL accumulator make it engine-exact.",
-    tags=("text", "profiling"),
 )
 def text_js_divergence_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
@@ -911,7 +900,6 @@ _LN2 = "0.6931471805599453"  # ln(2) as the exact shared double literal
         "bit-identical doubles end to end.  Two keyed aggregations "
         "((doc, word) then doc), both map-side combinable; the group "
         "rollup is vocabulary-independent.",
-    tags=("text",),
 )
 def text_word_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")

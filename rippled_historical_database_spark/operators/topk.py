@@ -44,7 +44,6 @@ from ..sources.catalog import load_table
         "volume per day; the reference reads a precomputed ranked table, "
         "here it's row_number over the daily volume rollup (and the gold "
         "job that would materialize that table is this same plan).",
-    tags=("topk",),
 )
 def top_markets_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
@@ -109,7 +108,6 @@ def top_markets_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         "day.  Scale: one shuffle on (day, currency); the rate side is "
         "days-sized so the join broadcasts; the rank window partitions "
         "by day (no global sort).",
-    tags=("topk",),
 )
 def top_currencies_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
@@ -172,7 +170,6 @@ def top_currencies_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="Global top-k (top currencies, data.js:1052-1141): aggregate then "
         "TakeOrderedAndProject -- no full sort at any scale.",
-    tags=("topk",),
 )
 def top_accounts_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
@@ -206,7 +203,6 @@ def top_accounts_global(spark: SparkSession, sf_dir: str) -> DataFrame:
         "buyer and seller perspectives -> per-account side totals, sorted "
         "by volume. The reference's double-written account tables become a "
         "union of two projections (SURVEY.md 2.7).",
-    tags=("topk", "setops"),
 )
 def active_accounts(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
@@ -248,7 +244,6 @@ def active_accounts(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Validator daily reports (topology.js:230-297): per (day, validator) "
         "total/main counts, agreement score, missed; multi-key sort "
         "(topology.js:253-258).",
-    tags=("topk", "reports"),
 )
 def validator_reports(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
@@ -282,7 +277,6 @@ def validator_reports(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Top-k per group (in-ledger tx ordering / per-pair latest trades): "
         "Window row_number <= k, the Spark-native form of the reference's "
         "per-rowkey-prefix reversed scans.",
-    tags=("topk", "window"),
 )
 def window_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
@@ -314,7 +308,6 @@ def window_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="Ledger close interval per stream (stats.js:327-331): lag() over an "
         "ordered window instead of a running-average accumulator.",
-    tags=("window",),
 )
 def window_close_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events").filter(F.col("user_id") < 3)

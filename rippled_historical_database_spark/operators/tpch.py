@@ -37,7 +37,6 @@ from ..sources.catalog import load_table
     doc="TPC-H Q1 shape: the canonical scan+8-aggregate groupBy; one "
         "shuffle over 6 groups, everything else map-side.",
     bench=True,
-    tags=("tpch", "aggregation"),
 )
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     l = load_table(spark, sf_dir, "lineitem").filter(
@@ -80,7 +79,6 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="TPC-H Q3 shape: selective broadcast dimension, fact-fact join on "
         "the bucketing key, aggregate, top-10 (TakeOrderedAndProject).",
     bench=True,
-    tags=("tpch", "join"),
 )
 def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
@@ -123,7 +121,6 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="TPC-H Q5 shape: star join with a same-nation theta condition; "
         "dimensions broadcast, facts co-partitioned on the join key.",
     bench=True,
-    tags=("tpch", "join"),
 )
 def q5_local_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer")
@@ -168,7 +165,6 @@ def q5_local_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         "the predicate-pushdown litmus test (all four conjuncts reach the "
         "parquet scan).",
     bench=True,
-    tags=("tpch", "scan"),
 )
 def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     l = load_table(spark, sf_dir, "lineitem")
@@ -197,7 +193,6 @@ def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         "aggregation/stats.js pivot reads): groupBy().pivot() with a "
         "bounded value list -- compiles to conditional aggregates, one "
         "shuffle.",
-    tags=("tpch", "pivot"),
 )
 def q_market_share_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
@@ -233,7 +228,6 @@ def q_market_share_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
         "The reference's implicit semi-join is the index-scan-then-multiget "
         "two-phase fetch (SURVEY 2.3); here Catalyst plans LeftSemi with "
         "the date filter pushed below the join.",
-    tags=("tpch", "join", "semi"),
 )
 def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").filter(
@@ -276,7 +270,6 @@ def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         "and date filters push below the fact join; the final top-20 plans "
         "as TakeOrderedAndProject, not a total sort.",
     bench=True,
-    tags=("tpch", "join", "topk"),
 )
 def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer")
@@ -314,7 +307,6 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="TPC-H Q14 shape: promotion revenue share -- broadcast part join "
         "+ conditional aggregation into a single scalar; the month filter "
         "reaches the lineitem scan.",
-    tags=("tpch", "join", "aggregation"),
 )
 def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     l = load_table(spark, sf_dir, "lineitem").filter(
@@ -351,7 +343,6 @@ def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         "any join), then broadcast the surviving keys against orders/"
         "customer; top-100 as TakeOrderedAndProject.",
     bench=True,
-    tags=("tpch", "join", "having"),
 )
 def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     l = load_table(spark, sf_dir, "lineitem")
@@ -397,7 +388,6 @@ def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         "customers with no recent orders.  Scalar subquery broadcasts a "
         "1-row threshold; NOT EXISTS decorrelates to LeftAnti with the "
         "date filter pushed into the anti-join build side.",
-    tags=("tpch", "join", "anti"),
 )
 def q22_dormant_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer")
@@ -446,7 +436,6 @@ def q22_dormant_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="TPC-H Q7 shape: bilateral nation-pair trade volume by year -- "
         "two broadcast nation joins with a disjunctive pair predicate "
         "pushed below the fact joins; grouping on (nation, nation, year).",
-    tags=("tpch", "join"),
 )
 def q7_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     l = load_table(spark, sf_dir, "lineitem").filter(
@@ -507,7 +496,6 @@ def q7_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="TPC-H Q8 shape: national market share within a region for one "
         "part class -- the deepest join tree in the suite (7 joins, all "
         "dimensions broadcast), conditional share numerator.",
-    tags=("tpch", "join"),
 )
 def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = load_table(spark, sf_dir, "part").filter(F.col("p_type") == "PROMO")
@@ -559,7 +547,6 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         "join (zero-order customers kept) with the filter in the join "
         "condition (NOT the WHERE, which would turn it inner), then a "
         "histogram of the aggregate.",
-    tags=("tpch", "join", "outer"),
 )
 def q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer")
@@ -601,7 +588,6 @@ def q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="TPC-H Q15 shape: supplier(s) with the maximum quarterly "
         "revenue -- aggregate, then a 1-row max broadcast back against "
         "the same aggregate (the 'view' of the original query).",
-    tags=("tpch", "aggregation", "subquery"),
 )
 def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     l = load_table(spark, sf_dir, "lineitem").filter(
@@ -638,7 +624,6 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="TPC-H Q17 shape: small-quantity-order revenue -- the "
         "correlated per-part average decorrelates to an aggregate join "
         "against the fact table (computed once, not per row).",
-    tags=("tpch", "join", "subquery"),
 )
 def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     l = load_table(spark, sf_dir, "lineitem")
@@ -673,7 +658,6 @@ def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         "join sides -- Catalyst extracts the common single-side "
         "conjuncts (brand/size sets, quantity range) below the join so "
         "the OR does not defeat pushdown.",
-    tags=("tpch", "join", "disjunction"),
 )
 def q19_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     l = load_table(spark, sf_dir, "lineitem")
@@ -740,7 +724,6 @@ def q19_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         "already partitioned by l_partkey, so the min-join adds no "
         "shuffle under AQE; dims (supplier+nation+region, filtered part) "
         "broadcast.",
-    tags=("tpch", "join", "subquery"),
 )
 def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     l = load_table(spark, sf_dir, "lineitem")
@@ -800,7 +783,6 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         "place of the missing ps_supplycost). Five-way join where every "
         "dimension broadcasts and only the orders join shuffles on "
         "l_orderkey; the LIKE filter prunes part before broadcast.",
-    tags=("tpch", "join", "aggregation"),
 )
 def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     l = load_table(spark, sf_dir, "lineitem")
@@ -853,7 +835,6 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "decorrelates to one extra reduce over the SAME filtered join "
         "output -- the base is computed once and reused, and the scalar "
         "threshold broadcasts into the filter.",
-    tags=("tpch", "aggregation", "subquery"),
 )
 def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     l = load_table(spark, sf_dir, "lineitem")
@@ -901,7 +882,6 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         "aggregation; the cross-side lateness predicate evaluates as a "
         "post-join filter while the single-side date range still pushes "
         "into the lineitem scan.",
-    tags=("tpch", "join", "aggregation"),
 )
 def q12_late_shipment_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
@@ -942,7 +922,6 @@ def q12_late_shipment_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         "account balance instead of the missing s_comment). NOT IN over "
         "a non-nullable key plans as a broadcast anti-join, then a "
         "distinct aggregate over the surviving pairs.",
-    tags=("tpch", "join", "aggregation", "subquery"),
 )
 def q16_supplier_part_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     l = load_table(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
@@ -992,7 +971,6 @@ def q16_supplier_part_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ps_availqty). Nested IN-subqueries decorrelate to a per-"
         "(part,supplier) aggregate, a broadcast join against the "
         "name-filtered part dim, and a semi-join into the supplier dim.",
-    tags=("tpch", "join", "subquery"),
 )
 def q20_excess_inventory_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     l = load_table(spark, sf_dir, "lineitem").filter(
@@ -1049,7 +1027,6 @@ def q20_excess_inventory_suppliers(spark: SparkSession, sf_dir: str) -> DataFram
         "lineitem is scanned ONCE instead of the textbook three times, "
         "and the rollup->reduce->join-back chain stays partitioned on "
         "l_orderkey with no extra shuffle.",
-    tags=("tpch", "join", "subquery", "aggregation"),
 )
 def q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = (

@@ -255,7 +255,6 @@ def _manifest_observations(spark: SparkSession, sf_dir: str) -> DataFrame:
         "total count.  The reference's incremental read-modify-write loop "
         "is a single groupBy here -- min/max/sum partial-aggregate and "
         "merge associatively from any partitioning.",
-    tags=("topology", "manifests"),
 )
 def manifests_by_validator(spark: SparkSession, sf_dir: str) -> DataFrame:
     obs = _manifest_observations(spark, sf_dir)
@@ -291,7 +290,6 @@ def manifests_by_validator(spark: SparkSession, sf_dir: str) -> DataFrame:
         "setActiveManifest / 118-136 revocation): the highest sequence "
         "wins; one max_by aggregation replaces the mutable "
         "ephemeral->master map the reference maintains in memory.",
-    tags=("topology", "manifests"),
 )
 def manifests_active_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     obs = _manifest_observations(spark, sf_dir)
@@ -615,7 +613,6 @@ def _raw_manifest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         "Ed25519 gate is the one stubbed hook "
         "(verify_manifest_signature, documented out-of-scope "
         "cryptography).  Shape: pure projection + one count rollup.",
-    tags=("topology", "manifests"),
 )
 def manifests_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw = _raw_manifest_stream(spark, sf_dir)
@@ -664,7 +661,6 @@ def manifests_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
         "fold).  One aggregation + HAVING -- the reference's mutable "
         "ephemeral->master map and delete path collapse into the "
         "group filter.",
-    tags=("topology", "manifests"),
 )
 def manifests_active_with_revocation(
     spark: SparkSession, sf_dir: str

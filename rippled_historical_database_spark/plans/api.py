@@ -186,15 +186,10 @@ def get_exchanges(
             else ((F.col("ts") > F.lit(m_ts)) | ((F.col("ts") == F.lit(m_ts)) & (F.col("event_id") > m_id)))
         )
         e = e.filter(after)
-    order = (
-        [F.col("ts").desc(), F.col("event_id").desc()]
-        if descending
-        else [F.col("ts"), F.col("event_id")]
-    )
     return _paginate(
         spark,
         e.select("event_id", "ts", F.col("user_id").alias("taker"), "value"),
-        order,
+        _ts_order(descending),
         limit_n,
         lambda last: encode_marker(last.ts, last.event_id),
     )
@@ -236,8 +231,7 @@ def get_account_transactions(
     sequence role in the synthetic schema.  Time params are ignored in
     that mode, exactly as the reference picks one table or the other.
     """
-    valid_types = {"purchase", "click", "view", "signup", "error"}
-    if tx_type is not None and tx_type not in valid_types:
+    if tx_type is not None and tx_type not in TX_TYPES:
         raise InvalidRequest(f"invalid type: {tx_type}")  # whitelist :8-50
     limit_n = _clamp_limit(limit, MAX_LIMIT_GENERAL)
     e = load_table(spark, sf_dir, "events").filter(F.col("user_id") == account)
@@ -250,12 +244,7 @@ def get_account_transactions(
         order = [F.col("event_id").desc()] if descending else [F.col("event_id")]
         return Page(e.orderBy(*order).limit(limit_n), None)
     e = _time_range(e, start, end)
-    order = (
-        [F.col("ts").desc(), F.col("event_id").desc()]
-        if descending
-        else [F.col("ts"), F.col("event_id")]
-    )
-    return Page(e.orderBy(*order).limit(limit_n), None)
+    return Page(_ordered(e, descending, limit_n), None)
 
 
 def get_account_transaction_by_seq(
@@ -386,13 +375,15 @@ def _time_range(df: DataFrame, start: str | None, end: str | None) -> DataFrame:
     return df
 
 
+def _ts_order(descending: bool) -> list:
+    """The (ts, event_id) order of every time-mode page."""
+    if descending:
+        return [F.col("ts").desc(), F.col("event_id").desc()]
+    return [F.col("ts"), F.col("event_id")]
+
+
 def _ordered(df: DataFrame, descending: bool, limit_n: int) -> DataFrame:
-    order = (
-        [F.col("ts").desc(), F.col("event_id").desc()]
-        if descending
-        else [F.col("ts"), F.col("event_id")]
-    )
-    return df.orderBy(*order).limit(limit_n)
+    return df.orderBy(*_ts_order(descending)).limit(limit_n)
 
 
 def get_payments(
@@ -406,16 +397,15 @@ def get_payments(
     descending: bool = False,
 ) -> Page:
     """GET /v2/payments/{currency?} (api/routes/getPayments.js): raw
-    payment list or hour/day rollup; limit cap 1000 (:108-109)."""
+    payment list or hour/day rollup; limit cap 1000 (:108-109).
+    ``currency`` is accepted as route contract; the synthetic events
+    carry no currency, so it does not narrow the rows."""
     if interval is not None and interval not in ("hour", "day"):
         raise InvalidRequest(f"invalid interval: {interval}")
     limit_n = _clamp_limit(limit, MAX_LIMIT_GENERAL)
     e = load_table(spark, sf_dir, "events").filter(
         F.col("event_type") == "purchase"
     )
-    if currency:
-        # synthetic currency = value band, keeps the filter shape
-        e = e.filter(F.col("event_type") == "purchase")
     e = _time_range(e, start, end)
     if interval:
         df = (

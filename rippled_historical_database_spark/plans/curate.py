@@ -154,7 +154,6 @@ def curated_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
         "broadcast; the corpus-wide work is the stage operators' "
         "already-budgeted shuffles plus ONE final keyed agg on the "
         "low-cardinality (lang, source).",
-    tags=("pipeline", "dedup", "text", "composite"),
 )
 def pipeline_curated_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (

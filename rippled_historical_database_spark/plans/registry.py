@@ -14,7 +14,7 @@ rows-only check -- keep those rare.
 from __future__ import annotations
 
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -28,14 +28,13 @@ class Query:
     oracle: str | None
     doc: str = ""
     bench: bool = False  # include in bench.py headline set
-    tags: tuple[str, ...] = field(default_factory=tuple)
-    # Driver-gate rotation tier: zero-evidence queries sort by
-    # (rotation_group, registration order), so queries added mid-round
-    # register with group 1 to queue BEHIND entries still awaiting
-    # their first driver row -- the gate truncates at 50.  This makes
-    # the ordering structural instead of import-order-dependent.
+    # Rotation tier of the __spark_entry__ gate: queries sort by
+    # (rotation_group, name), so queries added mid-round register with
+    # group 1 to queue BEHIND entries still awaiting their first gate
+    # row -- the gate truncates at 50.  Name order, not registration
+    # order, keeps the sort independent of which module a process
+    # happened to import first.
     rotation_group: int = 0
-    seq: int = 0  # registration sequence (insertion order)
 
 
 REGISTRY: dict[str, Query] = {}
@@ -46,7 +45,6 @@ def register(
     oracle: str | None = None,
     doc: str = "",
     bench: bool = False,
-    tags: tuple[str, ...] = (),
     rotation_group: int = 0,
 ) -> Callable[[SparkFn], SparkFn]:
     """Decorator: register a (spark, sf_dir) -> DataFrame query plan."""
@@ -56,8 +54,7 @@ def register(
             raise ValueError(f"duplicate query name {name!r}")
         REGISTRY[name] = Query(
             name=name, spark=fn, oracle=oracle, doc=doc or (fn.__doc__ or ""),
-            bench=bench, tags=tags, rotation_group=rotation_group,
-            seq=len(REGISTRY),
+            bench=bench, rotation_group=rotation_group,
         )
         return fn
 
@@ -109,13 +106,13 @@ def all_queries() -> dict[str, Query]:
         stateful_buckets,
     )
 
-    # Ordering is fully structural: (rotation_group, name).  Sorting by
-    # registration sequence was import-order-dependent -- a test that
-    # imported an operator module before the first all_queries() call
-    # shifted `seq` for everything that module registers, which made the
-    # COVERAGE.md freshness table (and any in-process tiebreak) differ
-    # between a bare interpreter and a full pytest run.  Name order is
-    # identical in every process; rotation_group still queues mid-round
-    # additions behind earlier tiers (tests/test_rotation.py).
+    # Ordering is fully structural: (rotation_group, name).  Registration
+    # order is import-order-dependent -- a test that imported an operator
+    # module before the first all_queries() call would move everything
+    # that module registers, which made the COVERAGE.md freshness table
+    # (and any in-process tiebreak) differ between a bare interpreter and
+    # a full pytest run.  Name order is identical in every process;
+    # rotation_group still queues mid-round additions behind earlier
+    # tiers (tests/test_rotation.py).
     ordered = sorted(REGISTRY.values(), key=lambda q: (q.rotation_group, q.name))
     return {q.name: q for q in ordered}

@@ -266,14 +266,39 @@ def normalize_events_ts(df: DataFrame, needs_shim: bool) -> DataFrame:
     return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
 
 
+def _read_schema(path: str, name: str) -> tuple[T.StructType, bool]:
+    """(read schema, nanos-shim needed) of table ``name`` at ``path``."""
+    if name == "events":
+        return events_read_schema(path)
+    return TABLES[name], False
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one table.  The explicit schema lets Catalyst prune columns
     and push filters without a footer-inference pass per query."""
     path = os.path.join(sf_dir, f"{name}.parquet")
-    if name == "events":
-        schema, shim = events_read_schema(path)
-        return normalize_events_ts(spark.read.schema(schema).parquet(path), shim)
-    return spark.read.schema(TABLES[name]).parquet(path)
+    schema, shim = _read_schema(path, name)
+    return normalize_events_ts(spark.read.schema(schema).parquet(path), shim)
+
+
+def stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Open one table as a file stream, with ``load_table``'s schema and
+    nanos shim.
+
+    The file streaming source lists a directory, non-recursively.  A
+    Spark-written table IS a directory of part files -- stream it as-is
+    (symlinking the directory under another dir would stream ZERO rows,
+    silently); a single-file table (the generated testdata shape) is
+    streamed from ``sf_dir`` itself, filtered to its file name, so
+    nothing is left on disk after the stream."""
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    schema, shim = _read_schema(path, name)
+    reader = spark.readStream.schema(schema)
+    if os.path.isdir(path):
+        df = reader.parquet(path)
+    else:
+        df = reader.option("pathGlobFilter", f"{name}.parquet").parquet(sf_dir)
+    return normalize_events_ts(df, shim)
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

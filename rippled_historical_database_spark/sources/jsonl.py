@@ -127,7 +127,6 @@ def jsonl_artifact(spark: SparkSession, sf_dir: str) -> str:
         "parse is the JVM scan with an enforced schema -- no "
         "inference pass over the corpus -- and files split across "
         "executors like any text input.",
-    tags=("source", "text"),
 )
 def source_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     jl_dir = jsonl_artifact(spark, sf_dir)

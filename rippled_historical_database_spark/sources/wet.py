@@ -160,7 +160,6 @@ def wet_artifact(spark: SparkSession, sf_dir: str) -> str:
         "separator -- files split across executors like any text "
         "input, the header parse is a fused projection, and no Python "
         "runs anywhere in the path.",
-    tags=("source", "text"),
 )
 def source_wet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     wet_dir = wet_artifact(spark, sf_dir)

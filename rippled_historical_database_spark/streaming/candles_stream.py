@@ -22,22 +22,15 @@ Kafka + a transactional table, nothing else changes.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.numeric import sql_dsum
 from ..plans.registry import register
-from ..sources.catalog import events_read_schema, normalize_events_ts
-from .memory_sink import run_to_memory, table_stream
+from ..sources.catalog import stream_table
+from .memory_sink import run_to_memory
 
 LATE_DATA_WATERMARK = "2 hours"  # exchanges.js:52 late-data window
-
-
-def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    schema, shim = events_read_schema(os.path.join(sf_dir, "events.parquet"))
-    return normalize_events_ts(table_stream(spark, sf_dir, "events", schema), shim)
 
 
 @register(
@@ -57,10 +50,9 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         "sink, driven to completion. Complete mode emits every window, so "
         "the streaming result equals the batch aggregation and is "
         "oracle-verified.",
-    tags=("streaming",),
 )
 def stream_candles_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = _events_stream(spark, sf_dir)
+    events = stream_table(spark, sf_dir, "events")
     agg = (
         events.withWatermark("ts", LATE_DATA_WATERMARK)
         .groupBy(
@@ -97,10 +89,9 @@ def stream_candles_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
         "within the watermark -- the declarative form of the daemon's "
         "already-seen check. File source emits each row once here; the "
         "operator guards at-least-once sources in production.",
-    tags=("streaming",),
 )
 def stream_dedup_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = _events_stream(spark, sf_dir)
+    events = stream_table(spark, sf_dir, "events")
     filtered = (
         events.filter((F.col("event_type") == "purchase") & (F.col("event_id") % 100 < 3))
         .withWatermark("ts", LATE_DATA_WATERMARK)

@@ -19,8 +19,6 @@ time if the corpus is unbounded.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -33,12 +31,8 @@ from pyspark.sql.types import (
 
 from ..operators.multimodal import SQL_PHASH_NEARDUP
 from ..plans.registry import register
-from .memory_sink import run_to_memory, table_stream
-
-
-def _documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    schema = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).schema
-    return table_stream(spark, sf_dir, "documents", schema)
+from ..sources.catalog import stream_table
+from .memory_sink import run_to_memory
 
 
 @register(
@@ -72,12 +66,11 @@ def _documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         "per distinct content (crawl re-fetches fold into a counter), "
         "keyed on the hash: the same single-shuffle shape as batch "
         "exact dedup.",
-    tags=("streaming", "dedup", "pipeline"),
 )
 def stream_document_dedup_registry(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    docs = _documents_stream(spark, sf_dir)
+    docs = stream_table(spark, sf_dir, "documents")
     kept = docs.filter(
         F.size(F.split(F.trim(F.lower(F.col("text"))), r"\s+")) >= 10
     ).select("doc_id", F.md5(F.col("text").cast("binary")).alias("content_md5"))
@@ -187,10 +180,9 @@ def phash_pair_stream(bands: DataFrame) -> DataFrame:
         "registry-as-state shape of the exact-hash dedup stream, "
         "RocksDB-backed at scale.  streamed == batch == the shared "
         "SQL_PHASH_NEARDUP oracle.",
-    tags=("streaming", "multimodal", "dedup"),
 )
 def stream_phash_registry(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _documents_stream(spark, sf_dir)
+    docs = stream_table(spark, sf_dir, "documents")
     ph = (
         F.conv(F.substring(F.md5(F.col("text").cast("binary")), 1, 15), 16, 10)
         .cast("long")

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from ..plans.registry import register
 from ..operators.sketches import N_REGISTERS, _rho
-from .candles_stream import _events_stream
+from ..sources.catalog import stream_table
 from .memory_sink import run_to_memory
 
 _SQL_DAILY_HLL = None  # assigned below to share the ladder constant
@@ -69,10 +69,9 @@ def _daily_hll_oracle() -> str:
         "bit-for-bit (same oracle as the daily CTE of "
         "sketch_hll_sliding_union; the sliding 3-day union then reads "
         "this register table, never the raw stream).",
-    tags=("streaming", "sketch"),
 )
 def stream_sketch_hll_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = _events_stream(spark, sf_dir)
+    events = stream_table(spark, sf_dir, "events")
     h = F.conv(
         F.substring(F.md5(F.col("user_id").cast("string").cast("binary")), 1, 12),
         16,

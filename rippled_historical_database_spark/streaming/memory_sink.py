@@ -14,8 +14,6 @@ call.
 stream, runs a :class:`Fold` over it with ``applyInPandasWithState``,
 drains through ``run_to_memory`` and deletes the replay files.  A twin
 supplies only its spec and its per-micro-batch ``step``.
-
-``table_stream`` opens a test table as a file stream.
 """
 
 from __future__ import annotations
@@ -93,24 +91,6 @@ def run_to_memory(
     # the Arrow form scans JVM-side instead of paying Python unpickle
     # workers per evaluation (functions/localrel.py).
     return local_df(spark, rows, schema)
-
-
-def table_stream(
-    spark: SparkSession, sf_dir: str, table: str, schema: StructType
-) -> DataFrame:
-    """Stream ``<sf_dir>/<table>.parquet`` with the given read schema.
-
-    The file streaming source lists a directory, non-recursively.  A
-    Spark-written table IS a directory of part files -- stream it as-is
-    (symlinking the directory under another dir would stream ZERO rows,
-    silently); a single-file table (the generated testdata shape) is
-    streamed from ``sf_dir`` itself, filtered to its file name, so
-    nothing is left on disk after the stream."""
-    src = os.path.join(sf_dir, f"{table}.parquet")
-    reader = spark.readStream.schema(schema)
-    if os.path.isdir(src):
-        return reader.parquet(src)
-    return reader.option("pathGlobFilter", f"{table}.parquet").parquet(sf_dir)
 
 
 class Fold:

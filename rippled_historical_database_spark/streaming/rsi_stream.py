@@ -201,7 +201,6 @@ def _update_rsi(key, rows, state):
         "operator in the repo (the earlier stateful buckets are "
         "associative).  Reference analog: the running-average "
         "accumulators of lib/aggregation/stats.js:327-331.",
-    tags=("streaming", "stateful", "window"),
 )
 def stream_rsi_wilder(spark: SparkSession, sf_dir: str) -> DataFrame:
     avgs = stateful_fold(
@@ -287,7 +286,6 @@ def _update_gaps(key, rows, state):
         "spine oracle.  State is O(pairs), the smallest possible for "
         "continuity monitoring; no watermark needed because the "
         "upstream candle stream already closes buckets in order.",
-    tags=("streaming", "stateful"),
 )
 def stream_candle_gap_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
     buckets = _hourly_closes(spark, sf_dir).select("pair", "bucket").distinct()
@@ -363,7 +361,6 @@ def _update_atr(key, rows, state):
         "recursive stateful proof after stream_rsi_wilder -- and the "
         "first whose per-row input is a STRUCT (the OHLC bar), not a "
         "scalar close.",
-    tags=("streaming", "stateful", "window"),
 )
 def stream_atr_wilder(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stateful_fold(
@@ -418,7 +415,6 @@ def _update_cusum(key, rows, state):
         "(profile_cusum_drift), so streamed == batch == the "
         "recursive-CTE oracle row-for-row.  Third recursive stateful "
         "proof; first where part of the model is trained out-of-band.",
-    tags=("streaming", "stateful", "profiling"),
 )
 def stream_cusum_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = stateful_fold(_cusum_z(spark, sf_dir), "stream_cusum_alerts", _update_cusum)
@@ -495,7 +491,6 @@ def _update_heikin_ashi(key, rows, state):
         "oracle row-for-row -- the 5th recursive stateful proof, and "
         "the only one whose output starts at the FIRST bar (no "
         "warmup window).",
-    tags=("streaming", "stateful", "aggregation"),
 )
 def stream_heikin_ashi(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stateful_fold(
@@ -604,7 +599,6 @@ def _update_ichimoku(key, rows, state):
         "row-for-row.  streamed == batch == the shared SQL_ICHIMOKU "
         "oracle; the only non-recursive stateful twin (sliding "
         "channels + displacement queues, no fold).",
-    tags=("streaming", "stateful", "window"),
 )
 def stream_ichimoku(spark: SparkSession, sf_dir: str) -> DataFrame:
     drained = stateful_fold(
@@ -697,7 +691,6 @@ def _update_bollinger(key, rows, state):
         "IEEE doubles, one HALF_UP round at 6 decimals.  streamed == "
         "batch == the shared SQL_BOLLINGER oracle row-for-row "
         "(tests/test_round11_ops.py).",
-    tags=("streaming", "stateful", "window"),
 )
 def stream_bollinger_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fround, matching window_bollinger_bands' base column and the
@@ -790,7 +783,6 @@ def _update_stochastic(key, rows, state):
         "channel pins 50), %D as the same left-associated 3-term sum "
         "over 3.  streamed == batch == the shared SQL_STOCHASTIC "
         "oracle row-for-row (tests/test_round11_ops.py).",
-    tags=("streaming", "stateful", "window"),
 )
 def stream_stochastic_oscillator(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stateful_fold(
@@ -885,7 +877,6 @@ def _update_keltner(key, rows, state):
         "from the later seed (bar 20) like the batch zip alignment.  "
         "streamed == batch == the shared SQL_KELTNER recursive-CTE "
         "oracle row-for-row (tests/test_round11_ops.py).",
-    tags=("streaming", "stateful", "window"),
 )
 def stream_keltner_channels(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stateful_fold(
@@ -979,7 +970,6 @@ def _update_macd(key, rows, state):
         "MACD_SLOW + MACD_SIG - 1 = 34) matches the batch zip "
         "alignment.  streamed == batch == the shared SQL_MACD "
         "triple-recursion oracle row-for-row.",
-    tags=("streaming", "stateful", "window"),
 )
 def stream_macd(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stateful_fold(
@@ -1038,7 +1028,6 @@ def _update_obv(key, rows, state):
         "First bar primes prev_close and emits nothing, matching the "
         "batch WHERE prev_close IS NOT NULL.  streamed == batch == "
         "the shared SQL_OBV oracle row-for-row.",
-    tags=("streaming", "stateful", "window"),
 )
 def stream_obv(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
@@ -1118,7 +1107,6 @@ def _update_rsi_cutler(key, rows, state):
         "completes the family: EVERY batch window indicator now has a "
         "streaming twin sharing its oracle.  streamed == batch == "
         "SQL_RSI_CUTLER row-for-row.",
-    tags=("streaming", "stateful", "window"),
 )
 def stream_rsi_cutler(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stateful_fold(
@@ -1177,7 +1165,6 @@ def _update_max_drawdown(key, rows, state):
         "(close/running-peak - 1 fround-ed at 9 dp, min folded "
         "exactly, one 6-dp round at emission).  streamed == batch == "
         "the shared SQL_MAX_DRAWDOWN oracle.",
-    tags=("streaming", "stateful", "window"),
 )
 def stream_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     drained = stateful_fold(
@@ -1266,7 +1253,6 @@ def _update_donchian(key, rows, state):
         "term is IEEE-exact (extrema are selections, mid one add + "
         "halve), so streamed == batch == the shared SQL_DONCHIAN "
         "oracle with no rounding discipline at all.",
-    tags=("streaming", "stateful", "window"),
 )
 def stream_donchian_channels(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stateful_fold(
@@ -1358,7 +1344,6 @@ def _update_rolling_zscore(key, rows, state):
         "exact integer sums, one IEEE divide/multiply-subtract/sqrt "
         "sequence, one 6-dp round.  streamed == batch == the shared "
         "SQL_ROLLING_ZSCORE oracle row-for-row.",
-    tags=("streaming", "stateful", "anomaly"),
 )
 def stream_rolling_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stateful_fold(
@@ -1430,7 +1415,6 @@ def _update_gap_interpolation(key, rows, state):
         "row-for-row.  The spine endpoints are real bars by "
         "construction on both forms (the batch spine spans min..max "
         "real bucket; the stream starts at the first real bar).",
-    tags=("streaming", "stateful", "window"),
 )
 def stream_gap_interpolation(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stateful_fold(
@@ -1550,7 +1534,6 @@ def _update_dollar_bars(key, rows, state):
         "float drift can move a trade across a bar edge, and volumes "
         "accumulate as exact Decimals carried through state as text.  "
         "streamed == batch == the shared SQL_DOLLAR_BARS oracle.",
-    tags=("streaming", "stateful", "aggregation"),
 )
 def stream_dollar_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     trades = _with_legs(load_table(spark, sf_dir, "events")).select(

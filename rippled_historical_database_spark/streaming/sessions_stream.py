@@ -30,7 +30,8 @@ from pyspark.sql import functions as F
 from ..functions.numeric import dsum, sql_dsum
 from ..operators.sessions import GAP_SECONDS, SQL_SESSION_ISLANDS
 from ..plans.registry import register
-from .candles_stream import LATE_DATA_WATERMARK, _events_stream
+from ..sources.catalog import stream_table
+from .candles_stream import LATE_DATA_WATERMARK
 from .memory_sink import run_to_memory
 
 
@@ -54,10 +55,9 @@ from .memory_sink import run_to_memory
         "hand-rolled per-account interval cache; the oracle is the "
         "batch gaps-and-islands construction with the native end "
         "(last event + gap).",
-    tags=("streaming", "sessions"),
 )
 def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = _events_stream(spark, sf_dir)
+    events = stream_table(spark, sf_dir, "events")
     agg = (
         events.withWatermark("ts", LATE_DATA_WATERMARK)
         .groupBy(

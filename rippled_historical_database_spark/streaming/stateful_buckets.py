@@ -52,7 +52,6 @@ from pyspark.sql.types import (
 
 from ..functions.numeric import sql_dsum
 from ..plans.registry import register
-from ..sources.catalog import TABLES
 
 OUTPUT_SCHEMA = StructType(
     [
@@ -332,7 +331,6 @@ def run_buckets_stream(
         "micro-batches; the final state per key equals the one-shot batch "
         "aggregation (decimal accumulation makes the equality exact for "
         "any batch split).",
-    tags=("streaming", "stateful"),
 )
 def stream_stateful_account_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Split the test table into several files so the stream really runs

@@ -15,17 +15,25 @@ from rippled_historical_database_spark.plans.registry import all_queries
 from rippled_historical_database_spark.session import codegen_stats
 
 
-def _pass(spark, sf_dir, queries) -> int:
-    """Build and evaluate every query into the noop sink; compiles run."""
-    before, _ = codegen_stats(spark)
+def _pass(spark, sf_dir, queries) -> dict[str, int]:
+    """Build and evaluate every query into the noop sink; returns each
+    query's compile count (compiles run during the action)."""
+    deltas = {}
     for q in queries:
+        before, _ = codegen_stats(spark)
         q.spark(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    return codegen_stats(spark)[0] - before
+        deltas[q.name] = codegen_stats(spark)[0] - before
+    return deltas
 
 
 def test_warm_pass_compiles_nothing(spark, sf_dir):
     queries = [q for q in all_queries().values() if q.bench]
     assert len(queries) == 16
-    cold = _pass(spark, sf_dir, queries)
-    warm = _pass(spark, sf_dir, queries)
-    assert warm == 0, f"warm pass recompiled {warm} classes (cold pass: {cold})"
+    cold = sum(_pass(spark, sf_dir, queries).values())
+    warm_by_query = _pass(spark, sf_dir, queries)
+    warm = sum(warm_by_query.values())
+    culprits = {name: n for name, n in warm_by_query.items() if n}
+    assert warm == 0, (
+        f"warm pass recompiled {warm} classes (cold pass: {cold}); "
+        f"per query: {culprits}"
+    )

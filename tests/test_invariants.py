@@ -874,9 +874,7 @@ def test_cdc_foreachbatch_stream_matches_batch(spark, sf_dir):
         changelog,
         merge_changelog,
     )
-    from rippled_historical_database_spark.streaming.candles_stream import (
-        _events_stream,
-    )
+    from rippled_historical_database_spark.sources.catalog import stream_table
 
     base = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("key"), F.col("c_acctbal").alias("balance")
@@ -890,7 +888,7 @@ def test_cdc_foreachbatch_stream_matches_batch(spark, sf_dir):
     apply_batch = make_cdc_apply_batch(spark, state)
 
     q = (
-        _events_stream(spark, sf_dir)
+        stream_table(spark, sf_dir, "events")
         .writeStream.outputMode("append")
         .foreachBatch(apply_batch)
         .start()

@@ -9,7 +9,7 @@ Laws pinned here:
   * a twin run leaves no replay files behind (the harness and the
     key-heavy account-bucket twin delete their temp trees after the
     drain, and a twin streaming a single-file table through
-    ``table_stream`` makes none);
+    ``catalog.stream_table`` makes none);
   * a twin's state partition count is on the session's conf only
     around ``start()``, not during the drain;
   * bench.py records a failed ETL build instead of dropping it.
