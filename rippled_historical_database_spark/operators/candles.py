@@ -17,10 +17,14 @@ the counter leg is derived per-row as ``value * (1 + user_id/100)``
 
 Spark shape: one ``groupBy(pair, date_trunc(interval))`` per level --
 a single shuffle keyed on (pair, bucket); open/close are ``min_by`` /
-``max_by`` with a struct sort key, so no per-group sort or window pass
-is needed.  Coarser intervals re-reduce the 1-hour gold table
+``max_by`` on the packed DECIMAL sort-key scalar (``catalog.sort_key``;
+a struct key would force SortAggregate), so no per-group sort or window
+pass is needed.  Coarser intervals re-reduce the 1-hour gold table
 (associativity verified against the raw-data oracle), which at 100 TB
-means each rollup reads candle rows, not the trade log.
+means each rollup reads candle rows, not the trade log.  The indicator
+family reads its bars from the same device: :func:`bars` is the one
+bar builder, and every indicator window runs on its pair-partitioned
+series, never on the trade stream.
 """
 
 from __future__ import annotations
@@ -31,7 +35,7 @@ from pyspark.sql import functions as F
 from ..functions.numeric import dsum, sql_dsum
 from ..functions.timeutils import anchored_bucket, sql_anchored_bucket
 from ..plans.registry import register
-from ..sources.catalog import load_table
+from ..sources.catalog import load_table, sort_key
 
 # Dust filter: the reference drops XRP legs below 0.0005 before candling
 # (data.js:1609-1620, aggregation/exchanges.js:523-531).
@@ -48,27 +52,13 @@ def _with_legs(e: DataFrame) -> DataFrame:
     )
 
 
-def _sort_key() -> Column:
-    # (executed_time, ledger_index, tx_index, node_index) analog:
-    # event_id is globally unique -> deterministic open/close tie-break.
-    # Packed into one DECIMAL(38,0) scalar (micros * 1e8 + event_id,
-    # lexicographically equal to ordering by (ts, event_id)): a struct
-    # ordering key forces SortAggregate, a fixed-width scalar keeps the
-    # aggregation hash-based -- O(n) instead of a per-partition sort,
-    # which is the difference that matters at 100 TB.
-    return (
-        F.unix_micros(F.col("ts")).cast("decimal(38,0)") * 100_000_000
-        + F.col("event_id")
-    )
-
-
 def _candle_aggs(final: bool) -> list[Column]:
     """The OHLC aggregate set over rows with base/counter legs.
 
     ``final=False`` keeps volumes in DECIMAL for exact re-reduction at the
     next rollup level; ``final=True`` casts to DOUBLE for output.
     """
-    key = _sort_key()
+    key = sort_key()
     vol = F.sum(F.col("value").cast("decimal(38,6)"))
     cvol = F.sum(F.col("counter_value").cast("decimal(38,6)"))
     aggs = [
@@ -206,7 +196,7 @@ def agg_candles_3day_anchored(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def agg_candles_reduce_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
-    key = _sort_key()
+    key = sort_key()
     in_range = (F.col("ts") >= F.lit("2024-01-05 00:00:00")) & (
         F.col("ts") < F.lit("2024-01-12 00:00:00")
     )
@@ -273,7 +263,7 @@ def agg_candles_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_trunc("day", "ts").alias("d"),
         F.date_trunc("week", "ts").alias("w"),
     )
-    key = _sort_key()
+    key = sort_key()
     vol = F.sum(F.col("value").cast("decimal(38,6)"))
     cvol = F.sum(F.col("counter_value").cast("decimal(38,6)"))
     interval = (
@@ -313,7 +303,8 @@ def agg_candles_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
 # today (the API serves candles; drawdown/volatility are the first
 # things a market dashboard derives from them).  Both run on the
 # CANDLE-sized series (pairs x hours), never the raw trade stream:
-# one arg-max close per bucket, then per-pair windows over the series.
+# one bar aggregate (:func:`bars`), then per-pair windows over the
+# series.
 DD_ROUND = 9
 
 
@@ -351,20 +342,26 @@ _SQL_HOURLY_CLOSES = """closes AS (
     )"""
 
 
-def _hourly_closes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window
-
-    e = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy(
-        "event_type", F.date_trunc("hour", "ts")
-    ).orderBy(F.col("ts").desc(), F.col("event_id").desc())
+def bars(spark: SparkSession, sf_dir: str, unit: str = "hour") -> DataFrame:
+    """The indicator family's bar relation: one row per (pair, bucket)
+    over EVERY trade (no dust filter) with open/high/low/close and the
+    trade count as ``volume``.  One hash aggregate -- open/close are
+    ``min_by``/``max_by`` on the packed sort key, so there is no
+    per-bucket sort or window over the trade stream; callers ``select``
+    the columns they read and the optimizer prunes the rest."""
+    key = sort_key()
     return (
-        e.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
+        load_table(spark, sf_dir, "events")
+        .groupBy(
             F.col("event_type").alias("pair"),
-            F.date_trunc("hour", "ts").alias("bucket"),
-            F.col("value").alias("close"),
+            F.date_trunc(unit, "ts").alias("bucket"),
+        )
+        .agg(
+            F.min_by("value", key).alias("open"),
+            F.max("value").alias("high"),
+            F.min("value").alias("low"),
+            F.max_by("value", key).alias("close"),
+            F.count("*").alias("volume"),
         )
     )
 
@@ -396,15 +393,15 @@ SQL_MAX_DRAWDOWN = f"""
         "peak-to-trough loss metric).  The running peak is a window "
         "max over the CANDLE-sized series (pairs x hours), so the "
         "expensive relation is the same bounded gold table the candle "
-        "rollups emit -- the raw trade stream is touched once for the "
-        "per-bucket arg-max close and never again; at scale the series "
+        "rollups emit -- the raw trade stream is touched once by the "
+        "bar hash aggregate and never again; at scale the series "
         "windows read gold_1m rollups directly.  Per-row division is "
         "one IEEE op rounded at 1e-9; the min/count fold is exact.",
 )
 def window_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    closes = _hourly_closes(spark, sf_dir)
+    closes = bars(spark, sf_dir).select("pair", "bucket", "close")
     w_peak = (
         Window.partitionBy("pair")
         .orderBy("bucket")
@@ -453,7 +450,7 @@ def window_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
         "the series, and the sums go through the DECIMAL accumulator "
         "so the result is partition-order independent (Spark's "
         "stddev_pop is not).  Same scale shape as the drawdown: one "
-        "arg-max per bucket on the trade stream, then all windows and "
+        "bar aggregate on the trade stream, then all windows and "
         "sums on the candle-sized series.  sqrt(GREATEST(.., 0)) "
         "guards the tiny negative from rounding when a pair's returns "
         "are constant.",
@@ -461,7 +458,7 @@ def window_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
 def agg_log_return_volatility(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    closes = _hourly_closes(spark, sf_dir)
+    closes = bars(spark, sf_dir).select("pair", "bucket", "close")
     w_lag = Window.partitionBy("pair").orderBy("bucket")
     rets = closes.select(
         "pair",
@@ -539,7 +536,7 @@ SQL_BOLLINGER = f"""
 def window_bollinger_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    closes = _hourly_closes(spark, sf_dir)
+    closes = bars(spark, sf_dir).select("pair", "bucket", "close")
     base = closes.select(
         "pair", "bucket", fround("close").alias("c")
     )
@@ -627,7 +624,7 @@ SQL_RSI_CUTLER = f"""
 def window_rsi_cutler(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    closes = _hourly_closes(spark, sf_dir)
+    closes = bars(spark, sf_dir).select("pair", "bucket", "close")
     w_lag = Window.partitionBy("pair").orderBy("bucket")
     deltas = closes.select(
         "pair",
@@ -832,7 +829,8 @@ SQL_WILDER_RSI = (
         "running-average shape, lib/aggregation/stats.js:327-331.",
 )
 def window_rsi_wilder(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return rsi_from_avgs(wilder_avgs_from_closes(_hourly_closes(spark, sf_dir)))
+    closes = bars(spark, sf_dir).select("pair", "bucket", "close")
+    return rsi_from_avgs(wilder_avgs_from_closes(closes))
 
 
 # ------------------------------- MACD (the generic EWMA family)
@@ -985,7 +983,7 @@ SQL_MACD = (
         "stats.js:327-331 generalized to exponential weights.",
 )
 def window_macd(spark: SparkSession, sf_dir: str) -> DataFrame:
-    closes = _hourly_closes(spark, sf_dir)
+    closes = bars(spark, sf_dir).select("pair", "bucket", "close")
     series = closes.groupBy("pair").agg(
         F.array_sort(
             F.collect_list(F.struct("bucket", "close"))
@@ -1153,22 +1151,18 @@ SQL_OBV = f"""
         "the EMA family this is a pure prefix sum -- a frame the "
         "engine already has -- and every term is an exact BIGINT, so "
         "the result is bit-deterministic with NO rounding policy "
-        "needed anywhere.  One (pair, bucket) aggregation for volumes, "
-        "the arg-max close join, one partitioned cumulative window; "
-        "candle-sized cost like the rest of the family.",
+        "needed anywhere.  One (pair, bucket) bar aggregate carries "
+        "both the close and the trade count, then a lag and one "
+        "partitioned cumulative window; candle-sized cost like the "
+        "rest of the family.",
 )
 def window_obv(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    e = load_table(spark, sf_dir, "events")
-    hourly = e.groupBy(
-        F.col("event_type").alias("pair"),
-        F.date_trunc("hour", "ts").alias("bucket"),
-    ).agg(F.count("*").cast("bigint").alias("volume"))
-    closes = _hourly_closes(spark, sf_dir)
     w_lag = Window.partitionBy("pair").orderBy("bucket")
     joined = (
-        closes.join(hourly, ["pair", "bucket"])
+        bars(spark, sf_dir)
+        .select("pair", "bucket", "close", "volume")
         .withColumn("prev_close", F.lag("close").over(w_lag))
         .filter(F.col("prev_close").isNotNull())
     )
@@ -1189,10 +1183,10 @@ def window_obv(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------- ATR + stochastic (OHLC indicators)
 
-# Hourly OHLC bars from the trade stream: one grouped pass for
-# high/low, the established arg-max pattern for the close.  Both
-# indicators below read this candle-sized relation, never the raw
-# stream twice.
+# The oracle's hourly OHLC bars (and _SQL_HOURLY_CLOSES/_OHLC4): the
+# independent window form -- per-(pair, hour) extrema windows plus a
+# ROW_NUMBER pick of the close -- checked against the engine's single
+# hash aggregate (:func:`bars`).
 _SQL_HOURLY_OHLC = """ohlc AS (
         SELECT pair, bucket, high, low, close FROM (
             SELECT event_type AS pair,
@@ -1207,26 +1201,6 @@ _SQL_HOURLY_OHLC = """ohlc AS (
             WINDOW w AS (PARTITION BY event_type, DATE_TRUNC('hour', ts))
         ) WHERE rn = 1
     )"""
-
-
-def _hourly_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window
-
-    e = load_table(spark, sf_dir, "events")
-    w_grp = Window.partitionBy("event_type", F.date_trunc("hour", "ts"))
-    w_rn = w_grp.orderBy(F.col("ts").desc(), F.col("event_id").desc())
-    return (
-        e.select(
-            F.col("event_type").alias("pair"),
-            F.date_trunc("hour", "ts").alias("bucket"),
-            F.max("value").over(w_grp).alias("high"),
-            F.min("value").over(w_grp).alias("low"),
-            F.col("value").alias("close"),
-            F.row_number().over(w_rn).alias("rn"),
-        )
-        .filter(F.col("rn") == 1)
-        .drop("rn")
-    )
 
 
 ATR_N = 14
@@ -1282,8 +1256,8 @@ SQL_ATR = (
         "swaps the step's float form, nothing else), so the whole EWMA "
         "indicator family -- RSI, MACD, ATR -- shares ONE JVM-side "
         "recursion.  Per-pair fold over the calendar-bounded series; "
-        "the raw stream is touched once for the OHLC arg-max/extrema "
-        "pass.  Output is the fold value itself (a 9-dp decimal), "
+        "the raw stream is touched once by the OHLC bar aggregate.  "
+        "Output is the fold value itself (a 9-dp decimal), "
         "not re-rounded to 6 dp, which can land on true decimal ties "
         "where the engines' rounding diverges (see the stochastic "
         "oscillator's note).  Oracle: linear recursive CTE with materialized "
@@ -1293,7 +1267,7 @@ SQL_ATR = (
 def window_atr_wilder(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    ohlc = _hourly_ohlc(spark, sf_dir)
+    ohlc = bars(spark, sf_dir).select("pair", "bucket", "high", "low", "close")
     w_lag = Window.partitionBy("pair").orderBy("bucket")
     trs = ohlc.select(
         "pair",
@@ -1386,7 +1360,7 @@ SQL_STOCHASTIC = f"""
 def window_stochastic_oscillator(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    ohlc = _hourly_ohlc(spark, sf_dir)
+    ohlc = bars(spark, sf_dir).select("pair", "bucket", "high", "low", "close")
     w_chan = (
         Window.partitionBy("pair")
         .orderBy("bucket")
@@ -1512,10 +1486,10 @@ SQL_KELTNER = (
 def window_keltner_channels(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    ohlc = _hourly_ohlc(spark, sf_dir)
+    ohlc = bars(spark, sf_dir).select("pair", "bucket", "high", "low", "close")
     w_lag = Window.partitionBy("pair").orderBy("bucket")
     pc = F.lag("close").over(w_lag)
-    bars = ohlc.select(
+    tp_tr = ohlc.select(
         "pair",
         "bucket",
         fround(
@@ -1531,7 +1505,7 @@ def window_keltner_channels(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("tr"),
     )
-    series = bars.groupBy("pair").agg(
+    series = tp_tr.groupBy("pair").agg(
         F.array_sort(
             F.collect_list(F.struct("bucket", "tp", "tr"))
         ).alias("series")
@@ -1615,7 +1589,7 @@ SQL_DONCHIAN = (
 def window_donchian_channels(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    ohlc = _hourly_ohlc(spark, sf_dir)
+    ohlc = bars(spark, sf_dir).select("pair", "bucket", "high", "low", "close")
     w = (
         Window.partitionBy("pair")
         .orderBy("bucket")
@@ -1782,8 +1756,8 @@ def agg_dollar_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     # r14 optimization (guide sections 2.3/2.4): open/close via
-    # min_by/max_by on the packed (ts, event_id) sort-key scalar --
-    # the same device as the candle flagship (_sort_key) -- instead of
+    # min_by/max_by on the packed (ts, event_id) sort-key scalar
+    # (catalog.sort_key, the candle flagship's device) -- instead of
     # two row_number windows over (pair, bar_id).  The old shape paid
     # an exchange of EVERY trade row plus two full per-partition sorts
     # (asc + desc) before a sort-free aggregation could run; a plain
@@ -1793,7 +1767,7 @@ def agg_dollar_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     # globally unique packed key selects exactly the rn_a = 1 row
     # (max_by the rn_d = 1 row); volumes were already associative
     # decimal sums, so results are bit-identical.
-    key = _sort_key()
+    key = sort_key()
     return (
         cum.groupBy("pair", "bar_id")
         .agg(
@@ -1877,7 +1851,7 @@ SQL_GAP_INTERPOLATION = f"""
 def window_gap_interpolation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    closes = _hourly_closes(spark, sf_dir)
+    closes = bars(spark, sf_dir).select("pair", "bucket", "close")
     rng = closes.groupBy("pair").agg(
         F.min("bucket").alias("mn"), F.max("bucket").alias("mx")
     )
@@ -1980,7 +1954,7 @@ def window_gap_interpolation(spark: SparkSession, sf_dir: str) -> DataFrame:
 def agg_return_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    closes = _hourly_closes(spark, sf_dir)
+    closes = bars(spark, sf_dir).select("pair", "bucket", "close")
     w_lag = Window.partitionBy("pair").orderBy("bucket")
     rets = closes.select(
         "pair",
@@ -2090,7 +2064,7 @@ ACF_MAX_LAG = 5
 def profile_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    closes = _hourly_closes(spark, sf_dir)
+    closes = bars(spark, sf_dir).select("pair", "bucket", "close")
     w_lag = Window.partitionBy("pair").orderBy("bucket")
     rets = closes.select(
         "pair",
@@ -2179,30 +2153,19 @@ def profile_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
         "price-impact-per-unit-volume measure (how many basis points "
         "one more trade moves the pair), the standard liquidity "
         "screen before trusting a pair's candles for rate "
-        "computation.  Daily bars come from the established per-day "
-        "arg-max (close) + window count (volume) in one pass over the "
-        "trade stream; per-day ratios are rounded at 12 dp (the "
-        "first-rounding policy) and averaged through the DECIMAL "
+        "computation.  Daily bars come from the family's bar builder "
+        "at unit='day' -- one hash aggregate over the trade stream "
+        "carrying the close (max_by on the packed sort key) and the "
+        "trade count (volume); per-day ratios are rounded at 12 dp "
+        "(the first-rounding policy) and averaged through the DECIMAL "
         "accumulator so the mean is partition-order exact.  One "
-        "corpus shuffle (the day window), then day-sized relations.",
+        "corpus shuffle (the bar aggregate), then day-sized relations.",
 )
 def agg_amihud_illiquidity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    e = load_table(spark, sf_dir, "events")
-    day = F.date_trunc("day", "ts")
-    w_grp = Window.partitionBy("event_type", day)
-    w_rn = w_grp.orderBy(F.col("ts").desc(), F.col("event_id").desc())
-    daily = (
-        e.select(
-            F.col("event_type").alias("pair"),
-            day.alias("bucket"),
-            F.col("value").alias("close"),
-            F.count("*").over(w_grp).cast("bigint").alias("volume"),
-            F.row_number().over(w_rn).alias("rn"),
-        )
-        .filter(F.col("rn") == 1)
-        .drop("rn")
+    daily = bars(spark, sf_dir, "day").select(
+        "pair", "bucket", "close", "volume"
     )
     w_lag = Window.partitionBy("pair").orderBy("bucket")
     rets = daily.select(
@@ -2256,29 +2219,6 @@ _SQL_HOURLY_OHLC4 = """ohlc4 AS MATERIALIZED (
             WINDOW w AS (PARTITION BY event_type, DATE_TRUNC('hour', ts))
         ) WHERE rn = 1
     )"""
-
-
-def _hourly_ohlc4(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window
-
-    e = load_table(spark, sf_dir, "events")
-    w_grp = Window.partitionBy("event_type", F.date_trunc("hour", "ts"))
-    w_open = w_grp.orderBy(F.col("ts").asc(), F.col("event_id").asc()) \
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    w_rn = w_grp.orderBy(F.col("ts").desc(), F.col("event_id").desc())
-    return (
-        e.select(
-            F.col("event_type").alias("pair"),
-            F.date_trunc("hour", "ts").alias("bucket"),
-            F.first("value").over(w_open).alias("open"),
-            F.max("value").over(w_grp).alias("high"),
-            F.min("value").over(w_grp).alias("low"),
-            F.col("value").alias("close"),
-            F.row_number().over(w_rn).alias("rn"),
-        )
-        .filter(F.col("rn") == 1)
-        .drop("rn")
-    )
 
 
 _HA_SEED = f"(FLOOR(((x.open + x.close) / 2e0) * 1000000000e0 + 0.5) / 1000000000e0)"
@@ -2343,14 +2283,16 @@ SQL_HEIKIN_ASHI = f"""
         "HA values.  Every step divides by 2 or 4 -- exact exponent "
         "shifts in IEEE -- so the 9-dp per-step round leaves zero tie "
         "exposure and the fold equals the DuckDB recursive CTE "
-        "bit-for-bit.  The raw stream is touched ONCE for the "
-        "open/high/low/close window pass.  Reference analog: the "
+        "bit-for-bit.  The raw stream is touched ONCE, by the "
+        "open/high/low/close bar aggregate.  Reference analog: the "
         "candle reduce of lib/aggregation/exchanges.js:515-582 (this "
         "is the same bar relation, transformed).",
 )
 def agg_candles_heikin_ashi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ohlc = _hourly_ohlc4(spark, sf_dir)
-    bars = ohlc.select(
+    ohlc = bars(spark, sf_dir).select(
+        "pair", "bucket", "open", "high", "low", "close"
+    )
+    with_hc = ohlc.select(
         "pair",
         "bucket",
         "open",
@@ -2360,7 +2302,7 @@ def agg_candles_heikin_ashi(spark: SparkSession, sf_dir: str) -> DataFrame:
         fround((F.col("open") + F.col("high") + F.col("low") + F.col("close"))
             / F.lit(4.0)).alias("hc"),
     )
-    series = bars.groupBy("pair").agg(
+    series = with_hc.groupBy("pair").agg(
         F.array_sort(
             F.collect_list(
                 F.struct("bucket", "open", "close", "high", "low", "hc")
@@ -2437,7 +2379,7 @@ SQL_ICHIMOKU = f"""
 def window_ichimoku(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    ohlc = _hourly_ohlc(spark, sf_dir)
+    ohlc = bars(spark, sf_dir).select("pair", "bucket", "high", "low", "close")
     w_ord = Window.partitionBy("pair").orderBy("bucket")
 
     def mid(n: int):

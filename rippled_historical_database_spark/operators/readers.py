@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 
 from ..functions.numeric import dsum
 from ..plans.registry import register
-from ..sources.catalog import load_table
+from ..sources.catalog import load_table, sort_key
 
 # The reference's "live" metric periods (data.js:860-871), minus the
 # sub-hour ones that are degenerate on the synthetic 30-day stream.
@@ -113,15 +113,8 @@ def read_live_rolling_metric(spark: SparkSession, sf_dir: str) -> DataFrame:
 def read_latest_fresh_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
     anchor = e.agg(F.max("ts").alias("m"))
-    # packed scalar key (not a struct): struct ordering forces
-    # SortAggregate; the scalar keeps the aggregation hash-based
-    # (same construction as operators/candles.py _sort_key)
-    key = (
-        F.unix_micros(F.col("ts")).cast("decimal(38,0)") * 100_000_000
-        + F.col("event_id")
-    )
     latest = e.groupBy(F.col("event_type").alias("pair")).agg(
-        F.max_by(F.col("value"), key).alias("rate"),
+        F.max_by(F.col("value"), sort_key()).alias("rate"),
         F.max("ts").alias("rate_time"),
     )
     return latest.join(F.broadcast(anchor)).filter(

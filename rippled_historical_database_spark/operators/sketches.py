@@ -845,28 +845,22 @@ def sketch_hll_intersection(spark: SparkSession, sf_dir: str) -> DataFrame:
 # from ANY partitioning (executor, day, table), the same mergeability
 # contract as the HLL/CMS/histogram family.
 #
-# ROUND-14 BISECTION: this family's driver row has been red for three
-# rounds (r11-r13) while every sandbox-side strict compare of the same
-# query on the same parquet stayed green, and the r13 judge measured
-# every derived cell >= 23k ulps from its 6-dp rounding boundary --
-# so the divergence is categorically NOT a float-rounding flip.  The
-# only instrument that sees the driver's environment is the registry
-# itself, so the query is split into three single-surface probes:
+# Three entries, one surface each, so a driver-side hash mismatch names
+# the surface it lives on (the round-14 bisection that way localized
+# the r11-r13 driver red to DECIMAL hashing; fixed in round 15, below):
 #
-#   sketch_central_moments          -- ONLY the exact surface:
-#       event_type, n, s1..s4 (DECIMAL(38,2..8) sums; zero doubles
-#       anywhere in the hash).  Red here => the divergence is in the
-#       driver's decimal hashing/normalization or the data path.
-#   sketch_central_moments_derived  -- ONLY the float surface:
-#       event_type + the four derived doubles (floor/fraction split,
-#       fixed correctly-rounded IEEE sequence, fround at 6 dp).
-#       Red here alone => the float pipeline, despite the ulp evidence.
-#   sketch_central_moments_exact    -- ZERO floats, ZERO decimals:
-#       the same four statistics as half-up 6-dp-scaled BIGINTs
-#       derived from the sums entirely in integer arithmetic
+#   sketch_central_moments          -- the exact, mergeable surface:
+#       event_type, n and each scaled integer power sum S1..S4 as a
+#       base-10^18 BIGINT limb pair (s{k}_hi, s{k}_lo); no decimal and
+#       no double reaches the hash.
+#   sketch_central_moments_derived  -- the float surface: event_type +
+#       the four derived doubles (floor/fraction split of the decimal
+#       sums, fixed correctly-rounded IEEE sequence, fround at 6 dp).
+#   sketch_central_moments_exact    -- zero floats, zero decimals: the
+#       same four statistics as half-up 6-dp-scaled BIGINTs derived
+#       from the integer sums entirely in integer arithmetic
 #       (sql_fdivh_steps); skewness decomposed into (sign, skew²),
-#       both rational in the quantized moments.  Red here too =>
-#       structural (data path / driver build), not numeric.
+#       both rational in the quantized moments.
 #
 # Bit-exactness design of the decimal sums (round-12 rewrite):
 #  * events.value is an exact 2-dp quantity, so every per-row power is

@@ -48,7 +48,7 @@ from ..functions.caching import memoize_local
 from ..functions.localrel import local_df
 from ..functions.numeric import dsum
 from ..functions.timeutils import anchored_bucket
-from ..sources.catalog import counterparty, data_version, load_table
+from ..sources.catalog import counterparty, data_version, load_table, sort_key
 
 # The reference's 12 public candle intervals (data.js:16-29).
 INTERVALS: dict[str, tuple[str, int]] = {
@@ -140,10 +140,7 @@ def get_exchanges(
     e = _time_range(e, start, end)
 
     if reduce:
-        key = (
-            F.unix_micros(F.col("ts")).cast("decimal(38,0)") * 100_000_000
-            + F.col("event_id")
-        )
+        key = sort_key()
         df = e.groupBy(F.col("event_type").alias("pair")).agg(
             F.min_by("value", key).alias("open"),
             F.max("value").alias("high"),

@@ -140,6 +140,21 @@ def counterparty() -> Column:
     return (F.col("user_id") + F.col("event_id") % 7 + 1) % 15
 
 
+def sort_key() -> Column:
+    """An event's position in the trade order: the (executed_time,
+    ledger_index, tx_index, node_index) analog is (ts, event_id), and
+    event_id is globally unique, so open/close/latest picks are
+    deterministic.  Packed into one DECIMAL(38,0) scalar (micros * 1e8 +
+    event_id, which orders exactly like (ts, event_id)): a struct
+    ordering key forces SortAggregate, a fixed-width scalar keeps
+    ``min_by``/``max_by`` hash-aggregable -- O(n) instead of a
+    per-partition sort."""
+    return (
+        F.unix_micros(F.col("ts")).cast("decimal(38,0)") * 100_000_000
+        + F.col("event_id")
+    )
+
+
 DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 
 

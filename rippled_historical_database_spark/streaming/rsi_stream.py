@@ -91,10 +91,8 @@ from ..operators.candles import (
     SQL_WILDER_RSI,
     STOCH_D,
     STOCH_N,
-    _hourly_closes,
-    _hourly_ohlc,
-    _hourly_ohlc4,
     _with_legs,
+    bars,
     fround,
     rsi_from_avgs,
 )
@@ -203,9 +201,8 @@ def _update_rsi(key, rows, state):
         "accumulators of lib/aggregation/stats.js:327-331.",
 )
 def stream_rsi_wilder(spark: SparkSession, sf_dir: str) -> DataFrame:
-    avgs = stateful_fold(
-        _hourly_closes(spark, sf_dir), "stream_rsi_wilder", _update_rsi
-    )
+    closes = bars(spark, sf_dir).select("pair", "bucket", "close")
+    avgs = stateful_fold(closes, "stream_rsi_wilder", _update_rsi)
     return rsi_from_avgs(avgs)
 
 
@@ -288,7 +285,7 @@ def _update_gaps(key, rows, state):
         "upstream candle stream already closes buckets in order.",
 )
 def stream_candle_gap_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    buckets = _hourly_closes(spark, sf_dir).select("pair", "bucket").distinct()
+    buckets = bars(spark, sf_dir).select("pair", "bucket")
     return stateful_fold(buckets, "stream_gap_alerts", _update_gaps).orderBy(
         "pair", "gap_start"
     )
@@ -363,9 +360,10 @@ def _update_atr(key, rows, state):
         "scalar close.",
 )
 def stream_atr_wilder(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return stateful_fold(
-        _hourly_ohlc(spark, sf_dir), "stream_atr_wilder", _update_atr
-    ).orderBy("pair", "bucket")
+    ohlc = bars(spark, sf_dir).select("pair", "bucket", "high", "low", "close")
+    return stateful_fold(ohlc, "stream_atr_wilder", _update_atr).orderBy(
+        "pair", "bucket"
+    )
 
 
 # ------------------------------------------ streaming CUSUM monitoring
@@ -493,8 +491,11 @@ def _update_heikin_ashi(key, rows, state):
         "warmup window).",
 )
 def stream_heikin_ashi(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ohlc = bars(spark, sf_dir).select(
+        "pair", "bucket", "open", "high", "low", "close"
+    )
     return stateful_fold(
-        _hourly_ohlc4(spark, sf_dir), "stream_heikin_ashi", _update_heikin_ashi
+        ohlc, "stream_heikin_ashi", _update_heikin_ashi
     ).orderBy("pair", "bucket")
 
 
@@ -601,9 +602,8 @@ def _update_ichimoku(key, rows, state):
         "channels + displacement queues, no fold).",
 )
 def stream_ichimoku(spark: SparkSession, sf_dir: str) -> DataFrame:
-    drained = stateful_fold(
-        _hourly_ohlc(spark, sf_dir), "stream_ichimoku", _update_ichimoku
-    )
+    ohlc = bars(spark, sf_dir).select("pair", "bucket", "high", "low", "close")
+    drained = stateful_fold(ohlc, "stream_ichimoku", _update_ichimoku)
     w = Window.partitionBy("pair").orderBy("bucket")
     return (
         drained.withColumn("chikou", F.lead("close", ICHI_K).over(w))
@@ -696,7 +696,7 @@ def stream_bollinger_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fround, matching window_bollinger_bands' base column and the
     # shared SQL_BOLLINGER oracle text exactly (the F.round it replaced
     # was invisible on 2-dp closes but a latent half-grid divergence).
-    base = _hourly_closes(spark, sf_dir).select(
+    base = bars(spark, sf_dir).select(
         "pair", "bucket", fround("close").alias("c")
     )
     return stateful_fold(
@@ -785,9 +785,9 @@ def _update_stochastic(key, rows, state):
         "oracle row-for-row (tests/test_round11_ops.py).",
 )
 def stream_stochastic_oscillator(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ohlc = bars(spark, sf_dir).select("pair", "bucket", "high", "low", "close")
     return stateful_fold(
-        _hourly_ohlc(spark, sf_dir), "stream_stochastic_oscillator",
-        _update_stochastic,
+        ohlc, "stream_stochastic_oscillator", _update_stochastic
     ).orderBy("pair", "bucket")
 
 
@@ -879,8 +879,9 @@ def _update_keltner(key, rows, state):
         "oracle row-for-row (tests/test_round11_ops.py).",
 )
 def stream_keltner_channels(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ohlc = bars(spark, sf_dir).select("pair", "bucket", "high", "low", "close")
     return stateful_fold(
-        _hourly_ohlc(spark, sf_dir), "stream_keltner_channels", _update_keltner
+        ohlc, "stream_keltner_channels", _update_keltner
     ).orderBy("pair", "bucket")
 
 
@@ -972,9 +973,10 @@ def _update_macd(key, rows, state):
         "triple-recursion oracle row-for-row.",
 )
 def stream_macd(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return stateful_fold(
-        _hourly_closes(spark, sf_dir), "stream_macd", _update_macd
-    ).orderBy("pair", "bucket")
+    closes = bars(spark, sf_dir).select("pair", "bucket", "close")
+    return stateful_fold(closes, "stream_macd", _update_macd).orderBy(
+        "pair", "bucket"
+    )
 
 
 # --------------------------------------------- streaming OBV (exact)
@@ -1030,13 +1032,8 @@ def _update_obv(key, rows, state):
         "the shared SQL_OBV oracle row-for-row.",
 )
 def stream_obv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = load_table(spark, sf_dir, "events")
-    hourly = e.groupBy(
-        F.col("event_type").alias("pair"),
-        F.date_trunc("hour", "ts").alias("bucket"),
-    ).agg(F.count("*").cast("bigint").alias("volume"))
-    bars = _hourly_closes(spark, sf_dir).join(hourly, ["pair", "bucket"])
-    return stateful_fold(bars, "stream_obv", _update_obv).orderBy(
+    hourly = bars(spark, sf_dir).select("pair", "bucket", "close", "volume")
+    return stateful_fold(hourly, "stream_obv", _update_obv).orderBy(
         "pair", "bucket"
     )
 
@@ -1109,8 +1106,9 @@ def _update_rsi_cutler(key, rows, state):
         "SQL_RSI_CUTLER row-for-row.",
 )
 def stream_rsi_cutler(spark: SparkSession, sf_dir: str) -> DataFrame:
+    closes = bars(spark, sf_dir).select("pair", "bucket", "close")
     return stateful_fold(
-        _hourly_closes(spark, sf_dir), "stream_rsi_cutler", _update_rsi_cutler
+        closes, "stream_rsi_cutler", _update_rsi_cutler
     ).orderBy("pair", "bucket")
 
 
@@ -1167,9 +1165,8 @@ def _update_max_drawdown(key, rows, state):
         "the shared SQL_MAX_DRAWDOWN oracle.",
 )
 def stream_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
-    drained = stateful_fold(
-        _hourly_closes(spark, sf_dir), "stream_max_drawdown", _update_max_drawdown
-    )
+    closes = bars(spark, sf_dir).select("pair", "bucket", "close")
+    drained = stateful_fold(closes, "stream_max_drawdown", _update_max_drawdown)
     # each pair's last revision == the final aggregate
     return (
         drained.groupBy("pair")
@@ -1255,8 +1252,9 @@ def _update_donchian(key, rows, state):
         "oracle with no rounding discipline at all.",
 )
 def stream_donchian_channels(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ohlc = bars(spark, sf_dir).select("pair", "bucket", "high", "low", "close")
     return stateful_fold(
-        _hourly_ohlc(spark, sf_dir), "stream_donchian_channels", _update_donchian
+        ohlc, "stream_donchian_channels", _update_donchian
     ).orderBy("pair", "bucket")
 
 
@@ -1417,9 +1415,9 @@ def _update_gap_interpolation(key, rows, state):
         "real bucket; the stream starts at the first real bar).",
 )
 def stream_gap_interpolation(spark: SparkSession, sf_dir: str) -> DataFrame:
+    closes = bars(spark, sf_dir).select("pair", "bucket", "close")
     return stateful_fold(
-        _hourly_closes(spark, sf_dir), "stream_gap_interpolation",
-        _update_gap_interpolation,
+        closes, "stream_gap_interpolation", _update_gap_interpolation
     ).orderBy("pair", "bucket")
 
 

@@ -945,3 +945,59 @@ def test_pq_codebook_is_literal_relation(spark, sf_dir):
     plan = _plan(spark, sf_dir, "ann_pq_adc_topk")
     assert "LocalTableScan" in plan or "Scan ExistingRDD" in plan, plan[:2000]
     assert "Generate" not in plan, "codebook explode back in the plan"
+
+
+# The batch candle-family queries: each reads its bars from
+# operators/candles.bars, one hash aggregate over the trade stream.
+CANDLE_FAMILY = (
+    "window_max_drawdown",
+    "agg_log_return_volatility",
+    "window_bollinger_bands",
+    "window_rsi_cutler",
+    "window_rsi_wilder",
+    "window_macd",
+    "window_obv",
+    "window_gap_interpolation",
+    "agg_return_correlation",
+    "profile_autocorrelation",
+    "window_atr_wilder",
+    "window_stochastic_oscillator",
+    "window_keltner_channels",
+    "window_donchian_channels",
+    "window_ichimoku",
+    "agg_candles_heikin_ashi",
+    "agg_amihud_illiquidity",
+)
+
+
+def _plan_nodes(node):
+    """Every node of a physical plan; an AdaptiveSparkPlan is a leaf
+    whose tree hangs off its input plan."""
+    yield node
+    if node.nodeName() == "AdaptiveSparkPlan":
+        yield from _plan_nodes(node.inputPlan())
+    children = node.children()
+    for i in range(children.size()):
+        yield from _plan_nodes(children.apply(i))
+
+
+def test_candle_family_windows_run_on_bars_not_trades(spark, sf_dir):
+    """The bars come from one hash aggregate: no window is partitioned
+    on the raw trade column event_type (every window runs on the
+    pair-partitioned bar series), no aggregate falls back to
+    SortAggregate, and window_obv takes close and volume from ONE scan
+    of events."""
+    for name in CANDLE_FAMILY:
+        df = QUERIES[name].spark(spark, sf_dir)
+        nodes = list(_plan_nodes(df._jdf.queryExecution().executedPlan()))
+        partitions = [
+            n.partitionSpec().mkString(", ")
+            for n in nodes
+            if n.nodeName() == "Window"
+        ]
+        trade_windows = [p for p in partitions if "event_type#" in p]
+        assert not trade_windows, f"{name}: windows on {trade_windows}"
+        assert not any(n.nodeName() == "SortAggregate" for n in nodes), name
+        if name == "window_obv":
+            scans = [n for n in nodes if n.nodeName().startswith("Scan parquet")]
+            assert len(scans) == 1, [n.nodeName() for n in scans]

@@ -638,13 +638,15 @@ def test_gap_interpolation_laws(spark, sf_dir):
     inside its neighbors' value interval (linear interpolation cannot
     overshoot)."""
     from rippled_historical_database_spark.operators.candles import (
-        _hourly_closes,
+        bars,
         window_gap_interpolation,
     )
 
     real = {
         (r.pair, r.bucket): r.close
-        for r in _hourly_closes(spark, sf_dir).collect()
+        for r in bars(spark, sf_dir)
+        .select("pair", "bucket", "close")
+        .collect()
     }
     rows = window_gap_interpolation(spark, sf_dir).collect()
     assert rows

@@ -44,10 +44,15 @@ def _python_macd(closes, fast=12, slow=26, sig=9):
 
 def test_macd_matches_python_recursion(spark, sf_dir, qs):
     from rippled_historical_database_spark.operators.candles import (
-        _hourly_closes,
+        bars,
     )
 
-    closes = _hourly_closes(spark, sf_dir).orderBy("pair", "bucket").collect()
+    closes = (
+        bars(spark, sf_dir)
+        .select("pair", "bucket", "close")
+        .orderBy("pair", "bucket")
+        .collect()
+    )
     by_pair: dict[str, list[float]] = {}
     for row in closes:
         by_pair.setdefault(row["pair"], []).append(float(row["close"]))
@@ -67,12 +72,16 @@ def test_macd_emission_offset(spark, sf_dir, qs):
     from rippled_historical_database_spark.operators.candles import (
         MACD_SIG,
         MACD_SLOW,
-        _hourly_closes,
+        bars,
     )
 
     n_closes = {
         r["pair"]: r["count"]
-        for r in _hourly_closes(spark, sf_dir).groupBy("pair").count().collect()
+        for r in bars(spark, sf_dir)
+        .select("pair", "bucket", "close")
+        .groupBy("pair")
+        .count()
+        .collect()
     }
     got = qs["window_macd"].spark(spark, sf_dir).groupBy("pair").count().collect()
     for row in got:
@@ -275,13 +284,15 @@ def test_stream_gaps_equal_batch_gaps(spark, sf_dir, qs):
 
 def test_obv_matches_python(spark, sf_dir, qs):
     from rippled_historical_database_spark.operators.candles import (
-        _hourly_closes,
+        bars,
     )
     from rippled_historical_database_spark.sources.catalog import load_table
 
     closes = {
         (r["pair"], r["bucket"]): r["close"]
-        for r in _hourly_closes(spark, sf_dir).collect()
+        for r in bars(spark, sf_dir)
+        .select("pair", "bucket", "close")
+        .collect()
     }
     vols = {
         (r["event_type"], r["bucket"]): r["count"]
@@ -345,10 +356,15 @@ def _python_atr(bars, n=14):
 
 
 def _ohlc_bars(spark, sf_dir):
-    from rippled_historical_database_spark.operators.candles import _hourly_ohlc
+    from rippled_historical_database_spark.operators.candles import bars
 
     by_pair: dict[str, list] = {}
-    for r in _hourly_ohlc(spark, sf_dir).orderBy("pair", "bucket").collect():
+    for r in (
+        bars(spark, sf_dir)
+        .select("pair", "bucket", "high", "low", "close")
+        .orderBy("pair", "bucket")
+        .collect()
+    ):
         by_pair.setdefault(r["pair"], []).append(
             (r["bucket"], float(r["high"]), float(r["low"]), float(r["close"]))
         )
@@ -553,11 +569,16 @@ def test_return_correlation_matches_python(spark, sf_dir, qs):
     import math
 
     from rippled_historical_database_spark.operators.candles import (
-        _hourly_closes,
+        bars,
     )
 
     closes: dict[str, list] = {}
-    for r in _hourly_closes(spark, sf_dir).orderBy("pair", "bucket").collect():
+    for r in (
+        bars(spark, sf_dir)
+        .select("pair", "bucket", "close")
+        .orderBy("pair", "bucket")
+        .collect()
+    ):
         closes.setdefault(r["pair"], []).append((r["bucket"], float(r["close"])))
     rets: dict[str, dict] = {}
     for pair, series in closes.items():
@@ -685,11 +706,16 @@ def test_autocorrelation_matches_python(spark, sf_dir, qs):
 
     from rippled_historical_database_spark.operators.candles import (
         ACF_MAX_LAG,
-        _hourly_closes,
+        bars,
     )
 
     closes: dict[str, list] = {}
-    for r in _hourly_closes(spark, sf_dir).orderBy("pair", "bucket").collect():
+    for r in (
+        bars(spark, sf_dir)
+        .select("pair", "bucket", "close")
+        .orderBy("pair", "bucket")
+        .collect()
+    ):
         closes.setdefault(r["pair"], []).append(float(r["close"]))
     got = {
         (r["pair"], r["lag"]): (r["n_obs"], r["acf"])

@@ -39,14 +39,15 @@ def _python_heikin_ashi(bars):
 
 def test_heikin_ashi_matches_python_recursion(spark, sf_dir, qs):
     from rippled_historical_database_spark.operators.candles import (
-        _hourly_ohlc4,
+        bars as hourly_bars,
     )
 
     got = qs["agg_candles_heikin_ashi"].spark(spark, sf_dir).collect()
     pair = got[0]["pair"]
     bars = [
         (r["open"], r["high"], r["low"], r["close"])
-        for r in _hourly_ohlc4(spark, sf_dir)
+        for r in hourly_bars(spark, sf_dir)
+        .select("pair", "bucket", "open", "high", "low", "close")
         .filter(F.col("pair") == pair)
         .orderBy("bucket")
         .collect()
@@ -83,12 +84,13 @@ def test_ichimoku_channel_containment(spark, sf_dir, qs):
     envelope; tenkan reacts at least as fast as kijun (9-bar channel is
     a subset of the 26-bar one, so tenkan's channel is narrower)."""
     from rippled_historical_database_spark.operators.candles import (
-        _hourly_ohlc,
+        bars,
     )
 
     env = {
         r["pair"]: (r["lo"], r["hi"])
-        for r in _hourly_ohlc(spark, sf_dir)
+        for r in bars(spark, sf_dir)
+        .select("pair", "bucket", "high", "low", "close")
         .groupBy("pair")
         .agg(F.min("low").alias("lo"), F.max("high").alias("hi"))
         .collect()

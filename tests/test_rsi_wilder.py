@@ -21,7 +21,7 @@ import pytest
 from rippled_historical_database_spark.operators.candles import (
     DD_ROUND,
     RSI_N,
-    _hourly_closes,
+    bars,
     rsi_from_avgs,
     wilder_avgs_from_closes,
 )
@@ -56,13 +56,20 @@ def _python_wilder(closes: list[float]) -> list[float]:
 
 
 def test_batch_matches_python_recursion(spark, sf_dir):
-    closes = _hourly_closes(spark, sf_dir).orderBy("pair", "bucket").collect()
+    closes = (
+        bars(spark, sf_dir)
+        .select("pair", "bucket", "close")
+        .orderBy("pair", "bucket")
+        .collect()
+    )
     by_pair: dict[str, list[float]] = {}
     for row in closes:
         by_pair.setdefault(row["pair"], []).append(float(row["close"]))
 
     got = (
-        rsi_from_avgs(wilder_avgs_from_closes(_hourly_closes(spark, sf_dir)))
+        rsi_from_avgs(wilder_avgs_from_closes(
+            bars(spark, sf_dir).select("pair", "bucket", "close")
+        ))
         .orderBy("pair", "bucket")
         .collect()
     )
@@ -91,7 +98,7 @@ def test_streamed_equals_batch(spark, sf_dir):
 
 
 def test_emission_starts_after_seed(spark, sf_dir):
-    closes = _hourly_closes(spark, sf_dir)
+    closes = bars(spark, sf_dir).select("pair", "bucket", "close")
     n_buckets = {
         r["pair"]: r["n"]
         for r in closes.groupBy("pair").count().withColumnRenamed("count", "n").collect()
@@ -128,7 +135,9 @@ def test_monotonic_down_pins_0(spark):
 
 def test_batch_plan_shape(spark, sf_dir):
     plan = (
-        rsi_from_avgs(wilder_avgs_from_closes(_hourly_closes(spark, sf_dir)))
+        rsi_from_avgs(wilder_avgs_from_closes(
+            bars(spark, sf_dir).select("pair", "bucket", "close")
+        ))
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -160,14 +169,18 @@ def test_stream_atr_emission_count(spark, sf_dir):
     """One ATR row per bar from the ATR_N-th onward, per pair."""
     from rippled_historical_database_spark.operators.candles import (
         ATR_N,
-        _hourly_ohlc,
+        bars,
     )
     from rippled_historical_database_spark.plans.registry import all_queries
 
     qs = all_queries()
     n_bars = {
         r["pair"]: r["count"]
-        for r in _hourly_ohlc(spark, sf_dir).groupBy("pair").count().collect()
+        for r in bars(spark, sf_dir)
+        .select("pair", "bucket", "high", "low", "close")
+        .groupBy("pair")
+        .count()
+        .collect()
     }
     got = (
         qs["stream_atr_wilder"].spark(spark, sf_dir)
