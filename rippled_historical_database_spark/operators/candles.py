@@ -1835,52 +1835,37 @@ SQL_GAP_INTERPOLATION = f"""
     "window_gap_interpolation",
     rotation_group=11,
     oracle=SQL_GAP_INTERPOLATION,
-    doc="Gap repair for the hourly close series: the full per-pair hour "
-        "spine (min..max bucket) left-joins the real bars, and every "
-        "missing hour gets the time-weighted linear interpolation of "
-        "its nearest real neighbors -- the series-repair step indicator "
-        "pipelines run before fixed-window math (agg_candle_gaps only "
-        "DETECTS the holes; this closes them).  Spine endpoints are "
-        "real bars, so every missing hour has both neighbors.  Both "
-        "fills fuse into one Window over one keyed exchange (the as-of "
-        "union-tag shape); the weight is an exact integer hour ratio "
-        "and the interpolation a fixed IEEE sequence rounded once at "
-        f"{DD_ROUND} dp.  Scale: the spine is pairs x hours (candle-"
-        "sized), the explode is bounded per pair, no global sort.",
+    doc="Gap repair for the hourly close series: each real bar emits "
+        "the hours missing since the previous real bar of its pair, "
+        "then itself, so the series spans every hour from the pair's "
+        "first to its last bar; a missing hour gets the time-weighted "
+        "linear interpolation of its two real neighbors -- the series-"
+        "repair step indicator pipelines run before fixed-window math "
+        "(agg_candle_gaps only DETECTS the holes; this closes them).  "
+        "The neighbors come from one lag Window over the bars (the "
+        "stream twin's repair-on-close shape); the weight is an exact "
+        "integer hour ratio and the interpolation a fixed IEEE sequence "
+        f"rounded once at {DD_ROUND} dp.  Scale: the output is pairs x "
+        "hours (candle-sized), the explode is bounded per gap.",
 )
 def window_gap_interpolation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    closes = bars(spark, sf_dir).select("pair", "bucket", "close")
-    rng = closes.groupBy("pair").agg(
-        F.min("bucket").alias("mn"), F.max("bucket").alias("mx")
-    )
-    spine = rng.select(
+    by_pair = Window.partitionBy("pair").orderBy("bucket")
+    one_hour = F.expr("INTERVAL 1 HOUR")
+    # (pt, pv) is the previous real bar, (nt, nv) this one.
+    steps = bars(spark, sf_dir).select(
         "pair",
+        F.lag("bucket").over(by_pair).alias("pt"),
+        F.lag("close").over(by_pair).alias("pv"),
+        F.col("bucket").alias("nt"),
+        F.col("close").alias("nv"),
+    )
+    filled = steps.select(
+        "*",
         F.explode(
-            F.sequence("mn", "mx", F.expr("INTERVAL 1 HOUR"))
+            F.sequence(F.coalesce(F.col("pt") + one_hour, "nt"), "nt", one_hour)
         ).alias("bucket"),
-    )
-    j = spine.join(closes, ["pair", "bucket"], "left")
-    wb = (
-        Window.partitionBy("pair")
-        .orderBy("bucket")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    wf = (
-        Window.partitionBy("pair")
-        .orderBy("bucket")
-        .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    )
-    real_bucket = F.when(F.col("close").isNotNull(), F.col("bucket"))
-    filled = j.select(
-        "pair",
-        "bucket",
-        "close",
-        F.last("close", ignorenulls=True).over(wb).alias("pv"),
-        F.last(real_bucket, ignorenulls=True).over(wb).alias("pt"),
-        F.first("close", ignorenulls=True).over(wf).alias("nv"),
-        F.first(real_bucket, ignorenulls=True).over(wf).alias("nt"),
     )
     hours = lambda a, b: (  # noqa: E731 -- exact integer hour distance
         (F.unix_seconds(b) - F.unix_seconds(a)) / F.lit(3600)
@@ -1889,13 +1874,12 @@ def window_gap_interpolation(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("pt"), F.col("nt")
     )
     interp = fround(F.col("pv") + (F.col("nv") - F.col("pv")) * w)
+    real = F.col("bucket") == F.col("nt")
     return filled.select(
         "pair",
         "bucket",
-        F.when(F.col("close").isNotNull(), F.col("close"))
-        .otherwise(interp)
-        .alias("close"),
-        F.col("close").isNull().alias("is_interpolated"),
+        F.when(real, F.col("nv")).otherwise(interp).alias("close"),
+        (~real).alias("is_interpolated"),
     ).orderBy("pair", "bucket")
 
 

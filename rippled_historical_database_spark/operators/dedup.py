@@ -24,10 +24,9 @@ from ..functions.caching import scoped_persist, truncate_lineage
 from ..functions.numeric import fround
 from ..plans.registry import register
 from ..sources.catalog import load_table
+from .text_analysis import SQL_TOKENS, _tokens
 
-# ---------------------------------------------------------------- tokens
-
-SQL_TOKENS = r"regexp_split_to_array(trim(lower(text)), '\s+')"
+# ---------------------------------------------------------------- shingles
 
 # Word 3-gram shingles (guarded for short docs; identical CASE both engines).
 SQL_SHINGLES = f"""
@@ -60,10 +59,6 @@ SQL_DS = r"""ds AS (
                            AS toks
                   FROM documents))
     )"""
-
-
-def _tokens() -> Column:
-    return F.split(F.trim(F.lower(F.col("text"))), r"\s+")
 
 
 def _shingles_over(t: Column) -> Column:
@@ -1674,15 +1669,13 @@ def dedup_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
 # band-space lesson applied preemptively).
 BOUNDARY_K = 3
 
-from .text_analysis import SQL_TOKENS as _SQL_TOKS  # noqa: E402
-
 
 @register(
     "dedup_boundary_overlap",
     rotation_group=8,
     oracle=f"""
     WITH toks AS (
-        SELECT doc_id, {_SQL_TOKS} AS t FROM documents
+        SELECT doc_id, {SQL_TOKENS} AS t FROM documents
     ),
     keys AS (
         SELECT doc_id,

@@ -356,17 +356,30 @@ def agg_fee_stats_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
            COUNT(*) AS count
     FROM events GROUP BY event_type
     """,
-    doc="Skew-resistant salted rollup (functions/skew.py): shard hot keys "
+    doc="Skew-resistant salted rollup: shard hot keys "
         "into 16 salted sub-keys, partial-aggregate per shard, re-aggregate "
         "per key. Decimal accumulation makes the two-stage plan bit-equal "
         "to the single-stage oracle -- salting is a pure physical rewrite "
         "for the 100 TB hot-key case (the XRP leg of every pair).",
 )
 def agg_salted_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.skew import salted_rollup
-
-    e = load_table(spark, sf_dir, "events")
-    return salted_rollup(e, ["event_type"], "value", n_salts=16, salt_source="event_id")
+    # AQE's skew handling covers joins, not aggregations.  The salt is
+    # hashed from data columns, so a retry or re-run lands each row in
+    # the same shard.
+    salt = F.pmod(F.xxhash64(F.col("event_id"), F.col("value")), F.lit(16))
+    partial = (
+        load_table(spark, sf_dir, "events")
+        .withColumn("__salt", salt)
+        .groupBy("event_type", "__salt")
+        .agg(
+            F.sum(F.col("value").cast("decimal(38,6)")).alias("__psum"),
+            F.count("*").alias("__pcnt"),
+        )
+    )
+    return partial.groupBy("event_type").agg(
+        F.sum("__psum").cast("double").alias("total"),
+        F.sum("__pcnt").alias("count"),
+    )
 
 
 @register(

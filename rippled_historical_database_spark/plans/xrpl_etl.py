@@ -1384,7 +1384,7 @@ def asof_balances_via_snapshot(
         .collect()[0]
     )
     if d_row["d"] is None:  # as-of precedes all stored history
-        return spark.createDataFrame([], out_schema)
+        return local_df(spark, [], out_schema)
     asof_date = d_row["d"]
 
     snaps = spark.read.parquet(
@@ -1587,8 +1587,8 @@ def asof_open_offers_via_snapshot(
             .collect()[0]
         )
         if d_row["d"] is None:  # as-of precedes all stored history
-            return spark.createDataFrame(
-                [], ("owner string, " if account is None else "")
+            return local_df(
+                spark, [], ("owner string, " if account is None else "")
                 + _ORDERS_SCHEMA
             )
         asof_date = d_row["d"]

@@ -1411,8 +1411,8 @@ def _update_gap_interpolation(key, rows, state):
         "then itself.  Emission order per pair is the series order, so "
         "streamed == batch == the shared SQL_GAP_INTERPOLATION oracle "
         "row-for-row.  The spine endpoints are real bars by "
-        "construction on both forms (the batch spine spans min..max "
-        "real bucket; the stream starts at the first real bar).",
+        "construction on both forms (each starts at the pair's first "
+        "real bar and ends at its last).",
 )
 def stream_gap_interpolation(spark: SparkSession, sf_dir: str) -> DataFrame:
     closes = bars(spark, sf_dir).select("pair", "bucket", "close")

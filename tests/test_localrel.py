@@ -1,15 +1,17 @@
-"""Round-15 local-relation helper (functions/localrel.py): driver-side
-rows re-enter as an Arrow-backed local relation that evaluates in the
-JVM, instead of a pickled-row RDD that launches Python unpickle workers
-on EVERY evaluation (each broadcast build, each action).  Values and
-schema are identical to ``spark.createDataFrame``; only the evaluation
-path changes."""
+"""Local-relation helper (functions/localrel.py): driver-side rows
+re-enter as an Arrow-backed local relation that evaluates in the JVM,
+instead of a pickled-row RDD that launches Python unpickle workers on
+EVERY evaluation (each broadcast build, each action).  Values and schema
+are identical to ``spark.createDataFrame``; rows that do not fit the
+schema raise."""
 
 from __future__ import annotations
 
 import datetime
 import decimal
 
+import pyarrow as pa
+import pytest
 from pyspark.sql.types import (
     ArrayType,
     DoubleType,
@@ -19,7 +21,6 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from rippled_historical_database_spark.functions import localrel
 from rippled_historical_database_spark.functions.localrel import local_df
 
 
@@ -39,7 +40,9 @@ def test_small_relation_is_a_local_table_scan(spark):
 def test_values_match_create_dataframe_exactly(spark):
     """Bit-identical round-trip vs the pickle path across the value
     shapes the converted call sites use: ints with None, doubles,
-    strings, array<double> with None, timestamps, decimals."""
+    strings, array<double> with None, timestamps, decimals, and the
+    nested and binary shapes a collected row can carry: structs, maps,
+    arrays of structs, binary and dates."""
     sch = StructType(
         [
             StructField("m", IntegerType(), True),
@@ -55,11 +58,18 @@ def test_values_match_create_dataframe_exactly(spark):
     src = spark.sql(
         "SELECT TIMESTAMP'2015-01-01 12:34:56.789' AS ts, "
         "CAST(1.23 AS DECIMAL(20,6)) AS d, ARRAY(1, 2) AS a, "
-        "CAST(NULL AS STRING) AS s"
+        "CAST(NULL AS STRING) AS s, "
+        "named_struct('x', 1.5D, 'y', CAST(NULL AS STRING)) AS st, "
+        "map('k', 2L, 'j', CAST(NULL AS BIGINT)) AS mp, "
+        "array(named_struct('x', -0.5D)) AS arr_st, "
+        "CAST('ab' AS BINARY) AS b, DATE'2015-01-02' AS dt"
     )
     collected, schema = src.collect(), src.schema
-    out = local_df(spark, collected, schema).collect()
+    df = local_df(spark, collected, schema)
+    assert df.schema == schema
+    out = df.collect()
     assert out == collected
+    assert out == spark.createDataFrame(collected, schema).collect()
     assert out[0]["ts"] == datetime.datetime(2015, 1, 1, 12, 34, 56, 789000)
     assert out[0]["d"] == decimal.Decimal("1.230000")
 
@@ -99,7 +109,6 @@ def test_empty_rows_plan_an_empty_local_table_scan(spark):
             StructField("m", MapType(StringType(), LongType()), True),
         ]
     )
-    before = localrel.fallback_count()
     df = local_df(spark, [], sch)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "LocalTableScan <empty>" in plan, plan
@@ -107,40 +116,31 @@ def test_empty_rows_plan_an_empty_local_table_scan(spark):
     assert df.collect() == []
     ddl = local_df(spark, [], "idx int, s string")
     assert "LocalTableScan <empty>" in ddl._jdf.queryExecution().executedPlan().toString()
-    assert localrel.fallback_count() == before
+    assert ddl.schema.simpleString() == "struct<idx:int,s:string>"
 
 
-def _fallback_case(spark, reason, rows, schema):
-    before = {r: localrel.fallback_count(r) for r in localrel.FALLBACK_REASONS}
-    out = local_df(spark, rows, schema).collect()
-    assert out == spark.createDataFrame(rows, schema).collect()
-    after = {r: localrel.fallback_count(r) for r in localrel.FALLBACK_REASONS}
-    assert after == {r: before[r] + (r == reason) for r in before}
-    return out
+def test_atomic_schema_raises(spark):
+    """A schema that is not a struct (an atomic DDL type) has no fields
+    to build columns from: it raises."""
+    with pytest.raises(TypeError, match="struct schema"):
+        local_df(spark, [1, 2, 3], "int")
 
 
-def test_schema_fallback_is_counted(spark):
-    """A schema that is not a struct (an atomic DDL type) has no field
-    names to build columns from: the pickled path runs, and is counted."""
-    out = _fallback_case(spark, "schema", [1, 2, 3], "int")
-    assert [r.value for r in out] == [1, 2, 3]
-
-
-def test_row_length_fallback_is_counted(spark):
+def test_row_length_mismatch_raises(spark):
     """Rows whose length differs from the schema's (dict rows carrying
-    an extra key) take the pickled path, which matches by field name."""
+    an extra key) raise."""
     rows = [{"a": 1, "b": "x", "extra": 0}, {"a": 2, "b": None, "extra": 1}]
-    out = _fallback_case(spark, "row_length", rows, "a int, b string")
-    assert [(r.a, r.b) for r in out] == [(1, "x"), (2, None)]
+    with pytest.raises(ValueError, match="2 fields"):
+        local_df(spark, rows, "a int, b string")
 
 
-def test_arrow_error_fallback_is_counted(spark, monkeypatch):
-    """An Arrow conversion error is caught by local_df itself (not by
-    createDataFrame's silent internal fallback) and counted."""
+def test_arrow_conversion_error_raises(spark, monkeypatch):
+    """An Arrow conversion error reaches the caller: no pickled-row
+    relation is built in its place."""
 
     def fail(*args, **kwargs):
-        raise ValueError("forced Arrow conversion error")
+        raise pa.ArrowInvalid("forced Arrow conversion error")
 
-    monkeypatch.setattr(type(spark), "_create_from_pandas_with_arrow", fail)
-    out = _fallback_case(spark, "arrow", [(1, 0.5), (2, None)], "a int, b double")
-    assert [tuple(r) for r in out] == [(1, 0.5), (2, None)]
+    monkeypatch.setattr(pa, "array", fail)
+    with pytest.raises(pa.ArrowInvalid, match="forced"):
+        local_df(spark, [(1, 0.5), (2, None)], "a int, b double")

@@ -985,8 +985,9 @@ def test_candle_family_windows_run_on_bars_not_trades(spark, sf_dir):
     """The bars come from one hash aggregate: no window is partitioned
     on the raw trade column event_type (every window runs on the
     pair-partitioned bar series), no aggregate falls back to
-    SortAggregate, and window_obv takes close and volume from ONE scan
-    of events."""
+    SortAggregate, and window_obv (close and volume) and
+    window_gap_interpolation (the hour spine and its closes) each read
+    their bars from ONE scan of events."""
     for name in CANDLE_FAMILY:
         df = QUERIES[name].spark(spark, sf_dir)
         nodes = list(_plan_nodes(df._jdf.queryExecution().executedPlan()))
@@ -998,6 +999,6 @@ def test_candle_family_windows_run_on_bars_not_trades(spark, sf_dir):
         trade_windows = [p for p in partitions if "event_type#" in p]
         assert not trade_windows, f"{name}: windows on {trade_windows}"
         assert not any(n.nodeName() == "SortAggregate" for n in nodes), name
-        if name == "window_obv":
+        if name in ("window_obv", "window_gap_interpolation"):
             scans = [n for n in nodes if n.nodeName().startswith("Scan parquet")]
-            assert len(scans) == 1, [n.nodeName() for n in scans]
+            assert len(scans) == 1, (name, [n.nodeName() for n in scans])

@@ -37,6 +37,7 @@ def main(argv: list[str]) -> None:
     # this harness; crossing a dispatch threshold raises loudly instead
     # of silently mismatching (functions/dispatch.py).
     os.environ["SPARK_GRAFT_ORACLE_VERIFY"] = "1"
+    from rippled_historical_database_spark.functions.localrel import local_df
     from rippled_historical_database_spark.plans.registry import all_queries
     from rippled_historical_database_spark.session import get_spark
     from tests.oracle import compare, duckdb_connection
@@ -69,7 +70,7 @@ def main(argv: list[str]) -> None:
             # the row as an oracle TIMEOUT.  The local snapshot makes
             # compare()'s internal collect a no-op re-serialization.
             live = q.spark(spark, sf1x)
-            snap = spark.createDataFrame(live.collect(), live.schema)
+            snap = local_df(spark, live.collect(), live.schema)
             spark_s = time.time() - t0
             timer.start()
             t0 = time.time()
