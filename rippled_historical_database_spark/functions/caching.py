@@ -76,7 +76,7 @@ def scoped_persist(df: DataFrame) -> DataFrame:
     return df
 
 
-def truncate_lineage(df: DataFrame, eager: bool = False) -> DataFrame:
+def truncate_lineage(df: DataFrame) -> DataFrame:
     """Materialize ``df`` and replace its plan with a scan of the
     blocks (the iterative-algorithm lineage discipline).
 
@@ -94,8 +94,8 @@ def truncate_lineage(df: DataFrame, eager: bool = False) -> DataFrame:
     """
     sc = df.sparkSession.sparkContext
     if sc._jsc.sc().getCheckpointDir().isDefined():
-        return df.checkpoint(eager=eager)
-    return df.localCheckpoint(eager=eager)
+        return df.checkpoint(eager=False)
+    return df.localCheckpoint(eager=False)
 
 
 def tracked_count() -> int:

@@ -12,224 +12,135 @@ unbounded relation -- the defect class the round-9 verdict flagged on
 The exact two-pass scheme (zipWithIndex's), with the partition id
 replaced by a DATA-DERIVED bucket:
 
-1. Sample the leading order column once at plan-construction time
-   (hash-gated filter + bounded collect, like ``zorder_scale_key``'s
-   train-once approx-quantile boundaries) and embed the ~num_buckets
-   split points as literals.  The bucket is then a pure projection of
-   the row -- every branch and every recomputation of the plan assigns
-   the same bucket to the same row.  (The first implementation used
-   ``spark_partition_id()`` after ``repartitionByRange``; that id is
-   an EXECUTION artifact -- AQE may coalesce each consumer's shuffle
-   read differently and range boundaries are runtime-sampled per
-   branch -- so the offsets branch and the main branch could disagree.
-   Caught by the sorted-neighborhood 10x oracle run: the pair count
-   drifted between executions.)
+1. Sample the order's leading PREFIX -- its first two columns, or the
+   only one -- once at plan-construction time (one bounded TakeOrdered
+   job: the bottom ``SAMPLE_ROWS`` rows by xxhash64 of the prefix) and
+   embed up to num_buckets - 1 boundary tuples as literals.  The bucket
+   is then a pure projection of the row -- every branch and every
+   recomputation of the plan assigns the same bucket to the same row.
+   (The first implementation used ``spark_partition_id()`` after
+   ``repartitionByRange``; that id is an EXECUTION artifact -- AQE may
+   coalesce each consumer's shuffle read differently and range
+   boundaries are runtime-sampled per branch -- so the offsets branch
+   and the main branch could disagree.  Caught by the
+   sorted-neighborhood 10x oracle run: the pair count drifted between
+   executions.)
 2. Per-bucket totals -- one map-side-combinable aggregation yielding
    at most ``num_buckets`` rows.
 3. Exclusive prefix offsets over that bounded relation (the one
    remaining unpartitioned window runs over <= num_buckets rows),
    broadcast back, and a within-bucket window keyed by the bucket.
 
-Bucket boundaries compare only the LEADING order column with STRICT
-inequality, so rows tied on it always land in the same bucket and the
-within-bucket sort (over the full order) settles them -- the result is
-exact even when the sample is arbitrarily unrepresentative; sampling
-quality affects only balance.  Cost shape at 100 TB: one bounded
-TakeOrdered sample collect (artifact training) + one hash shuffle on the
-bucket, all fully parallel -- versus the naive form's single task
-sorting the entire table.
+A row's bucket is the number of boundaries its prefix is STRICTLY
+past in the order's direction.  "Past" is a never-null predicate that
+follows Spark's default null order (ascending: nulls first;
+descending: nulls last), so a null prefix column sorts exactly where
+the within-bucket window puts it -- e.g. under a descending tie-break
+a null tie is past every boundary of its lead value.  The count is
+monotone in the total order and rows tied on the prefix land in the
+same bucket, so the within-bucket sort (over the full order) settles
+them and the result is exact for ANY boundary sample; sampling quality
+affects only balance.  Because the prefix includes the first
+tie-break, a hot lead value splits across buckets by that tie-break
+(the round-14 skew probe: 80% of documents on ONE blocking key
+serialized the sorted-neighborhood rank into one 7.2 s task when only
+the lead was bucketed).  Cost shape at 100 TB: one bounded TakeOrdered
+sample collect + one hash shuffle on the bucket, all fully parallel --
+versus the naive form's single task sorting the entire table.
 
 Requirement: the full order must be TOTAL (include a unique
 tie-break), or different engines/runs may disagree on tie order.
-
-Skew note: under lead-only bucketing one hot leading value cannot be
-split across buckets (by design -- strict lead comparisons keep tie
-groups whole so the numbering is exact under any boundary sample).
-``split_ties=True`` extends the boundary to the STRICT COMPOSITE
-(lead, first tie-break) tuple: rows tied on that 2-col prefix still
-land together (the same group-whole argument, one level deeper), so
-the numbering stays exact, but a hot lead value now splits across
-buckets by its tie-break -- removing the one-hot-key straggler the
-round-14 skew probe measured on the sorted-neighborhood plane (80%
-of documents on ONE blocking key: max/median task 7 172/431 ms,
-hot/uniform wall 2.92x; after the composite split the hot corpus
-plans like the uniform one).  Opt in where the lead can be hot and
-the tie-break is non-null (a null tie-break comparison collapses to
-lead-only placement for that row group -- still exact, just
-unsplit).
 """
 
 from __future__ import annotations
+
+import functools
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 _B = "__gord_bucket"
+SAMPLE_ROWS = 4096  # boundary-sample size; affects balance only
 
 OrderSpec = "str | tuple[str, str]"  # "col" (asc) or ("col", "desc")
 
 
-def _parse_order(order) -> tuple[list[Column], str, bool]:
-    """-> (sort columns, leading column name, leading-desc flag)."""
-    cols: list[Column] = []
-    lead_name, lead_desc = None, False
-    for i, o in enumerate(order):
-        if isinstance(o, tuple):
-            name, direction = o
-            desc = str(direction).lower().startswith("desc")
-        else:
-            name, desc = o, False
-        if i == 0:
-            lead_name, lead_desc = name, desc
-        cols.append(F.col(name).desc() if desc else F.col(name).asc())
-    return cols, lead_name, lead_desc
+def _parse_order(order) -> list[tuple[str, bool]]:
+    """-> [(column name, descending?)] in order."""
+    return [
+        (o[0], str(o[1]).lower().startswith("desc"))
+        if isinstance(o, tuple)
+        else (o, False)
+        for o in order
+    ]
 
 
-_NUMERIC = ("int", "bigint", "smallint", "tinyint", "float", "double")
+def _cmp(a: tuple, b: tuple, prefix: list[tuple[str, bool]]) -> int:
+    """Driver-side comparison of two prefix tuples in the order's
+    direction and Spark's default null order."""
+    for x, y, (_, desc) in zip(a, b, prefix):
+        if x == y:
+            continue
+        if x is None or y is None:
+            first = (x is None) != desc  # asc: nulls first; desc: last
+            return -1 if first else 1
+        return (-1 if x < y else 1) * (-1 if desc else 1)
+    return 0
 
 
-def _split_points(
-    df: DataFrame, lead: str, desc: bool, num_buckets: int,
-    sample_target: int = 4096,
-) -> list:
-    """Train-once boundary artifact: ~num_buckets-1 split points of the
-    leading order column -- one approxQuantile pass for numeric leads,
-    else a deterministic uniform sample via ONE bounded TakeOrdered
-    job (bottom-sample_target rows by xxhash64 -- r14: the earlier
-    count + hash-gated-filter scheme cost TWO driver-blocking jobs per
-    numbering at plan-construction time; hash-order bottom-K draws the
-    same uniform sample in one).  The same train-once contract as
-    zorder_scale_key's quantile boundaries: bounded driver actions at
-    plan-construction time, the artifact embedded as literals.  Sample
-    quality affects only bucket BALANCE, never correctness (strict
-    comparisons keep tie groups whole, so the numbering is exact under
-    any boundary choice)."""
-    dt = {f.name: f.dataType.simpleString() for f in df.schema.fields}[lead]
-    if dt in _NUMERIC or dt.startswith("decimal"):
-        probs = [i / num_buckets for i in range(1, num_buckets)]
-        qs = df.stat.approxQuantile(lead, probs, 0.001)
-        return sorted(set(qs), reverse=desc)
-    vals = df.select(F.col(lead).alias("v")).filter(F.col("v").isNotNull())
+def _boundaries(df: DataFrame, prefix, num_buckets: int) -> list[tuple]:
+    """Train-once boundary artifact: a deterministic uniform sample of
+    the prefix (ONE bounded TakeOrdered job -- bottom SAMPLE_ROWS rows
+    by xxhash64), sorted in the order's direction and thinned to
+    <= num_buckets - 1 distinct boundary tuples."""
+    cols = [F.col(c) for c, _ in prefix]
     sample = [
-        r.v
-        for r in vals.orderBy(F.xxhash64(F.col("v")), F.col("v"))
-        .limit(sample_target)
+        tuple(r)
+        for r in df.select(*cols)
+        .orderBy(F.xxhash64(*cols), *cols)
+        .limit(SAMPLE_ROWS)
         .collect()
     ]
-    if not sample:  # empty input: one bucket, still exact
-        return []
-    sample.sort(reverse=desc)
-    step = max(1, len(sample) // num_buckets)
-    bounds: list = []
-    for i in range(step, len(sample), step):
-        if len(bounds) >= num_buckets - 1:
-            break
-        if not bounds or sample[i] != bounds[-1]:
-            bounds.append(sample[i])
-    return bounds
-
-
-def _split_points_composite(
-    df: DataFrame, order, num_buckets: int,
-    sample_target: int = 4096,
-) -> list[tuple]:
-    """Boundary TUPLES over the strict composite (lead, first
-    tie-break): a deterministic uniform ~sample_target sample of the
-    pair (ONE bounded TakeOrdered job -- bottom-K by xxhash64; r14,
-    see _split_points), sorted in the order's direction, thinned to
-    <= num_buckets - 1 distinct boundaries.  Same train-once/bounded-
-    driver-action contract as _split_points; quality affects only
-    balance."""
-    import functools
-
-    (lead, l_desc), (tie, t_desc) = (
-        (o, False) if isinstance(o, str) else (o[0], str(o[1]).lower().startswith("desc"))
-        for o in order[:2]
-    )
-    pairs = (
-        df.select(F.col(lead).alias("l"), F.col(tie).alias("t"))
-        .filter(F.col("l").isNotNull())
-    )
-    sample = [
-        (r.l, r.t)
-        for r in pairs.orderBy(
-            F.xxhash64(F.col("l"), F.col("t")), F.col("l"), F.col("t")
-        )
-        .limit(sample_target)
-        .collect()
-    ]
-    if not sample:
-        return []
-
-    def _cmp(a, b):
-        for (x, y, desc) in ((a[0], b[0], l_desc), (a[1], b[1], t_desc)):
-            if x is None or y is None:
-                # null tie-breaks: order them first; exactness never
-                # depends on this (group-whole argument), only balance
-                if x is not y:
-                    return -1 if x is None else 1
-                continue
-            if x != y:
-                lt = x < y
-                return (-1 if lt else 1) * (-1 if desc else 1)
-        return 0
-
-    sample.sort(key=functools.cmp_to_key(_cmp))
+    sample.sort(key=functools.cmp_to_key(lambda a, b: _cmp(a, b, prefix)))
     step = max(1, len(sample) // num_buckets)
     bounds: list[tuple] = []
     for i in range(step, len(sample), step):
         if len(bounds) >= num_buckets - 1:
             break
-        if sample[i][1] is None:
-            continue  # a null tie-break boundary degrades to lead-only
         if not bounds or sample[i] != bounds[-1]:
             bounds.append(sample[i])
     return bounds
 
 
+def _past(col: Column, b, desc: bool) -> Column:
+    """Never-null ``col`` strictly after literal ``b`` in the sort
+    direction (ascending: nulls first; descending: nulls last)."""
+    if b is None:
+        return F.lit(False) if desc else col.isNotNull()
+    if desc:
+        return F.coalesce(col < F.lit(b), F.lit(True))
+    return F.coalesce(col > F.lit(b), F.lit(False))
+
+
 def _with_bucket(
-    df: DataFrame, order, num_buckets: int | None,
-    split_ties: bool = False,
+    df: DataFrame, order, num_buckets: int | None
 ) -> tuple[DataFrame, list[Column]]:
-    cols, lead, desc = _parse_order(order)
+    spec = _parse_order(order)
+    prefix = spec[:2]
     nb = num_buckets or int(
         df.sparkSession.conf.get("spark.sql.shuffle.partitions")
     )
-    if split_ties and len(order) >= 2:
-        tie = order[1][0] if isinstance(order[1], tuple) else order[1]
-        t_desc = isinstance(order[1], tuple) and str(
-            order[1][1]
-        ).lower().startswith("desc")
-        cbounds = _split_points_composite(df, order, nb)
-        bucket = F.lit(0)
-        for bl, bt in cbounds:
-            lead_past = (
-                (F.col(lead) < F.lit(bl)) if desc else (F.col(lead) > F.lit(bl))
-            )
-            tie_past = (
-                (F.col(tie) < F.lit(bt)) if t_desc else (F.col(tie) > F.lit(bt))
-            )
-            past = lead_past | ((F.col(lead) == F.lit(bl)) & tie_past)
-            bucket = bucket + F.when(past, 1).otherwise(0)
-        if desc and cbounds:
-            bucket = F.when(
-                F.col(lead).isNull(), F.lit(len(cbounds))
-            ).otherwise(bucket)
-        return df.withColumn(_B, bucket), cols
-    bounds = _split_points(df, lead, desc, nb)
-    # bucket = #(split points strictly before this row's leading value
-    # in sort direction); strict comparison keeps tie groups whole, so
-    # the numbering is exact regardless of sample quality.  Nulls sort
-    # first for asc (bucket 0 naturally) and last for desc (explicit).
     bucket = F.lit(0)
-    for b in bounds:
-        past = (F.col(lead) < F.lit(b)) if desc else (F.col(lead) > F.lit(b))
+    for bound in _boundaries(df, prefix, nb):
+        # lexicographic strict "past" over the prefix, innermost first
+        past = F.lit(False)
+        for (c, desc), b in reversed(list(zip(prefix, bound))):
+            past = _past(F.col(c), b, desc) | (
+                F.col(c).eqNullSafe(F.lit(b)) & past
+            )
         bucket = bucket + F.when(past, 1).otherwise(0)
-    if desc and bounds:
-        bucket = F.when(
-            F.col(lead).isNull(), F.lit(len(bounds))
-        ).otherwise(bucket)
+    cols = [F.col(c).desc() if d else F.col(c).asc() for c, d in spec]
     return df.withColumn(_B, bucket), cols
 
 
@@ -255,17 +166,13 @@ def global_row_number(
     order,
     out_col: str = "rn",
     num_buckets: int | None = None,
-    split_ties: bool = False,
 ) -> DataFrame:
     """``df`` + BIGINT ``out_col`` = exact 1-based global row number.
 
     ``order``: list of column names, each optionally ``(name, "desc")``
     -- must form a total order.  No one-task sort: see module doc.
-    ``split_ties``: bucket on the strict (lead, first tie-break)
-    composite so a hot lead value splits across buckets (see the
-    module skew note); numbering is exact either way.
     """
-    t, cols = _with_bucket(df, order, num_buckets, split_ties=split_ties)
+    t, cols = _with_bucket(df, order, num_buckets)
     offsets = _offsets(
         t, [F.count(F.lit(1)).alias("__n")], [("__n", "__off")]
     )

@@ -439,22 +439,10 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------- KMV / theta sketch with set intersection
 
 KMV_K = 64
+# u(user_id) = _u(KMV_SALT, user_id): the same salted-md5 uniform for a
+# user in EVERY group -- the property theta-sketch set operations
+# depend on.
 KMV_SALT = "kmv:"
-_TWO32 = 4294967296.0
-
-# u(user_id): same salted-md5 uniform for a user in EVERY group -- the
-# property theta-sketch set operations depend on.
-_SQL_KMV_U = (
-    f"CAST(CAST('0x' || substr(md5('{KMV_SALT}' || CAST(user_id AS VARCHAR)),"
-    f" 1, 8) AS BIGINT) AS DOUBLE) / {_TWO32}"
-)
-
-
-def _kmv_u() -> Column:
-    h = F.md5(
-        F.concat(F.lit(KMV_SALT), F.col("user_id").cast("string")).cast("binary")
-    )
-    return F.conv(F.substring(h, 1, 8), 16, 10).cast("double") / F.lit(_TWO32)
 
 
 @register(
@@ -462,7 +450,7 @@ def _kmv_u() -> Column:
     rotation_group=1,
     oracle=f"""
     WITH u AS (
-        SELECT DISTINCT event_type, {_SQL_KMV_U} AS u FROM events
+        SELECT DISTINCT event_type, {_sql_u(KMV_SALT, "user_id")} AS u FROM events
     ),
     sk AS (
         SELECT event_type,
@@ -505,7 +493,9 @@ def _kmv_u() -> Column:
 )
 def sketch_kmv_intersection(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
-    u = e.select("event_type", _kmv_u().alias("u")).distinct()
+    u = e.select(
+        "event_type", _u(KMV_SALT, F.col("user_id")).alias("u")
+    ).distinct()
     sk = u.groupBy("event_type").agg(
         F.slice(F.sort_array(F.collect_list("u")), 1, KMV_K).alias("arr"),
         F.count("*").alias("n_seen"),
@@ -1615,14 +1605,14 @@ def text_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     # Inclusive prefix sums over the DOCS-sized checkpoint relation:
-    # two-pass range-partitioned running sums (functions/ordering.py)
+    # two-pass bucketed running sums (functions/ordering.py)
     # instead of an unpartitioned window, which would drag every
     # checkpoint row into one task.  BIGINT addition is associative,
     # so the split is bit-identical to the single-task form.
     from ..functions.ordering import global_running_sums
 
     # r14: persist the docs-sized checkpoint relation -- the two-pass
-    # running sums evaluate it ~3x (quantile pass, offsets, final), and
+    # running sums evaluate it ~3x (boundary sample, offsets, final), and
     # each uncached walk re-ran the token explode + first-occurrence
     # window upstream.
     per_doc = scoped_persist(per_doc)

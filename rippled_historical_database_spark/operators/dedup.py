@@ -1804,7 +1804,7 @@ SN_THRESHOLD = 0.5  # token-set Jaccard keep threshold
         "independent of duplicate-cluster sizes, which is the "
         "method's advantage over blocking on equal keys (one hot key "
         "cannot go quadratic).  The global position comes from the "
-        "two-pass range-partitioned numbering (functions/ordering.py) "
+        "two-pass bucketed numbering (functions/ordering.py) "
         "-- no one-task sort -- and the neighborhood expands as a "
         "broadcast offsets cross-join + equi-join on position, so "
         "every stage is linear and shuffle-partitioned.  Survivor "
@@ -1837,14 +1837,10 @@ def dedup_sorted_neighborhood_pairs(
             F.filter(_tokens(), lambda t: t != F.lit(""))
         ).alias("toks"),
     )
-    # split_ties: the blocking key is text-derived and CAN be hot (the
-    # round-14 skew probe measured an 80%-one-key corpus serializing
-    # into one 7.2 s task under lead-only bucketing); the composite
-    # (sn_key, doc_id) boundary splits a hot key by doc_id with the
-    # numbering unchanged.
-    ranked = global_row_number(
-        norm, ["sn_key", "doc_id"], "rn", split_ties=True
-    ).select(
+    # The blocking key is text-derived and CAN be hot (the round-14
+    # skew probe: an 80%-one-key corpus); the numbering's (sn_key,
+    # doc_id) boundary tuples split a hot key by doc_id.
+    ranked = global_row_number(norm, ["sn_key", "doc_id"], "rn").select(
         "doc_id", "toks", "rn"
     )
     offs = spark.range(1, SN_WINDOW).select(F.col("id").alias("off"))
@@ -1895,9 +1891,7 @@ def _sn_pass_pairs(spark: SparkSession, keyed: DataFrame) -> DataFrame:
     two-pass numbering; neighborhood = broadcast offsets + equi-join."""
     from ..functions.ordering import global_row_number
 
-    ranked = global_row_number(
-        keyed, ["k", "doc_id"], "rn", split_ties=True
-    ).select(
+    ranked = global_row_number(keyed, ["k", "doc_id"], "rn").select(
         "doc_id", "rn"
     )
     offs = spark.range(1, SN_WINDOW).select(F.col("id").alias("off"))

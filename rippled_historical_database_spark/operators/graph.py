@@ -284,7 +284,7 @@ def _sql_pagerank_ctes() -> str:
         "round is one shuffle -- the same layout GraphX/Pregel uses.  "
         "Selection and ranking happen on the 9-dp rounded value on "
         "both engines so the rank_pos tie-break is float-noise immune; "
-        "rank_pos itself comes from the two-pass range-partitioned "
+        "rank_pos itself comes from the two-pass bucketed "
         "numbering (functions/ordering.py), never a one-task global "
         "sort over the node set.",
 )
@@ -337,7 +337,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     # rank_pos over ALL nodes is node-count sized -- a plain
     # Window.orderBy would sort every node in one task.  The two-pass
-    # range-partitioned numbering (functions/ordering.py) computes the
+    # bucketed numbering (functions/ordering.py) computes the
     # identical total-order position fully in parallel; (pagerank DESC,
     # node) is total because node is unique.
     from ..functions.ordering import global_row_number

@@ -53,6 +53,17 @@ SQL_HLL = f"""
 """
 
 
+def _user_hash() -> Column:
+    """The 48-bit HLL user hash: the first 12 hex digits of
+    md5(user_id) as a BIGINT.  One definition, because the streaming
+    daily registers must equal the batch sliding union's daily CTE."""
+    return F.conv(
+        F.substring(F.md5(F.col("user_id").cast("string").cast("binary")), 1, 12),
+        16,
+        10,
+    ).cast("bigint")
+
+
 def _rho(w: Column) -> Column:
     expr = F.lit(RHO_BITS + 1)
     for r in range(RHO_BITS, 0, -1):
@@ -75,11 +86,7 @@ def _rho(w: Column) -> Column:
 )
 def sketch_hll_registers(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
-    h = F.conv(
-        F.substring(F.md5(F.col("user_id").cast("string").cast("binary")), 1, 12),
-        16,
-        10,
-    ).cast("bigint")
+    h = _user_hash()
     # integer `div`, matching the oracle's floor-divide bit-for-bit (double
     # division is only exact while the hash fits a 53-bit mantissa)
     base = e.select(h.alias("h")).select(
@@ -559,11 +566,7 @@ SQL_HLL_GROUPED = f"""
 )
 def sketch_hll_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
-    h = F.conv(
-        F.substring(F.md5(F.col("user_id").cast("string").cast("binary")), 1, 12),
-        16,
-        10,
-    ).cast("bigint")
+    h = _user_hash()
     base = e.select("event_type", h.alias("h")).select(
         "event_type",
         (F.col("h") % N_REGISTERS).cast("int").alias("register"),
@@ -647,11 +650,7 @@ def sketch_hll_sliding_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     e = load_table(spark, sf_dir, "events")
-    h = F.conv(
-        F.substring(F.md5(F.col("user_id").cast("string").cast("binary")), 1, 12),
-        16,
-        10,
-    ).cast("bigint")
+    h = _user_hash()
     base = e.select(
         F.datediff(F.to_date("ts"), F.lit("2000-01-01")).alias("day_idx"),
         h.alias("h"),
@@ -787,11 +786,7 @@ def sketch_hll_intersection(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events").filter(
         F.col("event_type").isin("purchase", "click")
     )
-    h = F.conv(
-        F.substring(F.md5(F.col("user_id").cast("string").cast("binary")), 1, 12),
-        16,
-        10,
-    ).cast("bigint")
+    h = _user_hash()
     base = e.select("event_type", h.alias("h")).select(
         "event_type",
         (F.col("h") % N_REGISTERS).cast("int").alias("register"),

@@ -774,12 +774,13 @@ def _client_joined_page(
     client = spark.read.parquet(
         os.path.join(warehouse_dir, "silver_tx_client")
     )
-    # persist the page before harvesting its keys: the key collect and
-    # the returned join would otherwise EACH execute the page's
-    # filter+sort+limit (the whole parquet scan twice per request); the
-    # cached relation is <= limit+1 rows
-    page = page.persist()
-    keys = [r.tx_hash for r in page.select("tx_hash").collect()]
+    # collect the <= limit+1 row page once and re-enter it as a local
+    # relation (plans/api._paginate's pattern): the key harvest and the
+    # returned join share one execution of the page's filter+sort+limit,
+    # and no cached relation outlives the request
+    rows = page.collect()
+    keys = [r.tx_hash for r in rows]
+    page = local_df(spark, rows, page.schema)
     small_client = (
         client.filter(F.col("tx_hash").isin(keys)) if keys else client.limit(0)
     )

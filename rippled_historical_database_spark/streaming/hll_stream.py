@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.registry import register
-from ..operators.sketches import N_REGISTERS, _rho
+from ..operators.sketches import N_REGISTERS, _rho, _user_hash
 from ..sources.catalog import stream_table
 from .memory_sink import run_to_memory
 
@@ -72,11 +72,7 @@ def _daily_hll_oracle() -> str:
 )
 def stream_sketch_hll_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = stream_table(spark, sf_dir, "events")
-    h = F.conv(
-        F.substring(F.md5(F.col("user_id").cast("string").cast("binary")), 1, 12),
-        16,
-        10,
-    ).cast("bigint")
+    h = _user_hash()
     base = events.select(
         F.datediff(F.to_date("ts"), F.lit("2000-01-01")).alias("day_idx"),
         h.alias("h"),

@@ -213,6 +213,26 @@ def test_account_escrows_and_channels(spark, sf_dir):
     assert all(len(r.channel) == 32 for r in chans)
 
 
+def test_account_exchanges_filters_orders_and_limits(spark, sf_dir):
+    with pytest.raises(api.InvalidRequest):
+        api.get_account_exchanges(spark, sf_dir, ACCOUNT, base="barter")
+    rows = api.get_account_exchanges(spark, sf_dir, ACCOUNT, limit=1000).df
+    rows = rows.collect()
+    assert rows and all(r.account == ACCOUNT for r in rows)
+    keys = [(r.ts, r.event_id) for r in rows]
+    assert keys == sorted(keys, reverse=True)
+    base = rows[0].pair
+    based = api.get_account_exchanges(
+        spark, sf_dir, ACCOUNT, base=base, limit=1000
+    ).df.collect()
+    assert based and all(
+        r.account == ACCOUNT and r.pair == base for r in based
+    )
+    assert based == [r for r in rows if r.pair == base]
+    top = api.get_account_exchanges(spark, sf_dir, ACCOUNT, limit=3).df
+    assert top.collect() == rows[:3]
+
+
 def test_last_validated_is_newest(spark, sf_dir):
     last = api.get_last_validated(spark, sf_dir).df.first()
     o = load_table(spark, sf_dir, "orders")

@@ -58,15 +58,16 @@ def test_truncate_lineage_local_and_reliable(spark, tmp_path):
     sc = spark.sparkContext
     assert not sc._jsc.sc().getCheckpointDir().isDefined()
     df = spark.range(0, 50).selectExpr("id % 5 AS k")
-    local = caching.truncate_lineage(df, eager=True)
+    local = caching.truncate_lineage(df)
     assert "LogicalRDD" in local._jdf.queryExecution().analyzed().toString()
     try:
         sc.setCheckpointDir(str(tmp_path / "ckpt"))
-        rel = caching.truncate_lineage(df, eager=True)
+        rel = caching.truncate_lineage(df)
         assert "LogicalRDD" in rel._jdf.queryExecution().analyzed().toString()
+        # the checkpoint is lazy: the first action writes its files
+        assert local.count() == rel.count() == 50
         ckpt_files = list((tmp_path / "ckpt").rglob("*"))
         assert ckpt_files, "reliable checkpoint wrote nothing"
-        assert local.count() == rel.count() == 50
     finally:
         # restore the harness default (Option(null) clears the dir)
         sc._jsc.sc().setCheckpointDir(None)

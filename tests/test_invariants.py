@@ -615,8 +615,12 @@ def test_kmv_partial_sketches_merge_exactly(spark, sf_dir):
     that lets per-executor/per-day sketches combine without rescans."""
     from rippled_historical_database_spark.operators.corpus_ml import (
         KMV_K,
-        _kmv_u,
+        KMV_SALT,
     )
+    from rippled_historical_database_spark.operators.sampling import _u
+
+    def _kmv_u():
+        return _u(KMV_SALT, F.col("user_id"))
 
     e = load_table(spark, sf_dir, "events").filter(
         F.col("event_type") == "purchase"

@@ -232,10 +232,54 @@ def test_unbounded_sort_discriminator_can_fail(spark, sf_dir):
     assert _unbounded_global_sort_windows(_executed_plan(naive))
 
 
+def _nullable_skewed(spark):
+    """400 rows: 90% of ``k`` on one value, every fifth ``t`` null, a
+    unique ``uid`` -- the hot-lead, nullable-tie-break shape."""
+    from pyspark.sql import functions as F
+
+    return (
+        spark.range(400)
+        .select(
+            F.when(F.col("id") % 10 < 9, F.lit(7))
+            .otherwise(F.col("id") % 5)
+            .alias("k"),
+            F.when(F.col("id") % 5 == 0, F.lit(None))
+            .otherwise((F.col("id") * 37) % 11)
+            .alias("t"),
+            F.col("id").alias("uid"),
+        )
+        .repartition(7)
+    )
+
+
+# Total orders the equality laws cover: ascending and descending leads,
+# nullable ascending and descending tie-breaks (Spark's default null
+# order: first when ascending, last when descending), nullable leads.
+_LAW_ORDERS = [
+    ["k", "uid"],
+    [("k", "desc"), "uid"],
+    ["k", "t", "uid"],
+    ["k", ("t", "desc"), "uid"],
+    [("k", "desc"), ("t", "desc"), "uid"],
+    [("t", "desc"), "uid"],
+    ["t", ("uid", "desc")],
+]
+
+
+def _sort_cols(order):
+    from pyspark.sql import functions as F
+
+    return [
+        F.col(o[0]).desc() if isinstance(o, tuple) else F.col(o).asc()
+        for o in order
+    ]
+
+
 def test_global_row_number_matches_naive_window(spark):
     """Equality law: the two-pass numbering == the single-task window
-    on skewed data with duplicate primary keys (tie-break total),
-    under a partition count that forces non-trivial offsets."""
+    on skewed data with a nullable tie-break, for every order in
+    _LAW_ORDERS, under a bucket count that forces non-trivial
+    offsets."""
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
@@ -243,43 +287,26 @@ def test_global_row_number_matches_naive_window(spark):
         global_row_number,
     )
 
-    df = (
-        spark.range(2000)
-        .select(
-            (F.col("id") % 13).alias("k"),  # heavy duplicates
-            F.col("id").alias("uid"),
+    df = _nullable_skewed(spark)
+    for order in _LAW_ORDERS:
+        naive = df.select(
+            "uid",
+            F.row_number()
+            .over(Window.orderBy(*_sort_cols(order)))
+            .cast("bigint")
+            .alias("rn"),
         )
-        .repartition(17)
-    )
-    naive = df.select(
-        "k",
-        "uid",
-        F.row_number()
-        .over(Window.orderBy(F.col("k").desc(), "uid"))
-        .cast("bigint")
-        .alias("rn"),
-    )
-    fast = global_row_number(
-        df, [("k", "desc"), "uid"], "rn", num_buckets=7
-    ).select("k", "uid", "rn")
-    assert sorted(map(tuple, fast.collect())) == sorted(
-        map(tuple, naive.collect())
-    )
-    # split_ties mode: same law on the same skewed data
-    split = global_row_number(
-        df, [("k", "desc"), "uid"], "rn", num_buckets=7, split_ties=True
-    ).select("k", "uid", "rn")
-    assert sorted(map(tuple, split.collect())) == sorted(
-        map(tuple, naive.collect())
-    )
+        fast = global_row_number(df, order, "rn", num_buckets=6).select(
+            "uid", "rn"
+        )
+        assert sorted(fast.collect()) == sorted(naive.collect()), order
 
 
-def test_global_row_number_split_ties_shards_a_hot_key(spark):
-    """The round-14 skew-probe fix: with 90% of rows on ONE leading
-    value, composite bucketing must (a) still number exactly and
-    (b) actually spread the hot key across >1 bucket -- lead-only
-    bucketing provably cannot (its strict lead comparison keeps the
-    whole hot group in one bucket = one sort task)."""
+def test_global_row_number_shards_a_hot_key(spark):
+    """With 90% of rows on ONE leading value, the (lead, tie-break)
+    boundary tuples must (a) still number exactly and (b) spread the
+    hot key across >1 bucket -- for a hot string lead and for a hot
+    numeric descending lead."""
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
@@ -288,38 +315,64 @@ def test_global_row_number_split_ties_shards_a_hot_key(spark):
         global_row_number,
     )
 
+    hot = F.col("id") % 10 < 9
     df = (
         spark.range(3000)
         .select(
-            F.when(F.col("id") % 10 < 9, F.lit("HOT"))
+            F.when(hot, F.lit("HOT"))
             .otherwise((F.col("id") % 7).cast("string"))
-            .alias("k"),
+            .alias("s"),
+            F.when(hot, F.lit(0.0001))
+            .otherwise((F.col("id") % 7) / 10)
+            .alias("x"),
             F.col("id").alias("uid"),
         )
         .repartition(13)
     )
-    naive = df.select(
-        "k",
-        "uid",
-        F.row_number()
-        .over(Window.orderBy("k", "uid"))
-        .cast("bigint")
-        .alias("rn"),
+    for order, is_hot in (
+        (["s", "uid"], F.col("s") == "HOT"),
+        ([("x", "desc"), "uid"], F.col("x") == 0.0001),
+    ):
+        naive = df.select(
+            "uid",
+            F.row_number()
+            .over(Window.orderBy(*_sort_cols(order)))
+            .cast("bigint")
+            .alias("rn"),
+        )
+        fast = global_row_number(df, order, "rn", num_buckets=8).select(
+            "uid", "rn"
+        )
+        assert sorted(fast.collect()) == sorted(naive.collect()), order
+        bucketed, _ = _with_bucket(df, order, 8)
+        hot_buckets = (
+            bucketed.filter(is_hot).select("__gord_bucket").distinct().count()
+        )
+        assert hot_buckets > 1, f"hot key serialized into one bucket: {order}"
+
+
+def test_graph_pagerank_rank_pos_buckets_are_balanced(spark, sf_dir, qs):
+    """Most PageRank scores tie on the teleport floor (135 of 150 nodes
+    at sf0.01), so bucketing on the score alone puts every node into
+    one bucket -- the one-task sort the helper exists to avoid.
+    rank_pos's (pagerank DESC, node) order must spread its nodes: no
+    bucket holds more than half.  Runs at sf0.01: at sf0.001 the graph
+    has 15 nodes and no tie group, so the check would be vacuous."""
+    import os
+
+    from rippled_historical_database_spark.functions.ordering import (
+        _with_bucket,
     )
-    fast = global_row_number(
-        df, ["k", "uid"], "rn", num_buckets=8, split_ties=True
-    ).select("k", "uid", "rn")
-    assert sorted(map(tuple, fast.collect())) == sorted(
-        map(tuple, naive.collect())
-    )
-    bucketed, _ = _with_bucket(df, ["k", "uid"], 8, split_ties=True)
-    hot_buckets = (
-        bucketed.filter(F.col("k") == "HOT")
-        .select("__gord_bucket")
-        .distinct()
-        .count()
-    )
-    assert hot_buckets > 1, "hot key still serialized into one bucket"
+
+    scale_dir = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    if not os.path.isdir(scale_dir):
+        pytest.skip(f"needs the sf0.01 test data next to {sf_dir}")
+    ranks = qs["graph_pagerank"].spark(spark, scale_dir)
+    bucketed, _ = _with_bucket(ranks, [("pagerank", "desc"), "node"], 4)
+    sizes = [
+        r["count"] for r in bucketed.groupBy("__gord_bucket").count().collect()
+    ]
+    assert max(sizes) <= sum(sizes) / 2, sizes
 
 
 def test_global_running_sums_match_naive_window(spark):
@@ -330,32 +383,25 @@ def test_global_running_sums_match_naive_window(spark):
         global_running_sums,
     )
 
-    df = (
-        spark.range(1500)
-        .select(
-            F.col("id").alias("uid"),
-            (F.col("id") % 11).alias("a"),
-            (F.col("id") % 5).alias("b"),
+    df = _nullable_skewed(spark).select(
+        "*", (F.col("uid") % 11).alias("a"), (F.col("uid") % 5).alias("b")
+    )
+    for order in _LAW_ORDERS:
+        w = Window.orderBy(*_sort_cols(order)).rowsBetween(
+            Window.unboundedPreceding, Window.currentRow
         )
-        .repartition(9)
-    )
-    w = Window.orderBy("uid").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    naive = df.select(
-        "uid",
-        F.sum("a").over(w).alias("ca"),
-        F.sum("b").over(w).alias("cb"),
-    )
-    fast = global_running_sums(
-        df,
-        ["uid"],
-        {"ca": F.col("a"), "cb": F.col("b")},
-        num_buckets=6,
-    ).select("uid", "ca", "cb")
-    assert sorted(map(tuple, fast.collect())) == sorted(
-        map(tuple, naive.collect())
-    )
+        naive = df.select(
+            "uid",
+            F.sum("a").over(w).alias("ca"),
+            F.sum("b").over(w).alias("cb"),
+        )
+        fast = global_running_sums(
+            df,
+            order,
+            {"ca": F.col("a"), "cb": F.col("b")},
+            num_buckets=6,
+        ).select("uid", "ca", "cb")
+        assert sorted(fast.collect()) == sorted(naive.collect()), order
 
 
 # ------------------------------ sorted-neighborhood dedup laws --
