@@ -32,6 +32,16 @@ aggregation daemons keep up to date.  The memo is per ``SparkSession``
 and held weakly (another session never sees a session's relations, and
 they go when it does), LRU-bounded at ``MEMO_MAX_ROWS`` rows per
 session, and a result over that cap is served lazily instead, as before.
+
+``memoize_plan`` keeps the plan, not the rows: ``Query.spark`` builds
+each registered query once per session, data directory and data
+version, and every later call starts from the stored analyzed plan.
+Building a query is Python plan construction over py4j (for the 16
+headline queries at sf0.01, a traced pass spent 3.0 s of self time
+building them and 7.4 s executing them) plus any job the builder runs,
+such as a codebook collect or a schema read; execution still runs in
+full on every action.  Both memos share one per-session store and its
+staleness rule.
 """
 
 from __future__ import annotations
@@ -39,7 +49,7 @@ from __future__ import annotations
 import threading
 import weakref
 from collections import Counter, OrderedDict
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 from typing import Callable, Hashable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -105,10 +115,14 @@ def tracked_count() -> int:
 
 
 def reset_scope() -> None:
-    """Unpersist everything tracked (test hook; never in query paths)."""
+    """Unpersist everything tracked and drop every session's memoized
+    plans, so the next registry call builds (test hook; never in query
+    paths)."""
     with _LOCK:
         entries = list(_TRACKED.values())
         _TRACKED.clear()
+        for memo in _MEMOS.values():
+            memo.plans.clear()
     for df in entries:
         try:
             df.unpersist(blocking=False)
@@ -121,20 +135,52 @@ def reset_scope() -> None:
 # of them ~215k), a few tens of MB of JVM-side rows.
 MEMO_MAX_ROWS = 250_000
 
+# Built plans memoized per session (``memoize_plan``).  Sized from the
+# measured working set of a long-lived session: the 16 ``bench=True``
+# headline queries plus the 12 registry queries the ``plans.api`` routes
+# read (``_q``), 28 plans per data directory, plus a little headroom.
+# An entry is an analyzed JVM plan of a few KB, but it keeps alive what
+# the plan references: local relations (bounded by ``MEMO_MAX_ROWS``
+# rows over all plans, as ``memoize_local``) and the blocks of a
+# truncated lineage (``truncate_lineage``).
+PLAN_MEMO_ENTRIES = 32
+
 
 @dataclass
 class _Memo:
     version: Hashable
-    # The JVM Dataset only: a Python DataFrame would reference the session
-    # and keep its weak key alive.  None: over the cap, served lazily.
-    jdf: object | None
+    # A JVM object only (a Dataset or a logical plan): a Python DataFrame
+    # would reference the session and keep its weak key alive.  None:
+    # over the row cap, served lazily.
+    jvm: object | None
     rows: int
 
 
-_MEMOS: "weakref.WeakKeyDictionary[SparkSession, OrderedDict]" = (
+@dataclass
+class _SessionMemo:
+    """One session's memo entries, each OrderedDict in LRU order."""
+
+    local: OrderedDict = field(default_factory=OrderedDict)  # memoize_local
+    plans: OrderedDict = field(default_factory=OrderedDict)  # memoize_plan
+
+
+_MEMOS: "weakref.WeakKeyDictionary[SparkSession, _SessionMemo]" = (
     weakref.WeakKeyDictionary()
 )
 _MEMO_STATS: Counter = Counter()
+
+
+def _current(entries: OrderedDict, key: Hashable, version: Hashable) -> _Memo | None:
+    """The entry under ``key`` at ``version``, made most recent; None if
+    absent.  An entry of another version is stale (the inputs changed)
+    and is dropped.  Call under ``_LOCK``."""
+    entry = entries.get(key)
+    if entry is not None and entry.version != version:
+        del entries[key]
+        return None
+    if entry is not None:
+        entries.move_to_end(key)
+    return entry
 
 
 def memoize_local(
@@ -155,16 +201,11 @@ def memoize_local(
     the last one stored wins.
     """
     with _LOCK:
-        memo = _MEMOS.setdefault(spark, OrderedDict())
-        entry = memo.get(key)
-        if entry is not None and entry.version != version:
-            del memo[key]
-            entry = None
+        entry = _current(_MEMOS.setdefault(spark, _SessionMemo()).local, key, version)
         if entry is not None:
-            memo.move_to_end(key)
-            if entry.jdf is not None:
+            if entry.jvm is not None:
                 _MEMO_STATS["hits"] += 1
-                return DataFrame(entry.jdf, spark)
+                return DataFrame(entry.jvm, spark)
             _MEMO_STATS["oversize"] += 1
     df = build()
     if entry is not None:  # known to be over the cap at this version
@@ -175,7 +216,7 @@ def memoize_local(
     else:
         local, n = local_df(spark, rows, df.schema), len(rows)
     with _LOCK:
-        memo = _MEMOS.setdefault(spark, OrderedDict())
+        memo = _MEMOS.setdefault(spark, _SessionMemo()).local
         memo[key] = _Memo(version, None if local is None else local._jdf, n)
         memo.move_to_end(key)
         total = sum(e.rows for e in memo.values())
@@ -188,14 +229,84 @@ def memoize_local(
     return df if local is None else local
 
 
+def memoize_plan(
+    spark: SparkSession,
+    key: Hashable,
+    version: Hashable,
+    build: Callable[[], DataFrame],
+) -> DataFrame:
+    """A new DataFrame over ``build()``'s analyzed plan, which is built
+    once per (``spark``, ``key``, ``version``).
+
+    A hit skips ``build()``: its Python plan construction (py4j round
+    trips) and any job it runs, such as a collect, a schema read or an
+    eager checkpoint.  Every call, the miss included, returns a new
+    Dataset over the stored plan, so no two callers share a
+    QueryExecution, and each action plans and executes in full; the memo
+    never holds an executed plan, its AQE stages or its shuffle files.
+    Staleness, concurrent misses and per-session lifetime follow
+    ``memoize_local``.  At most ``PLAN_MEMO_ENTRIES`` plans and
+    ``MEMO_MAX_ROWS`` local-relation rows are kept per session (LRU); a
+    plan whose local relations alone are over the row cap is not kept,
+    and every call builds it.
+    """
+    with _LOCK:
+        entry = _current(_MEMOS.setdefault(spark, _SessionMemo()).plans, key, version)
+        if entry is not None:
+            _MEMO_STATS["plan_hits"] += 1
+    if entry is not None:
+        plan = entry.jvm
+    else:
+        # Dataset.logicalPlan: the analyzed plan, with any command in it
+        # already run -- what the built Dataset's own transformations use.
+        plan = build()._jdf.logicalPlan()
+        rows = _local_rows(plan)
+        with _LOCK:
+            _MEMO_STATS["plan_misses"] += 1
+            if rows > MEMO_MAX_ROWS:
+                _MEMO_STATS["plan_oversize"] += 1
+            else:
+                plans = _MEMOS.setdefault(spark, _SessionMemo()).plans
+                plans[key] = _Memo(version, plan, rows)
+                plans.move_to_end(key)
+                total = sum(e.rows for e in plans.values())
+                while len(plans) > PLAN_MEMO_ENTRIES or total > MEMO_MAX_ROWS:
+                    _, old = plans.popitem(last=False)
+                    total -= old.rows
+    jvm = spark._jvm
+    # A new root per call: a Dataset adds its id to a mutable set tagged
+    # on its plan's root (Dataset.DATASET_ID_TAG, read by the ambiguous
+    # self-join check), which on the stored plan would grow with every
+    # hit and be written by concurrent callers.
+    root = jvm.org.apache.spark.sql.catalyst.plans.logical.Project(plan.output(), plan)
+    dataset = jvm.org.apache.spark.sql.classic.Dataset.ofRows(spark._jsparkSession, root)
+    return DataFrame(dataset, spark)
+
+
+def _local_rows(plan) -> int:
+    """Rows held by the local relations among ``plan``'s leaves."""
+    leaves = plan.collectLeaves().iterator()
+    rows = 0
+    while leaves.hasNext():
+        leaf = leaves.next()
+        if leaf.getClass().getSimpleName() == "LocalRelation":
+            rows += leaf.data().size()
+    return rows
+
+
 def memo_stats() -> dict[str, int]:
     """Memo hits, misses, over-cap (lazy) serves and the rows held now,
-    over all live sessions (test/probe hook)."""
+    then the plan memo's hits, misses, over-cap (unkept) builds and plans
+    held now, over all live sessions (test/probe hook)."""
     with _LOCK:
-        held = sum(e.rows for memo in _MEMOS.values() for e in memo.values())
+        memos = list(_MEMOS.values())
         return {
             "hits": _MEMO_STATS["hits"],
             "misses": _MEMO_STATS["misses"],
             "oversize": _MEMO_STATS["oversize"],
-            "rows": held,
+            "rows": sum(e.rows for m in memos for e in m.local.values()),
+            "plan_hits": _MEMO_STATS["plan_hits"],
+            "plan_misses": _MEMO_STATS["plan_misses"],
+            "plan_oversize": _MEMO_STATS["plan_oversize"],
+            "plans": sum(len(m.plans) for m in memos),
         }

@@ -26,6 +26,12 @@ import sys
 VERIFY_ENV = "SPARK_GRAFT_ORACLE_VERIFY"
 
 
+def verify_mode() -> bool:
+    """True under the oracle-verify harness env (``VERIFY_ENV`` set to
+    anything but empty or ``0``)."""
+    return os.environ.get(VERIFY_ENV) not in (None, "", "0")
+
+
 def serve_exact(name: str, n_rows: int, threshold: int) -> bool:
     """True -> serve the exact (oracle-pinned) form; False -> the
     scale form.  Raises under the oracle-verify harness env when the
@@ -38,7 +44,7 @@ def serve_exact(name: str, n_rows: int, threshold: int) -> bool:
         f"({n_rows:,} rows vs threshold {threshold:,})",
         file=sys.stderr,
     )
-    if not exact and os.environ.get(VERIFY_ENV) not in (None, "", "0"):
+    if not exact and verify_mode():
         raise RuntimeError(
             f"{name}: dataset has {n_rows:,} rows, above the exact-form "
             f"dispatch threshold ({threshold:,}), but {VERIFY_ENV} is set "

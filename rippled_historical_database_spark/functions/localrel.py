@@ -22,7 +22,7 @@ from typing import Iterable
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.pandas.types import to_arrow_schema
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StructType, VariantType
 
 
 def local_df(spark: SparkSession, rows: Iterable, schema) -> DataFrame:
@@ -44,5 +44,15 @@ def local_df(spark: SparkSession, rows: Iterable, schema) -> DataFrame:
                 f"{struct.simpleString()}"
             )
     arrow = to_arrow_schema(struct)
-    columns = [pa.array([r[i] for r in rows], type=f.type) for i, f in enumerate(arrow)]
+    columns = []
+    for i, (field, arrow_field) in enumerate(zip(struct, arrow)):
+        values = [r[i] for r in rows]
+        if isinstance(field.dataType, VariantType):
+            # to_arrow_schema declares a VARIANT as struct<value, metadata>
+            # (both binary); pa.array does not take the VariantVal itself.
+            values = [
+                None if v is None else {"value": v.value, "metadata": v.metadata}
+                for v in values
+            ]
+        columns.append(pa.array(values, type=arrow_field.type))
     return spark.createDataFrame(pa.Table.from_arrays(columns, schema=arrow), struct)

@@ -9,10 +9,23 @@ The registry is the single source of truth consumed by:
 An operator without an oracle (genuinely non-SQL-expressible: MinHash
 banding, streaming state) registers ``oracle=None`` and gets a weaker
 rows-only check -- keep those rare.
+
+``Query.spark`` builds its query once per (session, name,
+``realpath(sf_dir)``, oracle-verify mode,
+``sources.catalog.data_version(sf_dir)``) through
+``functions.caching.memoize_plan``; a later call returns a new
+DataFrame over the stored plan.  Verify mode
+(``functions.dispatch.verify_mode``) is in the key because a build
+reads it: under it a size-dispatched query raises instead of serving
+its unpinned form.  ``register()`` returns the undecorated function, so
+calls inside a module, and tests that patch a module constant and call
+the module function, build every time.
 """
 
 from __future__ import annotations
 
+import functools
+import os
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -40,6 +53,23 @@ class Query:
 REGISTRY: dict[str, Query] = {}
 
 
+def _memoized(name: str, fn: SparkFn) -> SparkFn:
+    """``fn`` behind the plan memo (module docstring).  Keeps ``fn``'s
+    ``__module__`` and ``__name__``, which per-module timings read."""
+
+    @functools.wraps(fn)
+    def spark_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
+        # Deferred so `import plans.registry` stays cheap.
+        from ..functions.caching import memoize_plan
+        from ..functions.dispatch import verify_mode
+        from ..sources.catalog import data_version
+
+        key = (name, os.path.realpath(sf_dir), verify_mode())
+        return memoize_plan(spark, key, data_version(sf_dir), lambda: fn(spark, sf_dir))
+
+    return spark_fn
+
+
 def register(
     name: str,
     oracle: str | None = None,
@@ -53,7 +83,8 @@ def register(
         if name in REGISTRY:
             raise ValueError(f"duplicate query name {name!r}")
         REGISTRY[name] = Query(
-            name=name, spark=fn, oracle=oracle, doc=doc or (fn.__doc__ or ""),
+            name=name, spark=_memoized(name, fn), oracle=oracle,
+            doc=doc or (fn.__doc__ or ""),
             bench=bench, rotation_group=rotation_group,
         )
         return fn

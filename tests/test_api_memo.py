@@ -46,9 +46,10 @@ LOCAL_ROUTES = [
 
 
 def _fresh(monkeypatch, call, spark, sf_dir):
-    """The route's rows with the memo bypassed: a fresh registry build."""
+    """The route's rows with both memos bypassed: a fresh registry build."""
     with monkeypatch.context() as m:
         m.setattr(api, "_rollup", lambda spark, sf_dir, name, build: build())
+        m.setattr(caching, "memoize_plan", lambda spark, key, version, build: build())
         page = call(spark, sf_dir)
         return page.df.schema, page.df.collect()
 

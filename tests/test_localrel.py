@@ -74,6 +74,20 @@ def test_values_match_create_dataframe_exactly(spark):
     assert out[0]["d"] == decimal.Decimal("1.230000")
 
 
+def test_variant_column_round_trips(spark):
+    """A collected VARIANT column (``VariantVal`` values, NULL included)
+    re-enters as the same variants."""
+    src = spark.sql(
+        """SELECT 1 AS k, parse_json('{"a":1}') AS v
+           UNION ALL SELECT 2, CAST(NULL AS VARIANT)"""
+    )
+    df = local_df(spark, src.collect(), src.schema)
+    assert df.schema == src.schema
+    want = src.selectExpr("k", "to_json(v) AS j").orderBy("k").collect()
+    assert df.selectExpr("k", "to_json(v) AS j").orderBy("k").collect() == want
+    assert want[0]["j"] == '{"a":1}' and want[1]["j"] is None
+
+
 def test_colon_style_schema_strings_accepted(spark):
     """Call sites pass both DDL ("a int") and simpleString ("a: int")
     schema forms; both must produce the Arrow-backed relation."""
