@@ -17,6 +17,7 @@ Two hazards this module exists to close:
 
 from __future__ import annotations
 
+import hashlib
 import os
 import shutil
 import uuid
@@ -25,6 +26,17 @@ from collections.abc import Callable
 ARTIFACT_ROOT = os.environ.get(
     "SPARK_GRAFT_ARTIFACTS", "/tmp/spark_graft_artifacts"
 )
+
+
+def source_key(src: str) -> str:
+    """Identity of the source file an artifact is trained from: a short
+    hash of its absolute path and mtime, so regenerated data keys a new
+    artifact.  A missing file keys as mtime 0."""
+    try:
+        mtime = os.stat(src).st_mtime_ns
+    except OSError:
+        mtime = 0
+    return hashlib.md5(f"{os.path.abspath(src)}|{mtime}".encode()).hexdigest()[:16]
 
 
 def build_once(path: str, marker: str, build: Callable[[str], None]) -> str:

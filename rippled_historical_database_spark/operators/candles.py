@@ -80,6 +80,26 @@ def _candle_aggs(final: bool) -> list[Column]:
     return aggs
 
 
+def merge_candle_aggs() -> list[Column]:
+    """Re-reduce ``_candle_aggs(final=False)`` partials to final candles:
+    associative, so it serves a coarser rollup level and the merge of
+    streamed partials alike."""
+    vol = F.sum("base_volume")
+    cvol = F.sum("counter_volume")
+    return [
+        F.min_by("open", "open_key").alias("open"),
+        F.max("high").alias("high"),
+        F.min("low").alias("low"),
+        F.max_by("close", "close_key").alias("close"),
+        vol.cast("double").alias("base_volume"),
+        cvol.cast("double").alias("counter_volume"),
+        F.sum("n_trades").alias("n_trades"),
+        F.min("open_time").alias("open_time"),
+        F.max("close_time").alias("close_time"),
+        (cvol.cast("double") / vol.cast("double")).alias("vwap"),
+    ]
+
+
 def hourly_candles(e: DataFrame, final: bool = True) -> DataFrame:
     return (
         _with_legs(e)
@@ -135,23 +155,9 @@ def agg_candles_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def agg_candles_daily_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     hourly = hourly_candles(load_table(spark, sf_dir, "events"), final=False)
-    vol = F.sum("base_volume")
-    cvol = F.sum("counter_volume")
-    return (
-        hourly.groupBy("pair", F.date_trunc("day", "bucket_start").alias("bucket_start"))
-        .agg(
-            F.min_by("open", "open_key").alias("open"),
-            F.max("high").alias("high"),
-            F.min("low").alias("low"),
-            F.max_by("close", "close_key").alias("close"),
-            vol.cast("double").alias("base_volume"),
-            cvol.cast("double").alias("counter_volume"),
-            F.sum("n_trades").alias("n_trades"),
-            F.min("open_time").alias("open_time"),
-            F.max("close_time").alias("close_time"),
-            (cvol.cast("double") / vol.cast("double")).alias("vwap"),
-        )
-    )
+    return hourly.groupBy(
+        "pair", F.date_trunc("day", "bucket_start").alias("bucket_start")
+    ).agg(*merge_candle_aggs())
 
 
 @register(
@@ -669,9 +675,11 @@ def window_rsi_cutler(spark: SparkSession, sf_dir: str) -> DataFrame:
 # why window_rsi_cutler above ships the SMA form and this operator
 # exists separately.  Batch form: the per-pair close series is
 # candle-sized (pairs x hours -- bounded by the calendar, not the trade
-# count), so the recursion runs as ONE JVM-side ``aggregate`` fold over
-# the collected series per pair: no Python UDF, no driver collect, and
-# cross-pair parallelism is the partitioning.  The streaming form
+# count), so the recursion runs as JVM-side ``aggregate`` folds over
+# the collected series per pair -- the one EMA fold template below
+# (``_ema_fold``, wilder=True), once over gains and once over losses:
+# no Python UDF, no driver collect, and cross-pair parallelism is the
+# partitioning.  The streaming form
 # (streaming/rsi_stream.py) runs the SAME recursion as per-pair
 # applyInPandasWithState state -- the reference's running-average shape
 # (lib/aggregation/stats.js:327-331) -- and equals this batch fold
@@ -679,42 +687,6 @@ def window_rsi_cutler(spark: SparkSession, sf_dir: str) -> DataFrame:
 # goes through fround (the engine-portable fixed-point round above) in
 # all three engines (fold, stream state, DuckDB recursion), making the
 # equality exact -- including on the recursion's half-grid ties.
-
-_WILDER_ACC = (
-    "named_struct("
-    "'n', 0, 'sg', cast(0.0 as double), 'sl', cast(0.0 as double), "
-    "'ag', cast(null as double), 'al', cast(null as double), "
-    "'out', cast(array() as array<struct<bucket:timestamp,ag:double,al:double>>))"
-)
-
-_WILDER_FOLD = f"""
-    aggregate(
-        series,
-        {_WILDER_ACC},
-        (a, x) -> CASE
-            WHEN a.n < {RSI_N - 1} THEN named_struct(
-                'n', a.n + 1, 'sg', a.sg + x.gain, 'sl', a.sl + x.loss,
-                'ag', a.ag, 'al', a.al, 'out', a.out)
-            WHEN a.n = {RSI_N - 1} THEN named_struct(
-                'n', a.n + 1,
-                'sg', cast(0.0 as double), 'sl', cast(0.0 as double),
-                'ag', (FLOOR(((a.sg + x.gain) / {RSI_N}) * 1000000000e0 + 0.5) / 1000000000e0),
-                'al', (FLOOR(((a.sl + x.loss) / {RSI_N}) * 1000000000e0 + 0.5) / 1000000000e0),
-                'out', concat(a.out, array(named_struct(
-                    'bucket', x.bucket,
-                    'ag', (FLOOR(((a.sg + x.gain) / {RSI_N}) * 1000000000e0 + 0.5) / 1000000000e0),
-                    'al', (FLOOR(((a.sl + x.loss) / {RSI_N}) * 1000000000e0 + 0.5) / 1000000000e0)))))
-            ELSE named_struct(
-                'n', a.n + 1, 'sg', a.sg, 'sl', a.sl,
-                'ag', (FLOOR(((a.ag * {RSI_N - 1} + x.gain) / {RSI_N}) * 1000000000e0 + 0.5) / 1000000000e0),
-                'al', (FLOOR(((a.al * {RSI_N - 1} + x.loss) / {RSI_N}) * 1000000000e0 + 0.5) / 1000000000e0),
-                'out', concat(a.out, array(named_struct(
-                    'bucket', x.bucket,
-                    'ag', (FLOOR(((a.ag * {RSI_N - 1} + x.gain) / {RSI_N}) * 1000000000e0 + 0.5) / 1000000000e0),
-                    'al', (FLOOR(((a.al * {RSI_N - 1} + x.loss) / {RSI_N}) * 1000000000e0 + 0.5) / 1000000000e0)))))
-        END
-    ).out
-"""
 
 
 def rsi_from_avgs(avgs: DataFrame) -> DataFrame:
@@ -734,7 +706,7 @@ def rsi_from_avgs(avgs: DataFrame) -> DataFrame:
 
 def wilder_avgs_from_closes(closes: DataFrame) -> DataFrame:
     """Run Wilder's smoothing over a (pair, bucket, close) frame via the
-    per-pair aggregate fold; returns (pair, bucket, ag, al) from the
+    per-pair EMA folds; returns (pair, bucket, ag, al) from the
     N-th delta onward."""
     from pyspark.sql.window import Window
 
@@ -755,8 +727,17 @@ def wilder_avgs_from_closes(closes: DataFrame) -> DataFrame:
             F.collect_list(F.struct("bucket", "gain", "loss"))
         ).alias("series")
     )
+    # Two runs of the one EMA fold (gain, loss): both emit from the
+    # N-th delta onward, so the arrays align element for element.
+    avgs = F.zip_with(
+        F.expr(_ema_fold("series", RSI_N, "gain", wilder=True)),
+        F.expr(_ema_fold("series", RSI_N, "loss", wilder=True)),
+        lambda g, lo: F.struct(
+            g["bucket"].alias("bucket"), g["val"].alias("ag"), lo["val"].alias("al")
+        ),
+    )
     return (
-        series.select("pair", F.explode(F.expr(_WILDER_FOLD)).alias("o"))
+        series.select("pair", F.explode(avgs).alias("o"))
         .select("pair", "o.bucket", "o.ag", "o.al")
     )
 
@@ -1028,10 +1009,9 @@ def window_macd(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------- candle continuity audit (gap runs)
 
-@register(
-    "agg_candle_gaps",
-    rotation_group=7,
-    oracle="""
+# Maximal runs of trade-less hours strictly inside each pair's observed
+# range; shared by agg_candle_gaps and its streaming twin.
+SQL_CANDLE_GAPS = """
     WITH b AS (
         SELECT DISTINCT event_type AS pair,
                CAST(DATE_TRUNC('hour', ts) AS TIMESTAMP) AS bucket
@@ -1059,7 +1039,13 @@ def window_macd(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM missing
     GROUP BY pair, grp
     ORDER BY pair, gap_start
-    """,
+    """
+
+
+@register(
+    "agg_candle_gaps",
+    rotation_group=7,
+    oracle=SQL_CANDLE_GAPS,
     doc="Candle continuity audit: for each pair, every RUN of hourly "
         "buckets with no trades between the pair's first and last "
         "active hour (gaps-and-islands: hour-epoch minus row_number "

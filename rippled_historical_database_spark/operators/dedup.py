@@ -434,31 +434,13 @@ def dedup_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pressure, which is exactly how a production LSH pipeline stages
     # signatures at scale.
     sig = scoped_persist(minhash_signatures_packed(doc_shingles(d)))
-    cand = _lsh_candidates(sig)
-    # Verify against signature ARRAYS (one row per doc): each side joins
-    # once on doc_id and the agreement count is a per-row zip_with over 8
-    # elements -- no post-join aggregation.
-    sa = sig.select(F.col("doc_id").alias("sa_id"), F.col("signature").alias("sa"))
-    sb = sig.select(F.col("doc_id").alias("sb_id"), F.col("signature").alias("sb"))
-    agree = F.size(
-        F.filter(F.zip_with(F.col("sa"), F.col("sb"), lambda x, y: x == y), lambda v: v)
-    )
-    return (
-        cand.join(sa, F.col("doc_a") == F.col("sa_id"))
-        .join(sb, F.col("doc_b") == F.col("sb_id"))
-        .select(
-            "doc_a", "doc_b", (agree.cast("double") / N_HASHES).alias("est_jaccard")
-        )
-        .orderBy("doc_a", "doc_b")
-    )
+    return _lsh_verified(_lsh_candidates(sig), sig).orderBy("doc_a", "doc_b")
 
 
-def _lsh_candidates(sig: DataFrame) -> DataFrame:
-    """Distinct (doc_a, doc_b) candidate pairs from the banded signature
-    self-join.  Bands are a pure per-row slice of the packed signature;
-    the only shuffle is the band equi-join -- never all-pairs."""
-    n_bands = N_HASHES // BAND_SIZE
-    bands = sig.select(
+def _lsh_bands(sig: DataFrame) -> DataFrame:
+    """(doc_id, band, band_vals): the packed signature cut into
+    N_HASHES // BAND_SIZE bands -- a pure per-row slice, no shuffle."""
+    return sig.select(
         "doc_id",
         F.explode(
             F.array(
@@ -469,11 +451,41 @@ def _lsh_candidates(sig: DataFrame) -> DataFrame:
                             "band_vals"
                         ),
                     )
-                    for band in range(n_bands)
+                    for band in range(N_HASHES // BAND_SIZE)
                 ]
             )
         ).alias("bb"),
     ).select("doc_id", "bb.band", "bb.band_vals")
+
+
+def _lsh_verified(cand: DataFrame, sig: DataFrame, *extra: Column) -> DataFrame:
+    """(doc_a, doc_b, est_jaccard, *extra): each candidate pair's MinHash
+    Jaccard estimate, the fraction of agreeing signature slots.  Each
+    side joins the signature ARRAYS (one row per doc) once on doc_id and
+    the agreement count is a per-row zip_with over N_HASHES elements --
+    no post-join aggregation."""
+    sa = sig.select(F.col("doc_id").alias("sa_id"), F.col("signature").alias("sa"))
+    sb = sig.select(F.col("doc_id").alias("sb_id"), F.col("signature").alias("sb"))
+    agree = F.size(
+        F.filter(F.zip_with(F.col("sa"), F.col("sb"), lambda x, y: x == y), lambda v: v)
+    )
+    return (
+        cand.join(sa, F.col("doc_a") == F.col("sa_id"))
+        .join(sb, F.col("doc_b") == F.col("sb_id"))
+        .select(
+            "doc_a",
+            "doc_b",
+            (agree.cast("double") / N_HASHES).alias("est_jaccard"),
+            *extra,
+        )
+    )
+
+
+def _lsh_candidates(sig: DataFrame) -> DataFrame:
+    """Distinct (doc_a, doc_b) candidate pairs from the banded signature
+    self-join; the only shuffle is the band equi-join -- never
+    all-pairs."""
+    bands = _lsh_bands(sig)
     a, b = bands.alias("a"), bands.alias("b")
     return (
         a.join(
@@ -1105,28 +1117,9 @@ def dedup_incremental_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         doc_shingles(d.filter(~is_delta))
     ))
 
-    n_bands = N_HASHES // BAND_SIZE
-
-    def bands_of(sig: DataFrame) -> DataFrame:
-        return sig.select(
-            "doc_id",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(band).alias("band"),
-                            F.slice(
-                                "signature", band * BAND_SIZE + 1, BAND_SIZE
-                            ).alias("band_vals"),
-                        )
-                        for band in range(n_bands)
-                    ]
-                )
-            ).alias("bb"),
-        ).select("doc_id", "bb.band", "bb.band_vals")
-
-    delta_bands = bands_of(sig_delta).alias("a")
-    all_bands = bands_of(sig_delta.unionByName(sig_index)).alias("b")
+    sig_all = sig_delta.unionByName(sig_index)
+    delta_bands = _lsh_bands(sig_delta).alias("a")
+    all_bands = _lsh_bands(sig_all).alias("b")
     cand = (
         delta_bands.join(
             all_bands,
@@ -1140,27 +1133,12 @@ def dedup_incremental_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    sig_all = sig_delta.unionByName(sig_index)
-    sa = sig_all.select(F.col("doc_id").alias("sa_id"), F.col("signature").alias("sa"))
-    sb = sig_all.select(F.col("doc_id").alias("sb_id"), F.col("signature").alias("sb"))
-    agree = F.size(
-        F.filter(F.zip_with(F.col("sa"), F.col("sb"), lambda x, y: x == y), lambda v: v)
-    )
     both_delta = (F.col("doc_a") % DELTA_MOD == DELTA_REM) & (
         F.col("doc_b") % DELTA_MOD == DELTA_REM
     )
-    return (
-        cand.join(sa, F.col("doc_a") == F.col("sa_id"))
-        .join(sb, F.col("doc_b") == F.col("sb_id"))
-        .select(
-            "doc_a",
-            "doc_b",
-            (agree.cast("double") / N_HASHES).alias("est_jaccard"),
-            F.when(both_delta, "delta_delta")
-            .otherwise("delta_index")
-            .alias("pair_type"),
-        )
-        .orderBy("doc_a", "doc_b")
+    pair_type = F.when(both_delta, "delta_delta").otherwise("delta_index")
+    return _lsh_verified(cand, sig_all, pair_type.alias("pair_type")).orderBy(
+        "doc_a", "doc_b"
     )
 
 
@@ -1580,23 +1558,11 @@ def dedup_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     ds = doc_shingles(d)
     sig = scoped_persist(minhash_signatures_packed(ds))
-    n_bands = N_HASHES // BAND_SIZE
-    bands = sig.select(
+    bands = _lsh_bands(sig).select(
         "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(band).alias("band"),
-                        F.slice(
-                            "signature", band * BAND_SIZE + 1, BAND_SIZE
-                        ).alias("band_vals"),
-                    )
-                    for band in range(n_bands)
-                ]
-            )
-        ).alias("b"),
-    ).select("doc_id", "b.band", F.md5(F.concat_ws(",", "b.band_vals").cast("binary")).alias("band_sig"))
+        "band",
+        F.md5(F.concat_ws(",", "band_vals").cast("binary")).alias("band_sig"),
+    )
     a, b = bands.alias("a"), bands.alias("b")
     cand = (
         a.join(
@@ -1610,23 +1576,7 @@ def dedup_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    sa = sig.select(F.col("doc_id").alias("doc_a"), F.col("signature").alias("sig_a"))
-    sb = sig.select(F.col("doc_id").alias("doc_b"), F.col("signature").alias("sig_b"))
-    est = (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            (
-                F.expr(
-                    "size(filter(zip_with(sig_a, sig_b, (x, y) -> x = y),"
-                    " v -> v))"
-                ).cast("double")
-                / N_HASHES
-            ).alias("est_jaccard"),
-        )
-    )
+    est = _lsh_verified(cand, sig)
     sizes = ds.groupBy("doc_id").agg(F.count("*").cast("bigint").alias("n"))
     dsa = ds.select(F.col("doc_id").alias("doc_a"), "shingle")
     dsb = ds.select(F.col("doc_id").alias("doc_b"), "shingle")

@@ -125,37 +125,16 @@ def _sql_cosine(a: str, b: str) -> str:
 
 
 def _register_near_dup_rerank():
-    from .dedup import BAND_SIZE, N_HASHES, _sql_minhash
+    from .dedup import _SQL_LSH_VERIFIED
 
     oracle = (
-        _sql_minhash()
+        _SQL_LSH_VERIFIED
         + f"""
-    , bands AS (
-        SELECT doc_id, seed // {BAND_SIZE} AS band,
-               md5(string_agg(CAST(minhash AS VARCHAR), ',' ORDER BY seed))
-                 AS band_sig
-        FROM mh GROUP BY doc_id, seed // {BAND_SIZE}
-    ),
-    cand AS (
-        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM bands a JOIN bands b
-          ON a.band = b.band AND a.band_sig = b.band_sig
-         AND a.doc_id < b.doc_id
-    ),
-    est AS (
-        SELECT c.doc_a, c.doc_b,
-               CAST(SUM(CASE WHEN ma.minhash = mb.minhash THEN 1 ELSE 0 END)
-                    AS DOUBLE) / {N_HASHES} AS est_jaccard
-        FROM cand c
-        JOIN mh ma ON ma.doc_id = c.doc_a
-        JOIN mh mb ON mb.doc_id = c.doc_b AND ma.seed = mb.seed
-        GROUP BY 1, 2
-    )
     SELECT e.doc_a, e.doc_b, e.est_jaccard,
            {_sql_cosine('ea.embedding', 'eb.embedding')} AS cosine,
            0.5 * e.est_jaccard
              + 0.5 * ({_sql_cosine('ea.embedding', 'eb.embedding')}) AS score
-    FROM est e
+    FROM verified e
     JOIN embeddings ea ON ea.vec_id = e.doc_a
     JOIN embeddings eb ON eb.vec_id = e.doc_b
     ORDER BY doc_a, doc_b
@@ -176,8 +155,8 @@ def _register_near_dup_rerank():
     )
     def pipeline_near_dup_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         from .dedup import (
-            N_HASHES,
             _lsh_candidates,
+            _lsh_verified,
             doc_shingles,
             minhash_signatures_packed,
         )
@@ -195,22 +174,7 @@ def _register_near_dup_rerank():
         # is a per-row slice of the persisted signature; candidates,
         # agreement counts, and est_jaccard are value-identical.
         sig = scoped_persist(minhash_signatures_packed(doc_shingles(d)))
-        cand = _lsh_candidates(sig)
-        sa = sig.select(F.col("doc_id").alias("sa_id"), F.col("signature").alias("sa"))
-        sb = sig.select(F.col("doc_id").alias("sb_id"), F.col("signature").alias("sb"))
-        agree = F.size(
-            F.filter(
-                F.zip_with(F.col("sa"), F.col("sb"), lambda x, y: x == y),
-                lambda v: v,
-            )
-        )
-        est = (
-            cand.join(sa, F.col("doc_a") == F.col("sa_id"))
-            .join(sb, F.col("doc_b") == F.col("sb_id"))
-            .select(
-                "doc_a", "doc_b", (agree.cast("double") / N_HASHES).alias("est_jaccard")
-            )
-        )
+        est = _lsh_verified(_lsh_candidates(sig), sig)
         # Embedding re-rank with norms below the join (one interpreted
         # fold per candidate pair instead of three; bit-identical).
         ea = emb.select(

@@ -30,11 +30,11 @@ import hashlib
 import math
 import os
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.localrel import local_df
-from ..functions.numeric import fround, sql_dsum, sql_fround
+from ..functions.numeric import dsum, fround, sql_dsum, sql_fround
 from ..plans.registry import register
 from ..sources.catalog import load_table
 
@@ -43,8 +43,9 @@ N_QUERIES = 3  # query vectors: vec_id < 3
 TOP_K = 5
 
 
-def _dot(a: Column, b: Column, dim: int = DIM) -> Column:
-    """Deterministic sequential-fold dot product in double.
+def _dot(a: Column, b: Column) -> Column:
+    """Deterministic sequential-fold dot product in double over the two
+    arrays' true lengths (so a prefix slice folds only its prefix).
 
     r15 NEGATIVE RESULT (measured, reverted): unrolling this into 64
     explicit element_at products (to escape the interpreted HOF
@@ -56,22 +57,19 @@ def _dot(a: Column, b: Column, dim: int = DIM) -> Column:
     evaluation of 128 element_at nodes -- far worse than zip_with +
     aggregate's single specialized array pass.  The same lesson as
     r14's SimHash lane-fold revert: per-invocation expression weight
-    beats invocation count in the interpreted evaluator.  ``dim`` is
-    accepted (and ignored -- zip_with uses the true array lengths) so
-    prefix callers that pass their slice length keep working.
+    beats invocation count in the interpreted evaluator.
     """
-    del dim
     prods = F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double"))
     return F.aggregate(prods, F.lit(0.0), lambda acc, x: acc + x)
 
 
-def _norm(a: Column, dim: int = DIM) -> Column:
-    return F.sqrt(_dot(a, a, dim))
+def _norm(a: Column) -> Column:
+    return F.sqrt(_dot(a, a))
 
 
-def _sql_dot(a: str, b: str) -> str:
+def _sql_dot(a: str, b: str, n: int = DIM) -> str:
     return (
-        f"list_reduce(list_transform(generate_series(1, {DIM}), "
+        f"list_reduce(list_transform(generate_series(1, {n}), "
         f"i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)), "
         f"(acc, x) -> acc + x)"
     )
@@ -106,6 +104,47 @@ def _unit_normalized(df: DataFrame, *keep: str) -> DataFrame:
     )
 
 
+def _top_k(scored: DataFrame, order: Column, k: int | None = TOP_K) -> DataFrame:
+    """Rank scored (query_id, neighbor_id, <score>) rows per query by
+    ``order``, ties to the lower neighbor_id, into a ``rank`` column;
+    keep ranks <= ``k`` (every rank when ``k`` is None).  The one top-k
+    tail of every near-neighbour query; _sql_rank is its oracle twin."""
+    w = Window.partitionBy("query_id").orderBy(order, F.col("neighbor_id"))
+    ranked = scored.withColumn("rank", F.row_number().over(w))
+    return ranked if k is None else ranked.filter(F.col("rank") <= k)
+
+
+def _sql_rank(order: str) -> str:
+    return (
+        f"ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY {order}, "
+        "neighbor_id) AS rank"
+    )
+
+
+def _recall_at_k(gt: DataFrame, found: DataFrame, *by: str) -> DataFrame:
+    """Per (*by, query_id): how many of the ground truth's (query_id,
+    neighbor_id) rows ``found`` recovers -- n_true, n_hit and their
+    ratio.  ``gt`` and ``found`` both carry (*by, query_id,
+    neighbor_id); the left join keeps a query with no hits at 0/k."""
+    keys = (*by, "query_id", "neighbor_id")
+    hits = found.select(*[F.col(c).alias(f"f_{c}") for c in keys])
+    on = F.col(keys[0]) == F.col(f"f_{keys[0]}")
+    for c in keys[1:]:
+        on = on & (F.col(c) == F.col(f"f_{c}"))
+    return (
+        gt.join(hits, on, "left")
+        .groupBy(*by, "query_id")
+        .agg(
+            F.count("*").alias("n_true"),
+            F.count("f_neighbor_id").alias("n_hit"),
+            (
+                F.count("f_neighbor_id").cast("double") / F.count("*")
+            ).alias("recall_at_k"),
+        )
+        .orderBy(*by, "query_id")
+    )
+
+
 @register(
     "ann_cosine_topk",
     oracle=f"""
@@ -117,11 +156,7 @@ def _unit_normalized(df: DataFrame, *keep: str) -> DataFrame:
                  AS cosine
         FROM q JOIN embeddings c ON c.vec_id <> q.vec_id
     ),
-    ranked AS (
-        SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                    ORDER BY cosine DESC, neighbor_id) AS rank
-        FROM scored
-    )
+    ranked AS (SELECT *, {_sql_rank('cosine DESC')} FROM scored)
     SELECT query_id, neighbor_id, label, cosine, rank
     FROM ranked WHERE rank <= {TOP_K}
     ORDER BY query_id, rank
@@ -132,8 +167,6 @@ def _unit_normalized(df: DataFrame, *keep: str) -> DataFrame:
     bench=True,
 )
 def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     emb = load_table(spark, sf_dir, "embeddings")
     # r14 optimization (guide section 1.2 "per-task work"): norms are
     # materialized BELOW the join, once per vector, instead of inside
@@ -164,12 +197,7 @@ def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("cosine"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .orderBy("query_id", "rank")
-    )
+    return _top_k(scored, F.col("cosine").desc()).orderBy("query_id", "rank")
 
 
 NEAR_DUP_TAU = 0.8
@@ -318,11 +346,7 @@ def ann_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
                  AS cosine
         FROM q JOIN sig c ON q.bucket = c.bucket AND c.vec_id <> q.vec_id
     ),
-    ranked AS (
-        SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                    ORDER BY cosine DESC, neighbor_id) AS rank
-        FROM scored
-    )
+    ranked AS (SELECT *, {_sql_rank('cosine DESC')} FROM scored)
     SELECT query_id, neighbor_id, cosine, rank FROM ranked WHERE rank <= {TOP_K}
     ORDER BY query_id, rank
     """,
@@ -332,8 +356,6 @@ def ann_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         "bands/probes, cost stays an equi-join.",
 )
 def ann_lsh_bucketed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     emb = load_table(spark, sf_dir, "embeddings")
     # Norms below the join, one interpreted fold per pair instead of
     # three -- same rewrite as ann_cosine_topk, bit-identical cosine.
@@ -363,12 +385,7 @@ def ann_lsh_bucketed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("cosine"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .orderBy("query_id", "rank")
-    )
+    return _top_k(scored, F.col("cosine").desc()).orderBy("query_id", "rank")
 
 
 @register(
@@ -412,9 +429,7 @@ def embedding_label_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     ranked AS (
         SELECT query_id, neighbor_id, cosine,
-               ROW_NUMBER() OVER (PARTITION BY query_id
-                   ORDER BY (FLOOR((cosine) * 1000000e0 + 0.5) / 1000000e0)
-                       DESC, neighbor_id) AS rank
+               {_sql_rank(sql_fround('cosine', 6) + ' DESC')}
         FROM scored
     )
     SELECT query_id, neighbor_id,
@@ -457,17 +472,11 @@ def ann_cosine_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             yield out[out.query_id != out.neighbor_id]
 
-    from pyspark.sql import Window
-
     scored = emb.mapInPandas(
         score, schema="query_id long, neighbor_id long, cosine double"
     )
-    w = Window.partitionBy("query_id").orderBy(
-        fround("cosine", 6).desc(), F.col("neighbor_id")
-    )
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
+        _top_k(scored, fround("cosine", 6).desc())
         .withColumn("cosine", fround("cosine", 6))
         .orderBy("query_id", "rank")
     )
@@ -480,11 +489,12 @@ IVF_NPROBE = 2
 
 _SQL_CENTROIDS = ", ".join(str(i) for i in IVF_CENTROID_IDS)
 
-
-@register(
-    "ann_ivf_topk",
-    oracle=f"""
-    WITH centroids AS (
+# The IVF index in oracle SQL: every vector's nearest centroid cell
+# (argmax cosine, ties to the lower cell_id) and each query's top
+# IVF_NPROBE cells; shared by ann_ivf_topk, dedup_semantic_clusters
+# and the IVF+PQ composition.
+_SQL_IVF_CELLS = f"""
+    centroids AS (
         SELECT vec_id AS cell_id, embedding AS c_emb
         FROM embeddings WHERE vec_id IN ({_SQL_CENTROIDS})
     ),
@@ -509,7 +519,83 @@ _SQL_CENTROIDS = ", ".join(str(i) for i in IVF_CENTROID_IDS)
             FROM embeddings q CROSS JOIN centroids k
             WHERE q.vec_id < {N_QUERIES}
         ) WHERE rn <= {IVF_NPROBE}
-    ),
+    )"""
+
+
+def _ivf_inputs(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """(emb_n, centroids): the embeddings with their norm staged as
+    ``e_norm``, and the (cell_id, c_emb, c_norm) centroid vectors.
+
+    Norms are staged below the joins (r14, same rewrite as
+    ann_cosine_topk): |e| is one interpreted fold per vector and |c| one
+    per broadcast centroid, so each (vector, centroid) pair runs only
+    the dot fold; cosine arithmetic is bit-identical."""
+    emb_n = load_table(spark, sf_dir, "embeddings").withColumn(
+        "e_norm", _norm(F.col("embedding"))
+    )
+    centroids = emb_n.filter(F.col("vec_id").isin(*IVF_CENTROID_IDS)).select(
+        F.col("vec_id").alias("cell_id"),
+        F.col("embedding").alias("c_emb"),
+        F.col("e_norm").alias("c_norm"),
+    )
+    return emb_n, centroids
+
+
+def _cell_cos() -> Column:
+    return _dot(F.col("embedding"), F.col("c_emb")) / (
+        F.col("e_norm") * F.col("c_norm")
+    )
+
+
+def _ivf_assign(emb_n: DataFrame, centroids: DataFrame, *carry: str) -> DataFrame:
+    """(vec_id, *carry, cell_id): every vector's nearest centroid cell,
+    argmax cosine with ties to the lower cell_id.
+
+    r15: a max-struct hash aggregate with map-side partials instead of
+    a row_number window (sort + full-pair exchange).  The struct
+    comparison selects the identical row: (cos DESC, cell_id ASC) is
+    max(struct(cos, -cell_id, ...)) -- integer negation is exact and
+    flips only the tie-break; the ``carry`` columns ride in trailing
+    struct fields, never compared ((cos, -cell_id) is unique per
+    vector)."""
+    best = F.max(F.struct(
+        _cell_cos().alias("c"),
+        (-F.col("cell_id")).alias("nc"),
+        *[F.col(c).alias(c) for c in carry],
+    ))
+    return (
+        emb_n.crossJoin(F.broadcast(centroids))
+        .groupBy("vec_id")
+        .agg(best.alias("b"))
+        .select(
+            "vec_id",
+            *[F.col(f"b.{c}").alias(c) for c in carry],
+            (-F.col("b.nc")).alias("cell_id"),
+        )
+    )
+
+
+def _ivf_probes(emb_n: DataFrame, centroids: DataFrame) -> DataFrame:
+    """(query_id, cell_id): each query's top IVF_NPROBE cells by cosine,
+    ties to the lower cell_id -- a window over queries x centroids
+    (N_QUERIES x 8 rows), ranked per query."""
+    by_query = Window.partitionBy("query_id").orderBy(
+        _cell_cos().desc(), F.col("cell_id")
+    )
+    return (
+        emb_n.filter(F.col("vec_id") < N_QUERIES)
+        .select(F.col("vec_id").alias("query_id"), "embedding", "e_norm")
+        .crossJoin(F.broadcast(centroids))
+        .withColumn("rn", F.row_number().over(by_query))
+        .filter(F.col("rn") <= IVF_NPROBE)
+        .select("query_id", "cell_id")
+    )
+
+
+@register(
+    "ann_ivf_topk",
+    oracle=f"""
+    WITH {_SQL_IVF_CELLS},
     scored AS (
         SELECT p.query_id, a.vec_id AS neighbor_id, a.cell_id,
                {_sql_dot('q.embedding', 'a.embedding')}
@@ -520,11 +606,7 @@ _SQL_CENTROIDS = ", ".join(str(i) for i in IVF_CENTROID_IDS)
         JOIN embeddings q ON q.vec_id = p.query_id
         WHERE a.vec_id <> p.query_id
     ),
-    ranked AS (
-        SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                    ORDER BY cosine DESC, neighbor_id) AS rank
-        FROM scored
-    )
+    ranked AS (SELECT *, {_sql_rank('cosine DESC')} FROM scored)
     SELECT query_id, neighbor_id, cell_id, cosine, rank
     FROM ranked WHERE rank <= {TOP_K}
     ORDER BY query_id, rank
@@ -541,40 +623,8 @@ _SQL_CENTROIDS = ", ".join(str(i) for i in IVF_CENTROID_IDS)
         "cell column does for vectors what date pruning does for time.",
 )
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    # Norms below the joins (r14, same rewrite as ann_cosine_topk):
-    # the assignment cross-join used to run 3 interpreted folds per
-    # (vector, centroid) pair -- |e| recomputed once per centroid.
-    # Now |e| is one fold per vector, |c| one per broadcast centroid,
-    # and each pair runs only the dot fold; cosine arithmetic (and so
-    # assignment, probing, and ranking) is bit-identical.
-    emb_n = emb.withColumn("e_norm", _norm(F.col("embedding")))
-    centroids = emb_n.filter(F.col("vec_id").isin(*IVF_CENTROID_IDS)).select(
-        F.col("vec_id").alias("cell_id"),
-        F.col("embedding").alias("c_emb"),
-        F.col("e_norm").alias("c_norm"),
-    )
-    cell_cos = _dot(F.col("embedding"), F.col("c_emb")) / (
-        F.col("e_norm") * F.col("c_norm")
-    )
-    by_cell = Window.partitionBy("vec_id").orderBy(
-        cell_cos.desc(), F.col("cell_id")
-    )
-    assigned = (
-        emb_n.crossJoin(F.broadcast(centroids))
-        .withColumn("rn", F.row_number().over(by_cell))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "embedding", "cell_id", "e_norm")
-    )
-    probes = (
-        emb_n.filter(F.col("vec_id") < N_QUERIES)
-        .crossJoin(F.broadcast(centroids))
-        .withColumn("rn", F.row_number().over(by_cell))
-        .filter(F.col("rn") <= IVF_NPROBE)
-        .select(F.col("vec_id").alias("query_id"), "cell_id")
-    )
+    emb_n, centroids = _ivf_inputs(spark, sf_dir)
+    assigned = _ivf_assign(emb_n, centroids, "embedding", "e_norm")
     q = emb_n.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("q_id"),
         F.col("embedding").alias("q_emb"),
@@ -584,7 +634,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("q_norm") * F.col("e_norm")
     )
     scored = (
-        assigned.join(F.broadcast(probes), "cell_id")
+        assigned.join(F.broadcast(_ivf_probes(emb_n, centroids)), "cell_id")
         .filter(F.col("vec_id") != F.col("query_id"))
         .join(F.broadcast(q), F.col("query_id") == F.col("q_id"))
         .select(
@@ -594,14 +644,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             pair_cos.alias("cosine"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .orderBy("query_id", "rank")
-    )
+    return _top_k(scored, F.col("cosine").desc()).orderBy("query_id", "rank")
 
 
 # ------------------------------------------------- scalar quantization
@@ -672,12 +715,7 @@ def quant_ranges_artifact(spark: SparkSession, sf_dir: str) -> DataFrame:
     trained and written on first use, read (never recomputed) after.
     Publish is atomic (functions/artifacts.py), so concurrent sessions
     cannot clobber each other's range table mid-write."""
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    try:
-        mtime = os.stat(src).st_mtime_ns
-    except OSError:
-        mtime = 0
-    key = hashlib.md5(f"{os.path.abspath(src)}|{mtime}".encode()).hexdigest()[:16]
+    key = _artifacts.source_key(os.path.join(sf_dir, "embeddings.parquet"))
     path = os.path.join(QUANT_ARTIFACT_ROOT, "quant_ranges", key)
     emb = load_table(spark, sf_dir, "embeddings")
     _artifacts.build_once(path, "_SUCCESS", lambda tmp: write_quant_ranges(emb, tmp))
@@ -768,11 +806,7 @@ def embedding_quantize_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
                  / ({_sql_norm('q.embedding')} * {_sql_norm('c.r')}) AS cosine
         FROM q JOIN recon c ON c.vec_id <> q.vec_id
     ),
-    ranked AS (
-        SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                    ORDER BY cosine DESC, neighbor_id) AS rank
-        FROM scored
-    )
+    ranked AS (SELECT *, {_sql_rank('cosine DESC')} FROM scored)
     SELECT query_id, neighbor_id, label, cosine, rank
     FROM ranked WHERE rank <= {TOP_K}
     ORDER BY query_id, rank
@@ -785,8 +819,6 @@ def embedding_quantize_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
         "oracle checks it exactly.  Staged columns keep every fold O(dim).",
 )
 def ann_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     emb = load_table(spark, sf_dir, "embeddings")
     # Serve with the SAME persisted range the codes were trained with --
     # never recompute (train/serve drift corrupts codes silently).
@@ -825,20 +857,13 @@ def ann_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("cosine"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .orderBy("query_id", "rank")
-    )
+    return _top_k(scored, F.col("cosine").desc()).orderBy("query_id", "rank")
 
 
-@register(
-    "ann_lsh_recall",
-    oracle=f"""
-    WITH gt_scored AS (
+# Oracle ground truth for the recall harnesses: the exact brute-force
+# top-k (ann_cosine_topk's ranking) as (query_id, neighbor_id).
+_SQL_GT = f"""
+    gt_scored AS (
         SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
                {_sql_dot('q.embedding', 'c.embedding')}
                  / ({_sql_norm('q.embedding')} * {_sql_norm('c.embedding')})
@@ -849,11 +874,27 @@ def ann_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     gt AS (
         SELECT query_id, neighbor_id FROM (
-            SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                        ORDER BY cosine DESC, neighbor_id) AS rank
-            FROM gt_scored
+            SELECT *, {_sql_rank('cosine DESC')} FROM gt_scored
         ) WHERE rank <= {TOP_K}
-    ),
+    )"""
+
+# Oracle recall of a `found` (query_id, neighbor_id) CTE against `gt`.
+_SQL_RECALL = """
+    SELECT g.query_id,
+           COUNT(*) AS n_true,
+           COUNT(f.neighbor_id) AS n_hit,
+           CAST(COUNT(f.neighbor_id) AS DOUBLE) / COUNT(*) AS recall_at_k
+    FROM gt g LEFT JOIN found f
+      ON g.query_id = f.query_id AND g.neighbor_id = f.neighbor_id
+    GROUP BY g.query_id
+    ORDER BY g.query_id
+    """
+
+
+@register(
+    "ann_lsh_recall",
+    oracle=f"""
+    WITH {_SQL_GT},
     lsh_sig AS (
         SELECT vec_id, embedding, {_sql_lsh_bucket()} AS bucket
         FROM embeddings
@@ -868,20 +909,9 @@ def ann_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     found AS (
         SELECT query_id, neighbor_id FROM (
-            SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                        ORDER BY cosine DESC, neighbor_id) AS rank
-            FROM lsh_scored
+            SELECT *, {_sql_rank('cosine DESC')} FROM lsh_scored
         ) WHERE rank <= {TOP_K}
-    )
-    SELECT g.query_id,
-           COUNT(*) AS n_true,
-           COUNT(f.neighbor_id) AS n_hit,
-           CAST(COUNT(f.neighbor_id) AS DOUBLE) / COUNT(*) AS recall_at_k
-    FROM gt g LEFT JOIN found f
-      ON g.query_id = f.query_id AND g.neighbor_id = f.neighbor_id
-    GROUP BY g.query_id
-    ORDER BY g.query_id
-    """,
+    )""" + _SQL_RECALL,
     doc="ANN recall measurement: per query, the fraction of the exact "
         "brute-force top-k (ann_cosine_topk ground truth) that the "
         "LSH-bucketed search (ann_lsh_bucketed_topk) recovers -- the "
@@ -893,27 +923,8 @@ def ann_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def ann_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     gt = ann_cosine_topk(spark, sf_dir).select("query_id", "neighbor_id")
-    found = ann_lsh_bucketed_topk(spark, sf_dir).select(
-        F.col("query_id").alias("f_query_id"),
-        F.col("neighbor_id").alias("f_neighbor_id"),
-    )
-    return (
-        gt.join(
-            found,
-            (F.col("query_id") == F.col("f_query_id"))
-            & (F.col("neighbor_id") == F.col("f_neighbor_id")),
-            "left",
-        )
-        .groupBy("query_id")
-        .agg(
-            F.count("*").alias("n_true"),
-            F.count("f_neighbor_id").alias("n_hit"),
-            (
-                F.count("f_neighbor_id").cast("double") / F.count("*")
-            ).alias("recall_at_k"),
-        )
-        .orderBy("query_id")
-    )
+    found = ann_lsh_bucketed_topk(spark, sf_dir).select("query_id", "neighbor_id")
+    return _recall_at_k(gt, found)
 
 
 # ---------------------------------------------------- semantic dedup
@@ -924,21 +935,7 @@ SEMANTIC_TAU = 0.35  # within-cell cosine above which vectors are near-dups
 @register(
     "dedup_semantic_clusters",
     oracle=f"""
-    WITH centroids AS (
-        SELECT vec_id AS cell_id, embedding AS c_emb
-        FROM embeddings WHERE vec_id IN ({_SQL_CENTROIDS})
-    ),
-    assign_scored AS (
-        SELECT e.vec_id, e.embedding, k.cell_id,
-               ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-                   {_sql_dot('e.embedding', 'k.c_emb')}
-                     / ({_sql_norm('e.embedding')} * {_sql_norm('k.c_emb')})
-                   DESC, k.cell_id) AS rn
-        FROM embeddings e CROSS JOIN centroids k
-    ),
-    assigned AS (
-        SELECT vec_id, embedding, cell_id FROM assign_scored WHERE rn = 1
-    ),
+    WITH {_SQL_IVF_CELLS},
     dups AS (
         SELECT b.vec_id,
                COUNT(*) AS n_dups_lower,
@@ -973,29 +970,10 @@ SEMANTIC_TAU = 0.35  # within-cell cosine above which vectors are near-dups
         "approximate method itself is oracle-checked exactly.",
 )
 def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    # Norms below the joins (r14, same rewrite as ann_cosine_topk):
-    # |v| is one interpreted fold per vector instead of one per
-    # (vector, centroid) and per within-cell pair; cosine arithmetic
-    # is bit-identical, so assignment and dedup decisions are too.
-    emb_n = emb.withColumn("e_norm", _norm(F.col("embedding")))
-    centroids = emb_n.filter(F.col("vec_id").isin(*IVF_CENTROID_IDS)).select(
-        F.col("vec_id").alias("cell_id"),
-        F.col("embedding").alias("c_emb"),
-        F.col("e_norm").alias("c_norm"),
-    )
-    cell_cos = _dot(F.col("embedding"), F.col("c_emb")) / (
-        F.col("e_norm") * F.col("c_norm")
-    )
-    by_cell = Window.partitionBy("vec_id").orderBy(cell_cos.desc(), F.col("cell_id"))
-    assigned = (
-        emb_n.crossJoin(F.broadcast(centroids))
-        .withColumn("rn", F.row_number().over(by_cell))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "embedding", "cell_id", "e_norm")
-    )
+    # |v| is staged once per vector (see _ivf_inputs) and reused by the
+    # within-cell pairs, so dedup decisions are bit-identical.
+    emb_n, centroids = _ivf_inputs(spark, sf_dir)
+    assigned = _ivf_assign(emb_n, centroids, "embedding", "e_norm")
     a = assigned.select(
         F.col("cell_id"),
         F.col("vec_id").alias("a_id"),
@@ -1254,11 +1232,7 @@ _SQL_PQ_RANKED = _SQL_PQ_CHAIN + f""",
         WHERE c.vec_id <> l.query_id
         GROUP BY l.query_id, c.vec_id
     ),
-    ranked AS (
-        SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                    ORDER BY adc_dist, neighbor_id) AS rank
-        FROM scored
-    )
+    ranked AS (SELECT *, {_sql_rank('adc_dist')} FROM scored)
 """
 
 
@@ -1290,11 +1264,7 @@ _SQL_PQ_RANKED = _SQL_PQ_CHAIN + f""",
         "are read ONCE at index build and never again.",
 )
 def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
-        _pq_adc_ranked(spark, sf_dir)
-        .filter(F.col("rank") <= TOP_K)
-        .orderBy("query_id", "rank")
-    )
+    return _pq_adc_ranked(spark, sf_dir, TOP_K).orderBy("query_id", "rank")
 
 
 def _pq_cb_subs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1370,23 +1340,18 @@ def _pq_codes(emb: DataFrame, cb_subs: DataFrame, *keep: str) -> DataFrame:
     )
 
 
-def _pq_adc_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(query_id, neighbor_id, adc_dist, rank) for EVERY scored pair."""
-    from pyspark.sql import Window
-
-    from ..functions.numeric import dsum
-
-    raw = load_table(spark, sf_dir, "embeddings")
-    # Unit-normalize first: on unit vectors L2^2 = 2 - 2*cos, so the
-    # ADC distance ranks exactly like cosine -- without this the L2
-    # quantizer optimizes a metric the query doesn't use.  Staged norm
-    # (see _unit_normalized): one fold per row, not one per element.
-    emb = _unit_normalized(raw, "vec_id")
-    cb_subs = _pq_cb_subs(spark, sf_dir)
-    codes = _pq_codes(emb, cb_subs)
+def _pq_lut(spark: SparkSession, sf_dir: str, cb_subs: DataFrame) -> DataFrame:
+    """(query_id, m, code, ld): the ADC lookup table -- each unit-
+    normalized query subvector's sub-L2 to every codeword, rounded once
+    per entry at PQ_ROUND."""
     d = _sub_l2sq(F.col("embedding"), F.col("c_sub"), F.col("start"))
-    lut = (
-        emb.filter(F.col("vec_id") < N_QUERIES)
+    return (
+        _unit_normalized(
+            load_table(spark, sf_dir, "embeddings").filter(
+                F.col("vec_id") < N_QUERIES
+            ),
+            "vec_id",
+        )
         .crossJoin(F.broadcast(cb_subs))
         .select(
             F.col("vec_id").alias("query_id"),
@@ -1395,16 +1360,27 @@ def _pq_adc_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
             fround(d, PQ_ROUND).alias("ld"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist").asc(), F.col("neighbor_id")
-    )
-    return (
-        codes.join(F.broadcast(lut), ["m", "code"])
+
+
+def _pq_adc_ranked(
+    spark: SparkSession, sf_dir: str, k: int | None = None
+) -> DataFrame:
+    """(query_id, neighbor_id, adc_dist, rank) for the top ``k`` ADC
+    scores per query (every scored pair when ``k`` is None)."""
+    # Unit-normalize first: on unit vectors L2^2 = 2 - 2*cos, so the
+    # ADC distance ranks exactly like cosine -- without this the L2
+    # quantizer optimizes a metric the query doesn't use.  Staged norm
+    # (see _unit_normalized): one fold per row, not one per element.
+    emb = _unit_normalized(load_table(spark, sf_dir, "embeddings"), "vec_id")
+    cb_subs = _pq_cb_subs(spark, sf_dir)
+    scored = (
+        _pq_codes(emb, cb_subs)
+        .join(F.broadcast(_pq_lut(spark, sf_dir, cb_subs)), ["m", "code"])
         .filter(F.col("vec_id") != F.col("query_id"))
         .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
         .agg(dsum("ld", PQ_ROUND).alias("adc_dist"))
-        .withColumn("rank", F.row_number().over(w))
     )
+    return _top_k(scored, F.col("adc_dist").asc(), k)
 
 
 PQ_REFINE_C = 25  # ADC shortlist size handed to the exact reranker
@@ -1427,11 +1403,7 @@ PQ_REFINE_C = 25  # ADC shortlist size handed to the exact reranker
         JOIN embeddings q ON q.vec_id = cand.query_id
         JOIN embeddings c ON c.vec_id = cand.neighbor_id
     ),
-    rr AS (
-        SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                    ORDER BY cosine DESC, neighbor_id) AS rank
-        FROM rescored
-    )
+    rr AS (SELECT *, {_sql_rank('cosine DESC')} FROM rescored)
     SELECT query_id, neighbor_id, cosine, rank
     FROM rr WHERE rank <= {TOP_K}
     ORDER BY query_id, rank
@@ -1449,13 +1421,9 @@ PQ_REFINE_C = 25  # ADC shortlist size handed to the exact reranker
         "brute-force baseline, so the rerank is engine-exact.",
 )
 def ann_pq_refined_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     emb = load_table(spark, sf_dir, "embeddings")
-    cand = (
-        _pq_adc_ranked(spark, sf_dir)
-        .filter(F.col("rank") <= PQ_REFINE_C)
-        .select("query_id", "neighbor_id")
+    cand = _pq_adc_ranked(spark, sf_dir, PQ_REFINE_C).select(
+        "query_id", "neighbor_id"
     )
     q = emb.select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
@@ -1476,14 +1444,7 @@ def ann_pq_refined_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("cosine"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        rescored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .orderBy("query_id", "rank")
-    )
+    return _top_k(rescored, F.col("cosine").desc()).orderBy("query_id", "rank")
 
 
 # ---------------------------------------------- IVF + PQ composition
@@ -1492,38 +1453,12 @@ def ann_pq_refined_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # WHICH vectors a query scores, PQ/ADC decides HOW -- codes and lookup
 # tables, never the original floats.  Both halves are the verified
 # operators above, composed; the oracle reuses the PQ CTE chain
-# verbatim (the explicit _SQL_PQ_CHAIN prefix) plus the IVF
-# assignment/probe CTEs.
+# verbatim (the explicit _SQL_PQ_CHAIN prefix) plus the IVF cell
+# CTEs (_SQL_IVF_CELLS).
 
 # PQ chain + IVF assignment/probes + cell-restricted ADC ranking,
 # shared by the top-k query and its recall evaluation.
-_SQL_IVFPQ_RANKED = _SQL_PQ_CHAIN + f""",
-    centroids AS (
-        SELECT vec_id AS cell_id, embedding AS c_emb
-        FROM embeddings WHERE vec_id IN ({_SQL_CENTROIDS})
-    ),
-    assign_scored AS (
-        SELECT e.vec_id, k.cell_id,
-               ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-                   {_sql_dot('e.embedding', 'k.c_emb')}
-                     / ({_sql_norm('e.embedding')} * {_sql_norm('k.c_emb')})
-                   DESC, k.cell_id) AS rn
-        FROM embeddings e CROSS JOIN centroids k
-    ),
-    assigned AS (
-        SELECT vec_id, cell_id FROM assign_scored WHERE rn = 1
-    ),
-    probes AS (
-        SELECT query_id, cell_id FROM (
-            SELECT q.vec_id AS query_id, k.cell_id,
-                   ROW_NUMBER() OVER (PARTITION BY q.vec_id ORDER BY
-                       {_sql_dot('q.embedding', 'k.c_emb')}
-                         / ({_sql_norm('q.embedding')} * {_sql_norm('k.c_emb')})
-                       DESC, k.cell_id) AS rn
-            FROM embeddings q CROSS JOIN centroids k
-            WHERE q.vec_id < {N_QUERIES}
-        ) WHERE rn <= {IVF_NPROBE}
-    ),
+_SQL_IVFPQ_RANKED = _SQL_PQ_CHAIN + f""", {_SQL_IVF_CELLS},
     cell_scored AS (
         SELECT p.query_id, c.vec_id AS neighbor_id, a.cell_id,
                {sql_dsum('l.ld', PQ_ROUND)} AS adc_dist
@@ -1535,11 +1470,7 @@ _SQL_IVFPQ_RANKED = _SQL_PQ_CHAIN + f""",
         WHERE c.vec_id <> p.query_id
         GROUP BY p.query_id, c.vec_id, a.cell_id
     ),
-    cell_ranked AS (
-        SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                    ORDER BY adc_dist, neighbor_id) AS rank
-        FROM cell_scored
-    )
+    cell_ranked AS (SELECT *, {_sql_rank('adc_dist')} FROM cell_scored)
 """
 
 
@@ -1561,134 +1492,43 @@ _SQL_IVFPQ_RANKED = _SQL_PQ_CHAIN + f""",
         "same deterministic folds/rounding), so even composed the "
         "approximate result is oracle-checked exactly.  Scale shape: "
         "assignment and encoding are ONE index-build lineage -- cell "
-        "by a window over the broadcast centroid set, codes by a "
-        "window over the broadcast codebook -- written out partitioned "
+        "and codes by argmax aggregates over the broadcast centroid "
+        "set and codebook -- written out partitioned "
         "BY cell_id, so a query reads nprobe/n_cells of the CODE table "
         "(bytes per vector) and joins only broadcast relations: probes "
         "and LUTs.  Smaller read than IVF alone (codes, not floats); "
         "fewer candidates than PQ alone (cells, not corpus).",
 )
 def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    from ..functions.numeric import dsum
-
-    raw = load_table(spark, sf_dir, "embeddings")
-    # Norms below the joins (r14, same rewrite as ann_cosine_topk):
-    # one interpreted fold per (vector, centroid) pair, bit-identical.
-    raw_n = raw.withColumn("e_norm", _norm(F.col("embedding")))
-    centroids = raw_n.filter(F.col("vec_id").isin(*IVF_CENTROID_IDS)).select(
-        F.col("vec_id").alias("cell_id"),
-        F.col("embedding").alias("c_emb"),
-        F.col("e_norm").alias("c_norm"),
-    )
-    cell_cos = _dot(F.col("embedding"), F.col("c_emb")) / (
-        F.col("e_norm") * F.col("c_norm")
-    )
-    by_cell = Window.partitionBy("vec_id").orderBy(
-        cell_cos.desc(), F.col("cell_id")
-    )
-    probes = (
-        raw_n.filter(F.col("vec_id") < N_QUERIES)
-        .crossJoin(F.broadcast(centroids))
-        .withColumn("rn", F.row_number().over(by_cell))
-        .filter(F.col("rn") <= IVF_NPROBE)
-        .select(F.col("vec_id").alias("query_id"), "cell_id")
-    )
+    emb_n, centroids = _ivf_inputs(spark, sf_dir)
     # ONE index-build lineage: cell assignment, then unit-normalize,
-    # then per-subspace code assignment.  r15: both argmin selections
-    # are min/max-struct hash aggregates with map-side partials instead
-    # of row_number windows (sort + full-pair exchange); the struct
-    # comparison selects the identical row (see _pq_codes).  Cell
-    # assignment wants (cos DESC, cell_id ASC): max(struct(cos,
-    # -cell_id, ...)) -- integer negation is exact and flips only the
-    # tie-break; the embedding rides in trailing struct fields (never
-    # compared: (cos, -cell_id) is already unique per vector).
-    best_cell = F.max(F.struct(
-        cell_cos.alias("c"),
-        (-F.col("cell_id")).alias("nc"),
-        F.col("embedding").alias("embedding"),
-    ))
-    assigned = (
-        raw_n.crossJoin(F.broadcast(centroids))
-        .groupBy("vec_id")
-        .agg(best_cell.alias("b"))
-        .select(
-            "vec_id",
-            F.col("b.embedding").alias("embedding"),
-            (-F.col("b.nc")).alias("cell_id"),
-        )
-    )
+    # then per-subspace code assignment -- both argmin selections are
+    # min/max-struct hash aggregates (_ivf_assign, _pq_codes).
+    assigned = _ivf_assign(emb_n, centroids, "embedding")
     n_emb = _unit_normalized(assigned, "vec_id", "cell_id")
     cb_subs = _pq_cb_subs(spark, sf_dir)
     codes = _pq_codes(n_emb, cb_subs, "cell_id").select(
         "vec_id", "cell_id", "m", "code"
     )
-    d = _sub_l2sq(F.col("embedding"), F.col("c_sub"), F.col("start"))
-    lut = (
-        _unit_normalized(
-            load_table(spark, sf_dir, "embeddings").filter(
-                F.col("vec_id") < N_QUERIES
-            ),
-            "vec_id",
-        )
-        .crossJoin(F.broadcast(cb_subs))
-        .select(
-            F.col("vec_id").alias("query_id"),
-            "m",
-            "code",
-            fround(d, PQ_ROUND).alias("ld"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist").asc(), F.col("neighbor_id")
-    )
-    return (
-        codes.join(F.broadcast(probes), "cell_id")
+    scored = (
+        codes.join(F.broadcast(_ivf_probes(emb_n, centroids)), "cell_id")
         .filter(F.col("vec_id") != F.col("query_id"))
-        .join(F.broadcast(lut), ["query_id", "m", "code"])
+        .join(F.broadcast(_pq_lut(spark, sf_dir, cb_subs)), ["query_id", "m", "code"])
         .groupBy("query_id", F.col("vec_id").alias("neighbor_id"), "cell_id")
         .agg(dsum("ld", PQ_ROUND).alias("adc_dist"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .orderBy("query_id", "rank")
     )
+    return _top_k(scored, F.col("adc_dist").asc()).orderBy("query_id", "rank")
 
 
 @register(
     "ann_ivfpq_recall",
     rotation_group=6,
     oracle=_SQL_IVFPQ_RANKED
-    + f""",
-    gt_scored AS (
-        SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-               {_sql_dot('q.embedding', 'c.embedding')}
-                 / ({_sql_norm('q.embedding')} * {_sql_norm('c.embedding')})
-                 AS cosine
-        FROM (SELECT vec_id, embedding FROM embeddings
-              WHERE vec_id < {N_QUERIES}) q
-        JOIN embeddings c ON c.vec_id <> q.vec_id
-    ),
-    gt AS (
-        SELECT query_id, neighbor_id FROM (
-            SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                        ORDER BY cosine DESC, neighbor_id) AS rank
-            FROM gt_scored
-        ) WHERE rank <= {TOP_K}
-    ),
+    + f""", {_SQL_GT},
     found AS (
         SELECT query_id, neighbor_id
         FROM cell_ranked WHERE rank <= {TOP_K}
-    )
-    SELECT g.query_id,
-           COUNT(*) AS n_true,
-           COUNT(f.neighbor_id) AS n_hit,
-           CAST(COUNT(f.neighbor_id) AS DOUBLE) / COUNT(*) AS recall_at_k
-    FROM gt g LEFT JOIN found f
-      ON g.query_id = f.query_id AND g.neighbor_id = f.neighbor_id
-    GROUP BY g.query_id
-    ORDER BY g.query_id
-    """,
+    )""" + _SQL_RECALL,
     doc="Recall@k for the composed IVF+PQ index against the exact "
         "brute-force ground truth -- the number a serving team reports "
         "before the composed index replaces the exact path, and the "
@@ -1701,27 +1541,8 @@ def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def ann_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     gt = ann_cosine_topk(spark, sf_dir).select("query_id", "neighbor_id")
-    found = ann_ivf_pq_topk(spark, sf_dir).select(
-        F.col("query_id").alias("f_query_id"),
-        F.col("neighbor_id").alias("f_neighbor_id"),
-    )
-    return (
-        gt.join(
-            found,
-            (F.col("query_id") == F.col("f_query_id"))
-            & (F.col("neighbor_id") == F.col("f_neighbor_id")),
-            "left",
-        )
-        .groupBy("query_id")
-        .agg(
-            F.count("*").alias("n_true"),
-            F.count("f_neighbor_id").alias("n_hit"),
-            (
-                F.count("f_neighbor_id").cast("double") / F.count("*")
-            ).alias("recall_at_k"),
-        )
-        .orderBy("query_id")
-    )
+    found = ann_ivf_pq_topk(spark, sf_dir).select("query_id", "neighbor_id")
+    return _recall_at_k(gt, found)
 
 
 # ------------------------- Matryoshka (dim-prefix) truncation recall
@@ -1729,21 +1550,13 @@ def ann_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 MRL_DIMS = (16, 32)  # prefix lengths evaluated (DIM/4, DIM/2)
 
 
-def _sql_dot_prefix(a: str, b: str, d: int) -> str:
-    return (
-        f"list_reduce(list_transform(generate_series(1, {d}), "
-        f"i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)), "
-        f"(acc, x) -> acc + x)"
-    )
-
-
 def _sql_mrl_found(d: int) -> str:
     return f"""
     scored_{d} AS (
         SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-               {_sql_dot_prefix('q.embedding', 'c.embedding', d)}
-                 / (sqrt({_sql_dot_prefix('q.embedding', 'q.embedding', d)})
-                    * sqrt({_sql_dot_prefix('c.embedding', 'c.embedding', d)}))
+               {_sql_dot('q.embedding', 'c.embedding', d)}
+                 / (sqrt({_sql_dot('q.embedding', 'q.embedding', d)})
+                    * sqrt({_sql_dot('c.embedding', 'c.embedding', d)}))
                  AS cosine
         FROM (SELECT vec_id, embedding FROM embeddings
               WHERE vec_id < {N_QUERIES}) q
@@ -1751,9 +1564,7 @@ def _sql_mrl_found(d: int) -> str:
     ),
     found_{d} AS (
         SELECT {d} AS dim, query_id, neighbor_id FROM (
-            SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                        ORDER BY cosine DESC, neighbor_id) AS rank
-            FROM scored_{d}
+            SELECT *, {_sql_rank('cosine DESC')} FROM scored_{d}
         ) WHERE rank <= {TOP_K}
     )"""
 
@@ -1762,22 +1573,7 @@ def _sql_mrl_found(d: int) -> str:
     "ann_matryoshka_recall",
     rotation_group=8,
     oracle=f"""
-    WITH gt_scored AS (
-        SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-               {_sql_dot('q.embedding', 'c.embedding')}
-                 / ({_sql_norm('q.embedding')} * {_sql_norm('c.embedding')})
-                 AS cosine
-        FROM (SELECT vec_id, embedding FROM embeddings
-              WHERE vec_id < {N_QUERIES}) q
-        JOIN embeddings c ON c.vec_id <> q.vec_id
-    ),
-    gt AS (
-        SELECT query_id, neighbor_id FROM (
-            SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                        ORDER BY cosine DESC, neighbor_id) AS rank
-            FROM gt_scored
-        ) WHERE rank <= {TOP_K}
-    ),
+    WITH {_SQL_GT},
     {','.join(_sql_mrl_found(d) for d in MRL_DIMS)},
     found AS ({' UNION ALL '.join(f'SELECT * FROM found_{d}' for d in MRL_DIMS)})
     SELECT dims.dim AS dim, g.query_id,
@@ -1806,8 +1602,6 @@ def _sql_mrl_found(d: int) -> str:
         "side so a prefix that misses a query still reports 0/k.",
 )
 def ann_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     emb = load_table(spark, sf_dir, "embeddings")
     gt = ann_cosine_topk(spark, sf_dir).select("query_id", "neighbor_id")
 
@@ -1828,21 +1622,14 @@ def ann_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "query_id",
                 "neighbor_id",
                 (
-                    _dot(F.col("q_emb"), F.col("c_emb"), d)
-                    / (_norm(F.col("q_emb"), d) * _norm(F.col("c_emb"), d))
+                    _dot(F.col("q_emb"), F.col("c_emb"))
+                    / (_norm(F.col("q_emb")) * _norm(F.col("c_emb")))
                 ).alias("cosine"),
             )
         )
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("cosine").desc(), F.col("neighbor_id")
-        )
         founds.append(
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= TOP_K)
-            .select(
-                F.lit(d).cast("bigint").alias("dim"),
-                F.col("query_id").alias("f_query_id"),
-                F.col("neighbor_id").alias("f_neighbor_id"),
+            _top_k(scored, F.col("cosine").desc()).select(
+                F.lit(d).cast("bigint").alias("dim"), "query_id", "neighbor_id"
             )
         )
     found = founds[0]
@@ -1852,31 +1639,9 @@ def ann_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the (dim x gt) grid is literal-sized: explode an array literal on
     # the gt relation (a Generate, not a join -- no CartesianProduct)
     grid = gt.withColumn(
-        "d", F.explode(F.array(*[F.lit(d).cast("bigint") for d in MRL_DIMS]))
+        "dim", F.explode(F.array(*[F.lit(d).cast("bigint") for d in MRL_DIMS]))
     )
-    return (
-        grid
-        .join(
-            found,
-            (F.col("d") == F.col("dim"))
-            & (F.col("query_id") == F.col("f_query_id"))
-            & (F.col("neighbor_id") == F.col("f_neighbor_id")),
-            "left",
-        )
-        .groupBy("d", "query_id")
-        .agg(
-            F.count("*").cast("bigint").alias("n_true"),
-            F.count("f_neighbor_id").cast("bigint").alias("n_hit"),
-            (
-                F.count("f_neighbor_id").cast("double") / F.count("*")
-            ).alias("recall_at_k"),
-        )
-        .select(
-            F.col("d").alias("dim"), "query_id",
-            "n_true", "n_hit", "recall_at_k",
-        )
-        .orderBy("dim", "query_id")
-    )
+    return _recall_at_k(grid, found, "dim")
 
 
 # ------------------------ greedy k-center coreset (farthest point)

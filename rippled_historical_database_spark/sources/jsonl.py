@@ -20,7 +20,6 @@ reading the documents table directly.
 
 from __future__ import annotations
 
-import hashlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -87,18 +86,11 @@ def read_jsonl(
     return clean, quarantine
 
 
-def _jsonl_key(sf_dir: str) -> str:
-    src = os.path.join(sf_dir, "documents.parquet")
-    try:
-        mtime = os.stat(src).st_mtime_ns
-    except OSError:
-        mtime = 0
-    return hashlib.md5(f"{src}|{mtime}|jsonl-v1".encode()).hexdigest()[:16]
-
-
 def jsonl_artifact(spark: SparkSession, sf_dir: str) -> str:
     path = os.path.join(
-        artifacts.ARTIFACT_ROOT, "jsonl_corpus", _jsonl_key(sf_dir)
+        artifacts.ARTIFACT_ROOT,
+        "jsonl_corpus",
+        artifacts.source_key(os.path.join(sf_dir, "documents.parquet")),
     )
 
     def _build(tmp: str) -> None:

@@ -40,7 +40,6 @@ parser are both byte-exact.
 
 from __future__ import annotations
 
-import hashlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -114,20 +113,14 @@ def read_wet(spark: SparkSession, wet_dir: str) -> DataFrame:
     )
 
 
-def _wet_key(sf_dir: str) -> str:
-    src = os.path.join(sf_dir, "documents.parquet")
-    try:
-        mtime = os.stat(src).st_mtime_ns
-    except OSError:
-        mtime = 0
-    ident = f"{src}|{mtime}|wet-v1"
-    return hashlib.md5(ident.encode()).hexdigest()[:16]
-
-
 def wet_artifact(spark: SparkSession, sf_dir: str) -> str:
     """Build the WET rendering of the documents table once per corpus
     identity; atomic publish (functions/artifacts.py)."""
-    path = os.path.join(artifacts.ARTIFACT_ROOT, "wet_corpus", _wet_key(sf_dir))
+    path = os.path.join(
+        artifacts.ARTIFACT_ROOT,
+        "wet_corpus",
+        artifacts.source_key(os.path.join(sf_dir, "documents.parquet")),
+    )
 
     def _build(tmp: str) -> None:
         write_wet(

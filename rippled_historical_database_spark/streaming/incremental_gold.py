@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.candles import hourly_candles
+from ..operators.candles import hourly_candles, merge_candle_aggs
 
 
 def partial_candles(batch_df: DataFrame) -> DataFrame:
@@ -39,23 +39,7 @@ def partial_candles(batch_df: DataFrame) -> DataFrame:
 def merge_candles(partials: DataFrame) -> DataFrame:
     """Re-reduce any number of partials per (pair, bucket) into final
     candles -- associative, so it is also the compaction step."""
-    vol = F.sum("base_volume")
-    cvol = F.sum("counter_volume")
-    return (
-        partials.groupBy("pair", "bucket_start")
-        .agg(
-            F.min_by("open", "open_key").alias("open"),
-            F.max("high").alias("high"),
-            F.min("low").alias("low"),
-            F.max_by("close", "close_key").alias("close"),
-            vol.cast("double").alias("base_volume"),
-            cvol.cast("double").alias("counter_volume"),
-            F.sum("n_trades").alias("n_trades"),
-            F.min("open_time").alias("open_time"),
-            F.max("close_time").alias("close_time"),
-            (cvol.cast("double") / vol.cast("double")).alias("vwap"),
-        )
-    )
+    return partials.groupBy("pair", "bucket_start").agg(*merge_candle_aggs())
 
 
 def run_incremental(

@@ -76,6 +76,7 @@ from ..operators.candles import (
     MACD_SLOW,
     RSI_N,
     SQL_BOLLINGER,
+    SQL_CANDLE_GAPS,
     SQL_KELTNER,
     SQL_MACD,
     SQL_DOLLAR_BARS,
@@ -244,35 +245,7 @@ def _update_gaps(key, rows, state):
 @register(
     "stream_candle_gap_alerts",
     rotation_group=7,
-    oracle="""
-    WITH b AS (
-        SELECT DISTINCT event_type AS pair,
-               CAST(DATE_TRUNC('hour', ts) AS TIMESTAMP) AS bucket
-        FROM events
-    ),
-    rng AS (
-        SELECT pair, MIN(bucket) AS mn, MAX(bucket) AS mx FROM b GROUP BY 1
-    ),
-    spine AS (
-        SELECT pair, UNNEST(generate_series(mn, mx, INTERVAL 1 HOUR))
-                 AS bucket
-        FROM rng
-    ),
-    missing AS (
-        SELECT s.pair, s.bucket,
-               CAST(epoch(s.bucket) AS BIGINT) // 3600
-               - ROW_NUMBER() OVER (PARTITION BY s.pair ORDER BY s.bucket)
-                 AS grp
-        FROM spine s LEFT JOIN b
-          ON s.pair = b.pair AND s.bucket = b.bucket
-        WHERE b.bucket IS NULL
-    )
-    SELECT pair, MIN(bucket) AS gap_start, MAX(bucket) AS gap_end,
-           CAST(COUNT(*) AS BIGINT) AS n_missing
-    FROM missing
-    GROUP BY pair, grp
-    ORDER BY pair, gap_start
-    """,
+    oracle=SQL_CANDLE_GAPS,
     doc="Streaming form of agg_candle_gaps: the candle-bucket stream "
         "per pair carries ONE timestamp of state (last seen bucket); "
         "an arriving bucket that skips hours emits the completed "

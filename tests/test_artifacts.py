@@ -5,7 +5,10 @@ from __future__ import annotations
 
 import os
 
-from rippled_historical_database_spark.functions.artifacts import build_once
+from rippled_historical_database_spark.functions.artifacts import (
+    build_once,
+    source_key,
+)
 
 
 def _builder(calls):
@@ -68,3 +71,16 @@ def test_marker_stamped_when_builder_does_not(tmp_path):
     path = str(tmp_path / "art")
     build_once(path, "_BUILT", lambda tmp: os.makedirs(tmp))
     assert os.path.exists(os.path.join(path, "_BUILT"))
+
+
+def test_source_key_follows_rewrites_and_tolerates_missing(tmp_path):
+    src = tmp_path / "embeddings.parquet"
+    missing = source_key(str(src))  # no file yet: keys as mtime 0
+    src.write_bytes(b"v1")
+    k1 = source_key(str(src))
+    assert k1 == source_key(str(src)) != missing
+    # a rewrite (new mtime) keys a new artifact
+    st = os.stat(src)
+    src.write_bytes(b"v2")
+    os.utime(src, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000_000))
+    assert source_key(str(src)) != k1

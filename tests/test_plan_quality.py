@@ -684,13 +684,27 @@ def test_heaps_law_single_token_shuffle(spark, sf_dir):
 
 
 def test_ivf_pq_never_sort_merge_joins(spark, sf_dir):
-    """Index build is one chained lineage (cell window, then code
-    window) and query-side relations (probes, LUT, centroids,
-    codebook) all broadcast: the corpus must never SortMergeJoin."""
+    """Index build is one chained lineage (cell, then codes) and
+    query-side relations (probes, LUT, centroids, codebook) all
+    broadcast: the corpus must never SortMergeJoin."""
     plan = _plan(spark, sf_dir, "ann_ivf_pq_topk")
     assert "SortMergeJoin" not in plan, plan
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
+
+
+def test_ivf_cells_assigned_by_one_hash_aggregate(spark, sf_dir):
+    """Every IVF plan assigns cells with similarity._ivf_assign's
+    max-struct hash aggregate: no Window is partitioned on vec_id (the
+    per-vector argmax window it replaced; the probe window ranks per
+    query_id)."""
+    import re
+
+    for name in ("ann_ivf_topk", "dedup_semantic_clusters", "ann_ivf_pq_topk"):
+        plan = _plan(spark, sf_dir, name)
+        assert not re.search(r"windowspecdefinition\(vec_id#", plan), (
+            f"{name}: Window partitioned on vec_id\n{plan}"
+        )
 
 
 def test_round7_no_cartesian_or_python_eval(spark, sf_dir):
